@@ -22,6 +22,4 @@ final case class Q(build: (SparkSession, String) => DataFrame,
 object Q {
   def apply(oracle: String)(build: (SparkSession, String) => DataFrame): Q =
     Q(build, Some(oracle))
-  def rowsOnly(build: (SparkSession, String) => DataFrame): Q =
-    Q(build, None)
 }

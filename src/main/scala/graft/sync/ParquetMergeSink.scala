@@ -1,7 +1,7 @@
 package graft.sync
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -62,12 +62,25 @@ object ParquetMergeSink {
     *                  blind spot otherwise needs Reconcile's full
     *                  anti-join scan, the wrong cost shape for a per-batch
     *                  delete feed).
+    * @param destination the destination as the caller already read it
+    *                  (SyncJob's T1 read), reused instead of a second
+    *                  read; ignored when there is no destination yet.
+    * @param orderFloor canonical watermark (core.Watermark) at or below
+    *                  every batch row's `orderCol` — the run's T1 start.
+    *                  Bounds the probe's destination side by a plain
+    *                  literal; without it the bound is the batch minimum,
+    *                  taken inside the same probe query.
+    * @param onProgress M1 callback over the rows this merge writes,
+    *                  against the batch's row count as the total.
     */
   def merge(spark: SparkSession, targetDir: String, updates: DataFrame,
             keyCols: Seq[String], orderCol: String,
             partitionByCol: Option[String] = None,
             knownUpdateRows: Option[Long] = None,
-            tombstoneCol: Option[String] = None): MergeResult = {
+            tombstoneCol: Option[String] = None,
+            destination: Option[DataFrame] = None,
+            orderFloor: Option[Long] = None,
+            onProgress: Option[Progress => Unit] = None): MergeResult = {
     require(keyCols.nonEmpty, "merge requires at least one key column")
     // Resolve caller-supplied names against each frame's ACTUAL casing
     // once: StructType(name) lookups are always case-sensitive and column
@@ -134,18 +147,23 @@ object ParquetMergeSink {
     val tombFlag = uTomb.map(t =>
       coalesce(col(t).try_cast("boolean"), lit(false)))
 
-    // One materialization of the extracted batch: the count, tie bound,
-    // novelty check and dedupe/write below all reuse it, so a live (JDBC)
-    // source is scanned exactly once per merge and every derived number
-    // describes the same snapshot.
+    def withProgress[A](rows: Long)(body: => A): A = onProgress match {
+      case Some(f) => TaskProgressListener.withProgress(spark, rows, f)(body)
+      case None => body
+    }
+
+    // One materialization of the extracted batch: the probe, admission
+    // pass and dedupe/write below all reuse it, so a live (JDBC) source is
+    // scanned exactly once per merge and every derived number describes
+    // the same snapshot.
     val mustPersist = updates.storageLevel == StorageLevel.NONE
     if (mustPersist) updates.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // ONE admission pass (only in the tombstoned path — the blind path
-      // keeps its zero-extra-jobs shape): batch size, malformed flags,
-      // delete count, and NULL-partition deletes
-      val (updateRows, delCount) = uTomb match {
-        case None => (knownUpdateRows.getOrElse(updates.count()), 0L)
+      // learns its batch size from the cold count or the probe): batch
+      // size, malformed flags, delete count, and NULL-partition deletes
+      val (knownRows, delCount) = uTomb match {
+        case None => (knownUpdateRows, 0L)
         case Some(t) =>
           val flag = tombFlag.get
           val aggs = Seq(
@@ -168,9 +186,15 @@ object ParquetMergeSink {
                 s"'${uPart.get}' partition value — the partition column " +
                 "is key-derived (merge contract), so a delete must carry " +
                 "it or its target partition cannot be located")
-          (knownUpdateRows.getOrElse(r.getLong(0)), r.getLong(2))
+          (knownUpdateRows.orElse(Some(r.getLong(0))), r.getLong(2))
+      }
+      def idle(): MergeResult = {
+        // idle poll (T5): nothing extracted → never touch the destination
+        clearPendingMerge(fs, targetDir)
+        MergeResult(0L, 0L)
       }
       if (!exists) {
+        val updateRows = knownRows.getOrElse(updates.count())
         // a cold start owns the destination's whole sidecar family: an
         // applied-watermark bound surviving from a deleted-and-recreated
         // incarnation would silently skip this incarnation's extraction
@@ -198,7 +222,7 @@ object ParquetMergeSink {
           else deduped0
         val tmp = targetDir.stripSuffix("/") + ".__merge_tmp"
         if (fs.exists(new Path(tmp))) fs.delete(new Path(tmp), true)
-        write(deduped, tmp, uPart, Some(uOrder))
+        withProgress(updateRows)(write(deduped, tmp, uPart, Some(uOrder)))
         // counts only the files just written (metadata-weight scan); an
         // all-deletes cold batch legitimately stages ZERO rows (possibly
         // zero part files — unreadable as parquet, hence the hasData guard)
@@ -219,13 +243,9 @@ object ParquetMergeSink {
             .toMicros(updates.agg(max(col(uOrder))).first().get(0)))
         return MergeResult(written, updateRows)
       }
-      if (updateRows == 0) {
-        // idle poll (T5): nothing extracted → never touch the destination
-        clearPendingMerge(fs, targetDir)
-        return MergeResult(0L, 0L)
-      }
+      if (knownRows.contains(0L)) return idle()
 
-      val target = spark.read.parquet(targetDir).withColumn("__src", lit(0))
+      val dest = destination.getOrElse(spark.read.parquet(targetDir))
       // Schema drift must fail TYPED and loud before any projection: the
       // select-onto-target-columns below would silently DISCARD a column
       // the source gained (every future sync dropping that data), and a
@@ -236,7 +256,7 @@ object ParquetMergeSink {
       // own case-insensitive resolution) — a case-only rename must not read
       // as the same column added AND removed; original casing is kept for
       // the error message.
-      val targetCols = target.columns.filter(_ != "__src")
+      val targetCols = dest.columns
       // case-colliding columns within one frame defeat fold comparison
       // AND fold projection — refuse before any of it
       Seq(updates.columns -> "updates", targetCols -> "target").foreach {
@@ -254,8 +274,12 @@ object ParquetMergeSink {
       val added = updates.columns.filterNot(c => targetFold(c.toLowerCase) ||
         uTomb.exists(_.equalsIgnoreCase(c))).toSeq
       val removed = targetCols.filterNot(c => updateFold(c.toLowerCase)).toSeq
-      if (added.nonEmpty || removed.nonEmpty)
+      if (added.nonEmpty || removed.nonEmpty) {
+        // an empty batch carries nothing to drift; the probe that would
+        // tell is not run on a batch that cannot be projected
+        if (knownRows.isEmpty && updates.isEmpty) return idle()
         throw graft.core.GraftError.SchemaDrift(added, removed)
+      }
       // Project by the UPDATES' actual column names aliased to the
       // target's casing: resolving target-cased names against updates
       // relies on spark.sql.caseSensitive=false — under a case-sensitive
@@ -272,6 +296,7 @@ object ParquetMergeSink {
         .map(tc => col(updatesByFold(tc.toLowerCase)).as(tc))
         .toIndexedSeq ++ tombFlag.map(_.as("__tomb")).toSeq: _*)
         .withColumn("__src", lit(1))
+      val target = dest.withColumn("__src", lit(0))
       val tResolve = resolveAgainst(targetCols, "target") _
       val tOrder = tResolve(orderCol)
       val tKeys = keyCols.map(tResolve)
@@ -280,35 +305,34 @@ object ParquetMergeSink {
       def dropTombWinners(df: DataFrame): DataFrame =
         if (uTomb.isEmpty) df else df.filter(!col("__tomb")).drop("__tomb")
 
-      // Every extracted row has orderCol >= the batch minimum, so an
-      // identical destination twin must sit in that same range: bounding the
-      // novelty scan to it lets parquet row-group stats skip the rest of the
-      // destination (the tie range is a poll-sized sliver at 100 TB).
-      // one scalar job serves both bounds: lo bounds the novelty scan,
-      // hi is the applied-watermark the tombstoned commit paths record
-      val tieBounds = updates.agg(min(col(uOrder)), max(col(uOrder))).first()
-      val tieLo = tieBounds.get(0)
-      val appliedHi: Option[Long] =
-        if (uTomb.isDefined) graft.core.Watermark.toMicros(tieBounds.get(1))
-        else None
-
-      // T3/T5 no-op detection: the inclusive lower bound re-extracts watermark
-      // ties every poll; a re-extracted row IDENTICAL to its destination twin
-      // carries nothing. One anti-join on the tie-bounded target (scan-only,
-      // no rewrite) spares an O(dest) rewrite on idle continuous polls, while
-      // any actual difference — including a payload change on a tied
-      // watermark, which the S4 tie rule resolves in the update's favour —
-      // still merges. (Equality treats NULL != NULL, so null-bearing rows
-      // read as novel: a spurious rewrite at worst, never a skipped change.)
-      val dataCols = target.columns.filter(_ != "__src").toIndexedSeq
-      val novelTarget =
-        if (tieLo == null) target else target.filter(col(tOrder) >= lit(tieLo))
+      // T3/T5 no-op detection: the inclusive lower bound re-extracts
+      // watermark ties every poll; a re-extracted row IDENTICAL to its
+      // destination twin carries nothing. ONE probe query over the batch
+      // answers it together with the batch size and the order bounds (the
+      // pending marker's lo, the applied watermark's hi): an existence
+      // join of every batch row against the destination, scan-only, so an
+      // idle continuous poll skips the O(dest) rewrite while any actual
+      // difference — including a payload change on a tied watermark,
+      // which the S4 tie rule resolves in the update's favour — still
+      // merges. Every batch row has orderCol >= the floor (the caller's
+      // T1 start, else the batch minimum), so an identical twin sits in
+      // that range: bounding the destination side lets parquet row-group
+      // stats skip the rest (the tie range is a poll-sized sliver at
+      // 100 TB). (Equality treats NULL != NULL, so null-bearing rows read
+      // as novel: a spurious rewrite at worst, never a skipped change.)
+      val floor = orderFloor
+        .map(graft.core.Watermark.litFor(dest.schema(tOrder).dataType, _))
+        .getOrElse(tagged.agg(min(col(tOrder))).scalar())
       // only LIVE rows take the identical-twin test — a payload-free
       // delete row has no destination twin by construction and would
       // otherwise read as novel on every poll, re-rewriting an idle dest
-      val novel = dropTombWinners(tagged).drop("__src")
-        .join(novelTarget.drop("__src"), dataCols, "left_anti")
-        .limit(1).count()
+      val live = if (uTomb.isEmpty) lit(true) else !col("__tomb")
+      val batch = probe(tagged, dest.filter(col(tOrder) >= floor), tOrder, live)
+      val updateRows = knownRows.getOrElse(batch.rows)
+      if (updateRows == 0) return idle()
+      val tieLo = batch.lo
+      val appliedHi: Option[Long] =
+        if (uTomb.isDefined) graft.core.Watermark.toMicros(batch.hi) else None
       // a re-extracted delete whose key is already GONE carries nothing;
       // one key-level semi-join (scan-only, skipped when the batch has no
       // deletes at all) detects a delete that still has work to do
@@ -317,7 +341,7 @@ object ParquetMergeSink {
         else tagged.filter(col("__tomb")).select(tKeys.map(col): _*)
           .join(target.select(tKeys.map(col): _*), tKeys, "left_semi")
           .limit(1).count()
-      if (novel == 0 && novelDelete == 0) {
+      if (!batch.novel && novelDelete == 0) {
         clearPendingMerge(fs, targetDir)
         // the batch is PROVEN fully applied (no live novelty, no delete
         // with work left) — advancing here is what stops an idle
@@ -327,7 +351,7 @@ object ParquetMergeSink {
         return MergeResult(0L, updateRows)
       }
 
-      val written = partitionByCol match {
+      val written = withProgress(updateRows)(partitionByCol match {
         case Some(p) =>
           // Bounded rewrite: only target partitions that contain updated keys
           // participate. The partition list is a small driver-side scalar set
@@ -426,7 +450,7 @@ object ParquetMergeSink {
             if (hasData(fs, new Path(tmp))) countParquet(spark, tmp) else 0L
           atomicSwap(fs, targetDir, tmp)
           stagedRows
-      }
+      })
       clearPendingMerge(fs, targetDir)
       // only after the pending marker clears: a surviving marker means a
       // possibly-partial commit, and min(marker) must keep winning over
@@ -596,6 +620,38 @@ object ParquetMergeSink {
       .agg(max_by(payload, ord).as("__payload"))
       .select(keyCols.map(col) ++
         payloadCols.map(c => col(s"__payload.$c").as(c)): _*)
+  }
+
+  /** What one probe pass learns about a batch bound for an existing
+    * destination: its row count, the order column's min/max, and whether
+    * any live row lacks an identical destination twin. */
+  private final case class Probe(rows: Long, lo: Any, hi: Any, novel: Boolean)
+
+  /** The merge's one scalar pass over a batch (`tagged`: the batch
+    * projected onto the destination's columns) against `dest`, which the
+    * caller has already bounded to the order floor. The twin test is a
+    * correlated EXISTS over every destination column — planned as an
+    * existence join, so each batch row counts once however many twins
+    * the destination holds. A row where `live` is false never counts as
+    * novel. */
+  private def probe(tagged: DataFrame, dest: DataFrame, orderCol: String,
+                    live: Column): Probe = {
+    val dataCols = dest.columns.toIndexedSeq
+    // The batch side takes names no destination column carries: a
+    // correlated reference resolves against the subquery's own plan
+    // first, so a shared name would compare the destination with itself.
+    val outer = dataCols.indices.map(i => s"__probe$i")
+    val twin = dest.where(dataCols.zip(outer)
+      .map { case (c, o) => col(c) === col(o).outer() }.reduce(_ && _))
+      .exists()
+    val order = col(outer(dataCols.indexOf(orderCol)))
+    val r = tagged
+      .select(dataCols.zip(outer).map { case (c, o) => col(c).as(o) } :+
+        live.as("__live"): _*)
+      .select(order, (col("__live") && !twin).as("__novel"))
+      .agg(count(lit(1)), min(order), max(order), count_if(col("__novel")))
+      .first()
+    Probe(r.getLong(0), r.get(1), r.get(2), r.getLong(3) > 0L)
   }
 
   private def tombParamsPath(targetDir: String): Path =

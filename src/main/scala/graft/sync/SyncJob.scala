@@ -34,14 +34,21 @@ final case class SyncReport(
   * the reference's `pypgsync single` lifecycle (SURVEY §3.1).
   *
   *   1. T1  starting point = MAX(watermark) in dest, else MIN in source
-  *          (session.py:50-65) — the only driver-side scalars in the job.
+  *          (session.py:50-65). The destination is read once here and
+  *          the same frame goes on to the merge.
   *   2. T2  snapshot cut frozen at run start (pypgsync.py:13).
   *   3. S1  extract source rows with wm in [start, cut] — inclusive lower
   *          bound re-reads watermark ties (T3, session.py:130); the filter
   *          is a parquet-pushed range predicate, replacing the reference's
   *          ROW_NUMBER keyset pagination (SURVEY §4.1).
-  *   4. S4  keyed last-writer-wins merge (ParquetMergeSink) — idempotent,
-  *          so the re-read converges ("effectively-once").
+  *   4. One probe pass over the persisted extract (inside the merge): the
+  *          batch row count, its watermark bounds and whether any row
+  *          differs from its destination twin, in one query whose
+  *          destination side is bounded by the T1 start. A cold start
+  *          counts the extract instead.
+  *   5. S4  keyed last-writer-wins merge (ParquetMergeSink) — idempotent,
+  *          so the re-read converges ("effectively-once"); skipped when
+  *          the probe finds nothing new.
   *
   * The reference's sequential slice loop becomes Spark task parallelism:
   * the extract DataFrame is already range-partitioned by the source layout;
@@ -73,45 +80,13 @@ final class SyncJob(spark: SparkSession, cfg: SyncConfig) {
       s"watermark column '${cfg.watermarkCol}' must be numeric or " +
         s"timestamp-typed; got ${wmType.simpleString}")
 
-    // T1 — watermark recovery from destination state (self-describing
-    // resumability: survives restarts with no checkpoint, README.md:90).
-    // Heal an interrupted merge swap first, and treat metadata-only
-    // leftovers (crashed first write) as "no destination".
-    val fs = new Path(destDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    ParquetMergeSink.recoverInterruptedSwap(fs, destDir)
-    val destExists = ParquetMergeSink.hasData(fs, new Path(destDir))
-    // An interrupted partitioned merge leaves a pending marker with its
-    // batch's low watermark: partitions committed before the crash have
-    // advanced MAX(wm), so trusting it alone would skip the lost updates
-    // forever. min(dest MAX, marker) re-extracts the whole interrupted
-    // batch; the idempotent merge absorbs the replay.
-    val pendingRestart = ParquetMergeSink.pendingRestartPoint(fs, destDir)
-    val startingPoint: Option[Long] =
-      if (destExists) {
-        // Applied tombstones leave no destination row, so dest MAX alone
-        // would re-extract the whole accumulated delete feed on every
-        // poll; the applied-watermark sidecar (written only after fully-
-        // committed / proven-no-op tombstoned merges) lifts the base past
-        // fully-applied delete batches. max() is safe: both bounds carry
-        // the same "everything ≤ me is applied" contract.
-        val appliedWm = ParquetMergeSink.appliedWatermark(fs, destDir)
-        val destMax: Option[Long] =
-          (graft.core.Watermark.toMicros(
-              spark.read.parquet(destDir).agg(max(wm)).first().get(0)).toSeq ++
-            appliedWm.toSeq).maxOption
-        (destMax, pendingRestart) match {
-          case (Some(m), Some(p)) => Some(math.min(m, p))
-          case (None, None) =>
-            // destination exists but every row carries a NULL watermark
-            // (a foreign writer, or a merge of all-null-wm rows): treat
-            // it as a cold start from the source MIN — reporting "empty
-            // source" here would wedge the sync forever while the source
-            // has rows (runIntoParquet's twin already falls back this way)
-            graft.core.Watermark.toMicros(source.agg(min(wm)).first().get(0))
-          case (m, p) => m.orElse(p)
-        }
-      } else
-        graft.core.Watermark.toMicros(source.agg(min(wm)).first().get(0))
+    // A destination with no usable watermark (none yet, or every row's
+    // watermark NULL — a foreign writer, or a merge of all-null-wm rows)
+    // is a cold start from the source MIN: reporting "empty source" there
+    // would wedge the sync forever while the source has rows.
+    val (destStart, dest) = SyncJob.parquetRestart(spark, destDir, cfg.watermarkCol)
+    val startingPoint = destStart.orElse(
+      graft.core.Watermark.toMicros(source.agg(min(wm)).first().get(0)))
 
     startingPoint match {
       case None =>
@@ -119,28 +94,67 @@ final class SyncJob(spark: SparkSession, cfg: SyncConfig) {
         SyncReport(None, nowWatermark, 0L, 0L, (System.nanoTime() - t0) / 1000000)
       case Some(start) =>
         // S1 extract: inclusive both ends (T3 lower, T2 upper). Persisted
-        // once here so the count and every pass inside merge read the same
+        // once here so the probe and every pass inside merge read the same
         // snapshot of a possibly-live source.
         val extracted = source.filter(
             wm >= graft.core.Watermark.litFor(wmType, start) &&
             wm <= graft.core.Watermark.litFor(wmType, nowWatermark))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          // M1 table_total (one count, reused by the sink as updateRows; the
-          // reference paid an EXPLAIN estimate here, A6). Note: a full
-          // rewrite also re-writes carried-over target rows, so percent can
-          // saturate before the job ends — monotone either way.
-          val totalEstimate = extracted.count()
-          val result = TaskProgressListener.withProgress(
-            spark, totalEstimate, onProgress) {
-            ParquetMergeSink.merge(
-              spark, destDir, extracted, cfg.keyCols, cfg.watermarkCol,
-              cfg.partitionByCol, knownUpdateRows = Some(totalEstimate),
-              tombstoneCol = cfg.tombstoneCol)
-          }
+          // M1 table_total is the merge's own batch count (the reference
+          // paid an EXPLAIN estimate here, A6). Note: a full rewrite also
+          // re-writes carried-over target rows, so percent can saturate
+          // before the job ends — monotone either way.
+          val result = ParquetMergeSink.merge(
+            spark, destDir, extracted, cfg.keyCols, cfg.watermarkCol,
+            cfg.partitionByCol, tombstoneCol = cfg.tombstoneCol,
+            destination = dest, orderFloor = Some(start),
+            onProgress = Some(onProgress))
           SyncReport(Some(start), nowWatermark, result.updateRows,
             result.rowsWritten, (System.nanoTime() - t0) / 1000000)
         } finally { extracted.unpersist(); () }
+    }
+  }
+}
+
+object SyncJob {
+  /** T1 for a parquet destination — watermark recovery from destination
+    * state (self-describing resumability: survives restarts with no
+    * checkpoint, README.md:90). Returns the restart point the destination
+    * dictates — None when it has none, and the caller starts from the
+    * source MIN — and the destination frame the MAX was read from (None
+    * when there is no destination yet), for the merge to reuse.
+    *
+    * An interrupted merge swap is healed first, and metadata-only
+    * leftovers (a crashed first write) read as "no destination". An
+    * interrupted partitioned merge leaves a pending marker with its
+    * batch's low watermark: partitions committed before the crash have
+    * advanced MAX(wm), so trusting it alone would skip the lost updates
+    * forever. min(dest MAX, marker) re-extracts the whole interrupted
+    * batch; the idempotent merge absorbs the replay. Applied tombstones
+    * leave no destination row, so dest MAX alone would re-extract the
+    * whole accumulated delete feed on every poll; the applied-watermark
+    * sidecar (written only after fully-committed / proven-no-op
+    * tombstoned merges) lifts the base past fully-applied delete batches.
+    * max() is safe: both bounds carry the same "everything ≤ me is
+    * applied" contract. */
+  private[sync] def parquetRestart(spark: SparkSession, destDir: String,
+                                   watermarkCol: String)
+      : (Option[Long], Option[DataFrame]) = {
+    val fs = new Path(destDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    ParquetMergeSink.recoverInterruptedSwap(fs, destDir)
+    if (!ParquetMergeSink.hasData(fs, new Path(destDir))) (None, None)
+    else {
+      val dest = spark.read.parquet(destDir)
+      val destMax: Option[Long] =
+        (graft.core.Watermark.toMicros(
+            dest.agg(max(col(watermarkCol))).first().get(0)).toSeq ++
+          ParquetMergeSink.appliedWatermark(fs, destDir).toSeq).maxOption
+      val restart = (destMax, ParquetMergeSink.pendingRestartPoint(fs, destDir)) match {
+        case (Some(m), Some(p)) => Some(math.min(m, p))
+        case (m, p) => m.orElse(p)
+      }
+      (restart, Some(dest))
     }
   }
 }

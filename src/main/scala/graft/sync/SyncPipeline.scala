@@ -3,7 +3,6 @@ package graft.sync
 import java.sql.{Connection, DriverManager}
 import java.util.Properties
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -123,38 +122,20 @@ object SyncPipeline {
           onProgress)
       case JdbcTable(url, table, props) =>
         val src = new JdbcSource(url, props)
-        val fs = new Path(destDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        ParquetMergeSink.recoverInterruptedSwap(fs, destDir)
-        val destExists = ParquetMergeSink.hasData(fs, new Path(destDir))
-        val pending = ParquetMergeSink.pendingRestartPoint(fs, destDir)
-        val start =
-          if (destExists) {
-            val wm = col(cfg.watermarkCol)
-            // max with the applied-delete bound (see SyncJob): applied
-            // tombstones leave no dest row, so dest MAX alone re-extracts
-            // the whole delete feed every poll
-            val destMax: Option[Long] =
-              (graft.core.Watermark.toMicros(
-                  spark.read.parquet(destDir).agg(max(wm)).first().get(0)).toSeq ++
-                ParquetMergeSink.appliedWatermark(fs, destDir).toSeq)
-                .maxOption
-            (destMax, pending) match {
-              case (Some(m), Some(p)) => math.min(m, p)
-              case (m, p)             => m.orElse(p).getOrElse(srcMin)
-            }
-          } else srcMin
+        val (destStart, dest) =
+          SyncJob.parquetRestart(spark, destDir, cfg.watermarkCol)
+        val start = destStart.getOrElse(srcMin)
         if (start > cutV)
           return SyncReport(Some(start), cutV, 0L, 0L, elapsed())
         val est = src.countRange(spark, table, cfg.watermarkCol, start, cutV,
           wmTsTyped)
         val extracted = src.rangeRead(spark, table, cfg.watermarkCol,
           start, cutV, est, cfg.targetRowsPerSlice, timestampTyped = wmTsTyped)
-        val result = TaskProgressListener.withProgress(spark, est, onProgress) {
-          ParquetMergeSink.merge(spark, destDir, extracted, cfg.keyCols,
-            cfg.watermarkCol, cfg.partitionByCol, knownUpdateRows = Some(est),
-            tombstoneCol = cfg.tombstoneCol)
-        }
+        val result = ParquetMergeSink.merge(spark, destDir, extracted,
+          cfg.keyCols, cfg.watermarkCol, cfg.partitionByCol,
+          knownUpdateRows = Some(est), tombstoneCol = cfg.tombstoneCol,
+          destination = dest, orderFloor = Some(start),
+          onProgress = Some(onProgress))
         SyncReport(Some(start), cutV, result.updateRows, result.rowsWritten,
           elapsed())
     }
@@ -318,8 +299,10 @@ object SyncPipeline {
     ensureAppliedTable(conn)
     // monotone UPDATE-else-INSERT (never regress the bound; never
     // DELETE+INSERT — a crash between would erase the restart base)
+    // (a NULL bound reads as absent, so it must take the UPDATE too: an
+    // INSERT beside it would die as a raw PK violation)
     val up = conn.prepareStatement(s"UPDATE $AppliedTable SET applied_wm = ? " +
-      "WHERE table_name = ? AND applied_wm < ?")
+      "WHERE table_name = ? AND (applied_wm IS NULL OR applied_wm < ?)")
     val updated =
       try { up.setLong(1, wm); up.setString(2, table); up.setLong(3, wm)
             up.executeUpdate() }

@@ -251,6 +251,39 @@ trait JdbcSyncBehaviors { this: SparkSpec =>
     assert(e2.getMessage.contains("tombstone-blind"))
   }
 
+  test("parquet→jdbc tombstones: a NULL applied-watermark row is overwritten, never a raw PK violation") {
+    skipUnlessAvailable()
+    val url = freshDb("tombnull")
+    import spark.implicits._
+    val cfgT = cfg.copy(tombstoneCol = Some("DEL"))
+    val dir = tmpDir("jdbc-tomb-null") + "/src"
+    Seq((1L, 100L, 1.0, "A", false), (2L, 200L, 2.0, "B", false))
+      .toDF("ID", "UPDATED", "AMOUNT", "STATUS", "DEL").write.parquet(dir)
+    val src = SyncEndpoint.ParquetDir(dir)
+    val dst = SyncEndpoint.parse(s"$url#NULLDST")
+    SyncPipeline.run(spark, cfgT, src, dst)
+    // a NULL bound (a foreign writer, or a hand repair) reads as absent
+    exec(url, s"DELETE FROM ${SyncPipeline.AppliedTable}")
+    exec(url, s"INSERT INTO ${SyncPipeline.AppliedTable} " +
+      "(table_name, applied_wm) VALUES ('NULLDST', NULL)")
+    val r = SyncPipeline.run(spark, cfgT, src, dst)
+    assert(r.snapshotCut == 200L, s"$r")
+    assert(readTable(url, "NULLDST") ==
+      Map(1L -> ((100L, 1.0, "A")), 2L -> ((200L, 2.0, "B"))))
+    val conn = DriverManager.getConnection(url)
+    val recorded =
+      try {
+        val st = conn.createStatement()
+        try {
+          val rs = st.executeQuery(s"SELECT applied_wm FROM " +
+            s"${SyncPipeline.AppliedTable} WHERE table_name = 'NULLDST'")
+          try { assert(rs.next()); rs.getObject(1) } finally rs.close()
+        } finally st.close()
+      } finally conn.close()
+    assert(graft.core.Watermark.toMicros(recorded).contains(200L),
+      s"applied bound not recorded: $recorded")
+  }
+
   test("jdbc→parquet and parquet→jdbc arms round-trip") {
     skipUnlessAvailable()
     val url = freshDb("mixed")

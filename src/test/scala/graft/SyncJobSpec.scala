@@ -179,6 +179,52 @@ class SyncJobSpec extends SparkSpec {
     assert(readDest(dest) == Map(1L -> ((100L, 10.0, "A"))))
   }
 
+  test("SyncJob.run: a re-extracted row that keeps its watermark but changes payload is merged") {
+    // the tie row travels again on every poll; the probe must see its new
+    // payload as novel, not as the identical twin it was last time
+    val dest = tmpDir("sync-tie-run") + "/dest"
+    val job = new SyncJob(spark, cfg)
+    job.run(src((1L, 100L, 1.0, "A"), (2L, 200L, 2.0, "B")), dest, 500L)
+    val r = job.run(src((1L, 100L, 1.0, "A"), (2L, 200L, 7.0, "B2")), dest, 500L)
+    assert(r.startingPoint.contains(200L))
+    assert(r.rowsWritten > 0L, s"tied payload change was skipped: $r")
+    assert(readDest(dest) == Map(
+      1L -> ((100L, 1.0, "A")), 2L -> ((200L, 7.0, "B2"))))
+  }
+
+  test("SyncJob.run: a tied row with a NULL payload field still converges") {
+    // NULL != NULL in the twin test: the tie reads as novel and the poll
+    // may rewrite, but the destination never drifts from the source
+    val dest = tmpDir("sync-tie-null") + "/dest"
+    val job = new SyncJob(spark, cfg)
+    val s = src((1L, 100L, 1.0, "A"), (2L, 200L, 2.0, null))
+    job.run(s, dest, 500L)
+    job.run(s, dest, 500L)
+    assert(readDest(dest) == Map(
+      1L -> ((100L, 1.0, "A")), 2L -> ((200L, 2.0, null))))
+    // and a later change next to the NULL-bearing tie still lands
+    job.run(src((1L, 300L, 3.0, "A3"), (2L, 200L, 2.0, null)), dest, 500L)
+    assert(readDest(dest) == Map(
+      1L -> ((300L, 3.0, "A3")), 2L -> ((200L, 2.0, null))))
+  }
+
+  test("SyncJob.run: an added or a removed source column refuses with the typed SchemaDrift") {
+    val dest = tmpDir("sync-drift-run") + "/dest"
+    val job = new SyncJob(spark, cfg)
+    job.run(src((1L, 100L, 10.0, "A")), dest, 1000L)
+    val widened = Seq((1L, 100L, 10.0, "A", "eu-west"), (2L, 200L, 20.0, "B", "eu"))
+      .toDF("id", "updated", "amount", "status", "region")
+    val eAdd = intercept[graft.core.GraftError.SchemaDrift](
+      job.run(widened, dest, 1000L))
+    assert(eAdd.getMessage.contains("region"))
+    val narrowed = Seq((1L, 100L, 10.0), (2L, 200L, 20.0))
+      .toDF("id", "updated", "amount")
+    val eDrop = intercept[graft.core.GraftError.SchemaDrift](
+      job.run(narrowed, dest, 1000L))
+    assert(eDrop.getMessage.contains("status"))
+    assert(readDest(dest) == Map(1L -> ((100L, 10.0, "A"))))
+  }
+
   test("merge dedups duplicate keys within one batch (last writer by watermark wins)") {
     val dest = tmpDir("sync-dupe") + "/dest"
     val dupes = src((1L, 100L, 1.0, "old"), (1L, 300L, 3.0, "new"), (1L, 200L, 2.0, "mid"))
