@@ -882,17 +882,8 @@ object Main {
     if (64 % a.bands != 0)
       throw GraftError.InvalidConfig(
         s"--bands must divide 64, got ${a.bands}")
-    // build/append validate against the CLI's --bands; in PROBE mode the
-    // band count is whatever the index stamp froze, so the authoritative
-    // maxHamming < bands check lives in the probe — a CLI-side
-    // cross-check against the (defaulted) --bands would refuse a
-    // perfectly pigeonhole-exact probe of an 8-band index at
-    // --max-hamming 5 unless the user passed a cosmetic --bands 8
-    // (r16 advice)
-    if (a.mode != "probe" && a.maxHamming >= a.bands)
-      throw GraftError.InvalidConfig(
-        s"--max-hamming (${a.maxHamming}) must be < --bands (${a.bands}) " +
-          "for exact pigeonhole recall")
+    // maxHamming < bands is checked by the probe, against the band count
+    // the index stamp froze; build and append never read maxHamming
     val media = spark.read.parquet(a.source)
       .select(org.apache.spark.sql.functions.col(a.idCol).cast("long")
           .as("media_id"),

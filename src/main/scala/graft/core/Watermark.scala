@@ -12,9 +12,9 @@ import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, IntegerType,
   * session.py:58) or genuine SQL timestamps (the fixture's `events.ts`,
   * parquet TIMESTAMP(MICROS)); the driver-side canonical form is ONE type:
   * epoch-micros Long for time-typed columns, the raw long for numeric ones.
-  * Everything that persists a watermark (SyncReport, the pending-merge
-  * marker, graft_sync_state) stores that Long; predicates against the
-  * column re-materialize it as a literal of the column's own type so
+  * Everything that persists a watermark (SyncReport, the restart and
+  * applied bounds of sync.DestState) stores that Long; predicates against
+  * the column re-materialize it as a literal of the column's own type so
   * parquet row-group pruning and filter pushdown keep seeing a plain
   * comparison on the stored column.
   */

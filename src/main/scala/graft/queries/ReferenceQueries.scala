@@ -1357,8 +1357,8 @@ object ReferenceQueries {
     // every 20th key receives a payload-FREE tombstone (NULL payload —
     // delete feeds rarely carry one) one span later. The deleted key must
     // LEAVE the destination entirely; the tombstone column never reaches
-    // the dest schema; the setting is frozen in the .__merge_params
-    // sidecar. The reference cannot express this (session.py:135-151 is
+    // the dest schema; the setting is frozen in the destination's state
+    // record (sync.DestState). The reference cannot express this (session.py:135-151 is
     // upsert-only — its delete blind spot otherwise costs a Reconcile
     // full anti-join per repair). Oracle: the latest-per-key mirror
     // excluding deleted keys.

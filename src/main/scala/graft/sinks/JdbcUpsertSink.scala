@@ -33,8 +33,9 @@ import graft.core.DbConfig
   *
   * Crash note: per-partition transactions commit independently, so a
   * mid-run crash leaves a partial apply. SyncPipeline brackets JDBC-dest
-  * runs with a restart marker in the destination (graft_sync_state) so
-  * recovery re-extracts the whole interrupted batch — the parallel-safe
+  * runs with a restart marker in the destination's state record
+  * (sync.DestState, a `graft_sync_dest` row) so recovery re-extracts the
+  * whole interrupted batch — the parallel-safe
   * replacement for the reference's sequential ascending apply.
   */
 object JdbcUpsertSink {
@@ -214,8 +215,8 @@ object JdbcUpsertSink {
     * resolution is shared with the upsert path: `normalize`'s payload-hash
     * tie-break already covers a same-watermark delete/upsert pair, because
     * the flag column participates in the hash. SyncPipeline freezes the
-    * setting in the destination database so tombstone-blind re-runs
-    * refuse (see `graft_sync_params`). */
+    * setting in the destination's state record so tombstone-blind re-runs
+    * refuse (see `sync.DestState.freeze`). */
   def write(df: DataFrame, url: String, props: Properties, table: String,
             keyCols: Seq[String], orderCol: String,
             batchSize: Int = MaxBatchSize,

@@ -53,11 +53,12 @@ object ParquetMergeSink {
     *                  delete-then-reinsert round-trips (the reinsert is a
     *                  later-`orderCol` arrival that wins). The column
     *                  never reaches the destination schema, and the
-    *                  setting is FROZEN in a `.__merge_params` sidecar
-    *                  beside the dest: a tombstone-blind merge against a
-    *                  tombstoned destination (or vice versa) refuses —
-    *                  mixing would silently apply delete markers as
-    *                  upserts. The reference cannot express this at all
+    *                  setting is FROZEN in the destination's state record
+    *                  ([[DestState.freeze]]): a tombstone-blind merge
+    *                  against a tombstoned destination (or vice versa)
+    *                  refuses — mixing would silently apply delete
+    *                  markers as upserts. The reference cannot express
+    *                  this at all
     *                  (session.py:135-151 is upsert-only; its delete
     *                  blind spot otherwise needs Reconcile's full
     *                  anti-join scan, the wrong cost shape for a per-batch
@@ -72,6 +73,9 @@ object ParquetMergeSink {
     *                  taken inside the same probe query.
     * @param onProgress M1 callback over the rows this merge writes,
     *                  against the batch's row count as the total.
+    * @param state     the destination's state record as the caller
+    *                  already read it (SyncJob's T1), reused instead of a
+    *                  second read.
     */
   def merge(spark: SparkSession, targetDir: String, updates: DataFrame,
             keyCols: Seq[String], orderCol: String,
@@ -80,7 +84,8 @@ object ParquetMergeSink {
             tombstoneCol: Option[String] = None,
             destination: Option[DataFrame] = None,
             orderFloor: Option[Long] = None,
-            onProgress: Option[Progress => Unit] = None): MergeResult = {
+            onProgress: Option[Progress => Unit] = None,
+            state: Option[DestState.Store] = None): MergeResult = {
     require(keyCols.nonEmpty, "merge requires at least one key column")
     // Resolve caller-supplied names against each frame's ACTUAL casing
     // once: StructType(name) lookups are always case-sensitive and column
@@ -120,7 +125,7 @@ object ParquetMergeSink {
       // types whose boolean read is total or per-row checkable
       AggMaintenance.requireTombstoneType(updates, t)
     }
-    // The partitioned path's crash safety RESTS on the pending-merge marker
+    // The partitioned path's crash safety RESTS on the restart marker
     // (dynamic partition overwrite is not atomic across partitions), and
     // the marker stores the canonical-long restart watermark (epoch-micros
     // for time-typed order columns, the raw long for numeric ones —
@@ -140,8 +145,10 @@ object ParquetMergeSink {
     val exists = hasData(fs, new Path(targetDir))
     // the tombstone setting is part of the destination's frozen
     // parameterization — mixing tombstoned and tombstone-blind merges
-    // against one dest would silently apply delete markers as upserts
-    validateTombstoneStamp(fs, targetDir, exists, uTomb)
+    // against one dest would silently apply delete markers as upserts.
+    // A cold start resets the record here, before any data commit.
+    val store = state.getOrElse(DestState.parquet(fs, targetDir))
+    store.open(uTomb, exists)
     // normalized delete flag: try_cast (never a raw ANSI cast error
     // mid-shuffle), NULL reads as false — the common CDC shape
     val tombFlag = uTomb.map(t =>
@@ -190,15 +197,11 @@ object ParquetMergeSink {
       }
       def idle(): MergeResult = {
         // idle poll (T5): nothing extracted → never touch the destination
-        clearPendingMerge(fs, targetDir)
+        store.commit(None)
         MergeResult(0L, 0L)
       }
       if (!exists) {
         val updateRows = knownRows.getOrElse(updates.count())
-        // a cold start owns the destination's whole sidecar family: an
-        // applied-watermark bound surviving from a deleted-and-recreated
-        // incarnation would silently skip this incarnation's extraction
-        graft.core.SidecarIO.delete(fs, appliedWmPath(targetDir))
         // S3 create-dest-from-source-schema (session.py:194-197): still dedup
         // within the batch (a key may appear twice in one extract). STAGED,
         // then made visible by one rename: Spark's job commit moves task
@@ -234,12 +237,11 @@ object ParquetMergeSink {
         if (!fs.rename(new Path(tmp), dst))
           throw new java.io.IOException(
             s"cold merge: rename $tmp -> $dst failed")
-        clearPendingMerge(fs, targetDir)
         // cold-start deletes of never-synced keys leave no row to carry
         // their watermark — record the batch bound so the next poll's
         // restart point clears the already-applied delete feed
         if (uTomb.isDefined && delCount > 0L)
-          advanceAppliedWatermark(fs, targetDir, graft.core.Watermark
+          store.commit(graft.core.Watermark
             .toMicros(updates.agg(max(col(uOrder))).first().get(0)))
         return MergeResult(written, updateRows)
       }
@@ -309,7 +311,7 @@ object ParquetMergeSink {
       // watermark ties every poll; a re-extracted row IDENTICAL to its
       // destination twin carries nothing. ONE probe query over the batch
       // answers it together with the batch size and the order bounds (the
-      // pending marker's lo, the applied watermark's hi): an existence
+      // restart marker's lo, the applied watermark's hi): an existence
       // join of every batch row against the destination, scan-only, so an
       // idle continuous poll skips the O(dest) rewrite while any actual
       // difference — including a payload change on a tied watermark,
@@ -342,12 +344,11 @@ object ParquetMergeSink {
           .join(target.select(tKeys.map(col): _*), tKeys, "left_semi")
           .limit(1).count()
       if (!batch.novel && novelDelete == 0) {
-        clearPendingMerge(fs, targetDir)
         // the batch is PROVEN fully applied (no live novelty, no delete
         // with work left) — advancing here is what stops an idle
         // continuous sync from re-extracting the accumulated delete
         // feed on every poll
-        advanceAppliedWatermark(fs, targetDir, appliedHi)
+        store.commit(appliedHi)
         return MergeResult(0L, updateRows)
       }
 
@@ -388,7 +389,7 @@ object ParquetMergeSink {
           // partial commit. Cleared only after a fully-committed overwrite
           // AND the vacated-partition removal below.
           graft.core.Watermark.toMicros(tieLo) match {
-            case Some(lo) => writePendingMerge(fs, targetDir, lo)
+            case Some(lo) => store.markRestart(lo)
             case None => () // all-null order column (watermark type enforced
                             // above): rows without a watermark are outside
                             // the protocol
@@ -415,7 +416,7 @@ object ParquetMergeSink {
           // partition writer uses for the dir name), so the match holds
           // for any partition type, and only delete-touched partitions
           // can vacate (an upsert row always lands in the staged frame).
-          // Idempotent + still under the pending marker: a crash mid-sweep
+          // Idempotent + still under the restart marker: a crash mid-sweep
           // re-extracts and re-deletes.
           if (delCount > 0L) {
             val stagedStrs: Set[String] =
@@ -451,11 +452,10 @@ object ParquetMergeSink {
           atomicSwap(fs, targetDir, tmp)
           stagedRows
       })
-      clearPendingMerge(fs, targetDir)
-      // only after the pending marker clears: a surviving marker means a
+      // the marker clears with the bound: a surviving marker means a
       // possibly-partial commit, and min(marker) must keep winning over
       // this bound at the next restart
-      advanceAppliedWatermark(fs, targetDir, appliedHi)
+      store.commit(appliedHi)
       MergeResult(written, updateRows)
     } finally if (mustPersist) updates.unpersist()
   }
@@ -483,64 +483,6 @@ object ParquetMergeSink {
     fs.delete(bak, true)
     ()
   }
-
-  private def pendingPath(targetDir: String): Path =
-    new Path(targetDir.stripSuffix("/") + ".__merge_pending")
-
-  /** Restart watermark left by a partitioned merge that may have partially
-    * committed. SyncJob's T1 recovery takes `min(dest MAX, this)` so the
-    * interrupted batch is re-extracted in full (idempotent merge heals any
-    * mix of old and new partitions). */
-  private[sync] def pendingRestartPoint(fs: FileSystem, targetDir: String): Option[Long] =
-    // committed-content read (SidecarIO two-phase crash window on
-    // no-AbstractFileSystem schemes — the marker may live in `.new`)
-    graft.core.SidecarIO.read(fs, pendingPath(targetDir))
-      .flatMap(_.trim.toLongOption)
-
-  private def writePendingMerge(fs: FileSystem, targetDir: String, lo: Long): Unit =
-    // the restart-point marker is parsed with toLongOption, so a torn
-    // truncate-in-place write would silently read as "no pending merge" —
-    // exactly the class of window core.SidecarIO exists to close
-    graft.core.SidecarIO.write(fs, pendingPath(targetDir), lo.toString)
-
-  private def clearPendingMerge(fs: FileSystem, targetDir: String): Unit =
-    // through SidecarIO.delete, not a raw fs.delete: on fallback schemes
-    // the marker may live (only) in its staged `.new` twin, and a raw
-    // delete of the primary name would leave a stale committed restart
-    // point that pendingRestartPoint serves forever after
-    graft.core.SidecarIO.delete(fs, pendingPath(targetDir))
-
-  private def appliedWmPath(targetDir: String): Path =
-    new Path(targetDir.stripSuffix("/") + ".__merge_applied_wm")
-
-  /** Applied high-watermark for TOMBSTONED destinations: the canonical
-    * long (core.Watermark micros) order bound through which every
-    * extracted row — INCLUDING deletes, which leave no row behind — has
-    * been fully applied. Applied tombstones never persist in destination
-    * rows, so dest MAX(wm) stays below the delete feed's timestamps and
-    * a continuous sync whose recent history is all deletes re-extracts
-    * the whole accumulated feed on every poll, each a no-op via the
-    * key-level novelty probe — correct but O(delete history) per tick
-    * (r16 advice). SyncJob takes max(dest MAX, this) as its restart
-    * base. Safety is inherited from dest MAX's own contract: the marker
-    * advances only AFTER a fully-committed merge (or a batch proven a
-    * complete no-op) whose inclusive extract covered every row ≤ the
-    * bound, so skipping past it loses exactly nothing under the same
-    * monotonic-arrival assumption (T4's backdated-update miss applies
-    * identically to both mechanisms). Blind (untombstoned) destinations
-    * never write it — their live rows advance dest MAX by themselves. */
-  private[sync] def appliedWatermark(fs: FileSystem, targetDir: String): Option[Long] =
-    graft.core.SidecarIO.read(fs, appliedWmPath(targetDir))
-      .flatMap(_.trim.toLongOption)
-
-  /** Monotone advance (never regress: an out-of-order smaller batch max
-    * must not pull the restart base backwards). */
-  private def advanceAppliedWatermark(fs: FileSystem, targetDir: String,
-                                      hi: Option[Long]): Unit =
-    hi.foreach { h =>
-      if (!appliedWatermark(fs, targetDir).exists(_ >= h))
-        graft.core.SidecarIO.write(fs, appliedWmPath(targetDir), h.toString)
-    }
 
   /** Distinct hive partition column names of a single-level `col=value/`
     * layout at `dir` (the merge sink's own partitioned shape) — empty for
@@ -652,57 +594,6 @@ object ParquetMergeSink {
       .agg(count(lit(1)), min(order), max(order), count_if(col("__novel")))
       .first()
     Probe(r.getLong(0), r.get(1), r.get(2), r.getLong(3) > 0L)
-  }
-
-  private def tombParamsPath(targetDir: String): Path =
-    new Path(targetDir.stripSuffix("/") + ".__merge_params")
-
-  /** The tombstone setting is FROZEN per destination (the keyed IVM
-    * lanes' `tomb=` stamp rule, transposed to the sync dest): the first
-    * tombstoned cold start writes `tomb=<col>` to a `.__merge_params`
-    * sidecar BESIDE the dest (it must survive the whole-directory swap),
-    * and every later merge must present the same setting. Mixing is the
-    * silent-corruption case this refuses: a tombstone-blind merge against
-    * a tombstoned dest would apply delete markers as upserts (NULL-payload
-    * rows landing as data); a tombstoned merge against a blind dest means
-    * earlier batches' markers (if any) were already mis-applied.
-    * Tombstone-free dests never write the sidecar — the legacy hot path
-    * gains two fs.exists probes and nothing else. */
-  private def validateTombstoneStamp(fs: FileSystem, targetDir: String,
-                                     destExists: Boolean,
-                                     tomb: Option[String]): Unit = {
-    val p = tombParamsPath(targetDir)
-    val stored = graft.core.SidecarIO.read(fs, p).map(_.trim)
-    (stored, tomb) match {
-      case (Some(s), Some(t)) if s == s"tomb=$t" => ()
-      case (_, Some(t)) if !destExists =>
-        // cold start (or re-start over a crashed cold attempt's debris):
-        // freeze BEFORE any data commit — a crash between stamp and data
-        // leaves stamp-without-dest, which the next cold run overwrites
-        graft.core.SidecarIO.write(fs, p, s"tomb=$t")
-      case (Some(s), Some(t)) =>
-        throw graft.core.GraftError.InvalidConfig(
-          s"destination $targetDir is frozen as '$s' but this merge says " +
-            s"tomb=$t — one destination, one tombstone column; rebuild " +
-            "the destination to change it")
-      case (Some(s), None) if destExists =>
-        throw graft.core.GraftError.InvalidConfig(
-          s"destination $targetDir was maintained WITH tombstones ('$s') " +
-            "— a tombstone-blind merge would apply delete markers as " +
-            "upserts; pass the tombstone column or rebuild the destination")
-      case (Some(_), None) =>
-        // stamp without data: a crashed cold tombstoned attempt; a blind
-        // cold start owns the name now
-        graft.core.SidecarIO.delete(fs, p)
-      case (None, Some(_)) =>
-        throw graft.core.GraftError.InvalidConfig(
-          s"destination $targetDir was created tombstone-blind — earlier " +
-            "batches' delete markers (if any) were applied as upserts, so " +
-            "its current state cannot be trusted under delete semantics; " +
-            "rebuild the destination with the tombstone column frozen " +
-            "from the start")
-      case (None, None) => ()
-    }
   }
 
   /** Write with the BRIN-analog layout (SURVEY §4.1): rows sorted WITHIN

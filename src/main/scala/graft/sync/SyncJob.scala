@@ -84,7 +84,8 @@ final class SyncJob(spark: SparkSession, cfg: SyncConfig) {
     // watermark NULL — a foreign writer, or a merge of all-null-wm rows)
     // is a cold start from the source MIN: reporting "empty source" there
     // would wedge the sync forever while the source has rows.
-    val (destStart, dest) = SyncJob.parquetRestart(spark, destDir, cfg.watermarkCol)
+    val (destStart, dest, state) =
+      SyncJob.parquetRestart(spark, destDir, cfg.watermarkCol)
     val startingPoint = destStart.orElse(
       graft.core.Watermark.toMicros(source.agg(min(wm)).first().get(0)))
 
@@ -109,7 +110,7 @@ final class SyncJob(spark: SparkSession, cfg: SyncConfig) {
             spark, destDir, extracted, cfg.keyCols, cfg.watermarkCol,
             cfg.partitionByCol, tombstoneCol = cfg.tombstoneCol,
             destination = dest, orderFloor = Some(start),
-            onProgress = Some(onProgress))
+            onProgress = Some(onProgress), state = Some(state))
           SyncReport(Some(start), nowWatermark, result.updateRows,
             result.rowsWritten, (System.nanoTime() - t0) / 1000000)
         } finally { extracted.unpersist(); () }
@@ -122,39 +123,27 @@ object SyncJob {
     * state (self-describing resumability: survives restarts with no
     * checkpoint, README.md:90). Returns the restart point the destination
     * dictates — None when it has none, and the caller starts from the
-    * source MIN — and the destination frame the MAX was read from (None
-    * when there is no destination yet), for the merge to reuse.
+    * source MIN — the destination frame the MAX was read from (None when
+    * there is no destination yet) and the destination's state record,
+    * both for the merge to reuse.
     *
     * An interrupted merge swap is healed first, and metadata-only
-    * leftovers (a crashed first write) read as "no destination". An
-    * interrupted partitioned merge leaves a pending marker with its
-    * batch's low watermark: partitions committed before the crash have
-    * advanced MAX(wm), so trusting it alone would skip the lost updates
-    * forever. min(dest MAX, marker) re-extracts the whole interrupted
-    * batch; the idempotent merge absorbs the replay. Applied tombstones
-    * leave no destination row, so dest MAX alone would re-extract the
-    * whole accumulated delete feed on every poll; the applied-watermark
-    * sidecar (written only after fully-committed / proven-no-op
-    * tombstoned merges) lifts the base past fully-applied delete batches.
-    * max() is safe: both bounds carry the same "everything ≤ me is
-    * applied" contract. */
+    * leftovers (a crashed first write) read as "no destination". The
+    * restart point itself is [[DestState.restart]] over dest MAX: a
+    * surviving restart marker (an interrupted partitioned merge) lowers
+    * it, the applied bound of a tombstoned destination raises it. */
   private[sync] def parquetRestart(spark: SparkSession, destDir: String,
                                    watermarkCol: String)
-      : (Option[Long], Option[DataFrame]) = {
+      : (Option[Long], Option[DataFrame], DestState.Store) = {
     val fs = new Path(destDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val state = DestState.parquet(fs, destDir)
     ParquetMergeSink.recoverInterruptedSwap(fs, destDir)
-    if (!ParquetMergeSink.hasData(fs, new Path(destDir))) (None, None)
+    if (!ParquetMergeSink.hasData(fs, new Path(destDir))) (None, None, state)
     else {
       val dest = spark.read.parquet(destDir)
-      val destMax: Option[Long] =
-        (graft.core.Watermark.toMicros(
-            dest.agg(max(col(watermarkCol))).first().get(0)).toSeq ++
-          ParquetMergeSink.appliedWatermark(fs, destDir).toSeq).maxOption
-      val restart = (destMax, ParquetMergeSink.pendingRestartPoint(fs, destDir)) match {
-        case (Some(m), Some(p)) => Some(math.min(m, p))
-        case (m, p) => m.orElse(p)
-      }
-      (restart, Some(dest))
+      val destMax = graft.core.Watermark.toMicros(
+        dest.agg(max(col(watermarkCol))).first().get(0))
+      (state.current(populated = true).restart(destMax), Some(dest), state)
     }
   }
 }

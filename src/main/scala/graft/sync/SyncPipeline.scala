@@ -45,17 +45,14 @@ object SyncEndpoint {
   * transactions commit independently (the parallel replacement for the
   * reference's sequential ascending apply), so a mid-run crash can advance
   * MAX(watermark) past unapplied rows. Before writing, the run records its
-  * starting watermark in a `graft_sync_state` row in the destination
-  * database and clears it on success; recovery starts from
+  * starting watermark as the restart marker of the destination's state
+  * record ([[DestState]], a `graft_sync_dest` row in the destination
+  * database) and clears it on success; recovery starts from
   * `min(dest MAX, marker)` and the idempotent upsert absorbs the replay —
-  * the JDBC twin of ParquetMergeSink's pending-merge marker.
+  * the same record and rule as a partitioned parquet merge.
   */
 object SyncPipeline {
   import SyncEndpoint._
-
-  val StateTable = "graft_sync_state"
-  val ParamsTable = "graft_sync_params"
-  val AppliedTable = "graft_sync_applied"
 
   def run(spark: SparkSession, cfg: SyncConfig, source: SyncEndpoint,
           dest: SyncEndpoint, cut: Option[Long] = None,
@@ -87,11 +84,11 @@ object SyncPipeline {
         val cutV = cut.getOrElse(b.hiUs) // T2: frozen at run start
         dest match {
           case ParquetDir(destDir) =>
-            runIntoParquet(spark, cfg, source, destDir, b.loUs, cutV,
-              b.timestampTyped, onProgress, elapsed _)
+            runIntoParquet(spark, cfg, source, destDir, b, cutV, onProgress,
+              () => elapsed)
           case JdbcTable(url, table, props) =>
-            runIntoJdbc(spark, cfg, source, url, table, props, b.loUs, cutV,
-              b.timestampTyped, onProgress, elapsed _)
+            runIntoJdbc(spark, cfg, source, url, table, props, b, cutV,
+              onProgress, () => elapsed)
         }
     }
   }
@@ -111,7 +108,7 @@ object SyncPipeline {
 
   private def runIntoParquet(spark: SparkSession, cfg: SyncConfig,
                              source: SyncEndpoint, destDir: String,
-                             srcMin: Long, cutV: Long, wmTsTyped: Boolean,
+                             b: JdbcSource.WatermarkBounds, cutV: Long,
                              onProgress: Progress => Unit,
                              elapsed: () => Long): SyncReport = {
     source match {
@@ -122,20 +119,21 @@ object SyncPipeline {
           onProgress)
       case JdbcTable(url, table, props) =>
         val src = new JdbcSource(url, props)
-        val (destStart, dest) =
+        val (destStart, dest, state) =
           SyncJob.parquetRestart(spark, destDir, cfg.watermarkCol)
-        val start = destStart.getOrElse(srcMin)
+        val start = destStart.getOrElse(b.loUs)
         if (start > cutV)
           return SyncReport(Some(start), cutV, 0L, 0L, elapsed())
         val est = src.countRange(spark, table, cfg.watermarkCol, start, cutV,
-          wmTsTyped)
+          b.timestampTyped)
         val extracted = src.rangeRead(spark, table, cfg.watermarkCol,
-          start, cutV, est, cfg.targetRowsPerSlice, timestampTyped = wmTsTyped)
+          start, cutV, est, cfg.targetRowsPerSlice,
+          timestampTyped = b.timestampTyped)
         val result = ParquetMergeSink.merge(spark, destDir, extracted,
           cfg.keyCols, cfg.watermarkCol, cfg.partitionByCol,
           knownUpdateRows = Some(est), tombstoneCol = cfg.tombstoneCol,
           destination = dest, orderFloor = Some(start),
-          onProgress = Some(onProgress))
+          onProgress = Some(onProgress), state = Some(state))
         SyncReport(Some(start), cutV, result.updateRows, result.rowsWritten,
           elapsed())
     }
@@ -145,9 +143,8 @@ object SyncPipeline {
 
   private def runIntoJdbc(spark: SparkSession, cfg: SyncConfig,
                           source: SyncEndpoint, url: String, table: String,
-                          props: Properties, srcMin: Long, cutV: Long,
-                          wmTsTyped: Boolean,
-                          onProgress: Progress => Unit,
+                          props: Properties, b: JdbcSource.WatermarkBounds,
+                          cutV: Long, onProgress: Progress => Unit,
                           elapsed: () => Long): SyncReport = {
     // Build the extraction lazily from the resolved start watermark.
     def extract(start: Long): (DataFrame, Long) = source match {
@@ -163,9 +160,9 @@ object SyncPipeline {
       case JdbcTable(srcUrl, srcTable, srcProps) =>
         val src = new JdbcSource(srcUrl, srcProps)
         val est = src.countRange(spark, srcTable, cfg.watermarkCol, start, cutV,
-          wmTsTyped)
+          b.timestampTyped)
         (src.rangeRead(spark, srcTable, cfg.watermarkCol, start, cutV, est,
-          cfg.targetRowsPerSlice, timestampTyped = wmTsTyped), est)
+          cfg.targetRowsPerSlice, timestampTyped = b.timestampTyped), est)
     }
 
     // S3 — create destination table from the source schema when missing.
@@ -176,7 +173,7 @@ object SyncPipeline {
       case JdbcTable(srcUrl, srcTable, srcProps) =>
         new JdbcSource(srcUrl, srcProps)
           .rangeRead(spark, srcTable, cfg.watermarkCol, 0L, 0L, 0L,
-            timestampTyped = wmTsTyped).schema
+            timestampTyped = b.timestampTyped).schema
     }
     val sourceSchema = cfg.tombstoneCol match {
       case Some(t) =>
@@ -184,60 +181,36 @@ object SyncPipeline {
           sourceSchema0.fields.filterNot(_.name.equalsIgnoreCase(t)))
       case None => sourceSchema0
     }
-    // freeze the tombstone setting in the destination database (the
-    // parquet dest's .__merge_params rule on the JDBC front): mixing
-    // tombstoned and tombstone-blind runs refuses typed. BEFORE
-    // ensureTable — its drift check would otherwise mask the targeted
-    // refusal (a blind run's source still carries the marker column,
-    // which reads as spurious drift against a tombstoned dest).
     withConnection(url, props) { conn =>
-      validateTombstoneParams(conn, table, cfg.tombstoneCol)
-      // a cold start owns the dest's whole state family: an
-      // applied-watermark row surviving from a dropped-and-recreated
-      // table would silently skip the new incarnation's extraction
-      // (the parquet front's cold sidecar-delete rule)
-      if (cfg.tombstoneCol.isDefined && !tableExists(conn, table))
-        clearAppliedRow(conn, table)
-    }
-    JdbcUpsertSink.ensureTable(url, props, table, sourceSchema, cfg.keyCols)
+      // freeze the tombstone setting (and reset a cold start's record)
+      // BEFORE ensureTable — its drift check would otherwise mask the
+      // targeted refusal (a blind run's source still carries the marker
+      // column, which reads as spurious drift against a tombstoned dest)
+      val state = DestState.jdbc(conn, table)
+      lazy val populated = destHasRows(conn, table)
+      val opened = state.open(cfg.tombstoneCol, populated)
+      JdbcUpsertSink.ensureTable(url, props, table, sourceSchema, cfg.keyCols)
 
-    withConnection(url, props) { conn =>
-      ensureStateTable(conn)
-      // T1 — dest MAX(wm), healed by a surviving restart marker. Applied
-      // tombstones leave no destination ROW, so for tombstoned dests the
-      // applied-watermark row (written only after a fully-committed
-      // batch) lifts the base past fully-applied delete feeds — the
-      // parquet front's `.__merge_applied_wm` rule on the JDBC front;
-      // the restart marker still wins the min below.
-      val appliedWm =
-        if (cfg.tombstoneCol.isDefined) readApplied(conn, table) else None
-      val destMax: Option[Long] =
-        (scalarLong(conn,
-          s"SELECT MAX(${cfg.watermarkCol}) FROM $table").toSeq ++
-          appliedWm.toSeq).maxOption
-      val marker = readMarker(conn, table)
-      val start = (destMax, marker) match {
-        case (Some(m), Some(p)) => math.min(m, p)
-        case (m, p)             => m.orElse(p).getOrElse(srcMin)
-      }
+      // T1 — dest MAX(wm) through the shared restart rule
+      val start = opened.restart(scalarLong(conn,
+        s"SELECT MAX(${cfg.watermarkCol}) FROM $table")).getOrElse(b.loUs)
       if (start > cutV) {
-        clearMarker(conn, table)
+        state.commit(None)
         return SyncReport(Some(start), cutV, 0L, 0L, elapsed())
       }
       // record the restart point BEFORE any partition can commit
-      writeMarker(conn, table, start)
+      state.markRestart(start)
 
       val (extracted, candidateRows) = extract(start)
       try {
         val applied = JdbcUpsertSink.write(extracted, url, props, table,
           cfg.keyCols, cfg.watermarkCol,
           tombstoneCol = cfg.tombstoneCol)
-        clearMarker(conn, table)
-        // only after the marker clears (a surviving marker must keep
-        // winning the min): the batch covered everything ≤ the frozen
-        // cut inclusively, so the cut is the applied bound — including
-        // the deletes that left no row behind
-        if (cfg.tombstoneCol.isDefined) writeApplied(conn, table, cutV)
+        // the batch covered every source row up to the cut that existed at
+        // run start — so the applied bound is the source MAX read then,
+        // capped by the cut, never the cut itself: a row arriving later
+        // below a far cut must still be extracted by the next run
+        state.commit(cfg.tombstoneCol.map(_ => math.min(cutV, b.hiUs)))
         // JDBC writes emit no Spark output metrics — report completion once
         onProgress(Progress(applied, applied))
         SyncReport(Some(start), cutV, candidateRows, applied, elapsed())
@@ -248,7 +221,7 @@ object SyncPipeline {
     }
   }
 
-  // ------------------------------------------------------- state-table plumbing
+  // ------------------------------------------------------------ jdbc plumbing
 
   private def withConnection[A](url: String, props: Properties)
                                (f: Connection => A): A = {
@@ -256,118 +229,8 @@ object SyncPipeline {
     try f(conn) finally conn.close()
   }
 
-  // catalogs fold unquoted identifiers differently (Derby upper, PG lower);
-  // the case-folding probe is shared with the sink's ensureTable
-  private def tableExists(conn: Connection, name: String): Boolean =
-    graft.sinks.JdbcUpsertSink.tableExists(conn, name)
-
-  private def ensureStateTable(conn: Connection): Unit =
-    if (!tableExists(conn, StateTable)) {
-      val st = conn.createStatement()
-      try st.executeUpdate(s"CREATE TABLE $StateTable (" +
-        "table_name VARCHAR(128) NOT NULL PRIMARY KEY, restart_wm BIGINT)")
-      finally st.close()
-      ()
-    }
-
-  /** Applied high-watermark for tombstoned JDBC destinations (the
-    * parquet front's `.__merge_applied_wm` sidecar as a state row):
-    * monotone, written only after a fully-committed batch, consulted as
-    * max(dest MAX, this). Blind destinations never get a row. */
-  private def ensureAppliedTable(conn: Connection): Unit =
-    if (!tableExists(conn, AppliedTable)) {
-      val st = conn.createStatement()
-      try st.executeUpdate(s"CREATE TABLE $AppliedTable (" +
-        "table_name VARCHAR(128) NOT NULL PRIMARY KEY, applied_wm BIGINT)")
-      finally st.close()
-      ()
-    }
-
-  private def readApplied(conn: Connection, table: String): Option[Long] = {
-    if (!tableExists(conn, AppliedTable)) return None
-    val ps = conn.prepareStatement(
-      s"SELECT applied_wm FROM $AppliedTable WHERE table_name = ?")
-    try {
-      ps.setString(1, table)
-      val rs = ps.executeQuery()
-      try { if (!rs.next()) None else graft.core.Watermark.toMicros(rs.getObject(1)) }
-      finally rs.close()
-    } finally ps.close()
-  }
-
-  private def writeApplied(conn: Connection, table: String, wm: Long): Unit = {
-    ensureAppliedTable(conn)
-    // monotone UPDATE-else-INSERT (never regress the bound; never
-    // DELETE+INSERT — a crash between would erase the restart base)
-    // (a NULL bound reads as absent, so it must take the UPDATE too: an
-    // INSERT beside it would die as a raw PK violation)
-    val up = conn.prepareStatement(s"UPDATE $AppliedTable SET applied_wm = ? " +
-      "WHERE table_name = ? AND (applied_wm IS NULL OR applied_wm < ?)")
-    val updated =
-      try { up.setLong(1, wm); up.setString(2, table); up.setLong(3, wm)
-            up.executeUpdate() }
-      finally up.close()
-    if (updated == 0 && readApplied(conn, table).isEmpty) {
-      val ps = conn.prepareStatement(
-        s"INSERT INTO $AppliedTable (table_name, applied_wm) VALUES (?, ?)")
-      try { ps.setString(1, table); ps.setLong(2, wm); ps.executeUpdate(); () }
-      finally ps.close()
-    }
-  }
-
-  private def clearAppliedRow(conn: Connection, table: String): Unit =
-    if (tableExists(conn, AppliedTable)) {
-      val ps = conn.prepareStatement(
-        s"DELETE FROM $AppliedTable WHERE table_name = ?")
-      try { ps.setString(1, table); ps.executeUpdate(); () }
-      finally ps.close()
-    }
-
-  private def ensureParamsTable(conn: Connection): Unit =
-    if (!tableExists(conn, ParamsTable)) {
-      val st = conn.createStatement()
-      try st.executeUpdate(s"CREATE TABLE $ParamsTable (" +
-        "table_name VARCHAR(128) NOT NULL PRIMARY KEY, params VARCHAR(256))")
-      finally st.close()
-      ()
-    }
-
-  private def readParamsRow(conn: Connection, table: String): Option[String] = {
-    val ps = conn.prepareStatement(
-      s"SELECT params FROM $ParamsTable WHERE table_name = ?")
-    try {
-      ps.setString(1, table)
-      val rs = ps.executeQuery()
-      try { if (!rs.next()) None else Option(rs.getString(1)) }
-      finally rs.close()
-    } finally ps.close()
-  }
-
-  private def writeParamsRow(conn: Connection, table: String,
-                             params: String): Unit = {
-    // UPDATE-else-INSERT, same atomicity argument as writeMarker
-    val up = conn.prepareStatement(
-      s"UPDATE $ParamsTable SET params = ? WHERE table_name = ?")
-    val updated =
-      try { up.setString(1, params); up.setString(2, table); up.executeUpdate() }
-      finally up.close()
-    if (updated == 0) {
-      val ps = conn.prepareStatement(
-        s"INSERT INTO $ParamsTable (table_name, params) VALUES (?, ?)")
-      try { ps.setString(1, table); ps.setString(2, params); ps.executeUpdate(); () }
-      finally ps.close()
-    }
-  }
-
-  private def clearParamsRow(conn: Connection, table: String): Unit = {
-    val ps = conn.prepareStatement(
-      s"DELETE FROM $ParamsTable WHERE table_name = ?")
-    try { ps.setString(1, table); ps.executeUpdate(); () }
-    finally ps.close()
-  }
-
   private def destHasRows(conn: Connection, table: String): Boolean =
-    tableExists(conn, table) && {
+    JdbcUpsertSink.tableExists(conn, table) && {
       val st = conn.createStatement()
       try {
         // one row is the question; without a cap PostgreSQL's driver in
@@ -381,49 +244,6 @@ object SyncPipeline {
       } finally st.close()
     }
 
-  /** ParquetMergeSink's `.__merge_params` freeze, on the JDBC front: one
-    * destination, one tombstone setting. Runs BEFORE ensureTable (the dest
-    * may not exist yet — a missing or empty dest adopts whatever the
-    * current run says). A populated dest with no frozen row is a
-    * blind-history dest — refusing a tombstoned run against it matches
-    * the parquet rule (its earlier delete markers, if any, were applied
-    * as upserts). */
-  private def validateTombstoneParams(conn: Connection, table: String,
-                                      tomb: Option[String]): Unit =
-    tomb match {
-      case Some(t) =>
-        ensureParamsTable(conn)
-        readParamsRow(conn, table) match {
-          case Some(s) if s == s"tomb=$t" => ()
-          case Some(s) =>
-            throw graft.core.GraftError.InvalidConfig(
-              s"destination table $table is frozen as '$s' but this sync " +
-                s"says tomb=$t — one destination, one tombstone column; " +
-                "rebuild the destination to change it")
-          case None =>
-            if (destHasRows(conn, table))
-              throw graft.core.GraftError.InvalidConfig(
-                s"destination table $table was populated tombstone-blind " +
-                  "— earlier batches' delete markers (if any) were " +
-                  "applied as upserts; rebuild the destination with the " +
-                  "tombstone column frozen from the start")
-            writeParamsRow(conn, table, s"tomb=$t")
-        }
-      case None =>
-        if (tableExists(conn, ParamsTable))
-          readParamsRow(conn, table) match {
-            case Some(s) if s.startsWith("tomb=") =>
-              if (destHasRows(conn, table))
-                throw graft.core.GraftError.InvalidConfig(
-                  s"destination table $table was maintained WITH " +
-                    s"tombstones ('$s') — a tombstone-blind sync would " +
-                    "apply delete markers as upserts; pass the tombstone " +
-                    "column or rebuild the destination")
-              else clearParamsRow(conn, table) // empty dest: blind run owns it
-            case _ => ()
-          }
-    }
-
   private def scalarLong(conn: Connection, sql: String): Option[Long] = {
     val st = conn.createStatement()
     try {
@@ -433,49 +253,5 @@ object SyncPipeline {
         else graft.core.Watermark.toMicros(rs.getObject(1))
       } finally rs.close()
     } finally st.close()
-  }
-
-  private def readMarker(conn: Connection, table: String): Option[Long] = {
-    val ps = conn.prepareStatement(
-      s"SELECT restart_wm FROM $StateTable WHERE table_name = ?")
-    try {
-      ps.setString(1, table)
-      val rs = ps.executeQuery()
-      try {
-        if (!rs.next()) None
-        else graft.core.Watermark.toMicros(rs.getObject(1))
-      } finally rs.close()
-    } finally ps.close()
-  }
-
-  private def writeMarker(conn: Connection, table: String, wm: Long): Unit = {
-    // UPDATE-else-INSERT, never DELETE+INSERT: in autocommit a crash
-    // between a delete and its re-insert would erase the restart marker
-    // and permanently lose the interrupted batch it protects (the next
-    // run trusts dest MAX(wm) alone), and wrapping the pair in a
-    // transaction trips DuckDB's documented ART-index limitation
-    // (delete + re-insert of the same key in one transaction reads as a
-    // duplicate-PK violation). Each statement here is atomic on its own:
-    // an existing marker is one UPDATE; a missing one is one INSERT, and
-    // a crash before it leaves the same no-marker state the call began
-    // with — the protected merge has not started yet.
-    val up = conn.prepareStatement(
-      s"UPDATE $StateTable SET restart_wm = ? WHERE table_name = ?")
-    val updated =
-      try { up.setLong(1, wm); up.setString(2, table); up.executeUpdate() }
-      finally up.close()
-    if (updated == 0) {
-      val ps = conn.prepareStatement(
-        s"INSERT INTO $StateTable (table_name, restart_wm) VALUES (?, ?)")
-      try { ps.setString(1, table); ps.setLong(2, wm); ps.executeUpdate(); () }
-      finally ps.close()
-    }
-  }
-
-  private def clearMarker(conn: Connection, table: String): Unit = {
-    val ps = conn.prepareStatement(
-      s"DELETE FROM $StateTable WHERE table_name = ?")
-    try { ps.setString(1, table); ps.executeUpdate(); () }
-    finally ps.close()
   }
 }

@@ -5,7 +5,7 @@ import java.sql.DriverManager
 import org.apache.spark.sql.functions._
 
 import graft.sources.JdbcSource
-import graft.sync.{SyncConfig, SyncEndpoint, SyncPipeline}
+import graft.sync.{DestState, SyncConfig, SyncEndpoint, SyncPipeline}
 
 /** End-to-end JDBC sync lifecycle — preflight (S6), PK reflection (S2),
   * create-dest (S3), partitioned range extract (S1), idempotent guarded
@@ -76,7 +76,7 @@ trait JdbcSyncBehaviors { this: SparkSpec =>
     exec(url, s"UPDATE SRC SET UPDATED = $wm, AMOUNT = $amt, " +
       s"STATUS = '$status' WHERE ID = $id")
 
-  private def readTable(url: String, table: String): Map[Long, (Long, Double, String)] = {
+  protected def readTable(url: String, table: String): Map[Long, (Long, Double, String)] = {
     val conn = DriverManager.getConnection(url)
     try {
       val st = conn.createStatement()
@@ -92,7 +92,48 @@ trait JdbcSyncBehaviors { this: SparkSpec =>
     } finally conn.close()
   }
 
-  private val cfg = SyncConfig(keyCols = Seq("ID"), watermarkCol = "UPDATED")
+  protected def count(url: String, sql: String): Long = {
+    val conn = DriverManager.getConnection(url)
+    try {
+      val st = conn.createStatement()
+      try {
+        val rs = st.executeQuery(sql)
+        try { assert(rs.next()); rs.getLong(1) } finally rs.close()
+      } finally st.close()
+    } finally conn.close()
+  }
+
+  /** `table`'s `graft_sync_dest` row, read with plain SQL. */
+  protected def stateRow(url: String, table: String): Option[DestState] = {
+    val conn = DriverManager.getConnection(url)
+    try {
+      val ps = conn.prepareStatement("SELECT restart_wm, applied_wm, params " +
+        "FROM graft_sync_dest WHERE table_name = ?")
+      try {
+        ps.setString(1, table)
+        val rs = ps.executeQuery()
+        try {
+          if (!rs.next()) None
+          else Some(DestState(graft.core.Watermark.toMicros(rs.getObject(1)),
+            graft.core.Watermark.toMicros(rs.getObject(2)),
+            Option(rs.getString(3))))
+        } finally rs.close()
+      } finally ps.close()
+    } finally conn.close()
+  }
+
+  protected val cfg = SyncConfig(keyCols = Seq("ID"), watermarkCol = "UPDATED")
+
+  protected val cfgT: SyncConfig = cfg.copy(tombstoneCol = Some("DEL"))
+
+  /** (Re)write the parquet source at `dir` with tombstone column `tombCol`. */
+  protected def writeTombSrc(dir: String,
+                             rows: Seq[(Long, Long, java.lang.Double, String, Boolean)],
+                             tombCol: String = "DEL"): Unit = {
+    import spark.implicits._
+    rows.toDF("ID", "UPDATED", "AMOUNT", "STATUS", tombCol)
+      .write.mode("overwrite").parquet(dir)
+  }
 
   /** Registers the shared spec body. Called from each arm's constructor —
     * explicitly, so an arm whose database can NEVER be present in this
@@ -162,27 +203,103 @@ trait JdbcSyncBehaviors { this: SparkSpec =>
     val dst = SyncEndpoint.parse(s"$url#DST")
     SyncPipeline.run(spark, cfg, src, dst)
     // simulate a crashed run that had started from wm=100: marker survives
-    exec(url, s"INSERT INTO ${SyncPipeline.StateTable} VALUES ('DST', 100)")
+    exec(url, "UPDATE graft_sync_dest SET restart_wm = 100 " +
+      "WHERE table_name = 'DST'")
+    assert(stateRow(url, "DST").flatMap(_.restartWm).contains(100L))
     // row 1 changed with wm 150 < dest MAX 500 — lost without the marker
     updateRow(url, 1L, 150L, 9.0, "RECOVERED")
     val r = SyncPipeline.run(spark, cfg, src, dst)
     assert(r.startingPoint.contains(100L)) // min(dest MAX, marker)
     assert(readTable(url, "DST")(1L) == ((150L, 9.0, "RECOVERED")))
     // successful run cleared the marker
-    val conn = DriverManager.getConnection(url)
-    try {
-      val rs = conn.createStatement().executeQuery(
-        s"SELECT COUNT(*) FROM ${SyncPipeline.StateTable}")
-      rs.next()
-      assert(rs.getLong(1) == 0L)
-    } finally conn.close()
+    assert(stateRow(url, "DST").exists(_.restartWm.isEmpty))
+  }
+
+  test("jdbc dest with only the pre-record state tables: restart honoured, record written, old rows gone") {
+    skipUnlessAvailable()
+    val url = freshDb("legacy")
+    val dir = tmpDir("jdbc-legacy") + "/src"
+    writeTombSrc(dir, Seq((1L, 100L, 1.0, "A", false), (2L, 500L, 2.0, "B", false)))
+    val src = SyncEndpoint.ParquetDir(dir)
+    val dst = SyncEndpoint.parse(s"$url#LEGDST")
+    SyncPipeline.run(spark, cfgT, src, dst)
+    // the layout an earlier version left: no record, three state tables —
+    // a crashed run's marker at 100, an applied bound, the tombstone stamp
+    exec(url, "DELETE FROM graft_sync_dest")
+    exec(url, "CREATE TABLE graft_sync_state (table_name VARCHAR(128) " +
+      "NOT NULL PRIMARY KEY, restart_wm BIGINT)")
+    exec(url, "CREATE TABLE graft_sync_applied (table_name VARCHAR(128) " +
+      "NOT NULL PRIMARY KEY, applied_wm BIGINT)")
+    exec(url, "CREATE TABLE graft_sync_params (table_name VARCHAR(128) " +
+      "NOT NULL PRIMARY KEY, params VARCHAR(256))")
+    exec(url, "INSERT INTO graft_sync_state VALUES ('LEGDST', 100)")
+    exec(url, "INSERT INTO graft_sync_applied VALUES ('LEGDST', 300)")
+    exec(url, "INSERT INTO graft_sync_params VALUES ('LEGDST', 'tomb=DEL')")
+    // another destination's old row is not this migration's to drop
+    exec(url, "INSERT INTO graft_sync_state VALUES ('OTHER', 7)")
+    // row 1 changed with wm 150 < dest MAX 500 — lost without the marker
+    writeTombSrc(dir, Seq((1L, 150L, 9.0, "RECOVERED", false),
+      (2L, 500L, 2.0, "B", false)))
+    val r = SyncPipeline.run(spark, cfgT, src, dst)
+    // min(max(dest MAX 500, applied 300), marker 100)
+    assert(r.startingPoint.contains(100L), s"$r")
+    assert(readTable(url, "LEGDST") ==
+      Map(1L -> ((150L, 9.0, "RECOVERED")), 2L -> ((500L, 2.0, "B"))))
+    assert(stateRow(url, "LEGDST").contains(
+      DestState(None, Some(500L), Some("tomb=DEL"))))
+    Seq("graft_sync_state", "graft_sync_applied", "graft_sync_params")
+      .foreach { t =>
+        assert(count(url, s"SELECT COUNT(*) FROM $t " +
+          "WHERE table_name = 'LEGDST'") == 0L, s"$t row survived")
+      }
+    assert(count(url, "SELECT COUNT(*) FROM graft_sync_state") == 1L)
+    // the stamp still binds: a blind run refuses
+    val e = intercept[graft.core.GraftError.InvalidConfig](
+      SyncPipeline.run(spark, cfg, src, dst))
+    assert(e.getMessage.contains("WITH tombstones"))
+  }
+
+  test("parquet→jdbc tombstones: the applied bound is the source MAX, not a far cut") {
+    skipUnlessAvailable()
+    val url = freshDb("farcut")
+    val dir = tmpDir("jdbc-farcut") + "/src"
+    writeTombSrc(dir, Seq((1L, 100L, 1.0, "A", false), (2L, 200L, 2.0, "B", false)))
+    val src = SyncEndpoint.ParquetDir(dir)
+    val dst = SyncEndpoint.parse(s"$url#FARDST")
+    SyncPipeline.run(spark, cfgT, src, dst, cut = Some(10000L))
+    assert(stateRow(url, "FARDST").flatMap(_.appliedWm).contains(200L))
+    // a row that lands after that run, above the source MAX but below
+    // the cut: the next run must extract it
+    writeTombSrc(dir, Seq((1L, 100L, 1.0, "A", false), (2L, 200L, 2.0, "B", false),
+      (3L, 500L, 3.0, "C", false)))
+    SyncPipeline.run(spark, cfgT, src, dst, cut = Some(10000L))
+    assert(readTable(url, "FARDST") == Map(1L -> ((100L, 1.0, "A")),
+      2L -> ((200L, 2.0, "B")), 3L -> ((500L, 3.0, "C"))))
+  }
+
+  test("parquet→jdbc tombstones: a dropped destination re-syncs under a new tombstone column") {
+    skipUnlessAvailable()
+    val url = freshDb("restamp")
+    val dirA = tmpDir("jdbc-restamp-a") + "/src"
+    writeTombSrc(dirA, Seq((1L, 100L, 1.0, "A", false), (2L, 200L, 2.0, "B", false)))
+    val dst = SyncEndpoint.parse(s"$url#RESTAMP")
+    SyncPipeline.run(spark, cfgT, SyncEndpoint.ParquetDir(dirA), dst)
+    exec(url, "DROP TABLE RESTAMP")
+    // the record still says tomb=DEL; an empty destination adopts the
+    // new run's column, as a parquet destination does
+    val dirB = tmpDir("jdbc-restamp-b") + "/src"
+    writeTombSrc(dirB, Seq((1L, 100L, 1.0, "A", false), (2L, 200L, 2.0, "B", false),
+      (2L, 300L, null, null, true)), tombCol = "GONE")
+    SyncPipeline.run(spark, cfg.copy(tombstoneCol = Some("GONE")),
+      SyncEndpoint.ParquetDir(dirB), dst)
+    assert(readTable(url, "RESTAMP") == Map(1L -> ((100L, 1.0, "A"))))
+    assert(stateRow(url, "RESTAMP").flatMap(_.params).contains("tomb=GONE"))
   }
 
   test("parquet→jdbc tombstones: deletes issue DELETEs, setting is frozen in graft_sync_params") {
     skipUnlessAvailable()
     val url = freshDb("tomb")
     import spark.implicits._
-    val cfgT = cfg.copy(tombstoneCol = Some("DEL"))
     val dir = tmpDir("jdbc-tomb") + "/src"
     def writeSrc(rows: Seq[(Long, Long, java.lang.Double, String, Boolean)]): Unit =
       rows.toDF("ID", "UPDATED", "AMOUNT", "STATUS", "DEL")
@@ -205,7 +322,7 @@ trait JdbcSyncBehaviors { this: SparkSpec =>
     SyncPipeline.run(spark, cfgT, src, dst)
     assert(readTable(url, "TOMBDST") == Map(2L -> ((200L, 2.0, "B"))))
     // idempotent: the re-extracted delete finds its key already gone —
-    // and the applied-watermark row (graft_sync_applied) has advanced
+    // and the record's applied watermark has advanced
     // the restart point past the fully-applied delete feed: dest MAX is
     // 200 but the feed ends at 650, so only the inclusive tie row
     // travels instead of the whole accumulated feed (r16 advice, the
@@ -255,7 +372,6 @@ trait JdbcSyncBehaviors { this: SparkSpec =>
     skipUnlessAvailable()
     val url = freshDb("tombnull")
     import spark.implicits._
-    val cfgT = cfg.copy(tombstoneCol = Some("DEL"))
     val dir = tmpDir("jdbc-tomb-null") + "/src"
     Seq((1L, 100L, 1.0, "A", false), (2L, 200L, 2.0, "B", false))
       .toDF("ID", "UPDATED", "AMOUNT", "STATUS", "DEL").write.parquet(dir)
@@ -263,24 +379,15 @@ trait JdbcSyncBehaviors { this: SparkSpec =>
     val dst = SyncEndpoint.parse(s"$url#NULLDST")
     SyncPipeline.run(spark, cfgT, src, dst)
     // a NULL bound (a foreign writer, or a hand repair) reads as absent
-    exec(url, s"DELETE FROM ${SyncPipeline.AppliedTable}")
-    exec(url, s"INSERT INTO ${SyncPipeline.AppliedTable} " +
-      "(table_name, applied_wm) VALUES ('NULLDST', NULL)")
+    exec(url, "UPDATE graft_sync_dest SET applied_wm = NULL " +
+      "WHERE table_name = 'NULLDST'")
+    assert(stateRow(url, "NULLDST").exists(_.appliedWm.isEmpty))
     val r = SyncPipeline.run(spark, cfgT, src, dst)
     assert(r.snapshotCut == 200L, s"$r")
     assert(readTable(url, "NULLDST") ==
       Map(1L -> ((100L, 1.0, "A")), 2L -> ((200L, 2.0, "B"))))
-    val conn = DriverManager.getConnection(url)
-    val recorded =
-      try {
-        val st = conn.createStatement()
-        try {
-          val rs = st.executeQuery(s"SELECT applied_wm FROM " +
-            s"${SyncPipeline.AppliedTable} WHERE table_name = 'NULLDST'")
-          try { assert(rs.next()); rs.getObject(1) } finally rs.close()
-        } finally st.close()
-      } finally conn.close()
-    assert(graft.core.Watermark.toMicros(recorded).contains(200L),
+    val recorded = stateRow(url, "NULLDST")
+    assert(recorded.flatMap(_.appliedWm).contains(200L),
       s"applied bound not recorded: $recorded")
   }
 
@@ -491,6 +598,65 @@ class JdbcSyncSpec extends SparkSpec with JdbcSyncBehaviors {
   override protected def ident(s: String): String = s.toUpperCase
 
   sharedSyncTests()
+
+  /** Runs `n` copies of `body` released together; every outcome. */
+  private def race[A](n: Int)(body: => A): Seq[scala.util.Try[A]] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
+    val go = new java.util.concurrent.CountDownLatch(1)
+    try {
+      val futures = (1 to n).map(_ => pool.submit(
+        new java.util.concurrent.Callable[scala.util.Try[A]] {
+          def call(): scala.util.Try[A] = { go.await(); scala.util.Try(body) }
+        }))
+      go.countDown()
+      futures.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+    } finally { pool.shutdownNow(); () }
+  }
+
+  test("state record: concurrent first opens of one destination all return, one row") {
+    val url = freshDb("ensurerow")
+    val outcomes = race(6) {
+      val conn = DriverManager.getConnection(url)
+      try DestState.jdbc(conn, "RACEDST").open(None, populated = false)
+      finally conn.close()
+    }
+    assert(outcomes.forall(_.toOption.contains(DestState.Empty)), s"$outcomes")
+    assert(count(url, "SELECT COUNT(*) FROM graft_sync_dest") == 1L)
+  }
+
+  test("two concurrent tombstoned syncs into one destination converge or fail typed") {
+    val url = freshDb("concurrent")
+    val dir = tmpDir("jdbc-concurrent") + "/src"
+    val seed = (1L to 20L).map(i => (i, i * 10L, java.lang.Double.valueOf(i.toDouble),
+      s"S$i", false))
+    writeTombSrc(dir, seed)
+    val src = SyncEndpoint.ParquetDir(dir)
+    val dst = SyncEndpoint.parse(s"$url#RACESYNC")
+    SyncPipeline.run(spark, cfgT, src, dst)
+    // new keys, updates of old ones, and deletes, for both runs at once
+    val batch = seed ++ (21L to 40L).map(i =>
+      (i, i * 10L, java.lang.Double.valueOf(i.toDouble), s"S$i", false)) ++
+      (1L to 20L by 3).map(i => (i, 500L + i, java.lang.Double.valueOf(-1.0),
+        s"U$i", false)) ++
+      (2L to 20L by 5).map(i => (i, 600L + i, null, null, true))
+    writeTombSrc(dir, batch)
+    val outcomes = race(2)(SyncPipeline.run(spark, cfgT, src, dst))
+    def chain(t: Throwable): Seq[Throwable] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+    outcomes.foreach(_.failed.foreach { e =>
+      assert(e.isInstanceOf[graft.core.GraftError], s"untyped failure: $e")
+      assert(!chain(e).exists(
+        _.isInstanceOf[java.sql.SQLIntegrityConstraintViolationException]), s"$e")
+    })
+    assert(outcomes.exists(_.isSuccess), s"$outcomes")
+    val want = batch.groupBy(_._1).values.map(_.maxBy(_._2))
+      .filterNot(_._5)
+      .map { case (id, wm, amt, st, _) => id -> ((wm, amt.doubleValue, st)) }.toMap
+    assert(readTable(url, "RACESYNC") == want)
+    // a loser's marker may survive its failure; two winners clear both
+    if (outcomes.forall(_.isSuccess))
+      assert(stateRow(url, "RACESYNC").exists(_.restartWm.isEmpty))
+  }
 
   // pure option-set check has no dialect; lives in the Derby arm only
   test("S1 partitioned read options carry the slice plan") {

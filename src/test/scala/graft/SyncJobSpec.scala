@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.sync.{ContinuousSync, ParquetMergeSink, SyncConfig, SyncJob}
+import graft.sync.{ContinuousSync, DestState, ParquetMergeSink, SyncConfig,
+  SyncJob}
 
 /** Sync-pipeline e2e (SURVEY §5.2 layer 3): twin-table fixture with the
   * reference's scenario matrix — cold start (T1 MIN fallback), warm
@@ -20,6 +21,11 @@ class SyncJobSpec extends SparkSpec {
 
   private def src(rows: (Long, Long, Double, String)*): DataFrame =
     rows.toSeq.toDF("id", "updated", "amount", "status")
+
+  /** The state record store of the parquet destination at `dest`. */
+  private def stateOf(dest: String): DestState.Store =
+    DestState.parquet(new org.apache.hadoop.fs.Path(dest)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration), dest)
 
   private def readDest(dir: String): Map[Long, (Long, Double, String)] =
     spark.read.parquet(dir).collect()
@@ -146,17 +152,49 @@ class SyncJobSpec extends SparkSpec {
     val job = new SyncJob(spark, cfg)
     job.run(src((1L, 100L, 1.0, "A"), (2L, 500L, 2.0, "B")), dest, 600L)
     // Simulate a partitioned merge that crashed mid-commit after starting
-    // from watermark 100: the marker survives; row 1's update (wm 150, below
-    // dest MAX 500) would otherwise be skipped forever.
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dest + ".__merge_pending"), "100")
+    // from watermark 100: the marker survives in the state record; row 1's
+    // update (wm 150, below dest MAX 500) would otherwise be skipped forever.
+    val planted = stateOf(dest)
+    planted.open(None, populated = true)
+    planted.markRestart(100L)
+    assert(stateOf(dest).stored.flatMap(_.restartWm).contains(100L))
     val mutated = src((1L, 150L, 9.0, "recovered"), (2L, 500L, 2.0, "B"))
     val r = job.run(mutated, dest, 1000L)
     assert(r.startingPoint.contains(100L)) // min(dest MAX, marker)
     assert(readDest(dest)(1L) == ((150L, 9.0, "recovered")))
     // a fully-committed merge clears the marker
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(dest + ".__merge_pending")))
+    assert(stateOf(dest).stored.exists(_.restartWm.isEmpty))
+  }
+
+  test("a destination with only the pre-record sidecars: restart honoured, record written, sidecars gone") {
+    val dest = tmpDir("sync-legacy") + "/dest"
+    new SyncJob(spark, cfgT).run(srcT(
+      (1L, 100L, 1.0, "A", false), (2L, 500L, 2.0, "B", false)), dest, 600L)
+    // the layout an earlier version left: no record, three unframed
+    // sidecars — a crashed merge's marker at 100, an applied bound, the
+    // tombstone stamp
+    assert(new java.io.File(dest + ".__merge_state").delete())
+    val legacy = Seq(".__merge_pending" -> "100",
+      ".__merge_applied_wm" -> "300", ".__merge_params" -> "tomb=del")
+    legacy.foreach { case (suffix, v) =>
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(dest + suffix), v)
+    }
+    val r = new SyncJob(spark, cfgT).run(srcT(
+      (1L, 150L, 9.0, "recovered", false), (2L, 500L, 2.0, "B", false)),
+      dest, 1000L)
+    // min(max(dest MAX 500, applied 300), marker 100)
+    assert(r.startingPoint.contains(100L), s"$r")
+    assert(readDest(dest)(1L) == ((150L, 9.0, "recovered")))
+    // the folded record, after the batch through 500 landed
+    assert(stateOf(dest).stored.contains(
+      DestState(None, Some(500L), Some("tomb=del"))))
+    legacy.foreach { case (suffix, _) =>
+      assert(!new java.io.File(dest + suffix).exists(), s"$suffix survived")
+    }
+    // the stamp still binds: a blind run refuses
+    val e = intercept[graft.core.GraftError.InvalidConfig](
+      new SyncJob(spark, cfg).run(src((3L, 700L, 3.0, "C")), dest, 1000L))
+    assert(e.getMessage.contains("WITH tombstones"))
   }
 
   test("schema drift fails TYPED: an added source column is never silently dropped") {
@@ -264,9 +302,8 @@ class SyncJobSpec extends SparkSpec {
     val after = new java.io.File(dest, "bucket=0").listFiles()
       .filter(_.getName.endsWith(".parquet")).map(f => f.getName -> f.lastModified).toMap
     assert(after == untouchedFiles, "bucket=0 partition files were rewritten")
-    // successful partitioned merges leave no pending-merge marker behind
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(dest + ".__merge_pending")))
+    // successful partitioned merges leave no restart marker behind
+    assert(stateOf(dest).stored.exists(_.restartWm.isEmpty))
     val rows = spark.read.parquet(dest).collect()
       .map(r => r.getAs[Long]("id") -> ((r.getAs[Long]("updated"), r.getAs[Double]("amount"))))
       .toMap
@@ -275,7 +312,7 @@ class SyncJobSpec extends SparkSpec {
 
   test("partitioned merge rejects a non-numeric order column (crash marker needs one)") {
     val dest = tmpDir("sync-nonnum") + "/dest"
-    // a string watermark cannot be recorded in the pending-merge marker, so
+    // a string watermark cannot be recorded in the restart marker, so
     // the partitioned path (non-atomic across partitions) must refuse it
     // up front rather than silently run without crash protection
     val rows = src((1L, 100L, 1.0, "A"))
@@ -414,7 +451,7 @@ class SyncJobSpec extends SparkSpec {
       (4L, 700L, 4.0, "D", false)), dest, 1000L)
     assert(readDest(dest).keySet == Set(1L, 3L, 4L))
     // a deleted-and-recreated destination must NOT inherit the stale
-    // bound: the cold start owns the sidecar family
+    // bound: the cold start owns the state record
     graft.core.Tables.deleteRecursively(new java.io.File(dest))
     val rCold = job.run(srcT((7L, 150L, 7.0, "G", false)), dest, 1000L)
     assert(rCold.startingPoint.contains(150L),
@@ -541,9 +578,8 @@ class SyncJobSpec extends SparkSpec {
     val rows = spark.read.parquet(dest).collect()
       .map(_.getAs[Long]("id")).toSet
     assert(rows == Set(3L), s"got $rows")
-    // no pending marker left behind
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(dest + ".__merge_pending")))
+    // no restart marker left behind
+    assert(stateOf(dest).stored.exists(_.restartWm.isEmpty))
     // a delete row with a NULL partition value cannot be located — refuse
     val e = intercept[graft.core.GraftError.InvalidConfig](
       ParquetMergeSink.merge(spark, dest,

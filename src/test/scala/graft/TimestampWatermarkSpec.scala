@@ -100,7 +100,7 @@ class TimestampWatermarkSpec extends SparkSpec {
   }
 
   test("partitioned merge records the crash marker for a timestamp order column") {
-    // partitionByCol path: the pending-merge marker must store canonical µs
+    // partitionByCol path: the restart marker must store canonical µs
     // (it used to reject non-numeric order columns outright)
     val pcfg = cfg.copy(partitionByCol = Some("status"))
     val dest = tmpDir("tswm-part") + "/dest"

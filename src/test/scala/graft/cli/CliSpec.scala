@@ -804,6 +804,30 @@ class CliSpec extends SparkSpec {
         "--buckets", "70000")))
   }
 
+  test("dhash-index build and append take --bands 2 without a --max-hamming; the probe checks it") {
+    import graft.ext.Multimodal
+    val work = tmpDir("cli-dhash-bands2")
+    val ids = spark.range(0, 10).select(col("id").as("doc_id"))
+    Multimodal.plantedNoisePngMedia(ids.filter(col("doc_id") < 5), "doc_id")
+      .write.parquet(s"$work/base1")
+    Multimodal.plantedNoisePngMedia(ids.filter(col("doc_id") >= 5), "doc_id")
+      .write.parquet(s"$work/base2")
+    // build/append never read maxHamming: its default (3) is not >= 2
+    // bands' business until a probe runs
+    run("dhash-index", "--mode", "build", "--source", s"$work/base1",
+      "--dest", s"$work/idx", "--bands", "2")
+    run("dhash-index", "--mode", "append", "--source", s"$work/base2",
+      "--dest", s"$work/idx", "--bands", "2")
+    // the probe refuses the default against the index's frozen 2 bands
+    val e = intercept[GraftError.InvalidConfig](
+      run("dhash-index", "--mode", "probe", "--source", s"$work/base1",
+        "--base", s"$work/idx", "--dest", s"$work/p"))
+    assert(e.getMessage.contains("banded 2-way"), e.getMessage)
+    run("dhash-index", "--mode", "probe", "--source", s"$work/base1",
+      "--base", s"$work/idx", "--dest", s"$work/p", "--max-hamming", "1")
+    assert(spark.read.parquet(s"$work/p").count() >= 5L)
+  }
+
   test("dhash-index drives build, append, and the hamming probe") {
     import graft.ext.Multimodal
     val work = tmpDir("cli-dhash-index")
