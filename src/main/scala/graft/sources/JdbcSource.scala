@@ -3,7 +3,7 @@ package graft.sources
 import java.sql.{Connection, DriverManager, SQLException}
 import java.util.Properties
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 import graft.core.{DbConfig, GraftError}
 import graft.sync.SlicePlanner
@@ -31,21 +31,8 @@ final class JdbcSource(url: String, props: Properties) {
 
   def this(cfg: DbConfig) = this(cfg.jdbcUrl, cfg.properties)
 
-  private def withConnection[A](f: Connection => A): A = {
-    val conn =
-      try DriverManager.getConnection(url, props)
-      catch {
-        case e: SQLException if e.getSQLState != null &&
-            e.getSQLState.startsWith("28") => // invalid authorization
-          throw GraftError.AuthenticationFailed(url, e)
-        case e: SQLException if e.getSQLState == "3D000" || // PG: no database
-            e.getSQLState == "XJ004" => // Derby: database not found
-          throw GraftError.MissingDatabase(url)
-        case e: SQLException =>
-          throw GraftError.Unreachable(url, e)
-      }
-    try f(conn) finally conn.close()
-  }
+  private def withConnection[A](f: Connection => A): A =
+    JdbcSource.withConnection(url, props)(f)
 
   /** S6 — verify connectivity and that `table` exists. Drivers disagree
     * on the plain-table type label — Derby/PG say "TABLE", engines that
@@ -95,14 +82,7 @@ final class JdbcSource(url: String, props: Properties) {
       s"(SELECT MIN($watermarkCol) AS lo, MAX($watermarkCol) AS hi " +
         s"FROM $table) AS t", // AS required by Derby, accepted everywhere
       props)
-    val row = df.first()
-    if (row.isNullAt(0)) None
-    else {
-      val tsTyped = !row.get(0).isInstanceOf[java.lang.Number]
-      Some(JdbcSource.WatermarkBounds(
-        graft.core.Watermark.toMicros(row.get(0)).get,
-        graft.core.Watermark.toMicros(row.get(1)).get, tsTyped))
-    }
+    JdbcSource.WatermarkBounds.of(df.first())
   }
 
   /** Exact server-side rowcount of a watermark range — the engine's
@@ -147,10 +127,42 @@ final class JdbcSource(url: String, props: Properties) {
 
 object JdbcSource {
 
+  /** Runs `f` on a connection to `url`, with the connection's failures
+    * typed (S6, reference session.py:170-192): rejected credentials, an
+    * absent database, anything else as unreachable. Shared by the source
+    * and the sync's JDBC destination. */
+  private[graft] def withConnection[A](url: String, props: Properties)
+                                     (f: Connection => A): A = {
+    val conn =
+      try DriverManager.getConnection(url, props)
+      catch {
+        case e: SQLException if e.getSQLState != null &&
+            e.getSQLState.startsWith("28") => // invalid authorization
+          throw GraftError.AuthenticationFailed(url, e)
+        case e: SQLException if e.getSQLState == "3D000" || // PG: no database
+            e.getSQLState == "XJ004" => // Derby: database not found
+          throw GraftError.MissingDatabase(url)
+        case e: SQLException =>
+          throw GraftError.Unreachable(url, e)
+      }
+    try f(conn) finally conn.close()
+  }
+
   /** Watermark bounds in canonical epoch-micros plus the column KIND —
     * `timestampTyped` drives how range literals render into server SQL. */
   final case class WatermarkBounds(loUs: Long, hiUs: Long,
                                    timestampTyped: Boolean)
+
+  object WatermarkBounds {
+    /** The bounds in a one-row `(MIN, MAX)` aggregate of the watermark
+      * column, from any source; None when it holds no non-NULL value. */
+    private[graft] def of(row: Row): Option[WatermarkBounds] =
+      if (row.isNullAt(0)) None
+      else Some(WatermarkBounds(
+        graft.core.Watermark.toMicros(row.get(0)).get,
+        graft.core.Watermark.toMicros(row.get(1)).get,
+        timestampTyped = !row.get(0).isInstanceOf[java.lang.Number]))
+  }
 
   private val TsFmt = java.time.format.DateTimeFormatter
     .ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS")

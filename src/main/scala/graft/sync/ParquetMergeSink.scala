@@ -64,8 +64,9 @@ object ParquetMergeSink {
     *                  anti-join scan, the wrong cost shape for a per-batch
     *                  delete feed).
     * @param destination the destination as the caller already read it
-    *                  (SyncJob's T1 read), reused instead of a second
-    *                  read; ignored when there is no destination yet.
+    *                  (the sync lifecycle's T1 read), reused instead of a
+    *                  second read; ignored when there is no destination
+    *                  yet.
     * @param orderFloor canonical watermark (core.Watermark) at or below
     *                  every batch row's `orderCol` — the run's T1 start.
     *                  Bounds the probe's destination side by a plain
@@ -74,8 +75,8 @@ object ParquetMergeSink {
     * @param onProgress M1 callback over the rows this merge writes,
     *                  against the batch's row count as the total.
     * @param state     the destination's state record as the caller
-    *                  already read it (SyncJob's T1), reused instead of a
-    *                  second read.
+    *                  already read it (the sync lifecycle's T1), reused
+    *                  instead of a second read.
     */
   def merge(spark: SparkSession, targetDir: String, updates: DataFrame,
             keyCols: Seq[String], orderCol: String,
@@ -384,9 +385,9 @@ object ParquetMergeSink {
           // Dynamic partition overwrite commits per partition, NOT atomically
           // across them: a crash can leave some partitions new (advancing
           // MAX(watermark) in dest) while others keep old rows. Record the
-          // batch's low watermark first; SyncJob treats a surviving marker as
-          // "restart extraction from here" and the idempotent merge heals any
-          // partial commit. Cleared only after a fully-committed overwrite
+          // batch's low watermark first; the next sync treats a surviving
+          // marker as "restart extraction from here" and the idempotent
+          // merge heals any partial commit. Cleared only after a fully-committed overwrite
           // AND the vacated-partition removal below.
           graft.core.Watermark.toMicros(tieLo) match {
             case Some(lo) => store.markRestart(lo)

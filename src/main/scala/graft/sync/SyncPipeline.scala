@@ -1,11 +1,15 @@
 package graft.sync
 
-import java.sql.{Connection, DriverManager}
+import java.sql.Connection
 import java.util.Properties
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
+import graft.core.Watermark
 import graft.sinks.JdbcUpsertSink
 import graft.sources.JdbcSource
 
@@ -32,66 +36,29 @@ object SyncEndpoint {
     } else ParquetDir(s)
 }
 
-/** The full sync lifecycle over any (source, dest) endpoint combination —
-  * the engine's answer to the reference's headline `pypgsync single`
-  * entry point (cli.py:42-61 → session.py:24-48, SURVEY §3.1), which the
-  * DataFrame-level [[SyncJob]] alone could not express for JDBC ends.
-  *
-  * Every arm follows the same shape: T1 watermark recovery from the
-  * destination (with crash-marker healing), T2 snapshot cut, S1
-  * range-partitioned extract, S4 idempotent keyed merge/upsert.
-  *
-  * Crash consistency for JDBC destinations: per-partition upsert
-  * transactions commit independently (the parallel replacement for the
-  * reference's sequential ascending apply), so a mid-run crash can advance
-  * MAX(watermark) past unapplied rows. Before writing, the run records its
-  * starting watermark as the restart marker of the destination's state
-  * record ([[DestState]], a `graft_sync_dest` row in the destination
-  * database) and clears it on success; recovery starts from
-  * `min(dest MAX, marker)` and the idempotent upsert absorbs the replay —
-  * the same record and rule as a partitioned parquet merge.
-  */
+/** What a sync run extracts from: a DataFrame (a parquet source is read
+  * into one, once) or a JDBC table. What it writes to is a
+  * [[SyncEndpoint]]. */
+private[sync] sealed trait Extract
+private[sync] object Extract {
+  final case class Frame(df: DataFrame) extends Extract
+  final case class Jdbc(table: SyncEndpoint.JdbcTable) extends Extract
+}
+
+/** The reference's headline `pypgsync single` (cli.py:42-61 →
+  * session.py:24-48, SURVEY §3.1) over any (source, destination) endpoint
+  * pair. Every pair, and [[SyncJob]], runs one lifecycle, documented on
+  * `run(spark, cfg, extract, sink, cut, onProgress)` below. */
 object SyncPipeline {
   import SyncEndpoint._
 
   def run(spark: SparkSession, cfg: SyncConfig, source: SyncEndpoint,
           dest: SyncEndpoint, cut: Option[Long] = None,
-          onProgress: Progress => Unit = _ => ()): SyncReport = {
-    val t0 = System.nanoTime()
-    def elapsed = (System.nanoTime() - t0) / 1000000
-
-    // --- source bounds (A1/A2 scalars — the only driver-side values),
-    // canonical epoch-µs + the column kind (numeric epoch vs SQL timestamp)
-    val srcBounds: Option[JdbcSource.WatermarkBounds] = source match {
-      case ParquetDir(dir) =>
-        val df = spark.read.parquet(dir)
-        val row = df.agg(min(col(cfg.watermarkCol)), max(col(cfg.watermarkCol))).first()
-        if (row.isNullAt(0)) None
-        else Some(JdbcSource.WatermarkBounds(
-          graft.core.Watermark.toMicros(row.get(0)).get,
-          graft.core.Watermark.toMicros(row.get(1)).get,
-          timestampTyped = !row.get(0).isInstanceOf[java.lang.Number]))
-      case JdbcTable(url, table, props) =>
-        val src = new JdbcSource(url, props)
-        src.preflight(table)
-        src.watermarkBounds(spark, table, cfg.watermarkCol)
-    }
-
-    srcBounds match {
-      case None =>
-        SyncReport(None, cut.getOrElse(0L), 0L, 0L, elapsed)
-      case Some(b) =>
-        val cutV = cut.getOrElse(b.hiUs) // T2: frozen at run start
-        dest match {
-          case ParquetDir(destDir) =>
-            runIntoParquet(spark, cfg, source, destDir, b, cutV, onProgress,
-              () => elapsed)
-          case JdbcTable(url, table, props) =>
-            runIntoJdbc(spark, cfg, source, url, table, props, b, cutV,
-              onProgress, () => elapsed)
-        }
-    }
-  }
+          onProgress: Progress => Unit = _ => ()): SyncReport =
+    run(spark, cfg, source match {
+      case ParquetDir(dir) => Extract.Frame(spark.read.parquet(dir))
+      case t: JdbcTable => Extract.Jdbc(t)
+    }, dest, cut, onProgress)
 
   /** T5 continuous mode over endpoints (reference cli.py:80-97): state
     * between polls lives entirely in the destination. */
@@ -104,145 +71,188 @@ object SyncPipeline {
     ContinuousSync.loop(delayMs, maxIterations, shouldStop, sleep)(
       () => run(spark, cfg, source, dest, cut = None, onProgress))
 
-  // ------------------------------------------------------------- parquet dest
+  /** The sync lifecycle, written once for every extract and sink (the
+    * reference's `single`, session.py:24-48 and 200-240):
+    *
+    *   1. T1  the sink's restart point: dest MAX(watermark) through
+    *          [[DestState.restart]] — a surviving restart marker lowers
+    *          it, a tombstoned destination's applied bound raises it. No
+    *          checkpoint: the state lives in the destination (README.md:90).
+    *          A parquet destination heals an interrupted swap first and is
+    *          read once; the merge reuses that frame and its record. A
+    *          JDBC destination's record is opened first — the tombstone
+    *          freeze, whose targeted refusals must precede the drift check.
+    *   2.     start = the restart point, else the source MIN
+    *          (session.py:50-65). T2: the cut is frozen at run start — the
+    *          source MAX unless given (pypgsync.py:13).
+    *   3.     skip when start > cut or dest MAX > cut (session.py:216-218):
+    *          nothing is extracted, written or committed, so a lower cut
+    *          never clears a surviving marker whose batch it would replay
+    *          only in part.
+    *   4. S1  extract [start, cut], inclusive at both ends (T3: the lower
+    *          bound re-reads watermark ties, session.py:130). A frame is a
+    *          pushed-down range filter, persisted so every later pass reads
+    *          one snapshot; a JDBC table is an exact count of the range,
+    *          then a range-partitioned read (the reference's slices, SURVEY
+    *          §4.1).
+    *   5. S4  write and commit, each sink by its own protocol. Parquet:
+    *          the keyed merge ([[ParquetMergeSink.merge]]), which owns the
+    *          record's open, marker and commit. JDBC: create the table from
+    *          the batch schema or check it for drift (S3), record the
+    *          restart marker, upsert — per-partition transactions commit
+    *          independently, so a crash can advance dest MAX past
+    *          unapplied rows and the next run replays from the marker —
+    *          then clear the marker and advance a tombstoned
+    *          destination's applied bound to min(cut, source MAX).
+    *   6.     report.
+    *
+    * The source bounds are read at most once, and only when something
+    * needs them: no cut was given, the destination has no restart point,
+    * the source is JDBC (its preflight, S6, and the column kind its SQL
+    * literals need), or a tombstoned JDBC destination needs the source
+    * MAX for its applied bound. */
+  private[sync] def run(spark: SparkSession, cfg: SyncConfig, extract: Extract,
+                        sink: SyncEndpoint, cut: Option[Long],
+                        onProgress: Progress => Unit): SyncReport = {
+    val t0 = System.nanoTime()
+    def report(start: Option[Long], cutV: Long, rows: Long, written: Long) =
+      SyncReport(start, cutV, rows, written, (System.nanoTime() - t0) / 1000000)
+    val wm = col(cfg.watermarkCol)
+    // One driver-side unit (core.Watermark): canonical epoch-micros for a
+    // time-typed column, the raw long for a numeric one. A frame's filter
+    // re-materializes bounds as literals of the column's own type, so it
+    // stays a pushed-down plain comparison.
+    extract match {
+      case Extract.Frame(df) =>
+        val dt = df.schema(cfg.watermarkCol).dataType
+        require(Watermark.supported(dt), s"watermark column " +
+          s"'${cfg.watermarkCol}' must be numeric or timestamp-typed; got " +
+          dt.simpleString)
+      case _: Extract.Jdbc => ()
+    }
 
-  private def runIntoParquet(spark: SparkSession, cfg: SyncConfig,
-                             source: SyncEndpoint, destDir: String,
-                             b: JdbcSource.WatermarkBounds, cutV: Long,
-                             onProgress: Progress => Unit,
-                             elapsed: () => Long): SyncReport = {
-    source match {
-      case ParquetDir(srcDir) =>
-        // DataFrame-source lifecycle already lives in SyncJob (marker-aware
-        // T1 included) — delegate.
-        new SyncJob(spark, cfg).run(spark.read.parquet(srcDir), destDir, cutV,
-          onProgress)
-      case JdbcTable(url, table, props) =>
+    lazy val bounds: Option[JdbcSource.WatermarkBounds] = extract match {
+      case Extract.Frame(df) =>
+        JdbcSource.WatermarkBounds.of(df.agg(min(wm), max(wm)).first())
+      case Extract.Jdbc(JdbcTable(url, table, props)) =>
         val src = new JdbcSource(url, props)
-        val (destStart, dest, state) =
-          SyncJob.parquetRestart(spark, destDir, cfg.watermarkCol)
-        val start = destStart.getOrElse(b.loUs)
-        if (start > cutV)
-          return SyncReport(Some(start), cutV, 0L, 0L, elapsed())
-        val est = src.countRange(spark, table, cfg.watermarkCol, start, cutV,
-          b.timestampTyped)
-        val extracted = src.rangeRead(spark, table, cfg.watermarkCol,
-          start, cutV, est, cfg.targetRowsPerSlice,
-          timestampTyped = b.timestampTyped)
-        val result = ParquetMergeSink.merge(spark, destDir, extracted,
-          cfg.keyCols, cfg.watermarkCol, cfg.partitionByCol,
-          knownUpdateRows = Some(est), tombstoneCol = cfg.tombstoneCol,
-          destination = dest, orderFloor = Some(start),
-          onProgress = Some(onProgress), state = Some(state))
-        SyncReport(Some(start), cutV, result.updateRows, result.rowsWritten,
-          elapsed())
-    }
-  }
-
-  // ---------------------------------------------------------------- jdbc dest
-
-  private def runIntoJdbc(spark: SparkSession, cfg: SyncConfig,
-                          source: SyncEndpoint, url: String, table: String,
-                          props: Properties, b: JdbcSource.WatermarkBounds,
-                          cutV: Long, onProgress: Progress => Unit,
-                          elapsed: () => Long): SyncReport = {
-    // Build the extraction lazily from the resolved start watermark.
-    def extract(start: Long): (DataFrame, Long) = source match {
-      case ParquetDir(srcDir) =>
-        val wm = col(cfg.watermarkCol)
-        val df0 = spark.read.parquet(srcDir)
-        val dt = df0.schema(cfg.watermarkCol).dataType
-        val df = df0
-          .filter(wm >= graft.core.Watermark.litFor(dt, start) &&
-                  wm <= graft.core.Watermark.litFor(dt, cutV))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (df, df.count())
-      case JdbcTable(srcUrl, srcTable, srcProps) =>
-        val src = new JdbcSource(srcUrl, srcProps)
-        val est = src.countRange(spark, srcTable, cfg.watermarkCol, start, cutV,
-          b.timestampTyped)
-        (src.rangeRead(spark, srcTable, cfg.watermarkCol, start, cutV, est,
-          cfg.targetRowsPerSlice, timestampTyped = b.timestampTyped), est)
+        src.preflight(table)
+        src.watermarkBounds(spark, table, cfg.watermarkCol)
     }
 
-    // S3 — create destination table from the source schema when missing.
-    // The tombstone column is transport metadata, never destination
-    // schema: the dest is created (and drift-checked) without it.
-    val sourceSchema0 = source match {
-      case ParquetDir(srcDir) => spark.read.parquet(srcDir).schema
-      case JdbcTable(srcUrl, srcTable, srcProps) =>
-        new JdbcSource(srcUrl, srcProps)
-          .rangeRead(spark, srcTable, cfg.watermarkCol, 0L, 0L, 0L,
-            timestampTyped = b.timestampTyped).schema
-    }
-    val sourceSchema = cfg.tombstoneCol match {
-      case Some(t) =>
-        org.apache.spark.sql.types.StructType(
-          sourceSchema0.fields.filterNot(_.name.equalsIgnoreCase(t)))
-      case None => sourceSchema0
-    }
-    withConnection(url, props) { conn =>
-      // freeze the tombstone setting (and reset a cold start's record)
-      // BEFORE ensureTable — its drift check would otherwise mask the
-      // targeted refusal (a blind run's source still carries the marker
-      // column, which reads as spurious drift against a tombstoned dest)
-      val state = DestState.jdbc(conn, table)
-      lazy val populated = destHasRows(conn, table)
-      val opened = state.open(cfg.tombstoneCol, populated)
-      JdbcUpsertSink.ensureTable(url, props, table, sourceSchema, cfg.keyCols)
-
-      // T1 — dest MAX(wm) through the shared restart rule
-      val start = opened.restart(scalarLong(conn,
-        s"SELECT MAX(${cfg.watermarkCol}) FROM $table")).getOrElse(b.loUs)
-      if (start > cutV) {
-        state.commit(None)
-        return SyncReport(Some(start), cutV, 0L, 0L, elapsed())
+    def extractRange(start: Long, c: Long): (DataFrame, Option[Long]) =
+      extract match {
+        case Extract.Frame(df) =>
+          val dt = df.schema(cfg.watermarkCol).dataType
+          (df.filter(wm >= Watermark.litFor(dt, start) &&
+              wm <= Watermark.litFor(dt, c))
+            .persist(StorageLevel.MEMORY_AND_DISK), None)
+        case Extract.Jdbc(JdbcTable(url, table, props)) =>
+          val src = new JdbcSource(url, props)
+          val tsTyped = bounds.get.timestampTyped
+          val n = src.countRange(spark, table, cfg.watermarkCol, start, c,
+            tsTyped)
+          (src.rangeRead(spark, table, cfg.watermarkCol, start, c, n,
+            cfg.targetRowsPerSlice, timestampTyped = tsTyped), Some(n))
       }
-      // record the restart point BEFORE any partition can commit
-      state.markRestart(start)
 
-      val (extracted, candidateRows) = extract(start)
-      try {
-        val applied = JdbcUpsertSink.write(extracted, url, props, table,
-          cfg.keyCols, cfg.watermarkCol,
-          tombstoneCol = cfg.tombstoneCol)
-        // the batch covered every source row up to the cut that existed at
-        // run start — so the applied bound is the source MAX read then,
-        // capped by the cut, never the cut itself: a row arriving later
-        // below a far cut must still be extracted by the next run
-        state.commit(cfg.tombstoneCol.map(_ => math.min(cutV, b.hiUs)))
-        // JDBC writes emit no Spark output metrics — report completion once
-        onProgress(Progress(applied, applied))
-        SyncReport(Some(start), cutV, candidateRows, applied, elapsed())
-      } finally {
-        extracted.unpersist()
-        ()
+    // steps 2-6, given the sink's T1 and its write of an extracted batch
+    // (the batch, its known row count, the start) → (rows extracted,
+    // rows written)
+    def sequence(c: Long, destMax: Option[Long], restart: Option[Long])
+                (write: (DataFrame, Option[Long], Long) => (Long, Long))
+        : SyncReport =
+      restart.orElse(bounds.map(_.loUs)) match {
+        case None => report(None, c, 0L, 0L) // empty source
+        case Some(start) if start > c || destMax.exists(_ > c) =>
+          report(Some(start), c, 0L, 0L)
+        case Some(start) =>
+          val (batch, known) = extractRange(start, c)
+          try {
+            val (rows, written) = write(batch, known, start)
+            report(Some(start), c, rows, written)
+          } finally { batch.unpersist(); () }
       }
+
+    // a JDBC source always reads its bounds; no bounds = an empty source
+    val cutV = extract match {
+      case _: Extract.Jdbc => bounds.map(b => cut.getOrElse(b.hiUs))
+      case _: Extract.Frame => cut.orElse(bounds.map(_.hiUs))
+    }
+    (cutV, sink) match {
+      case (None, _) => report(None, cut.getOrElse(0L), 0L, 0L)
+
+      case (Some(c), ParquetDir(dir)) =>
+        // metadata-only leftovers (a crashed first write) read as no
+        // destination
+        val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val state = DestState.parquet(fs, dir)
+        ParquetMergeSink.recoverInterruptedSwap(fs, dir)
+        val dest = Option.when(ParquetMergeSink.hasData(fs, new Path(dir)))(
+          spark.read.parquet(dir))
+        val destMax = dest.flatMap(d =>
+          Watermark.toMicros(d.agg(max(wm)).first().get(0)))
+        sequence(c, destMax,
+          dest.flatMap(_ => state.current(populated = true).restart(destMax))) {
+          (batch, known, start) =>
+            val r = ParquetMergeSink.merge(spark, dir, batch, cfg.keyCols,
+              cfg.watermarkCol, cfg.partitionByCol, knownUpdateRows = known,
+              tombstoneCol = cfg.tombstoneCol, destination = dest,
+              orderFloor = Some(start), onProgress = Some(onProgress),
+              state = Some(state))
+            (r.updateRows, r.rowsWritten)
+        }
+
+      case (Some(c), JdbcTable(url, table, props)) =>
+        JdbcSource.withConnection(url, props) { conn =>
+          val state = DestState.jdbc(conn, table)
+          val exists = JdbcUpsertSink.tableExists(conn, table)
+          val opened = state.open(cfg.tombstoneCol, exists && hasRow(conn, table))
+          val destMax = if (!exists) None else scalarLong(conn,
+            s"SELECT MAX(${cfg.watermarkCol}) FROM $table")
+          // the batch covers every source row up to the cut that existed
+          // at run start — so the applied bound is the source MAX read
+          // before the extract, capped by the cut, never the cut itself:
+          // a row arriving later below a far cut must still be extracted
+          // by the next run
+          val appliedHi = cfg.tombstoneCol.flatMap(_ => bounds)
+            .map(b => math.min(c, b.hiUs))
+          sequence(c, destMax, opened.restart(destMax)) { (batch, known, start) =>
+            // the tombstone column is transport metadata, never
+            // destination schema: the table is created (and drift-checked)
+            // without it
+            JdbcUpsertSink.ensureTable(url, props, table, StructType(
+              batch.schema.filterNot(f =>
+                cfg.tombstoneCol.exists(f.name.equalsIgnoreCase))),
+              cfg.keyCols)
+            // the restart point is recorded BEFORE any partition can commit
+            state.markRestart(start)
+            val applied = JdbcUpsertSink.write(batch, url, props, table,
+              cfg.keyCols, cfg.watermarkCol, tombstoneCol = cfg.tombstoneCol)
+            state.commit(appliedHi)
+            // JDBC writes emit no Spark output metrics — report completion once
+            onProgress(Progress(applied, applied))
+            (known.getOrElse(batch.count()), applied)
+          }
+        }
     }
   }
 
   // ------------------------------------------------------------ jdbc plumbing
 
-  private def withConnection[A](url: String, props: Properties)
-                               (f: Connection => A): A = {
-    val conn = DriverManager.getConnection(url, props)
-    try f(conn) finally conn.close()
+  private def hasRow(conn: Connection, table: String): Boolean = {
+    val st = conn.createStatement()
+    try {
+      // one row is the question; without a cap PostgreSQL's driver in
+      // autocommit mode (fetchSize 0) materializes the ENTIRE result
+      // set client-side before rs.next() — O(table) memory against a
+      // large populated dest (r16 advice). setMaxRows is portable
+      // across dialects where a LIMIT/FETCH FIRST clause is not.
+      st.setMaxRows(1)
+      val rs = st.executeQuery(s"SELECT 1 FROM $table")
+      try rs.next() finally rs.close()
+    } finally st.close()
   }
-
-  private def destHasRows(conn: Connection, table: String): Boolean =
-    JdbcUpsertSink.tableExists(conn, table) && {
-      val st = conn.createStatement()
-      try {
-        // one row is the question; without a cap PostgreSQL's driver in
-        // autocommit mode (fetchSize 0) materializes the ENTIRE result
-        // set client-side before rs.next() — O(table) memory against a
-        // large populated dest (r16 advice). setMaxRows is portable
-        // across dialects where a LIMIT/FETCH FIRST clause is not.
-        st.setMaxRows(1)
-        val rs = st.executeQuery(s"SELECT 1 FROM $table")
-        try rs.next() finally rs.close()
-      } finally st.close()
-    }
 
   private def scalarLong(conn: Connection, sql: String): Option[Long] = {
     val st = conn.createStatement()
@@ -250,7 +260,7 @@ object SyncPipeline {
       val rs = st.executeQuery(sql)
       try {
         if (!rs.next()) None
-        else graft.core.Watermark.toMicros(rs.getObject(1))
+        else Watermark.toMicros(rs.getObject(1))
       } finally rs.close()
     } finally st.close()
   }

@@ -215,6 +215,95 @@ trait JdbcSyncBehaviors { this: SparkSpec =>
     assert(stateRow(url, "DST").exists(_.restartWm.isEmpty))
   }
 
+  test("jdbc→jdbc: a cut below the destination MAX skips the run and keeps a surviving restart marker") {
+    skipUnlessAvailable()
+    val url = freshDb("lowcut")
+    seedSource(url, Seq((1L, 100L, 1.0, "A"), (2L, 500L, 2.0, "B")))
+    val src = SyncEndpoint.parse(s"$url#SRC")
+    val dst = SyncEndpoint.parse(s"$url#DST")
+    SyncPipeline.run(spark, cfg, src, dst)
+    exec(url, "UPDATE graft_sync_dest SET restart_wm = 100 " +
+      "WHERE table_name = 'DST'")
+    // row 1 changed with wm 150 < dest MAX 500 — lost if the marker goes
+    updateRow(url, 1L, 150L, 9.0, "RECOVERED")
+    // below the marker (start > cut), then between marker and dest MAX:
+    // either run would replay the interrupted batch at most in part
+    Seq(50L, 120L).foreach { c =>
+      val r = SyncPipeline.run(spark, cfg, src, dst, cut = Some(c))
+      assert(r.startingPoint.contains(100L) && r.snapshotCut == c &&
+        r.candidateRows == 0L && r.rowsWritten == 0L, s"cut $c: $r")
+      assert(stateRow(url, "DST").flatMap(_.restartWm).contains(100L),
+        s"cut $c cleared the restart marker")
+    }
+    val r = SyncPipeline.run(spark, cfg, src, dst)
+    assert(r.startingPoint.contains(100L), s"$r")
+    assert(readTable(url, "DST")(1L) == ((150L, 9.0, "RECOVERED")))
+    assert(stateRow(url, "DST").exists(_.restartWm.isEmpty))
+  }
+
+  test("all four endpoint pairs agree over one source history; continuous polls one pair") {
+    skipUnlessAvailable()
+    val url = freshDb("pairs")
+    val dir = tmpDir("jdbc-pairs")
+    val srcDir = dir + "/src"
+    var rows = Seq((1L, 100L, 1.0, "A"), (2L, 200L, 2.0, "B"))
+    seedSource(url, Nil)
+    // the parquet source and the JDBC source hold the same rows
+    def writeSources(): Unit = {
+      import spark.implicits._
+      rows.toDF("ID", "UPDATED", "AMOUNT", "STATUS")
+        .write.mode("overwrite").parquet(srcDir)
+      exec(url, "DELETE FROM SRC")
+      insertRows(url, "SRC", rows)
+    }
+    val pqSrc = SyncEndpoint.ParquetDir(srcDir)
+    val jdbcSrc = SyncEndpoint.parse(s"$url#SRC")
+    val pairs = Seq(
+      "parquet→parquet" -> (pqSrc -> SyncEndpoint.ParquetDir(dir + "/pp")),
+      "parquet→jdbc" -> (pqSrc -> SyncEndpoint.parse(s"$url#PJ")),
+      "jdbc→parquet" -> (jdbcSrc -> SyncEndpoint.ParquetDir(dir + "/jp")),
+      "jdbc→jdbc" -> (jdbcSrc -> SyncEndpoint.parse(s"$url#JJ")))
+    def readDest(d: SyncEndpoint): Map[Long, (Long, Double, String)] = d match {
+      case SyncEndpoint.ParquetDir(p) =>
+        // as longs/doubles: the JDBC schema's numeric box differs by driver
+        spark.read.parquet(p).select("ID", "UPDATED", "AMOUNT", "STATUS")
+          .collect().map(r => r.getAs[Number](0).longValue ->
+            ((r.getAs[Number](1).longValue, r.getAs[Number](2).doubleValue,
+              r.getString(3)))).toMap
+      case SyncEndpoint.JdbcTable(u, t, _) => readTable(u, t)
+    }
+    // every pair's (start, cut, rows extracted), and every destination
+    // equal to the source's last-writer-wins state
+    def step(label: String, want: (Option[Long], Long, Long)): Unit = {
+      writeSources()
+      val seen = pairs.map { case (name, (s, d)) =>
+        val r = SyncPipeline.run(spark, cfg, s, d)
+        name -> ((r.startingPoint, r.snapshotCut, r.candidateRows))
+      }
+      assert(seen.forall(_._2 == want), s"$label: $seen")
+      val lww = rows.map { case (id, wm, amt, st) => id -> ((wm, amt, st)) }.toMap
+      pairs.foreach { case (name, (_, d)) =>
+        assert(readDest(d) == lww, s"$label: $name")
+      }
+    }
+    step("cold", (Some(100L), 200L, 2L))
+    // row 2's payload changes on its tied watermark; row 3 is new
+    rows = Seq((1L, 100L, 1.0, "A"), (2L, 200L, 2.5, "B2"), (3L, 300L, 3.0, "C"))
+    step("delta", (Some(200L), 300L, 2L))
+    step("idle", (Some(300L), 300L, 1L))
+
+    rows = rows :+ ((4L, 400L, 4.0, "D"))
+    writeSources()
+    val (s, d) = pairs.head._2
+    val polls = SyncPipeline.continuous(spark, cfg, s, d, maxIterations = 2,
+      sleep = _ => ())
+    assert(polls.map(r => (r.startingPoint, r.snapshotCut, r.candidateRows)) ==
+      Seq((Some(300L), 400L, 2L), (Some(400L), 400L, 1L)), s"$polls")
+    assert(polls.last.rowsWritten == 0L, s"$polls")
+    assert(readDest(d) == rows.map { case (id, wm, amt, st) =>
+      id -> ((wm, amt, st)) }.toMap)
+  }
+
   test("jdbc dest with only the pre-record state tables: restart honoured, record written, old rows gone") {
     skipUnlessAvailable()
     val url = freshDb("legacy")
@@ -656,6 +745,16 @@ class JdbcSyncSpec extends SparkSpec with JdbcSyncBehaviors {
     // a loser's marker may survive its failure; two winners clear both
     if (outcomes.forall(_.isSuccess))
       assert(stateRow(url, "RACESYNC").exists(_.restartWm.isEmpty))
+  }
+
+  test("S6: a destination database that does not exist fails typed") {
+    val dir = tmpDir("jdbc-nodb") + "/src"
+    writeTombSrc(dir, Seq((1L, 100L, 1.0, "A", false)))
+    // no ;create=true: Derby reports SQLState XJ004
+    val e = intercept[graft.core.GraftError.MissingDatabase](
+      SyncPipeline.run(spark, cfg, SyncEndpoint.ParquetDir(dir),
+        SyncEndpoint.parse("jdbc:derby:memory:graftabsentdb#DST")))
+    assert(e.getMessage.contains("graftabsentdb"))
   }
 
   // pure option-set check has no dialect; lives in the Derby arm only

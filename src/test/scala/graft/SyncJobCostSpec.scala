@@ -4,13 +4,16 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
-import graft.sync.{SyncConfig, SyncJob, SyncReport}
+import graft.sync.{SyncConfig, SyncEndpoint, SyncJob, SyncPipeline,
+  SyncReport}
 
-/** Spark-job budget of one SyncJob run. An incremental poll into an
+/** Spark-job budget of one parquet→parquet sync, through SyncJob and
+  * through the CLI's `SyncPipeline.run`. An incremental poll into an
   * existing parquet destination reads the destination once (T1), then
   * runs one probe query over the extract: batch count, watermark bounds
   * and the identical-twin check together. A scalar pass added back
-  * beside that probe shows up here as extra jobs. */
+  * beside that probe, or a second read of the source, shows up here as
+  * extra jobs. */
 class SyncJobCostSpec extends SparkSpec {
   import spark.implicits._
 
@@ -62,5 +65,23 @@ class SyncJobCostSpec extends SparkSpec {
     // the cold path keeps its plan: a count of the extract, the deduped
     // write and the count of what it staged
     assert(coldJobs <= 10, s"cold run ran $coldJobs Spark jobs")
+  }
+
+  test("the CLI's parquet→parquet path: a cold run at most 11 Spark jobs; an idle poll at most 10") {
+    val work = tmpDir("sync-cost-cli")
+    val src = SyncEndpoint.ParquetDir(work + "/src")
+    val dest = SyncEndpoint.ParquetDir(work + "/dest")
+    (1 to 2000).map(i => (i.toLong, i.toLong, i * 0.5, s"s${i % 7}"))
+      .toDF("id", "updated", "amount", "status")
+      .repartition(3).write.parquet(src.dir)
+    // no cut: the source is read once, and one min/max pass over it gives
+    // both the cut and the cold start
+    val (cold, coldJobs) = jobsIn(SyncPipeline.run(spark, cfg, src, dest))
+    assert(cold.rowsWritten == 2000L)
+    val (idle, idleJobs) = jobsIn(SyncPipeline.run(spark, cfg, src, dest))
+    info(s"cold run: $coldJobs jobs; idle poll: $idleJobs jobs")
+    assert(idle.candidateRows == 1L && idle.rowsWritten == 0L, s"$idle")
+    assert(idleJobs <= 10, s"idle poll ran $idleJobs Spark jobs")
+    assert(coldJobs <= 11, s"cold run ran $coldJobs Spark jobs")
   }
 }

@@ -166,6 +166,30 @@ class SyncJobSpec extends SparkSpec {
     assert(stateOf(dest).stored.exists(_.restartWm.isEmpty))
   }
 
+  test("a cut below the destination MAX skips the run and keeps a surviving restart marker") {
+    val dest = tmpDir("sync-lowcut") + "/dest"
+    val job = new SyncJob(spark, cfg)
+    job.run(src((1L, 100L, 1.0, "A"), (2L, 500L, 2.0, "B")), dest, 600L)
+    val planted = stateOf(dest)
+    planted.open(None, populated = true)
+    planted.markRestart(100L)
+    // row 1 changed with wm 150 < dest MAX 500 — lost if the marker goes
+    val mutated = src((1L, 150L, 9.0, "recovered"), (2L, 500L, 2.0, "B"))
+    // below the marker (start > cut), then between marker and dest MAX:
+    // either run would replay the interrupted batch at most in part
+    Seq(50L, 120L).foreach { cut =>
+      val r = job.run(mutated, dest, cut)
+      assert(r.startingPoint.contains(100L) && r.snapshotCut == cut &&
+        r.candidateRows == 0L && r.rowsWritten == 0L, s"cut $cut: $r")
+      assert(stateOf(dest).stored.flatMap(_.restartWm).contains(100L),
+        s"cut $cut cleared the restart marker")
+    }
+    val r = job.run(mutated, dest, 1000L)
+    assert(r.startingPoint.contains(100L), s"$r")
+    assert(readDest(dest)(1L) == ((150L, 9.0, "recovered")))
+    assert(stateOf(dest).stored.exists(_.restartWm.isEmpty))
+  }
+
   test("a destination with only the pre-record sidecars: restart honoured, record written, sidecars gone") {
     val dest = tmpDir("sync-legacy") + "/dest"
     new SyncJob(spark, cfgT).run(srcT(

@@ -7,9 +7,11 @@ import graft.core.GraftError
 
 /** Smoke tests for the CLI verbs (SURVEY §3.1, reference cli.py): each
   * verb parses its argv and runs end-to-end against the fixture tables,
-  * writing parquet a non-Scala user could consume. The sync verbs are
-  * driven end-to-end by the verify recipe (cli.Main single ...); these
-  * cover the corpus verbs and the arg-validation surface. */
+  * writing parquet a non-Scala user could consume. The sync verbs' engine
+  * (`SyncPipeline.run` over all four endpoint pairs, and
+  * `SyncPipeline.continuous`) is covered by JdbcSyncBehaviors' "all four
+  * endpoint pairs agree…" spec; these cover the corpus verbs and the
+  * arg-validation surface. */
 class CliSpec extends SparkSpec {
 
   private val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
