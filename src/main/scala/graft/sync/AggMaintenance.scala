@@ -62,8 +62,8 @@ object AggMaintenance {
   /** @param groupsWritten groups materialized by THIS apply (full rollup
     *                      size for a data-bearing slice — the rewrite is
     *                      whole-directory — 0 for no-op replays and
-    *                      empty-slice watermark advances; the MergeResult
-    *                      convention: never derived by re-scanning).
+    *                      empty-slice watermark advances). Counted by the
+    *                      write job that stages them.
     * @param sliceRows     rows the slice contributed.
     * @param applied       false only for the replay no-op.
     * @param watermarkUs   the stored watermark after this call. */
@@ -572,10 +572,10 @@ object AggMaintenance {
       val tmp = targetDir.stripSuffix("/") + ".__agg_tmp"
       val tmpPath = new Path(tmp)
       if (fs.exists(tmpPath)) fs.delete(tmpPath, true) // stale crash debris
-      merged.write.mode("overwrite").parquet(tmp)
+      val groups = ParquetMergeSink.countedWrite(merged)(
+        _.write.mode("overwrite").parquet(tmp))
       newState.write.mode("overwrite")
         .parquet(tmp + "/" + StateDir)
-      val groups = spark.read.parquet(tmp).count()
       writeText(fs, new Path(tmpPath, SchemaFile), merged.schema.json)
       writeText(fs, new Path(tmpPath, ParamsFile), params)
       writeWm(fs, new Path(tmpPath, WmFile), hi)
@@ -624,7 +624,13 @@ object AggMaintenance {
         metrics.tail.map(m => m.partial.as(m.name)): _*)
       .persist()
     try {
-      if (partial.isEmpty) {
+      // ONE scalar pass over the persisted partial: the slice's row count
+      // (cnt leads every lane), None for an empty slice. Grouped by a
+      // constant, not a global aggregate: an empty partial then yields no
+      // row, and AQE skips the aggregate's own stage
+      val sliceRows = partial.groupBy(lit(true)).agg(sum(col("cnt")))
+        .collect().headOption.map(_.getLong(1))
+      if (sliceRows.isEmpty) {
         // idle poll with a moving cut: advance the watermark, leave the
         // data files untouched (a one-file overwrite; replay-safe — a
         // crash mid-write just re-runs the same advance). Cold start on an
@@ -658,17 +664,14 @@ object AggMaintenance {
       val tmp = targetDir.stripSuffix("/") + ".__agg_tmp"
       val tmpPath = new Path(tmp)
       if (fs.exists(tmpPath)) fs.delete(tmpPath, true) // stale crash debris
-      merged.write.mode("overwrite").parquet(tmp)
-      val groups = spark.read.parquet(tmp).count()
+      val groups = ParquetMergeSink.countedWrite(merged)(
+        _.write.mode("overwrite").parquet(tmp))
       writeText(fs, new Path(tmpPath, SchemaFile), merged.schema.json)
       // the v2 stamp rides the swap: stamp and data commit as one unit
       stamp.foreach(writeText(fs, new Path(tmpPath, ParamsFile), _))
       writeWm(fs, new Path(tmpPath, WmFile), hi) // watermark rides the swap
-      // sliceRows from the already-persisted partial — never a second
-      // slice scan just to report a number
-      val rows = partial.agg(sum(col("cnt"))).first().getLong(0)
       swapWholeDir(fs, targetDir, tmpPath)
-      AggResult(groups, rows, applied = true, watermarkUs = hi)
+      AggResult(groups, sliceRows.get, applied = true, watermarkUs = hi)
     } finally { partial.unpersist(); () }
   }
 
@@ -1153,8 +1156,7 @@ object AggMaintenance {
       val tmpPath = new Path(tmpRoot)
       if (fs.exists(tmpPath)) fs.delete(tmpPath, true) // stale crash debris
       val tmpState = new Path(tmpPath, StateDir)
-      var groups = 0L
-      if (pendingB.nonEmpty) {
+      val groups = if (pendingB.isEmpty) 0L else {
         val existingBDirs = probesB.collect {
           case (b, wm, hd) if !wm.exists(_ >= hi) && hd =>
             s"${targetDir.stripSuffix("/")}/__bucket=$b"
@@ -1177,21 +1179,14 @@ object AggMaintenance {
               metrics.tail.map(m => m.merge.as(m.name)): _*)
         // a group whose last live key moved away reads cnt=0 — gone
         val merged = merged0.filter(col("cnt") > 0L)
-        // one owning task per bucket ⇒ one file per bucket per slice
-        merged.repartition(col("__bucket"))
-          .write.mode("overwrite").partitionBy("__bucket").parquet(tmpRoot)
-        // the state subdir below is '_'-hidden, so this counts rollup
-        // only. Guarded on staged bucket dirs: a crash-replay whose
-        // pending buckets ALL end fully vacated writes an empty frame —
-        // no partition dirs, nothing for schema inference — yet the
-        // empty swap below is exactly the right commit (the buckets'
-        // groups are gone)
-        if (!fs.exists(tmpPath)) fs.mkdirs(tmpPath)
-        val stagedBuckets = fs.listStatus(tmpPath).exists(st =>
-          st.isDirectory && st.getPath.getName.startsWith("__bucket="))
-        groups =
-          if (stagedBuckets) spark.read.parquet(tmpRoot).count() else 0L
-      } else fs.mkdirs(tmpPath)
+        // one owning task per bucket ⇒ one file per bucket per slice. A
+        // crash-replay whose pending buckets ALL end fully vacated writes
+        // an empty frame — no partition dirs — yet the empty swap below
+        // is exactly the right commit (the buckets' groups are gone)
+        ParquetMergeSink.countedWrite(merged.repartition(col("__bucket")))(
+          _.write.mode("overwrite").partitionBy("__bucket").parquet(tmpRoot))
+      }
+      fs.mkdirs(tmpPath)
       if (pendingK.nonEmpty) {
         val existingKPendingDirs = probesK.collect {
           case (k, wm, hd) if !wm.exists(_ >= hi) && hd => kDir(k)
@@ -1357,7 +1352,11 @@ object AggMaintenance {
         writeText(fs, new Path(dst, SchemaFile),
           partial.drop("__bucket").schema.json)
       }
-      if (partial.isEmpty) {
+      // ONE scalar pass over the persisted partial: the touched buckets
+      // (none = an empty slice) with their row counts
+      val perBucket = partial.groupBy("__bucket").agg(sum(col("cnt")))
+        .collect().map(r => r.getInt(0) -> r.getLong(1))
+      if (perBucket.isEmpty) {
         writeWm(fs, new Path(dst, WmFile), hi)
         return AggResult(0L, 0L, applied = true, watermarkUs = hi)
       }
@@ -1365,8 +1364,7 @@ object AggMaintenance {
       // touched buckets, minus any whose own watermark already reached hi
       // (a crashed previous attempt committed them — re-merging the same
       // partial would double-count)
-      val touched = partial.select("__bucket").distinct()
-        .collect().map(_.getInt(0)).sorted.toSeq
+      val touched = perBucket.map(_._1).sorted.toSeq
       // ONE parallel metadata pass answers both questions per touched
       // bucket: its committed watermark (the crashed-attempt skip) and
       // whether it holds prior data (which buckets the merge must read)
@@ -1382,8 +1380,7 @@ object AggMaintenance {
         case (b, wm, hd) if !wm.exists(_ >= hi) && hd =>
           s"${targetDir.stripSuffix("/")}/__bucket=$b"
       }
-      // sliceRows from the persisted partial — never a second slice scan
-      val sliceRows = partial.agg(sum(col("cnt"))).first().getLong(0)
+      val sliceRows = perBucket.map(_._2).sum
       if (pending.isEmpty) { // every bucket committed before the crash
         writeWm(fs, new Path(dst, WmFile), hi)
         return AggResult(0L, sliceRows, applied = true, watermarkUs = hi)
@@ -1432,9 +1429,9 @@ object AggMaintenance {
       // per bucket per slice; the extra shuffle moves only
       // group-cardinality rows, and a bucket is executor-memory-sized by
       // the layout's own sizing rule (~√groups buckets).
-      merged.repartition(col("__bucket"))
-        .write.mode("overwrite").partitionBy("__bucket").parquet(tmpRoot)
-      val groups = spark.read.parquet(tmpRoot).count()
+      val groups = ParquetMergeSink.countedWrite(
+        merged.repartition(col("__bucket")))(
+        _.write.mode("overwrite").partitionBy("__bucket").parquet(tmpRoot))
 
       // commit loop: per-bucket (data + bucket wm) swap, root wm LAST.
       // Driver-side and O(touched buckets) in rename RPCs — metadata-only

@@ -25,6 +25,9 @@ object Compact {
   /** Default output file size — the single source for CLI and API. */
   val DefaultTargetBytes: Long = 128L * 1024 * 1024
 
+  /** @param rows        rows the rewrite wrote, counted by its write job.
+    * @param filesBefore data files before the rewrite.
+    * @param filesAfter  data files after it. */
   final case class CompactResult(rows: Long, filesBefore: Int, filesAfter: Int)
 
   def compact(spark: SparkSession, dir: String,
@@ -51,15 +54,14 @@ object Compact {
             "to compact it")
       }
     }
-    effPart match {
+    val rows = effPart match {
       case Some(p) =>
-        df.repartition(nOut, col(p))
-          .write.mode(SaveMode.Overwrite).partitionBy(p).parquet(tmp)
+        ParquetMergeSink.countedWrite(df.repartition(nOut, col(p)))(
+          _.write.mode(SaveMode.Overwrite).partitionBy(p).parquet(tmp))
       case None =>
-        df.repartition(nOut)
-          .write.mode(SaveMode.Overwrite).parquet(tmp)
+        ParquetMergeSink.countedWrite(df.repartition(nOut))(
+          _.write.mode(SaveMode.Overwrite).parquet(tmp))
     }
-    val rows = spark.read.parquet(tmp).count()
     ParquetMergeSink.atomicSwap(fs, dir, tmp)
     CompactResult(rows, before.length, dataFiles(fs, new Path(dir)).length)
   }

@@ -1,7 +1,7 @@
 package graft.sync
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -29,7 +29,7 @@ object ParquetMergeSink {
   /** @param rowsWritten rows materialized by THIS merge: the full table for
     *                    an unpartitioned rewrite, only the affected
     *                    partitions for a partitioned one, 0 for no-op polls.
-    *                    Never derived by re-scanning the destination.
+    *                    Counted by the write job that stages them.
     * @param updateRows  rows in the extracted batch. */
   final case class MergeResult(rowsWritten: Long, updateRows: Long)
 
@@ -226,12 +226,9 @@ object ParquetMergeSink {
           else deduped0
         val tmp = targetDir.stripSuffix("/") + ".__merge_tmp"
         if (fs.exists(new Path(tmp))) fs.delete(new Path(tmp), true)
-        withProgress(updateRows)(write(deduped, tmp, uPart, Some(uOrder)))
-        // counts only the files just written (metadata-weight scan); an
-        // all-deletes cold batch legitimately stages ZERO rows (possibly
-        // zero part files — unreadable as parquet, hence the hasData guard)
+        // an all-deletes cold batch legitimately stages ZERO rows
         val written =
-          if (hasData(fs, new Path(tmp))) countParquet(spark, tmp) else 0L
+          withProgress(updateRows)(write(deduped, tmp, uPart, Some(uOrder)))
         val dst = new Path(targetDir)
         // hasData said false, so anything here is crashed-first-write debris
         if (fs.exists(dst)) fs.delete(dst, true)
@@ -376,12 +373,11 @@ object ParquetMergeSink {
           // Can't overwrite partitions we are reading: stage affected rows,
           // then dynamic-partition-overwrite replaces only those partitions.
           val tmp = targetDir.stripSuffix("/") + ".__merge_tmp"
-          merged.write.mode(SaveMode.Overwrite).parquet(tmp)
+          val stagedRows = write(merged, tmp, None)
           // a fully-vacated batch (every key in the affected partitions
           // deleted) stages ZERO rows — possibly zero part files, which
           // parquet cannot even re-read; guard and skip the overwrite job
           val stagedHasData = hasData(fs, new Path(tmp))
-          val stagedRows = if (stagedHasData) countParquet(spark, tmp) else 0L
           // Dynamic partition overwrite commits per partition, NOT atomically
           // across them: a crash can leave some partitions new (advancing
           // MAX(watermark) in dest) while others keep old rows. Record the
@@ -441,15 +437,12 @@ object ParquetMergeSink {
           val merged = dropTombWinners(
             dedupe(withTombFalse(target).unionByName(tagged), tKeys, tOrder))
           // Parquet dirs can't be read and overwritten in one job: stage then
-          // swap the whole directory (atomicSwap). rowsWritten = the staged
-          // output's own count — never a re-scan of the destination after
-          // the swap. An everything-deleted merge legitimately stages zero
-          // rows; the swap still runs (the empty dest reads as "no
-          // destination", and the next run's cold re-extract converges).
+          // swap the whole directory (atomicSwap). An everything-deleted
+          // merge legitimately stages zero rows; the swap still runs (the
+          // empty dest reads as "no destination", and the next run's cold
+          // re-extract converges).
           val tmp = targetDir.stripSuffix("/") + ".__merge_tmp"
-          write(merged, tmp, None, Some(tOrder))
-          val stagedRows =
-            if (hasData(fs, new Path(tmp))) countParquet(spark, tmp) else 0L
+          val stagedRows = write(merged, tmp, None, Some(tOrder))
           atomicSwap(fs, targetDir, tmp)
           stagedRows
       })
@@ -602,18 +595,25 @@ object ParquetMergeSink {
     * stats stay tight and T1 watermark reads / S1 range scans skip row
     * groups — the storage-side twin of the reference's BRIN advisory. No
     * global sort (that would be a range shuffle); only the free in-task
-    * ordering of data the merge already holds. */
+    * ordering of data the merge already holds. Returns the rows written. */
   private def write(df: DataFrame, dir: String, partitionByCol: Option[String],
-                    sortCol: Option[String] = None): Unit = {
+                    sortCol: Option[String] = None): Long = {
     val out = sortCol.map(c => df.sortWithinPartitions(col(c))).getOrElse(df)
-    partitionByCol match {
-      case Some(p) =>
-        out.write.mode(SaveMode.Overwrite).partitionBy(p).parquet(dir)
-      case None =>
-        out.write.mode(SaveMode.Overwrite).parquet(dir)
+    countedWrite(out) { o =>
+      val w = o.write.mode(SaveMode.Overwrite)
+      partitionByCol.fold(w)(w.partitionBy(_)).parquet(dir)
     }
   }
 
-  private def countParquet(spark: SparkSession, dir: String): Long =
-    spark.read.parquet(dir).count()
+  /** Run `save` on `df` and return the rows it wrote, counted by the write
+    * job itself: an observed `count(1)` over `df` instead of reading the
+    * written files back. Pass the frame exactly as it is written, after
+    * any `repartition` or `sortWithinPartitions`: the count then sits
+    * directly under the write, in its result stage, where Spark applies
+    * each task's update once even under task retry or speculation. */
+  private[sync] def countedWrite(df: DataFrame)(save: DataFrame => Unit): Long = {
+    val written = Observation()
+    save(df.observe(written, count(lit(1)).as("rows")))
+    written.get("rows").asInstanceOf[Long]
+  }
 }

@@ -58,7 +58,8 @@ object Reconcile {
     * cleaned table recoverable (an interrupted swap is healed by
     * [[ParquetMergeSink.recoverInterruptedSwap]], which this and every
     * merge entry point run first).
-    * @return (rows kept, rows dropped) */
+    * @return (rows kept, rows dropped): the kept rows are counted by the
+    *         write job that stages them */
   def applyDeletes(spark: SparkSession, destPath: String,
                    orphans: DataFrame, keys: Seq[String]): (Long, Long) = {
     val fs = new org.apache.hadoop.fs.Path(destPath)
@@ -74,19 +75,19 @@ object Reconcile {
     // — mixed layout, broken partition discovery. Single-level layouts
     // are the merge sink's own shape; anything deeper is foreign and
     // refuses rather than guessing.
-    ParquetMergeSink.partitionColsOf(fs, destPath) match {
+    val keptRows = ParquetMergeSink.partitionColsOf(fs, destPath) match {
       case Seq() =>
-        kept.write.mode(SaveMode.Overwrite).parquet(tmp)
+        ParquetMergeSink.countedWrite(kept)(
+          _.write.mode(SaveMode.Overwrite).parquet(tmp))
       case Seq(p) =>
-        kept.repartition(col(p))
-          .write.mode(SaveMode.Overwrite).partitionBy(p).parquet(tmp)
+        ParquetMergeSink.countedWrite(kept.repartition(col(p)))(
+          _.write.mode(SaveMode.Overwrite).partitionBy(p).parquet(tmp))
       case many =>
         throw graft.core.GraftError.InvalidConfig(
           s"$destPath carries multiple partition column layouts " +
             s"(${many.mkString(", ")}) — not a merge-sink table; refusing " +
             "to rewrite it")
     }
-    val keptRows = spark.read.parquet(tmp).count()
     ParquetMergeSink.atomicSwap(fs, destPath, tmp)
     (keptRows, total - keptRows)
   }

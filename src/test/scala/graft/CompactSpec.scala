@@ -30,6 +30,25 @@ class CompactSpec extends SparkSpec {
     assert(!new java.io.File(dir + ".__merge_old").exists())
   }
 
+  test("a table emptied by a tombstoned merge compacts to 0 rows and stays readable") {
+    val dir = tmpDir("compact-empty") + "/t"
+    val cfg = graft.sync.SyncConfig(keyCols = Seq("id"),
+      watermarkCol = "updated", tombstoneCol = Some("del"))
+    val job = new graft.sync.SyncJob(spark, cfg)
+    val live = Seq((1L, 100L, "a", false), (2L, 200L, "b", false))
+    job.run(live.toDF("id", "updated", "s", "del"), dir, 1000L)
+    val deletes = live ++ Seq((1L, 300L, null, true), (2L, 300L, null, true))
+    job.run(deletes.toDF("id", "updated", "s", "del"), dir, 1000L)
+    assert(spark.read.parquet(dir).count() == 0L)
+    val r = Compact.compact(spark, dir)
+    assert(r.rows == 0L, s"$r")
+    val after = spark.read.parquet(dir)
+    assert(after.columns.toSeq == Seq("id", "updated", "s"))
+    assert(after.count() == 0L)
+    assert(!new java.io.File(dir + ".__merge_tmp").exists())
+    assert(!new java.io.File(dir + ".__merge_old").exists())
+  }
+
   test("a dot/underscore ANCESTOR directory does not hide the table's files") {
     // regression: dataFiles used to strip an unqualified root prefix from
     // fully-qualified (file:/...) listing paths, so the hidden-file filter

@@ -51,6 +51,29 @@ class ReconcileSpec extends SparkSpec {
     assert(!new java.io.File(s"$work/dest.reconcile.tmp").exists())
   }
 
+  test("applyDeletes with every destination key orphaned keeps 0 rows; the next sync converges") {
+    val work = tmpDir("reconcile-all")
+    val dest = s"$work/dest"
+    val cfg = graft.sync.SyncConfig(keyCols = Seq("id"), watermarkCol = "updated")
+    val job = new graft.sync.SyncJob(spark, cfg)
+    job.run(Seq((1L, 100L, "a"), (2L, 200L, "b"), (3L, 300L, "c"))
+      .toDF("id", "updated", "payload"), dest, 1000L)
+    // the source's snapshot shares no key with the destination; key 4
+    // carries two versions, and the later one wins
+    val source = Seq((4L, 50L, "old"), (4L, 150L, "new"), (5L, 120L, "e"))
+      .toDF("id", "updated", "payload")
+    val orphans = Reconcile.deletedKeys(source, spark.read.parquet(dest),
+      Seq("id")).localCheckpoint()
+    val (kept, dropped) = Reconcile.applyDeletes(spark, dest, orphans, Seq("id"))
+    assert(kept == 0L && dropped == 3L, s"got ($kept, $dropped)")
+    assert(!new java.io.File(s"$work/dest.reconcile.tmp").exists())
+    val r = job.run(source, dest, 1000L)
+    assert(r.rowsWritten == 2L, s"$r")
+    val after = spark.read.parquet(dest).as[(Long, Long, String)]
+      .collect().sortBy(_._1).toList
+    assert(after == List((4L, 150L, "new"), (5L, 120L, "e")), s"got $after")
+  }
+
   test("applyDeletes preserves a hive-partitioned destination layout") {
     val work = tmpDir("reconcile-part")
     Seq((1L, 0L, "keep"), (2L, 1L, "keep"), (3L, 0L, "drop"), (4L, 1L, "drop"))
