@@ -3,7 +3,7 @@ package graft.sinks
 import java.sql.{Connection, DriverManager, PreparedStatement}
 import java.util.Properties
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -92,7 +92,10 @@ object JdbcUpsertSink {
     val payloadHash = if (hashCols.isEmpty) lit(0L) else xxhash64(hashCols: _*)
     val w = Window.partitionBy(keyCols.map(col): _*)
       .orderBy(col(orderCol).desc, payloadHash.desc)
-    df.repartition(keyCols.map(col): _*)
+    // a fixed partition count: AQE would coalesce a small batch's key
+    // shuffle to one write task, and each partition is one connection
+    val writers = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    df.repartition(writers, keyCols.map(col): _*)
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
@@ -203,7 +206,8 @@ object JdbcUpsertSink {
 
   /** Write `df` into `table` with upsert semantics; returns the number of
     * rows applied (post-dedup, deletes included). Dialect chosen from the
-    * URL.
+    * URL. A tombstone-blind write is two Spark jobs, the key shuffle and
+    * the write, whose tasks count the rows they apply.
     *
     * `tombstoneCol` (CDC deletes — the ParquetMergeSink.merge contract on
     * the JDBC front): after the per-key last-writer-wins dedup, a winner
@@ -229,63 +233,69 @@ object JdbcUpsertSink {
         s"tombstone column '$t' cannot also be a key/order column")
       graft.sync.AggMaintenance.requireTombstoneType(df, t)
     }
-    val normalized0 = normalize(df, keyCols, orderCol)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // malformed-flag gate (the keyed IVM lanes' rule): a non-NULL flag
-      // whose boolean cast is NULL must refuse typed, never silently
-      // apply a delete marker as an upsert
-      tombstoneCol.foreach { t =>
-        val bad = normalized0.filter(
-          col(t).isNotNull && col(t).try_cast("boolean").isNull)
-          .limit(1).count()
-        if (bad > 0L)
-          throw graft.core.GraftError.InvalidConfig(
-            s"batch carries row(s) whose tombstone '$t' does not cast to " +
-              "boolean — treating malformed delete markers as upserts " +
-              "would silently mix tombstoned and tombstone-blind " +
-              "semantics; repair the source")
-      }
-      val tombFlag = tombstoneCol.map(t =>
-        coalesce(col(t).try_cast("boolean"), lit(false)))
-      val applied = normalized0.count()
-      val upserts = tombstoneCol match {
-        case None => normalized0
-        case Some(t) => normalized0.filter(!tombFlag.get).drop(t)
-      }
-      val columns = upserts.columns.toSeq
-      val dialect = SqlDialect.forUrl(url)
-      dialect.upsertSql(table, columns, keyCols, Some(orderCol)) match {
-        case Some(sql) =>
-          runPerPartition(upserts, url, props) { (conn, rows) =>
-            val stmt = conn.prepareStatement(sql)
-            try {
-              var pending = 0
-              rows.foreach { row =>
-                bindRow(stmt, row, columns.indices)
-                stmt.addBatch()
-                pending += 1
-                if (pending >= batchSize) { stmt.executeBatch(); pending = 0 }
-              }
-              if (pending > 0) stmt.executeBatch()
-            } finally stmt.close()
-          }
-        case None =>
-          writeGeneric(upserts, url, props, table, columns, keyCols,
+    val normalized = normalize(df, keyCols, orderCol)
+    tombstoneCol match {
+      // tombstone-blind: the write's own tasks count what they apply
+      case None =>
+        upsert(normalized, url, props, table, keyCols, orderCol, batchSize)
+      case Some(t) =>
+        // the flag gate, the count, the upserts and the delete pass all
+        // read one snapshot of the batch
+        val batch = normalized.persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          // malformed-flag gate (the keyed IVM lanes' rule): a non-NULL flag
+          // whose boolean cast is NULL must refuse typed, never silently
+          // apply a delete marker as an upsert
+          val bad = batch.filter(
+            col(t).isNotNull && col(t).try_cast("boolean").isNull)
+            .limit(1).count()
+          if (bad > 0L)
+            throw graft.core.GraftError.InvalidConfig(
+              s"batch carries row(s) whose tombstone '$t' does not cast to " +
+                "boolean — treating malformed delete markers as upserts " +
+                "would silently mix tombstoned and tombstone-blind " +
+                "semantics; repair the source")
+          val tombFlag = coalesce(col(t).try_cast("boolean"), lit(false))
+          val applied = batch.count()
+          upsert(batch.filter(!tombFlag).drop(t), url, props, table, keyCols,
             orderCol, batchSize)
-      }
-      // delete winners AFTER the upserts: the sets are key-disjoint
-      // (normalize keeps one winner per key), so ordering is semantics-
-      // free — but deleting last means a crash between the two phases
-      // leaves the stale row VISIBLE rather than resurrected-then-lost,
-      // and the restart-marker replay converges either way
-      tombstoneCol.foreach { _ =>
-        val deletes = normalized0.filter(tombFlag.get)
-        deleteByKeys(deletes, url, props, table, keyCols, batchSize)
-        ()
-      }
-      applied
-    } finally { normalized0.unpersist(); () }
+          // delete winners AFTER the upserts: the sets are key-disjoint
+          // (normalize keeps one winner per key), so ordering is semantics-
+          // free — but deleting last means a crash between the two phases
+          // leaves the stale row VISIBLE rather than resurrected-then-lost,
+          // and the restart-marker replay converges either way
+          deleteByKeys(batch.filter(tombFlag), url, props, table, keyCols,
+            batchSize)
+          applied
+        } finally { batch.unpersist(); () }
+    }
+  }
+
+  /** Upsert the normalized (deduped, key-partitioned) rows by the URL's
+    * dialect; returns the rows the write tasks applied. */
+  private def upsert(normalized: DataFrame, url: String, props: Properties,
+                     table: String, keyCols: Seq[String], orderCol: String,
+                     batchSize: Int): Long = {
+    val columns = normalized.columns.toSeq
+    SqlDialect.forUrl(url).upsertSql(table, columns, keyCols, Some(orderCol)) match {
+      case Some(sql) =>
+        runPerPartition(normalized, url, props) { (conn, rows) =>
+          val stmt = conn.prepareStatement(sql)
+          try {
+            var pending = 0
+            rows.foreach { row =>
+              bindRow(stmt, row, columns.indices)
+              stmt.addBatch()
+              pending += 1
+              if (pending >= batchSize) { stmt.executeBatch(); pending = 0 }
+            }
+            if (pending > 0) stmt.executeBatch()
+          } finally stmt.close()
+        }
+      case None =>
+        writeGeneric(normalized, url, props, table, columns, keyCols,
+          orderCol, batchSize)
+    }
   }
 
   /** Backwards-compatible PG entry point. */
@@ -304,7 +314,7 @@ object JdbcUpsertSink {
   private def writeGeneric(normalized: DataFrame, url: String, props: Properties,
                            table: String, columns: Seq[String],
                            keyCols: Seq[String], orderCol: String,
-                           batchSize: Int): Unit = {
+                           batchSize: Int): Long = {
     val nonKey = columns.filterNot(keyCols.contains)
     val insertSql = s"INSERT INTO $table (${columns.mkString(", ")}) VALUES " +
       s"(${columns.map(_ => "?").mkString(", ")})"
@@ -424,21 +434,30 @@ object JdbcUpsertSink {
   }
 
   /** One connection + one transaction per partition; rollback on failure;
-    * connections actually closed (unlike reference session.py:109). */
+    * connections actually closed (unlike reference session.py:109). An
+    * empty partition opens no connection. Returns the rows `body`
+    * consumed, summed from each task's own result: Spark keeps one
+    * successful attempt's result per partition, so the sum stays exact
+    * under task retry and speculation (an accumulator would count a
+    * retried task twice). */
   private def runPerPartition(df: DataFrame, url: String, props: Properties)
-                             (body: (Connection, Iterator[Row]) => Unit): Unit =
-    df.foreachPartition { (rows: Iterator[Row]) =>
+                             (body: (Connection, Iterator[Row]) => Unit): Long = {
+    val task: Iterator[Row] => Iterator[Long] = { rows =>
+      var n = 0L
       if (rows.hasNext) {
         val conn = DriverManager.getConnection(url, props)
         try {
           conn.setAutoCommit(false)
-          body(conn, rows)
+          body(conn, rows.map { r => n += 1; r })
           conn.commit()
         } catch {
           case t: Throwable => conn.rollback(); throw t
         } finally conn.close()
       }
+      Iterator.single(n)
     }
+    df.mapPartitions(task)(Encoders.scalaLong).collect().sum
+  }
 
   /** Batched DELETE of the given key rows — the JDBC apply side of
     * [[graft.sync.Reconcile]] (orphaned-key removal). Keys are deduped

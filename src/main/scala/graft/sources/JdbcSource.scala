@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.sql.{Connection, DriverManager, SQLException}
+import java.sql.{Connection, DriverManager, ResultSet, SQLException}
 import java.util.Properties
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -13,6 +13,9 @@ import graft.sync.SlicePlanner
   * Responsibilities transposed from the reference:
   *   - preflight connectivity + existence checks with typed errors
   *     (session.py:170-192 → [[preflight]]);
+  *   - the watermark bounds and the range count as plain JDBC statements
+  *     on the driver — no Spark job, no schema round-trip
+  *     ([[watermarkBounds]], [[countRange]]);
   *   - primary-key discovery via `DatabaseMetaData.getPrimaryKeys` — Spark's
   *     JDBC schema inference does not surface PKs (session.py:40-43
   *     reflection → [[primaryKey]]);
@@ -47,13 +50,14 @@ final class JdbcSource(url: String, props: Properties) {
     * fold unquoted identifiers differently AND some drivers (DuckDB)
     * match the pattern case-sensitively — the JdbcUpsertSink.tableExists
     * protocol. */
-  def preflight(table: String): Unit = withConnection { conn =>
+  def preflight(table: String): Unit = withConnection(preflight(_, table))
+
+  private def preflight(conn: Connection, table: String): Unit =
     // ONE definition of the case-fold/type-label probe (the sink's
     // tableExists) — a copy here would silently miss any future driver
     // quirk fix applied to the other
     if (!graft.sinks.JdbcUpsertSink.tableExists(conn, table))
       throw GraftError.MissingTable(table)
-  }
 
   /** S2 — reflected primary-key columns in key-sequence order. */
   def primaryKey(table: String): Seq[String] = withConnection { conn =>
@@ -68,34 +72,46 @@ final class JdbcSource(url: String, props: Properties) {
     pk
   }
 
-  /** A1/A2-style scalar bounds for the watermark column, pushed to the
-    * server (one-row aggregate — the only driver-side values in the plan).
-    * Bounds come back as canonical epoch-micros (core.Watermark) plus the
-    * column KIND, so the extraction SQL can re-materialize them as
-    * literals of the column's own type (numeric epoch — the reference's
-    * data model, session.py:58 — or SQL TIMESTAMP via the JDBC `{ts ...}`
-    * escape every tested driver translates). TIMESTAMP-without-zone values
-    * are read as UTC wall-clock, matching the engine's UTC sessions. */
+  /** A1/A2-style scalar bounds for the watermark column: one plain
+    * `MIN`/`MAX` statement, aggregated by the server. Bounds come back as
+    * canonical epoch-micros (core.Watermark) plus the column KIND, so the
+    * extraction SQL can re-materialize them as literals of the column's
+    * own type (numeric epoch — the reference's data model, session.py:58 —
+    * or SQL TIMESTAMP via the JDBC `{ts ...}` escape every tested driver
+    * translates). TIMESTAMP-without-zone values are read as UTC
+    * wall-clock, matching the engine's UTC sessions.
+    * `spark` is unused: the statement runs on the driver. */
   def watermarkBounds(spark: SparkSession, table: String,
-      watermarkCol: String): Option[JdbcSource.WatermarkBounds] = {
-    val df = spark.read.jdbc(url,
-      s"(SELECT MIN($watermarkCol) AS lo, MAX($watermarkCol) AS hi " +
-        s"FROM $table) AS t", // AS required by Derby, accepted everywhere
-      props)
-    JdbcSource.WatermarkBounds.of(df.first())
+      watermarkCol: String): Option[JdbcSource.WatermarkBounds] =
+    withConnection(bounds(_, table, watermarkCol))
+
+  /** [[preflight]], then [[watermarkBounds]], on one connection. */
+  private[graft] def checkedBounds(table: String, watermarkCol: String)
+      : Option[JdbcSource.WatermarkBounds] = withConnection { conn =>
+    preflight(conn, table)
+    bounds(conn, table, watermarkCol)
   }
+
+  private def bounds(conn: Connection, table: String,
+      watermarkCol: String): Option[JdbcSource.WatermarkBounds] =
+    JdbcSource.firstRow(conn, s"SELECT MIN($watermarkCol) AS lo, " +
+        s"MAX($watermarkCol) AS hi FROM $table") { rs =>
+      JdbcSource.WatermarkBounds.of(Row(rs.getObject(1), rs.getObject(2)))
+    }
 
   /** Exact server-side rowcount of a watermark range — the engine's
     * replacement for the reference's EXPLAIN estimate (A6): affordable,
-    * and sizes the partitioned read precisely. */
+    * and sizes the partitioned read precisely. One plain `COUNT(*)`
+    * statement; `spark` is unused. */
   def countRange(spark: SparkSession, table: String, watermarkCol: String,
                  lo: Long, hi: Long, timestampTyped: Boolean = false): Long =
-    spark.read.jdbc(url,
-      s"(SELECT COUNT(*) AS c FROM $table " +
-        s"WHERE $watermarkCol >= ${JdbcSource.wmSqlLiteral(lo, timestampTyped, url)} " +
-        s"AND $watermarkCol <= ${JdbcSource.wmSqlLiteral(hi, timestampTyped, url)}) AS t",
-      props)
-      .first().getAs[Number](0).longValue()
+    withConnection { conn =>
+      JdbcSource.firstRow(conn, s"SELECT COUNT(*) AS c FROM $table " +
+          s"WHERE $watermarkCol >= ${JdbcSource.wmSqlLiteral(lo, timestampTyped, url)} " +
+          s"AND $watermarkCol <= ${JdbcSource.wmSqlLiteral(hi, timestampTyped, url)}") {
+        _.getObject(1).asInstanceOf[Number].longValue()
+      }
+    }
 
   /** S1 — the range-partitioned extraction read over [lo, hi] of the
     * watermark column. One Spark task per slice replaces the reference's
@@ -146,6 +162,19 @@ object JdbcSource {
           throw GraftError.Unreachable(url, e)
       }
     try f(conn) finally conn.close()
+  }
+
+  /** `read` over the one row of an aggregate statement `sql` on `conn`. */
+  private[graft] def firstRow[A](conn: Connection, sql: String)
+                                (read: ResultSet => A): A = {
+    val st = conn.createStatement()
+    try {
+      val rs = st.executeQuery(sql)
+      try {
+        if (!rs.next()) throw new SQLException(s"no row from: $sql")
+        read(rs)
+      } finally rs.close()
+    } finally st.close()
   }
 
   /** Watermark bounds in canonical epoch-micros plus the column KIND —

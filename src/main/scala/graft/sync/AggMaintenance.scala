@@ -637,9 +637,9 @@ object AggMaintenance {
         // empty opening slice first materializes an empty rollup so the
         // table is readable (schema-bearing) from its first poll on.
         if (!exists && !fs.exists(new Path(dst, SchemaFile))) {
-          // an empty write leaves no part files — the schema sidecar is
-          // what makes the cold empty rollup readable (the dir itself may
-          // pre-exist, e.g. a fresh mkdtemp)
+          // an empty write leaves one schema-bearing part file; the schema
+          // sidecar beside it is what a reader falls back to when it finds
+          // no data file (the dir itself may pre-exist, e.g. a fresh mkdtemp)
           val empty = emptyRollup(spark, source, groupCols, metrics)
           empty.write.mode("overwrite").parquet(targetDir)
           writeText(fs, new Path(dst, SchemaFile), empty.schema.json)

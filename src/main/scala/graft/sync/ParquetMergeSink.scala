@@ -373,11 +373,11 @@ object ParquetMergeSink {
           // Can't overwrite partitions we are reading: stage affected rows,
           // then dynamic-partition-overwrite replaces only those partitions.
           val tmp = targetDir.stripSuffix("/") + ".__merge_tmp"
-          val stagedRows = write(merged, tmp, None)
           // a fully-vacated batch (every key in the affected partitions
-          // deleted) stages ZERO rows — possibly zero part files, which
-          // parquet cannot even re-read; guard and skip the overwrite job
-          val stagedHasData = hasData(fs, new Path(tmp))
+          // deleted) stages ZERO rows, yet its empty write still leaves one
+          // schema-bearing part file: the written count, not the listing,
+          // says whether the overwrite job and the staged re-read run
+          val stagedRows = write(merged, tmp, None)
           // Dynamic partition overwrite commits per partition, NOT atomically
           // across them: a crash can leave some partitions new (advancing
           // MAX(watermark) in dest) while others keep old rows. Record the
@@ -391,7 +391,7 @@ object ParquetMergeSink {
                             // above): rows without a watermark are outside
                             // the protocol
           }
-          if (stagedHasData) {
+          if (stagedRows > 0L) {
             val staged = spark.read.parquet(tmp)
             val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -417,7 +417,7 @@ object ParquetMergeSink {
           // re-extracts and re-deletes.
           if (delCount > 0L) {
             val stagedStrs: Set[String] =
-              if (!stagedHasData) Set.empty
+              if (stagedRows == 0L) Set.empty
               else spark.read.parquet(tmp)
                 .select(col(tPart).cast("string")).distinct()
                 .collect().flatMap(r => Option(r.getString(0))).toSet
@@ -610,7 +610,10 @@ object ParquetMergeSink {
     * written files back. Pass the frame exactly as it is written, after
     * any `repartition` or `sortWithinPartitions`: the count then sits
     * directly under the write, in its result stage, where Spark applies
-    * each task's update once even under task retry or speculation. */
+    * each task's update once even under task retry or speculation. The
+    * count arrives only through a `DataFrameWriter` action: an
+    * `Observation` on a frame consumed by `foreachPartition` never
+    * completes on Spark 4.1.2. */
   private[sync] def countedWrite(df: DataFrame)(save: DataFrame => Unit): Long = {
     val written = Observation()
     save(df.observe(written, count(lit(1)).as("rows")))

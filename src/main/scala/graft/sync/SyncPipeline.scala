@@ -135,9 +135,7 @@ object SyncPipeline {
       case Extract.Frame(df) =>
         JdbcSource.WatermarkBounds.of(df.agg(min(wm), max(wm)).first())
       case Extract.Jdbc(JdbcTable(url, table, props)) =>
-        val src = new JdbcSource(url, props)
-        src.preflight(table)
-        src.watermarkBounds(spark, table, cfg.watermarkCol)
+        new JdbcSource(url, props).checkedBounds(table, cfg.watermarkCol)
     }
 
     def extractRange(start: Long, c: Long): (DataFrame, Option[Long]) =
@@ -208,8 +206,9 @@ object SyncPipeline {
           val state = DestState.jdbc(conn, table)
           val exists = JdbcUpsertSink.tableExists(conn, table)
           val opened = state.open(cfg.tombstoneCol, exists && hasRow(conn, table))
-          val destMax = if (!exists) None else scalarLong(conn,
-            s"SELECT MAX(${cfg.watermarkCol}) FROM $table")
+          val destMax = if (!exists) None else JdbcSource.firstRow(conn,
+            s"SELECT MAX(${cfg.watermarkCol}) FROM $table")(rs =>
+            Watermark.toMicros(rs.getObject(1)))
           // the batch covers every source row up to the cut that existed
           // at run start — so the applied bound is the source MAX read
           // before the extract, capped by the cut, never the cut itself:
@@ -251,17 +250,6 @@ object SyncPipeline {
       st.setMaxRows(1)
       val rs = st.executeQuery(s"SELECT 1 FROM $table")
       try rs.next() finally rs.close()
-    } finally st.close()
-  }
-
-  private def scalarLong(conn: Connection, sql: String): Option[Long] = {
-    val st = conn.createStatement()
-    try {
-      val rs = st.executeQuery(sql)
-      try {
-        if (!rs.next()) None
-        else Watermark.toMicros(rs.getObject(1))
-      } finally rs.close()
     } finally st.close()
   }
 }

@@ -51,13 +51,13 @@ trait JdbcSyncBehaviors { this: SparkSpec =>
     } finally conn.close()
   }
 
-  private def seedSource(url: String, rows: Seq[(Long, Long, Double, String)]): Unit = {
+  protected def seedSource(url: String, rows: Seq[(Long, Long, Double, String)]): Unit = {
     exec(url, "CREATE TABLE SRC (ID BIGINT NOT NULL PRIMARY KEY, " +
       s"UPDATED BIGINT NOT NULL, AMOUNT $doubleType, STATUS VARCHAR(32))")
     insertRows(url, "SRC", rows)
   }
 
-  private def insertRows(url: String, table: String,
+  protected def insertRows(url: String, table: String,
                          rows: Seq[(Long, Long, Double, String)]): Unit = {
     val conn = DriverManager.getConnection(url)
     try {
@@ -71,7 +71,7 @@ trait JdbcSyncBehaviors { this: SparkSpec =>
     } finally conn.close()
   }
 
-  private def updateRow(url: String, id: Long, wm: Long, amt: Double,
+  protected def updateRow(url: String, id: Long, wm: Long, amt: Double,
                         status: String): Unit =
     exec(url, s"UPDATE SRC SET UPDATED = $wm, AMOUNT = $amt, " +
       s"STATUS = '$status' WHERE ID = $id")
@@ -514,6 +514,94 @@ trait JdbcSyncBehaviors { this: SparkSpec =>
       .map(_.asInstanceOf[Number].longValue()) == Seq(200L, 800L))
   }
 
+  test("source bounds and range count as plain statements match spark.read.jdbc of the same SQL") {
+    skipUnlessAvailable()
+    val url = freshDb("scalars")
+    val props = new java.util.Properties()
+    val src = new JdbcSource(url, props)
+    exec(url, "CREATE TABLE NSRC (ID BIGINT NOT NULL PRIMARY KEY, " +
+      "UPDATED BIGINT NOT NULL)")
+    exec(url, "CREATE TABLE TSRC (ID BIGINT NOT NULL PRIMARY KEY, " +
+      "UPDATED TIMESTAMP NOT NULL)")
+    val dialect = graft.sinks.SqlDialect.forUrl(url)
+    def tsLit(us: Long): String = dialect.timestampLiteral(
+      java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS")
+        .format(java.time.LocalDateTime.ofInstant(java.time.Instant
+          .ofEpochSecond(us / 1000000L, (us % 1000000L) * 1000L),
+          java.time.ZoneOffset.UTC)))
+    def sparkBounds(table: String): Option[JdbcSource.WatermarkBounds] =
+      JdbcSource.WatermarkBounds.of(spark.read.jdbc(url,
+        s"(SELECT MIN(UPDATED) AS lo, MAX(UPDATED) AS hi FROM $table) AS t",
+        props).first())
+    def sparkCount(table: String, lo: String, hi: String): Long =
+      spark.read.jdbc(url, s"(SELECT COUNT(*) AS c FROM $table " +
+        s"WHERE UPDATED >= $lo AND UPDATED <= $hi) AS t", props)
+        .first().getAs[Number](0).longValue()
+    // empty tables: no bounds, and a zero count, on both paths
+    Seq("NSRC", "TSRC").foreach { t =>
+      assert(src.watermarkBounds(spark, t, "UPDATED").isEmpty, t)
+      assert(sparkBounds(t).isEmpty, t)
+    }
+    assert(src.countRange(spark, "NSRC", "UPDATED", 0L, 1000L) == 0L)
+    exec(url, "INSERT INTO NSRC VALUES (1, 100), (2, 250), (3, 400)")
+    val base = 1704067200000000L // 2024-01-01T00:00:00Z µs
+    val ts = Seq(base + 100000000L, base + 250123456L, base + 400000000L)
+    ts.zipWithIndex.foreach { case (us, i) =>
+      exec(url, s"INSERT INTO TSRC VALUES (${i + 1}, ${tsLit(us)})")
+    }
+    val nb = src.watermarkBounds(spark, "NSRC", "UPDATED")
+    assert(nb.contains(JdbcSource.WatermarkBounds(100L, 400L,
+      timestampTyped = false)), s"$nb")
+    assert(nb == sparkBounds("NSRC"))
+    val tb = src.watermarkBounds(spark, "TSRC", "UPDATED")
+    assert(tb.contains(JdbcSource.WatermarkBounds(ts.head, ts.last,
+      timestampTyped = true)), s"$tb")
+    assert(tb == sparkBounds("TSRC"))
+    Seq((100L, 250L, 2L), (101L, 399L, 1L), (100L, 400L, 3L)).foreach {
+      case (lo, hi, want) =>
+        val n = src.countRange(spark, "NSRC", "UPDATED", lo, hi)
+        assert(n == want && n == sparkCount("NSRC", lo.toString, hi.toString),
+          s"[$lo, $hi]: $n")
+    }
+    Seq((ts(0), ts(1), 2L), (ts(1), ts(1), 1L), (ts(1) + 1L, ts(2), 1L))
+      .foreach { case (lo, hi, want) =>
+        val n = src.countRange(spark, "TSRC", "UPDATED", lo, hi,
+          timestampTyped = true)
+        assert(n == want && n == sparkCount("TSRC", tsLit(lo), tsLit(hi)),
+          s"[$lo, $hi]: $n")
+      }
+  }
+
+  test("upsert returns the post-dedup row count, stale replays included") {
+    skipUnlessAvailable()
+    val url = freshDb("applied")
+    exec(url, "CREATE TABLE APPLIED (ID BIGINT NOT NULL PRIMARY KEY, " +
+      s"UPDATED BIGINT NOT NULL, AMOUNT $doubleType, STATUS VARCHAR(32))")
+    import spark.implicits._
+    def upsert(rows: Seq[(Long, Long, Double, String)]): Long =
+      graft.sinks.JdbcUpsertSink.write(
+        rows.toDF("ID", "UPDATED", "AMOUNT", "STATUS"), url,
+        new java.util.Properties(), "APPLIED", Seq("ID"), "UPDATED")
+    // three rows over two keys: one winner per key is applied
+    assert(upsert(Seq((1L, 100L, 1.0, "A"), (1L, 150L, 1.5, "A2"),
+      (2L, 200L, 2.0, "B"))) == 2L)
+    assert(readTable(url, "APPLIED") ==
+      Map(1L -> ((150L, 1.5, "A2")), 2L -> ((200L, 2.0, "B"))))
+    assert(upsert(Nil) == 0L)
+    // the ordering guard blocks a stale replay, and it still counts: the
+    // count is the deduped batch the upsert applied, not rows changed
+    assert(upsert(Seq((1L, 120L, 9.0, "STALE"), (3L, 300L, 3.0, "C"))) == 2L)
+    assert(readTable(url, "APPLIED") == Map(1L -> ((150L, 1.5, "A2")),
+      2L -> ((200L, 2.0, "B")), 3L -> ((300L, 3.0, "C"))))
+    // one write task per shuffle partition, even for a batch this small:
+    // AQE does not coalesce the key shuffle away from parallel writers
+    val normalized = graft.sinks.JdbcUpsertSink.normalize(
+      Seq((1L, 100L, 1.0, "A")).toDF("ID", "UPDATED", "AMOUNT", "STATUS"),
+      Seq("ID"), "UPDATED")
+    assert(normalized.rdd.getNumPartitions ==
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+  }
+
   test("S6 preflight: typed errors for missing table") {
     skipUnlessAvailable()
     val url = freshDb("errors")
@@ -755,6 +843,38 @@ class JdbcSyncSpec extends SparkSpec with JdbcSyncBehaviors {
       SyncPipeline.run(spark, cfg, SyncEndpoint.ParquetDir(dir),
         SyncEndpoint.parse("jdbc:derby:memory:graftabsentdb#DST")))
     assert(e.getMessage.contains("graftabsentdb"))
+  }
+
+  test("Derby→Derby Spark-job budget: cold run, delta poll, idle poll") {
+    val url = freshDb("jobcost")
+    val live = (1L to 2000L).map(i => (i, i, i * 0.5, s"s${i % 7}"))
+    seedSource(url, live)
+    val src = SyncEndpoint.parse(s"$url#SRC")
+    val dst = SyncEndpoint.parse(s"$url#DST")
+    val (cold, coldJobs) = jobsIn(SyncPipeline.run(spark, cfg, src, dst))
+    assert(cold.candidateRows == 2000L && cold.rowsWritten == 2000L, s"$cold")
+    // 100 new keys, and the row at the destination MAX keeps its
+    // watermark but changes payload
+    insertRows(url, "SRC", (2001L to 2100L).map(i => (i, i, i * 0.5, "new")))
+    updateRow(url, 2000L, 2000L, -1.0, "changed")
+    val (delta, deltaJobs) = jobsIn(SyncPipeline.run(spark, cfg, src, dst))
+    assert(delta.startingPoint.contains(2000L) && delta.candidateRows == 101L &&
+      delta.rowsWritten == 101L, s"$delta")
+    val want = (live.map { case (id, u, a, s) => id -> ((u, a, s)) }.toMap +
+      (2000L -> ((2000L, -1.0, "changed")))) ++
+      (2001L to 2100L).map(i => i -> ((i, i * 0.5, "new")))
+    assert(readTable(url, "DST") == want)
+    // the idle poll re-extracts and re-upserts its watermark tie row
+    val (idle, idleJobs) = jobsIn(SyncPipeline.run(spark, cfg, src, dst))
+    assert(idle.candidateRows == 1L && idle.rowsWritten == 1L, s"$idle")
+    assert(readTable(url, "DST") == want)
+    info(s"cold run: $coldJobs jobs; delta poll: $deltaJobs jobs; " +
+      s"idle poll: $idleJobs jobs")
+    // the key shuffle and the write; bounds and range count are plain
+    // statements, and the write counts what it applies
+    assert(deltaJobs <= 2, s"delta poll ran $deltaJobs Spark jobs")
+    assert(idleJobs <= 2, s"idle poll ran $idleJobs Spark jobs")
+    assert(coldJobs <= 2, s"cold run ran $coldJobs Spark jobs")
   }
 
   // pure option-set check has no dialect; lives in the Derby arm only
