@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.functions.sum
+import org.apache.spark.sql.functions.{col, sum}
 
 import graft.sync.AggMaintenance
 
@@ -11,7 +11,11 @@ import graft.sync.AggMaintenance
   * its persisted partial, the partitioned apply its touched buckets and
   * row count in one collect, and the staged write counts its own groups; a
   * scalar pass added back beside those, or a staged directory read back
-  * to count it, shows up here as extra jobs. */
+  * to count it, shows up here as extra jobs. The keyed lanes (flat, with
+  * and without a tombstone column, and bucket-partitioned) and the v3
+  * distinct-count lane are pinned at the counts they ran when the pins
+  * were added, so folding lanes onto shared cores cannot add a job
+  * unnoticed. */
 class AggMaintenanceCostSpec extends SparkSpec {
   import spark.implicits._
 
@@ -59,5 +63,56 @@ class AggMaintenanceCostSpec extends SparkSpec {
       .getLong(0) == 2000L)
     assert(dataJobs <= 8, s"data-bearing slice ran $dataJobs Spark jobs")
     assert(emptyJobs <= 2, s"empty slice ran $emptyJobs Spark jobs")
+  }
+
+  /** One lane's budget: a data-bearing slice into a rollup that already
+    * holds the first half, then an empty slice whose cut still moves. */
+  private def pin(name: String, dataMax: Int, emptyMax: Int)(
+      apply: (String, Long, Long) => AggMaintenance.AggResult): Unit = {
+    val work = tmpDir(s"agg-cost-$name")
+    val dir = work + "/rollup"
+    apply(dir, 0L, 1000L)
+    val (data, dataJobs) = jobsIn(apply(dir, 1000L, 2000L))
+    val (empty, emptyJobs) = jobsIn(apply(dir, 2000L, 3000L))
+    info(s"$name data-bearing slice: $dataJobs jobs; empty slice: " +
+      s"$emptyJobs jobs")
+    assert(data.applied && data.sliceRows == 1000L, s"$data")
+    assert(empty.groupsWritten == 0L && empty.sliceRows == 0L &&
+      empty.applied && empty.watermarkUs == 3000L, s"$empty")
+    assert(dataJobs <= dataMax, s"data-bearing slice ran $dataJobs Spark jobs")
+    assert(emptyJobs <= emptyMax, s"empty slice ran $emptyJobs Spark jobs")
+  }
+
+  /** The keyed lanes' source: 600 keys re-arriving across the two halves,
+    * every 7th row a delete marker (read only by the tombstoned apply). */
+  private def keyedSource(work: String) =
+    source(work).withColumn("k", col("id") % 600L)
+      .withColumn("del", col("id") % 7L === 0L)
+
+  test("applySliceKeyed: a data-bearing slice runs at most 12 Spark jobs; an empty slice at most 4") {
+    val src = keyedSource(tmpDir("agg-cost-keyed-src"))
+    pin("keyed", 12, 4)((dir, lo, hi) => AggMaintenance.applySliceKeyed(
+      spark, dir, src, "ts", Seq("k"), Seq("acct"), "amount", lo, hi))
+  }
+
+  test("applySliceKeyed with a tombstone column: a data-bearing slice runs at most 12 Spark jobs; an empty slice at most 4") {
+    val src = keyedSource(tmpDir("agg-cost-keyed-tomb-src"))
+    pin("keyed-tomb", 12, 4)((dir, lo, hi) => AggMaintenance.applySliceKeyed(
+      spark, dir, src, "ts", Seq("k"), Seq("acct"), "amount", lo, hi,
+      tombstoneCol = Some("del")))
+  }
+
+  test("applySliceKeyedPartitioned: a data-bearing slice runs at most 20 Spark jobs; an empty slice at most 3") {
+    val src = keyedSource(tmpDir("agg-cost-keyed-part-src"))
+    pin("keyed-part", 20, 3)((dir, lo, hi) =>
+      AggMaintenance.applySliceKeyedPartitioned(spark, dir, src, "ts",
+        Seq("k"), Seq("acct"), "amount", lo, hi, nBuckets = 8,
+        nKeyBuckets = 8))
+  }
+
+  test("applySliceDistinct: a data-bearing slice runs at most 7 Spark jobs; an empty slice at most 2") {
+    val src = source(tmpDir("agg-cost-distinct-src"))
+    pin("distinct", 7, 2)((dir, lo, hi) => AggMaintenance.applySliceDistinct(
+      spark, dir, src, "ts", Seq("acct"), Seq("id"), lo, hi))
   }
 }
