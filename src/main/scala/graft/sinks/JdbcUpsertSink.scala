@@ -243,20 +243,21 @@ object JdbcUpsertSink {
         // read one snapshot of the batch
         val batch = normalized.persist(StorageLevel.MEMORY_AND_DISK)
         try {
-          // malformed-flag gate (the keyed IVM lanes' rule): a non-NULL flag
+          val tombFlag = coalesce(col(t).try_cast("boolean"), lit(false))
+          // ONE pass answers rows, malformed flags and delete winners (the
+          // keyed IVM lanes' admission pattern). Malformed: a non-NULL flag
           // whose boolean cast is NULL must refuse typed, never silently
           // apply a delete marker as an upsert
-          val bad = batch.filter(
-            col(t).isNotNull && col(t).try_cast("boolean").isNull)
-            .limit(1).count()
-          if (bad > 0L)
+          val tally = batch.agg(count(lit(1)),
+            count(when(col(t).isNotNull && col(t).try_cast("boolean").isNull,
+              lit(1))),
+            count(when(tombFlag, lit(1)))).first()
+          if (tally.getLong(1) > 0L)
             throw graft.core.GraftError.InvalidConfig(
               s"batch carries row(s) whose tombstone '$t' does not cast to " +
                 "boolean — treating malformed delete markers as upserts " +
                 "would silently mix tombstoned and tombstone-blind " +
                 "semantics; repair the source")
-          val tombFlag = coalesce(col(t).try_cast("boolean"), lit(false))
-          val applied = batch.count()
           upsert(batch.filter(!tombFlag).drop(t), url, props, table, keyCols,
             orderCol, batchSize)
           // delete winners AFTER the upserts: the sets are key-disjoint
@@ -264,9 +265,10 @@ object JdbcUpsertSink {
           // free — but deleting last means a crash between the two phases
           // leaves the stale row VISIBLE rather than resurrected-then-lost,
           // and the restart-marker replay converges either way
-          deleteByKeys(batch.filter(tombFlag), url, props, table, keyCols,
-            batchSize)
-          applied
+          if (tally.getLong(2) > 0L)
+            deleteByKeys(batch.filter(tombFlag), url, props, table, keyCols,
+              batchSize)
+          tally.getLong(0)
         } finally { batch.unpersist(); () }
     }
   }

@@ -1547,4 +1547,135 @@ class AggMaintenanceSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
     assert(got == want)
   }
+
+  test("params stamps: each lane writes its exact stamp text and every refusal names the owning lane") {
+    import graft.core.GraftError.InvalidConfig
+    val src = Seq((10L, 1L, "a", "p", 1.0, 2.0, 7L, false))
+      .toDF("us", "k", "grp", "g2", "x", "y", "u", "del")
+    val g = Seq("grp", "g2")
+    def stamp(dir: String): Option[String] = {
+      val p = new org.apache.hadoop.fs.Path(dir, "_GRAFT_AGG_PARAMS")
+      graft.core.SidecarIO.read(
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+    }
+    val tomb = Some("del")
+    // (lane, exact stamp, cold apply of [0, 100))
+    val lanes: Seq[(String, String, String => Any)] = Seq(
+      ("applySlicePartitioned", "v1 buckets=8 group=grp+g2 value=x order=us",
+        d => AggMaintenance.applySlicePartitioned(
+          spark, d, src, "us", g, "x", 0L, 100L, 8)),
+      ("applySliceV2", "v2 flat group=grp+g2 values=x+y order=us",
+        d => AggMaintenance.applySliceV2(
+          spark, d, src, "us", g, Seq("x", "y"), 0L, 100L)),
+      ("applySlicePartitionedV2",
+        "v2 buckets=8 group=grp+g2 values=x+y order=us",
+        d => AggMaintenance.applySlicePartitionedV2(
+          spark, d, src, "us", g, Seq("x", "y"), 0L, 100L, 8)),
+      ("applySliceDistinct", "v3 flat group=grp+g2 distinct=u order=us",
+        d => AggMaintenance.applySliceDistinct(
+          spark, d, src, "us", g, Seq("u"), 0L, 100L)),
+      ("applySlicePartitionedDistinct",
+        "v3 buckets=8 group=grp+g2 distinct=u order=us",
+        d => AggMaintenance.applySlicePartitionedDistinct(
+          spark, d, src, "us", g, Seq("u"), 0L, 100L, 8)),
+      ("applySliceKeyed", "keyed flat key=k group=grp+g2 value=x order=us",
+        d => AggMaintenance.applySliceKeyed(
+          spark, d, src, "us", Seq("k"), g, "x", 0L, 100L)),
+      ("applySliceKeyed",
+        "keyed flat key=k group=grp+g2 value=x order=us tomb=del",
+        d => AggMaintenance.applySliceKeyed(
+          spark, d, src, "us", Seq("k"), g, "x", 0L, 100L, tomb)),
+      ("applySliceKeyedPartitioned",
+        "keyed buckets=8 kbuckets=16 key=k group=grp+g2 value=x order=us",
+        d => AggMaintenance.applySliceKeyedPartitioned(
+          spark, d, src, "us", Seq("k"), g, "x", 0L, 100L, 8, 16)),
+      ("applySliceKeyedPartitioned",
+        "keyed buckets=8 kbuckets=16 key=k group=grp+g2 value=x order=us " +
+          "tomb=del",
+        d => AggMaintenance.applySliceKeyedPartitioned(
+          spark, d, src, "us", Seq("k"), g, "x", 0L, 100L, 8, 16, tomb)),
+      ("applySliceKeyedPartitionedV2",
+        "keyedv2 buckets=8 kbuckets=16 key=k group=grp+g2 values=x+y order=us",
+        d => AggMaintenance.applySliceKeyedPartitionedV2(
+          spark, d, src, "us", Seq("k"), g, Seq("x", "y"), 0L, 100L, 8, 16)),
+      ("applySliceKeyedPartitionedV2",
+        "keyedv2 buckets=8 kbuckets=16 key=k group=grp+g2 values=x+y " +
+          "order=us tomb=del",
+        d => AggMaintenance.applySliceKeyedPartitionedV2(
+          spark, d, src, "us", Seq("k"), g, Seq("x", "y"), 0L, 100L, 8, 16,
+          tomb)))
+    // a whole-dir, a flat stamped and a partitioned probe at [100, 200)
+    val probes: Seq[(String, String => Any)] = Seq(
+      ("applySlice", d => AggMaintenance.applySlice(
+        spark, d, src, "us", g, "x", 100L, 200L)),
+      ("applySliceKeyed", d => AggMaintenance.applySliceKeyed(
+        spark, d, src, "us", Seq("k"), g, "x", 100L, 200L)),
+      ("applySliceKeyedPartitionedV2",
+        d => AggMaintenance.applySliceKeyedPartitionedV2(
+          spark, d, src, "us", Seq("k"), g, Seq("x", "y"), 100L, 200L, 8, 16)))
+    lanes.foreach { case (lane, want, apply) =>
+      val dir = tmpDir("agg-stamp")
+      apply(dir)
+      assert(stamp(dir).contains(want), s"$lane wrote ${stamp(dir)}")
+      probes.filter(_._1 != lane).foreach { case (probe, run) =>
+        val e = intercept[InvalidConfig](run(dir))
+        assert(e.getMessage.contains(s"stamped '$want'") &&
+          e.getMessage.contains(s"use $lane, or rebuild"),
+          s"$probe on $lane: ${e.getMessage}")
+      }
+    }
+    // v1 whole-dir rollups carry no stamp; the stamped lanes say so
+    val v1 = tmpDir("agg-stamp-v1")
+    AggMaintenance.applySlice(spark, v1, src, "us", g, "x", 0L, 100L)
+    assert(stamp(v1).isEmpty)
+    val ep = intercept[InvalidConfig](probes(2)._2(v1))
+    assert(ep.getMessage.contains("use applySlice, or rebuild partitioned"))
+    val ef = intercept[InvalidConfig](probes(1)._2(v1))
+    assert(ef.getMessage.contains("has no stamp"))
+    // rebucket rewrites buckets= and kbuckets= in place, keeping the rest
+    val kp = tmpDir("agg-stamp-rebucket")
+    lanes(8)._3(kp)
+    AggMaintenance.rebucket(spark, kp, 4, newKeyBuckets = 32)
+    assert(stamp(kp).contains("keyed buckets=4 kbuckets=32 key=k " +
+      "group=grp+g2 value=x order=us tomb=del"))
+    val v2p = tmpDir("agg-stamp-rebucket-v2")
+    lanes(2)._3(v2p)
+    AggMaintenance.rebucket(spark, v2p, 4)
+    assert(stamp(v2p).contains("v2 buckets=4 group=grp+g2 values=x+y order=us"))
+  }
+
+  test("whole-dir lanes: a crash before an empty cold start's watermark commit leaves a rollup the re-run completes") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.graftmock.impl", classOf[graft.MockStoreFileSystem].getName)
+    // nothing in [0, 100): every lane's opening slice is empty
+    val src = Seq((500L, 1L, "a", 1.0, 2.0, 7L))
+      .toDF("us", "k", "grp", "x", "y", "u")
+    val lanes: Seq[(String, Option[String],
+        String => AggMaintenance.AggResult)] = Seq(
+      ("v1", None, d => AggMaintenance.applySlice(
+        spark, d, src, "us", Seq("grp"), "x", 0L, 100L)),
+      ("v2", Some("v2 flat group=grp values=x+y order=us"),
+        d => AggMaintenance.applySliceV2(
+          spark, d, src, "us", Seq("grp"), Seq("x", "y"), 0L, 100L)),
+      ("v3", Some("v3 flat group=grp distinct=u order=us"),
+        d => AggMaintenance.applySliceDistinct(
+          spark, d, src, "us", Seq("grp"), Seq("u"), 0L, 100L)),
+      ("keyed", Some("keyed flat key=k group=grp value=x order=us"),
+        d => AggMaintenance.applySliceKeyed(
+          spark, d, src, "us", Seq("k"), Seq("grp"), "x", 0L, 100L)))
+    lanes.foreach { case (lane, want, apply) =>
+      val dir = s"graftmock:${tmpDir(s"agg-cold-crash-$lane")}/rollup"
+      MockStoreFileSystem.failOnCreate = Some("_GRAFT_AGG_WM")
+      try intercept[java.io.IOException](apply(dir))
+      finally MockStoreFileSystem.failOnCreate = None
+      val r = apply(dir)
+      assert(r.applied && r.sliceRows == 0L && r.watermarkUs == 100L, lane)
+      assert(AggMaintenance.watermark(spark, dir).contains(100L), lane)
+      val got = AggMaintenance.read(spark, dir)
+      assert(got.count() == 0L && got.columns.contains("cnt"), lane)
+      val p = new org.apache.hadoop.fs.Path(dir, "_GRAFT_AGG_PARAMS")
+      assert(graft.core.SidecarIO.read(p.getFileSystem(conf), p) == want,
+        lane)
+    }
+  }
 }

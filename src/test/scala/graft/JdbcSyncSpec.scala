@@ -877,6 +877,40 @@ class JdbcSyncSpec extends SparkSpec with JdbcSyncBehaviors {
     assert(coldJobs <= 2, s"cold run ran $coldJobs Spark jobs")
   }
 
+  test("tombstoned parquet→Derby Spark-job budget: cold run ≤ 11, delete poll ≤ 15, idle poll ≤ 11") {
+    val url = freshDb("tombcost")
+    val dir = tmpDir("jdbc-tomb-cost") + "/src"
+    val live = (1L to 2000L).map(i =>
+      (i, i, java.lang.Double.valueOf(i * 0.5), s"s${i % 7}", false))
+    writeTombSrc(dir, live)
+    val src = SyncEndpoint.ParquetDir(dir)
+    val dst = SyncEndpoint.parse(s"$url#TOMBCOST")
+    val (cold, coldJobs) = jobsIn(SyncPipeline.run(spark, cfgT, src, dst))
+    assert(cold.rowsWritten == 2000L, s"$cold")
+    // 100 payload-free deletes of keys 1..100, then one new key
+    val poll = live ++ (1L to 100L).map(i =>
+      (i, 2000L + i, null.asInstanceOf[java.lang.Double], null, true)) :+
+      ((2101L, 2101L, java.lang.Double.valueOf(1.0), "new", false))
+    writeTombSrc(dir, poll)
+    val (delete, deleteJobs) = jobsIn(SyncPipeline.run(spark, cfgT, src, dst))
+    // the deletes and the new key, plus the re-extracted tie row
+    assert(delete.rowsWritten == 102L, s"$delete")
+    val want = (101L to 2000L).toSet + 2101L
+    def keys = readTable(url, "TOMBCOST").keySet
+    assert(keys == want, s"${keys.size} keys")
+    // the idle poll re-extracts its watermark tie row and deletes nothing
+    val (idle, idleJobs) = jobsIn(SyncPipeline.run(spark, cfgT, src, dst))
+    assert(idle.candidateRows == 1L && idle.rowsWritten == 1L, s"$idle")
+    assert(keys == want, s"${keys.size} keys")
+    info(s"cold run: $coldJobs jobs; delete poll: $deleteJobs jobs; " +
+      s"idle poll: $idleJobs jobs")
+    // one tally pass over the persisted batch (rows, malformed flags,
+    // delete winners), and no delete pass when nothing is deleted
+    assert(idleJobs <= 11, s"idle poll ran $idleJobs Spark jobs")
+    assert(coldJobs <= 11, s"cold run ran $coldJobs Spark jobs")
+    assert(deleteJobs <= 15, s"delete poll ran $deleteJobs Spark jobs")
+  }
+
   // pure option-set check has no dialect; lives in the Derby arm only
   test("S1 partitioned read options carry the slice plan") {
     val opts = JdbcSource.rangeReadOptions("SRC", "UPDATED", 0L, 1000L,
