@@ -24,25 +24,28 @@ import graft.core.{SidecarIO, Watermark}
   * by the stamp `_GRAFT_AGG_PARAMS` carries:
   *
   * {{{
-  * apply lane                    stamp prefix            layout        metrics per group         readers
-  * applySlice                    (none)                  whole dir     cnt, sum/min/max_val      read
-  * applySliceV2                  v2 flat                 whole dir     cnt; per v: cntv_v,       read, readDerived
-  *                                                                     sum_v, sumsq_v, min/max_v
-  * applySliceDistinct            v3 flat                 whole dir     cnt; per v: hll_v         read, readDistinct
-  * applySliceKeyed               keyed flat              whole dir     cnt (live keys), sum_val  read, readKeyed*
-  *                                                       + key state
-  * applySlicePartitioned         v1 buckets=             __bucket=K/   as applySlice             read
-  * applySlicePartitionedV2       v2 buckets=             __bucket=K/   as applySliceV2           read, readDerived
-  * applySlicePartitionedDistinct v3 buckets=             __bucket=K/   as applySliceDistinct     read, readDistinct
-  * applySliceKeyedPartitioned    keyed buckets= kbuckets=   __bucket=K/ + cnt, sum_val           read, readKeyed*
-  * applySliceKeyedPartitionedV2  keyedv2 buckets= kbuckets= __kbucket=J/ cnt; per v: cntv_v,     read, readDerived,
-  *                                                       key state     sum_v, sumsq_v            readKeyed*
+  * apply lane                    stamp prefix      layout         metrics per group     readers
+  * applySlice                    (none)            whole dir      cnt, sum_val,         read
+  *                                                                min_val, max_val
+  * applySliceV2                  v2 flat           whole dir      cnt; per v: cntv_v,   read, readDerived
+  *                                                                sum_v, sumsq_v,
+  *                                                                min_v, max_v
+  * applySliceDistinct            v3 flat           whole dir      cnt; per v: hll_v     read, readDistinct
+  * applySliceKeyed               keyed flat        whole dir +    cnt (live keys),      read, readKeyed*
+  *                                                 key state      sum_val
+  * applySlicePartitioned         v1 buckets=       __bucket=K/    as applySlice         read
+  * applySlicePartitionedV2       v2 buckets=       __bucket=K/    as applySliceV2       read, readDerived
+  * applySlicePartitionedDistinct v3 buckets=       __bucket=K/    as applySliceDistinct read, readDistinct
+  * applySliceKeyedPartitioned    keyed buckets=    __bucket=K/ +  as applySliceKeyed    read, readKeyed*
+  *                               kbuckets=         __kbucket=J/
+  * applySliceKeyedPartitionedV2  keyedv2 buckets=  __bucket=K/ +  cnt; per v: cntv_v,   read, readDerived,
+  *                               kbuckets=         __kbucket=J/   sum_v, sumsq_v        readKeyed*
   * }}}
   *
-  * Every stamp continues `group=… value(s)=…|distinct=… order=…`, keyed
-  * stamps carry `key=…` and an optional `tomb=…`; a call whose stamp
-  * differs from the stored one refuses typed, naming the lane that owns
-  * the table. Column names may not carry a stamp delimiter (space, '+',
+  * After the prefix a stamp carries `key=…` (keyed lanes), `group=…`,
+  * `value=…` / `values=…` / `distinct=…`, `order=…` and, for a tombstoned
+  * keyed lane, `tomb=…`. A call whose stamp differs from the stored one
+  * refuses typed, naming the lane that owns the table. Column names may not carry a stamp delimiter (space, '+',
   * '='): two parameterizations would otherwise stamp identically.
   *
   * APPEND-ONLY lanes (v1/v2/v3) fold slices as pure EVENT streams: a
