@@ -2,8 +2,8 @@ package graft.core
 
 import org.apache.spark.sql.DataFrame
 
-/** Explicit release of `localCheckpoint` blocks — the PageRank.release
-  * pattern shared with the query layer. A localCheckpoint's blocks are
+/** Explicit release of `localCheckpoint` blocks, for PageRank's
+  * iteration cuts and the query layer. A localCheckpoint's blocks are
   * otherwise freed only when JVM GC collects the dataset reference, so
   * frames checkpointed inside queries that re-run in one session (the
   * bench's min-of-3 loop) accumulate block-manager pressure and make run
@@ -13,8 +13,8 @@ import org.apache.spark.sql.DataFrame
   * from, so a released frame is GONE. */
 object Checkpoints {
 
-  /** Counters in the PageRank.releasesFired/Missed mold: "did the
-    * unpersist actually fire in THIS session" stays a checkable fact. A
+  /** "Did the unpersist actually fire in THIS session" stays a checkable
+    * fact (Bench prints both counters after the run). A
     * miss means the frame's plan was not the expected checkpoint
     * LogicalRDD (e.g. a Spark upgrade changed the shape) and the free
     * silently regressed to GC timing. */

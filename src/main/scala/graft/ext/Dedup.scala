@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.PersistedIndex
+
 /** Deduplication operators for training-data pipelines (SURVEY §2.9 E1 +
   * driver mandate): exact, fingerprint, MinHash-LSH, n-gram Jaccard.
   *
@@ -876,40 +878,18 @@ object Dedup {
   // for the BATCH, broadcasts its band rows onto the streamed base band
   // table, and exact-verifies the survivors against caller-supplied text.
   // The text-dedup analog of the ANN family's build/append/probe split
-  // (e2s/e2v), with the same params-guard convention: k/bands/shingleN/
-  // hashing are FROZEN in `_GRAFT_MH_PARAMS` at build time and every
-  // append/probe re-derives them from the stamp — a caller cannot diverge.
+  // (e2s/e2v): k/bands/shingleN/hashing are frozen in the MinHash stamp
+  // (PersistedIndex) and every append/probe re-derives them from it — a
+  // caller cannot diverge.
 
   final case class MinhashIndexParams(k: Int, bands: Int, shingleN: Int,
                                       native: Boolean, maxBandSize: Int)
 
-  private val MhParamsFile = "_GRAFT_MH_PARAMS"
-
-  private def mhParamsString(p: MinhashIndexParams): String =
-    s"v1 k=${p.k} bands=${p.bands} shingleN=${p.shingleN} " +
-      s"native=${p.native} maxBandSize=${p.maxBandSize}"
-
-  private def mhReadParams(spark: org.apache.spark.sql.SparkSession,
-                           dir: String): MinhashIndexParams = {
-    val s = graft.ops.RangeLayout.readSidecar(spark, dir, MhParamsFile)
-      .getOrElse(throw graft.core.GraftError.InvalidConfig(
-        s"no committed MinHash index at $dir (missing $MhParamsFile)"))
-      .trim
-    // malformed content is a TYPED refusal, not an array-index crash —
-    // the stamp is caller-visible state (writeSidecar's atomic rename
-    // makes truncation unreachable going forward, but a stamp is still
-    // just a file someone can corrupt)
-    try {
-      val kv = s.split(' ').drop(1).map(_.split('='))
-        .map(a => a(0) -> a(1)).toMap
-      MinhashIndexParams(kv("k").toInt, kv("bands").toInt,
-        kv("shingleN").toInt, kv("native").toBoolean, kv("maxBandSize").toInt)
-    } catch {
-      case scala.util.control.NonFatal(_) =>
-        throw graft.core.GraftError.InvalidConfig(
-          s"unparseable $MhParamsFile at $dir: '$s' — not a committed " +
-            "MinHash index (delete the directory and rebuild)")
-    }
+  private def mhParams(spark: org.apache.spark.sql.SparkSession,
+                       dir: String): MinhashIndexParams = {
+    val s = PersistedIndex.read(spark, dir, PersistedIndex.MinHash)
+    MinhashIndexParams(s.int("k"), s.int("bands"), s.int("shingleN"),
+      s.bool("native"), s.int("maxBandSize"))
   }
 
   private def mhSigs(docs: DataFrame, idCol: String, textCol: String,
@@ -927,31 +907,20 @@ object Dedup {
                         maxBandSize: Int = DefaultMaxBandSize): BandCapStats = {
     require(k % bands == 0, s"bands ($bands) must divide k ($k)")
     val spark = docs.sparkSession
-    // REBUILD discipline: drop any existing stamp FIRST, so a rebuild
-    // that crashes between the two data writes reads as ABSENT (the
-    // stamp-written-last invariant would otherwise be false exactly for
-    // rebuilds — new sigs under the old stamp probe silently wrong).
-    // Through SidecarIO.delete: on fallback schemes the stamp may live
-    // (only) in its staged `.new` twin, which a raw delete would leave
-    // behind still READING as committed.
-    val stampPath = new org.apache.hadoop.fs.Path(dir, MhParamsFile)
-    val fs = stampPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.core.SidecarIO.delete(fs, stampPath)
     val p = MinhashIndexParams(k, bands, shingleN, nativeShingles, maxBandSize)
-    if (nativeShingles) graft.functions.GraftFunctions.register(spark)
-    val sigs = mhSigs(docs, idCol, textCol, p).localCheckpoint()
-    val (banded, stats) = capOversizedBands(
-      bandExplode(sigs, "__id", k, bands), "band", maxBandSize,
-      "buildMinhashIndex")
-    sigs.write.mode("overwrite").parquet(s"$dir/sigs")
-    banded.select(col("__id"), col("band.band_id").as("band_id"),
-        col("band.band_val").as("band_val"))
-      .write.mode("overwrite").parquet(s"$dir/bands")
-    // stamp LAST, atomically (writeSidecar renames into place): its
-    // presence IS the commit marker
-    graft.ops.RangeLayout.writeSidecar(spark, dir, MhParamsFile,
-      mhParamsString(p))
-    stats
+    PersistedIndex.commit(spark, dir,
+        PersistedIndex.minhash(k, bands, shingleN, nativeShingles, maxBandSize)) {
+      if (nativeShingles) graft.functions.GraftFunctions.register(spark)
+      val sigs = mhSigs(docs, idCol, textCol, p).localCheckpoint()
+      val (banded, stats) = capOversizedBands(
+        bandExplode(sigs, "__id", k, bands), "band", maxBandSize,
+        "buildMinhashIndex")
+      sigs.write.mode("overwrite").parquet(s"$dir/sigs")
+      banded.select(col("__id"), col("band.band_id").as("band_id"),
+          col("band.band_val").as("band_val"))
+        .write.mode("overwrite").parquet(s"$dir/bands")
+      stats
+    }
   }
 
   /** Append a new batch to a committed index under its FROZEN params.
@@ -970,7 +939,7 @@ object Dedup {
   def minhashIndexAppend(spark: org.apache.spark.sql.SparkSession,
                          dir: String, newDocs: DataFrame, idCol: String,
                          textCol: String): BandCapStats = {
-    val p = mhReadParams(spark, dir)
+    val p = mhParams(spark, dir)
     if (p.native) graft.functions.GraftFunctions.register(spark)
     val storedIdType = spark.read.parquet(s"$dir/sigs").schema("__id").dataType
     val newIdType = newDocs.schema(idCol).dataType
@@ -1022,7 +991,7 @@ object Dedup {
                         estSlack: Double = 0.2): (DataFrame, BandCapStats) = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    val p = mhReadParams(spark, dir)
+    val p = mhParams(spark, dir)
     if (p.native) graft.functions.GraftFunctions.register(spark)
     val qSigs = mhSigs(queries, queryIdCol, textCol, p)
       .withColumnRenamed("__id", "q_id").localCheckpoint()

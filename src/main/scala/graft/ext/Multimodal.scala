@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.PersistedIndex
+
 /** Multimodal-column plumbing (SURVEY §2.9 E3 + driver mandate): media as
   * opaque `binary` columns with typed metadata, processed in batches via
   * `mapPartitions`.
@@ -638,7 +640,7 @@ object Multimodal {
                       batchPartitions: Option[Int] = None): Unit =
     BandedHashIndex.build(
       idHashes(imageDHashes(media, batchPartitions), "dhash"), dir, bands,
-      BandedHashIndex.DhParamsFile)
+      PersistedIndex.DHash)
 
   /** Append a batch under the FROZEN band decomposition. Crash contract
     * (the MinHash append rule): bands append before hashes; a crash
@@ -649,7 +651,7 @@ object Multimodal {
                        batchPartitions: Option[Int] = None): Unit =
     BandedHashIndex.append(spark, dir,
       idHashes(imageDHashes(newMedia, batchPartitions), "dhash"),
-      BandedHashIndex.DhParamsFile)
+      PersistedIndex.DHash)
 
   /** Probe a batch of images against the index: batch hashes/bands
     * computed under the frozen decomposition, batch band rows BROADCAST
@@ -665,7 +667,7 @@ object Multimodal {
                       batchPartitions: Option[Int] = None): DataFrame =
     BandedHashIndex.probe(spark, dir,
       idHashes(imageDHashes(queries, batchPartitions), "dhash"), maxHamming,
-      BandedHashIndex.DhParamsFile)
+      PersistedIndex.DHash)
 
   /** The AUDIO persisted index — [[audioEnvelopeHash64]] hashes through
     * the SAME banded core as the image index (one artifact format, two
@@ -679,14 +681,14 @@ object Multimodal {
                           batchPartitions: Option[Int] = None): Unit =
     BandedHashIndex.build(
       idHashes(audioEnvelopeHashes(media, batchPartitions), "ahash"), dir,
-      bands, BandedHashIndex.AhParamsFile)
+      bands, PersistedIndex.AHash)
 
   /** [[dhashIndexAppend]]'s audio twin (same crash contract). */
   def audioIndexAppend(spark: SparkSession, dir: String, newMedia: DataFrame,
                        batchPartitions: Option[Int] = None): Unit =
     BandedHashIndex.append(spark, dir,
       idHashes(audioEnvelopeHashes(newMedia, batchPartitions), "ahash"),
-      BandedHashIndex.AhParamsFile)
+      PersistedIndex.AHash)
 
   /** [[dhashIndexProbe]]'s audio twin (same pigeonhole-exact shape).
     * Returns (base_id, q_id, hamming). */
@@ -695,7 +697,7 @@ object Multimodal {
                       batchPartitions: Option[Int] = None): DataFrame =
     BandedHashIndex.probe(spark, dir,
       idHashes(audioEnvelopeHashes(queries, batchPartitions), "ahash"),
-      maxHamming, BandedHashIndex.AhParamsFile)
+      maxHamming, PersistedIndex.AHash)
 
   private def idHashes(hashed: DataFrame, hashCol: String): DataFrame =
     hashed.filter(col(hashCol).isNotNull)
@@ -910,33 +912,6 @@ object Multimodal {
   * pigeonhole-exact for maxHamming < bands. */
 private[graft] object BandedHashIndex {
 
-  val DhParamsFile = "_GRAFT_DHASH_PARAMS"
-  val AhParamsFile = "_GRAFT_AHASH_PARAMS"
-
-  private def paramsString(bands: Int) = s"v2 bands=$bands"
-
-  private[graft] def readBands(spark: SparkSession, dir: String,
-                               paramsFile: String): Int = {
-    val s = graft.ops.RangeLayout.readSidecar(spark, dir, paramsFile)
-      .getOrElse(throw graft.core.GraftError.InvalidConfig(
-        s"no committed index at $dir (missing $paramsFile)"))
-    if (s.startsWith("v1 "))
-      throw graft.core.GraftError.InvalidConfig(
-        s"index at $dir predates the v2 layout (stamp '$s') — delete the " +
-          "directory and rebuild")
-    if (!s.startsWith("v2 "))
-      throw graft.core.GraftError.InvalidConfig(
-        s"unparseable $paramsFile at $dir: '$s' — not a committed " +
-          "index (delete the directory and rebuild)")
-    try s.split(' ')(1).split('=')(1).toInt
-    catch {
-      case scala.util.control.NonFatal(_) =>
-        throw graft.core.GraftError.InvalidConfig(
-          s"unparseable $paramsFile at $dir: '$s' — not a committed " +
-            "index (delete the directory and rebuild)")
-    }
-  }
-
   private def bandRows(hashes: DataFrame, bands: Int): DataFrame = {
     val bits = 64 / bands
     val mask = if (bits == 64) -1L else (1L << bits) - 1
@@ -950,20 +925,15 @@ private[graft] object BandedHashIndex {
 
   /** Build at `dir` from NULL-free `(__id, __hash)` rows; stamp last. */
   def build(hashes0: DataFrame, dir: String, bands: Int,
-            paramsFile: String): Unit = {
+            family: PersistedIndex.Family): Unit = {
     require(64 % bands == 0 && bands >= 2,
       s"bands ($bands) must divide 64 and be >= 2")
-    val spark = hashes0.sparkSession
-    // rebuild discipline: stamp dropped FIRST (through SidecarIO.delete —
-    // the staged-twin rule), written last
-    val stampPath = new org.apache.hadoop.fs.Path(dir, paramsFile)
-    val fs = stampPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.core.SidecarIO.delete(fs, stampPath)
-    val hashes = hashes0.localCheckpoint()
-    hashes.write.mode("overwrite").parquet(s"$dir/hashes")
-    bandRows(hashes, bands).write.mode("overwrite").parquet(s"$dir/bands")
-    graft.ops.RangeLayout.writeSidecar(spark, dir, paramsFile,
-      paramsString(bands))
+    PersistedIndex.commit(hashes0.sparkSession, dir,
+        PersistedIndex.bands(family, bands)) {
+      val hashes = hashes0.localCheckpoint()
+      hashes.write.mode("overwrite").parquet(s"$dir/hashes")
+      bandRows(hashes, bands).write.mode("overwrite").parquet(s"$dir/bands")
+    }
   }
 
   /** Append under the FROZEN decomposition. Crash contract (the MinHash
@@ -972,8 +942,8 @@ private[graft] object BandedHashIndex {
     * join — "batch not yet searchable", never wrong pairs; the retry's
     * duplicates dedupe in the probe's distinct step. */
   def append(spark: SparkSession, dir: String, hashes0: DataFrame,
-             paramsFile: String): Unit = {
-    val bands = readBands(spark, dir, paramsFile)
+             family: PersistedIndex.Family): Unit = {
+    val bands = PersistedIndex.read(spark, dir, family).int("bands")
     val hashes = hashes0.localCheckpoint()
     bandRows(hashes, bands).write.mode("append").parquet(s"$dir/bands")
     hashes.write.mode("append").parquet(s"$dir/hashes")
@@ -981,8 +951,8 @@ private[graft] object BandedHashIndex {
 
   /** Probe with `(__id, __hash)` query rows → (base_id, q_id, hamming). */
   def probe(spark: SparkSession, dir: String, qHashes0: DataFrame,
-            maxHamming: Int, paramsFile: String): DataFrame = {
-    val bands = readBands(spark, dir, paramsFile)
+            maxHamming: Int, family: PersistedIndex.Family): DataFrame = {
+    val bands = PersistedIndex.read(spark, dir, family).int("bands")
     // typed, and checked against the FROZEN band count (the stamp, not
     // whatever the caller believes) — this is the authoritative probe
     // validation the CLI defers to (r16 advice)

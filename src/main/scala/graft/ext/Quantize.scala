@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.PersistedIndex
+
 /** Per-vector int8 scalar quantization for embedding columns — the 4×
   * memory/IO compression that makes billion-vector ANN shards fit executor
   * memory (codes ride the shuffle; float vectors stay in storage for the
@@ -155,15 +157,9 @@ object Quantize {
       }: _*))
     }.reduce(_ + _)
 
-  /** Build parameters persisted beside the codes/codebooks (the
-    * `_GRAFT_LSH_PARAMS` convention from [[graft.ext.Similarity]]): a
-    * probe whose pipeline assumes a DIFFERENT m/k/seed than the index was
-    * built with is a configuration drift that should fail loud at probe
-    * time, not surface as quietly degraded neighbors. */
-  val PqParamsFile = "_GRAFT_PQ_PARAMS"
-
-  private def pqParamsString(m: Int, k: Int, seed: Long): String =
-    s"m=$m,k=$k,seed=$seed"
+  /** Stamp file of [[buildPqIndex]]: the (m, k, seed) that probes and
+    * appends must match. */
+  val PqParamsFile: String = PersistedIndex.Pq.file
 
   def buildPqIndex(embeddings: DataFrame, idCol: String, vecCol: String,
                    indexDir: String, m: Int = 16, k: Int = 16,
@@ -176,35 +172,40 @@ object Quantize {
     require(!embeddings.isEmpty,
       s"buildPqIndex: embeddings input is empty; refusing to write $indexDir")
     val model = fitPq(embeddings, vecCol, m, k, seed)
-    embeddings.select(col(idCol),
-        encodePq(col(vecCol), model).as("__codes"), col(vecCol))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(indexDir)
     val spark = embeddings.sparkSession
     import spark.implicits._
-    model.codebooks.zipWithIndex.toSeq
-      .flatMap { case (book, s) =>
-        book.zipWithIndex.map { case (cw, j) => (s, j, cw.toSeq) }
-      }
-      .toDF("sub", "code", "centroid")
-      .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(indexDir + "/_codebooks")
-    // drift baseline FIRST, params LAST — the stampExistingPqIndex commit
-    // order: the params stamp is the commit marker probes trust, and a
-    // crash during the (full-corpus) baseline aggregate between an
-    // inverted pair of writes would leave params-without-stats — an index
-    // pqProbe accepts, pqIndexAppend refuses, and stampExistingPqIndex
-    // cannot repair (its own "bricked" state)
-    val base = embeddings
-      .agg(avg(pqReconError(col(vecCol), model)), count(lit(1))).first()
-    graft.ops.RangeLayout.writeSidecar(spark, indexDir, PqStatsFile,
-      s"mean_err=${base.getDouble(0)},n=${base.getLong(1)}")
-    graft.ops.RangeLayout.writeSidecar(spark, indexDir, PqParamsFile,
-      pqParamsString(m, k, seed))
+    // the drift baseline is data: written inside the commit, before the
+    // params stamp — params-without-stats would be an index pqProbe
+    // accepts, pqIndexAppend refuses and stampExistingPqIndex cannot repair
+    PersistedIndex.commit(spark, indexDir, PersistedIndex.pq(m, k, seed)) {
+      embeddings.select(col(idCol),
+          encodePq(col(vecCol), model).as("__codes"), col(vecCol))
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(indexDir)
+      model.codebooks.zipWithIndex.toSeq
+        .flatMap { case (book, s) =>
+          book.zipWithIndex.map { case (cw, j) => (s, j, cw.toSeq) }
+        }
+        .toDF("sub", "code", "centroid")
+        .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(indexDir + "/_codebooks")
+      writeDriftBaseline(embeddings, vecCol, model, indexDir)
+    }
     model
   }
 
   /** Drift-baseline sidecar written by [[buildPqIndex]]. */
-  val PqStatsFile = "_GRAFT_PQ_STATS"
+  val PqStatsFile: String = PersistedIndex.PqStats.file
+
+  /** Mean reconstruction error of `vectors` under `model`, stored as the
+    * baseline that [[pqIndexAppend]] compares appended batches against. */
+  private def writeDriftBaseline(vectors: DataFrame, vecCol: String,
+                                 model: PqModel, indexDir: String): Unit = {
+    val base = vectors
+      .agg(avg(pqReconError(col(vecCol), model)), count(lit(1))).first()
+    require(!base.isNullAt(0), s"$indexDir is empty — nothing to stamp")
+    PersistedIndex.write(vectors.sparkSession, indexDir,
+      PersistedIndex.pqStats(base.getDouble(0), base.getLong(1)))
+  }
 
   /** Ledger returned by [[pqIndexAppend]]: how many rows were appended
     * and how their reconstruction error compares to the build baseline. */
@@ -220,34 +221,21 @@ object Quantize {
     * new vectors with the FROZEN persisted codebooks — never a refit, so
     * appended codes are exactly what encoding them at build time would
     * have produced — and append (id, codes, float vector) rows to the
-    * same storage. The params guard validates the caller's expected
-    * (m, k, seed) against the persisted `_GRAFT_PQ_PARAMS` record first
-    * (the LSH-append convention: encoding against foreign codebooks files
-    * vectors the ADC table never scores correctly — silent recall loss,
-    * not an error), and an index without the `_GRAFT_PQ_STATS` drift
-    * baseline refuses: appending without a baseline is how shortlist
-    * recall decays silently.
+    * same storage. The caller's (m, k, seed) must match the stamp
+    * (encoding against foreign codebooks files vectors the ADC table
+    * never scores correctly), and an index without the [[PqStatsFile]]
+    * drift baseline refuses: appending without a baseline is how
+    * shortlist recall decays silently.
     * @return [[PqAppendStats]] — appended count, batch vs baseline mean
     *         reconstruction error */
   def pqIndexAppend(spark: org.apache.spark.sql.SparkSession,
                     indexDir: String, newVectors: DataFrame, idCol: String,
                     vecCol: String, m: Int = 16, k: Int = 16,
                     seed: Long = 42L): PqAppendStats = {
-    val expected = pqParamsString(m, k, seed)
-    val actual = graft.ops.RangeLayout.readSidecar(spark, indexDir,
-      PqParamsFile)
-    require(actual.contains(expected),
-      s"$indexDir was built with [${actual.getOrElse("no " + PqParamsFile)}]" +
-        s" but this append expects [$expected]; encoding against foreign " +
-        "codebooks silently corrupts probe recall — rebuild or fix config")
-    val stats = graft.ops.RangeLayout.readSidecar(spark, indexDir, PqStatsFile)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no $PqStatsFile under $indexDir — the index predates the drift " +
-          "baseline; rebuild before appending"))
-    val baseline = stats.split(",").map(_.split("=", 2))
-      .collectFirst { case Array("mean_err", v) => v.toDouble }
-      .getOrElse(throw new IllegalArgumentException(
-        s"unparseable $PqStatsFile under $indexDir: $stats"))
+    PersistedIndex.check(spark, indexDir, "append",
+      PersistedIndex.pq(m, k, seed))
+    val baseline = PersistedIndex.read(spark, indexDir, PersistedIndex.PqStats)
+      .double("mean_err")
     val model = loadPqModel(spark, indexDir)
     require(model.m == m && model.codebooks.head.length == k,
       s"$indexDir codebooks disagree with its own $PqParamsFile — rebuild")
@@ -285,9 +273,7 @@ object Quantize {
   def stampExistingPqIndex(spark: org.apache.spark.sql.SparkSession,
                            indexDir: String, vecCol: String, m: Int = 16,
                            k: Int = 16, seed: Long = 42L): Unit = {
-    require(graft.ops.RangeLayout.readSidecar(spark, indexDir,
-        PqParamsFile).isEmpty,
-      s"$indexDir already has a $PqParamsFile sidecar; refusing to re-stamp")
+    PersistedIndex.requireUnstamped(spark, indexDir, PersistedIndex.Pq)
     val model = loadPqModel(spark, indexDir)
     require(model.m == m && model.codebooks.head.length == k,
       s"$indexDir codebooks are (m=${model.m}, " +
@@ -297,18 +283,10 @@ object Quantize {
     require(idx.columns.contains(vecCol),
       s"$indexDir stores [${idx.columns.mkString(", ")}]; no [$vecCol] " +
         "vector column to recompute the drift baseline from")
-    val base = idx.agg(avg(pqReconError(col(vecCol), model)),
-      count(lit(1))).first()
-    require(!base.isNullAt(0), s"$indexDir is empty — nothing to stamp")
-    // stats FIRST, params LAST: the re-stamp guard above keys on the
-    // params file, so params is the commit marker — a crash between the
-    // two writes leaves a stats-only index that a re-run stamp repairs,
-    // instead of a params-only index that pqIndexAppend refuses (missing
-    // baseline) AND this stamp refuses (sidecar exists): bricked
-    graft.ops.RangeLayout.writeSidecar(spark, indexDir, PqStatsFile,
-      s"mean_err=${base.getDouble(0)},n=${base.getLong(1)}")
-    graft.ops.RangeLayout.writeSidecar(spark, indexDir, PqParamsFile,
-      pqParamsString(m, k, seed))
+    // a crash before the params stamp leaves a stats-only index that a
+    // re-run stamp repairs
+    PersistedIndex.commit(spark, indexDir, PersistedIndex.pq(m, k, seed))(
+      writeDriftBaseline(idx, vecCol, model, indexDir))
   }
 
   /** Load the codebooks sidecar back into a [[PqModel]]. */
@@ -330,23 +308,16 @@ object Quantize {
               idCol: String, vecCol: String, query: Seq[Float], topK: Int,
               pool: Int = 50, m: Int = 16, k: Int = 16,
               seed: Long = 42L): DataFrame = {
-    // params guard: validate the caller's expected parameterization
-    // against the PERSISTED build record, and the record against the
-    // codebooks actually loaded — an index dir built under a different
-    // config (or with a mangled sidecar) must refuse, not return quietly
-    // wrong neighbors
-    val expected = pqParamsString(m, k, seed)
-    val actual = graft.ops.RangeLayout.readSidecar(spark, indexDir,
-      PqParamsFile)
-    require(actual.contains(expected),
-      s"$indexDir was built with [${actual.getOrElse("no " + PqParamsFile)}]" +
-        s" but this probe expects [$expected]; rebuild the index or fix " +
-        "the probe configuration")
+    // the caller's parameters against the stamp, and the stamp against
+    // the codebooks actually loaded — an index built under another config
+    // (or with a mangled sidecar) must refuse, not return quietly wrong
+    // neighbors
+    PersistedIndex.check(spark, indexDir, "probe", PersistedIndex.pq(m, k, seed))
     val model = loadPqModel(spark, indexDir)
     require(model.m == m && model.codebooks.head.length == k,
       s"$indexDir codebooks (m=${model.m}, k=${model.codebooks.head.length})" +
-        s" disagree with its own $PqParamsFile [$expected] — the sidecar " +
-        "pair is corrupt; rebuild the index")
+        s" disagree with its own $PqParamsFile — the sidecar pair is " +
+        "corrupt; rebuild the index")
     val idx = spark.read.parquet(indexDir)
     pqTopKReranked(idx, idCol, "__codes", idx, vecCol, model, query,
       topK, pool)

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.PersistedIndex
+
 /** Similarity search over embedding columns (SURVEY §2.9 E2 + driver
   * mandate): brute-force cosine top-k as the exactness baseline, and a
   * deterministic random-hyperplane LSH bucketing as the scale path.
@@ -320,68 +322,13 @@ object Similarity {
   // query touches nProbe cells (or a hamming ball of buckets), never the
   // corpus. Training/bucketing never runs in the query path.
 
-  /** Marker the ensure* wrappers write AFTER a build fully completes —
-    * including the post-commit `_centroids` write, which Spark's own
-    * `_SUCCESS` does not cover. Listing for non-hidden entries is wrong
-    * here twice over: an IVF layout's root holds only underscore-prefixed
-    * names (`__cell=N` partition dirs, `_centroids`, `_SUCCESS`), which a
-    * hidden-file heuristic classifies as "no data" — silently turning
-    * build-once into KMeans-refit-per-call — and a crash between the data
-    * commit and the centroid write must read as "not built". */
-  private val CommitMarker = "_GRAFT_COMMITTED"
-
-  /** True when `dir` holds a fully-committed index. SidecarIO.exists,
-    * not raw fs.exists: on a no-AbstractFileSystem scheme the marker can
-    * sit committed in its staged `.new` twin (the two-phase window), and
-    * a raw probe reading "absent" would silently turn build-once into
-    * refit-per-call over an already-committed index. */
-  private def hasIndex(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.core.SidecarIO.exists(fs, new Path(p, CommitMarker))
-  }
-
-  private def markCommitted(spark: SparkSession, dir: String): Unit =
-    // presence-only marker, committed through the ONE shared sidecar
-    // helper (RangeLayout.writeSidecar → core.SidecarIO) so any future
-    // hardening of the sidecar path covers this file too
-    graft.ops.RangeLayout.writeSidecar(spark, dir, CommitMarker, "")
-
-  /** Plane parameters persisted beside an LSH layout so incremental
-    * appends can VALIDATE they bucket with the same planes the index was
-    * built with — a dim/nPlanes/seed mismatch would file vectors into
-    * buckets no probe ever visits (silent recall loss, not an error). */
-  private val LshParamsFile = "_GRAFT_LSH_PARAMS"
-
-  private def lshParamsString(dim: Int, nPlanes: Int, seed: Int): String =
-    s"dim=$dim,nPlanes=$nPlanes,seed=$seed"
-
-  private def writeLshParams(spark: SparkSession, dir: String,
-                             dim: Int, nPlanes: Int, seed: Int): Unit =
-    // the ONE shared sidecar write path (RangeLayout.writeSidecar →
-    // core.SidecarIO): a torn stamp must be unreachable, and hand-rolled
-    // twins of the helper would silently miss its future hardening
-    graft.ops.RangeLayout.writeSidecar(spark, dir, LshParamsFile,
-      lshParamsString(dim, nPlanes, seed))
-
-  private def readLshParams(spark: SparkSession, dir: String): Option[String] =
-    graft.ops.RangeLayout.readSidecar(spark, dir, LshParamsFile)
-
-  /** The shared build-if-absent protocol for every index kind: resolve the
-    * content-addressed dir, run `build` only when no committed index
-    * exists, and write the commit marker AFTER the build fully finishes.
-    * One definition so the commit protocol cannot fork across kinds
-    * (package-visible: TextAnalysis caches its benchmark-gram set through
-    * the same protocol). */
+  /** Build-if-absent for every index kind under its content-addressed
+    * [[cacheKey]] (package-visible: TextAnalysis caches its
+    * benchmark-gram set the same way). */
   private[ext] def ensureCached(kind: String, source: DataFrame, params: String)
-                          (build: String => Unit): String = {
-    val dir = cachedIndexDir(kind, source, params)
-    if (!hasIndex(source.sparkSession, dir)) {
-      build(dir)
-      markCommitted(source.sparkSession, dir)
-    }
-    dir
-  }
+                          (build: String => Unit): String =
+    PersistedIndex.buildOnce(source.sparkSession, kind,
+      cacheKey(kind, source, params))(build)
 
   /** The shared probe tail: exact cosine against the query literal,
     * rounded, deterministic tie-break, distributed top-k. One definition
@@ -394,7 +341,7 @@ object Similarity {
       .orderBy(col("cos").desc, col(idCol).asc)
       .limit(k)
 
-  /** Content-addressed cache location for a derived index: keyed by the
+  /** Content-addressed cache key for a derived index: the
     * source's actual input files — path, length AND modification time, so a
     * corpus rewritten in place under the same file names re-keys — plus the
     * build params, so a different corpus or parameterization never reuses a
@@ -409,7 +356,7 @@ object Similarity {
     * names per job); only an external same-name same-length same-second
     * overwrite can hit it — callers doing that should pass an explicit
     * indexDir and rebuild. */
-  private def cachedIndexDir(kind: String, source: DataFrame, params: String): String = {
+  private def cacheKey(kind: String, source: DataFrame, params: String): String = {
     val files = source.inputFiles.sorted
     require(files.nonEmpty,
       s"$kind index cache needs a file-backed source (inputFiles is empty); " +
@@ -443,11 +390,7 @@ object Similarity {
       })
       s"$f:$len:$mtime"
     }
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest((fingerprints.mkString(",") + "|" + planKey + "|" + params)
-        .getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    s"${System.getProperty("java.io.tmpdir")}/graft-index/$kind-$key"
+    fingerprints.mkString(",") + "|" + planKey + "|" + params
   }
 
   /** Materialize the LSH bucket as the storage layout: embeddings written
@@ -457,10 +400,12 @@ object Similarity {
                     indexDir: String, dim: Int, nPlanes: Int = 8,
                     seed: Int = 42): Unit = {
     require(nPlanes <= 20, s"nPlanes=$nPlanes would mean 2^$nPlanes partition dirs")
-    embeddings.select(col(idCol), col(vecCol),
-      lshBucket(col(vecCol), dim, nPlanes, seed).cast("int").as("bucket"))
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(indexDir)
-    writeLshParams(embeddings.sparkSession, indexDir, dim, nPlanes, seed)
+    PersistedIndex.commit(embeddings.sparkSession, indexDir,
+        PersistedIndex.lsh(dim, nPlanes, seed)) {
+      embeddings.select(col(idCol), col(vecCol),
+        lshBucket(col(vecCol), dim, nPlanes, seed).cast("int").as("bucket"))
+        .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(indexDir)
+    }
   }
 
   /** Build-if-absent into the content-addressed cache; returns the dir. */
@@ -478,14 +423,10 @@ object Similarity {
   def lshIndexAppend(spark: SparkSession, indexDir: String,
                      newVectors: DataFrame, idCol: String, vecCol: String,
                      dim: Int, nPlanes: Int = 8, seed: Int = 42): Unit = {
-    // validate against the PERSISTED build params: bucketing with different
-    // planes than the original build files vectors where no probe looks
-    val expected = lshParamsString(dim, nPlanes, seed)
-    val actual = readLshParams(spark, indexDir)
-    require(actual.contains(expected),
-      s"$indexDir was built with [${actual.getOrElse("no " + LshParamsFile)}] " +
-        s"but append was called with [$expected] — appended vectors would " +
-        "land in buckets probes never visit")
+    // bucketing with other planes than the build files vectors where no
+    // probe looks
+    PersistedIndex.check(spark, indexDir, "append",
+      PersistedIndex.lsh(dim, nPlanes, seed))
     val idxFields = spark.read.parquet(indexDir).schema.fieldNames.toSet
     require(!idxFields.contains("__codes"),
       s"$indexDir is a QUANTIZED layout — float append would corrupt it")
@@ -495,23 +436,6 @@ object Similarity {
     newVectors.select(col(idCol), col(vecCol),
       lshBucket(col(vecCol), dim, nPlanes, seed).cast("int").as("bucket"))
       .write.mode(SaveMode.Append).partitionBy("bucket").parquet(indexDir)
-  }
-
-  /** Probe-side params guard — [[lshIndexAppend]]'s stamp check applied to
-    * every probe entry point: probing with foreign planes enumerates a
-    * hamming ball over the WRONG bucket space and returns quietly
-    * near-empty neighbors (the exact "silent recall loss, not an error"
-    * the `_GRAFT_LSH_PARAMS` stamp exists to prevent). An unstamped
-    * layout refuses too: the ensure* builders always stamp, so no stamp
-    * means an unknown layout. */
-  private def validateLshProbe(spark: SparkSession, indexDir: String,
-                               dim: Int, nPlanes: Int, seed: Int): Unit = {
-    val expected = lshParamsString(dim, nPlanes, seed)
-    val actual = readLshParams(spark, indexDir)
-    require(actual.contains(expected),
-      s"$indexDir was built with [${actual.getOrElse("no " + LshParamsFile)}] " +
-        s"but the probe was called with [$expected] — the hamming ball " +
-        "would enumerate the wrong bucket space (silent recall loss)")
   }
 
   /** All bucket values within `radius` sign-flips of `center`: the
@@ -538,7 +462,10 @@ object Similarity {
                vecCol: String, query: Seq[Float], k: Int, dim: Int,
                nPlanes: Int = 8, probeHamming: Int = 2,
                seed: Int = 42): DataFrame = {
-    validateLshProbe(spark, indexDir, dim, nPlanes, seed)
+    // foreign planes would enumerate a hamming ball over the wrong bucket
+    // space and return quietly near-empty neighbors
+    PersistedIndex.check(spark, indexDir, "probe",
+      PersistedIndex.lsh(dim, nPlanes, seed))
     val qBucket = spark.range(1).select(
       lshBucket(array(query.map(v => lit(v.toDouble)): _*), dim, nPlanes, seed))
       .first().getLong(0)
@@ -561,7 +488,10 @@ object Similarity {
                     dim: Int, nPlanes: Int = 8, probeHamming: Int = 2,
                     seed: Int = 42): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    validateLshProbe(spark, indexDir, dim, nPlanes, seed)
+    // foreign planes would enumerate a hamming ball over the wrong bucket
+    // space and return quietly near-empty neighbors
+    PersistedIndex.check(spark, indexDir, "probe",
+      PersistedIndex.lsh(dim, nPlanes, seed))
     val masks = hammingBall(0L, nPlanes, probeHamming) // center 0 → raw masks
     val masksLit = array(masks.map(lit): _*)
     val probed = queries
@@ -1029,9 +959,11 @@ object Similarity {
     require(nPlanes <= 20, s"nPlanes=$nPlanes would mean 2^$nPlanes partition dirs")
     val bucketed = embeddings.withColumn("bucket",
       lshBucket(col(vecCol), dim, nPlanes, seed).cast("int"))
-    quantizedPayload(bucketed, idCol, vecCol, keep = Seq("bucket"))
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(indexDir)
-    writeLshParams(embeddings.sparkSession, indexDir, dim, nPlanes, seed)
+    PersistedIndex.commit(embeddings.sparkSession, indexDir,
+        PersistedIndex.lsh(dim, nPlanes, seed)) {
+      quantizedPayload(bucketed, idCol, vecCol, keep = Seq("bucket"))
+        .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(indexDir)
+    }
   }
 
   /** Build-if-absent into the content-addressed cache; returns the dir. */
@@ -1047,7 +979,10 @@ object Similarity {
                         query: Seq[Float], k: Int, dim: Int,
                         nPlanes: Int = 8, probeHamming: Int = 2,
                         seed: Int = 42): DataFrame = {
-    validateLshProbe(spark, indexDir, dim, nPlanes, seed)
+    // foreign planes would enumerate a hamming ball over the wrong bucket
+    // space and return quietly near-empty neighbors
+    PersistedIndex.check(spark, indexDir, "probe",
+      PersistedIndex.lsh(dim, nPlanes, seed))
     val qBucket = spark.range(1).select(
       lshBucket(array(query.map(v => lit(v.toDouble)): _*), dim, nPlanes, seed))
       .first().getLong(0)

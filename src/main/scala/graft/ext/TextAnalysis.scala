@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.PersistedIndex
+
 /** Text-analysis operators for training-data pipelines (SURVEY §2.9 E4 +
   * driver mandate): tokenization, token stats, quality scoring, language-ID
   * heuristic, document fingerprinting, SimHash.
@@ -783,35 +785,16 @@ object TextAnalysis {
   // admission-side form of [[dupSpanCoverage]] (intra-batch duplication
   // stays that function's job, run on the batch alone). The text-dedup
   // analog of the MinHash index's build/append/probe split
-  // (Dedup.buildMinhashIndex), with the same params-guard convention:
-  // n / key hashing / bucket count are FROZEN in `_GRAFT_GRAM_PARAMS` at
-  // build time (written LAST — its presence is the commit marker) and
-  // every append/probe re-derives them from the stamp.
+  // (Dedup.buildMinhashIndex): n / key hashing / bucket count are frozen
+  // in the gram stamp (PersistedIndex) and every append/probe re-derives
+  // them from it.
 
   final case class GramIndexParams(n: Int, hashed: Boolean, nBuckets: Int)
 
-  private val GramParamsFile = "_GRAFT_GRAM_PARAMS"
-
-  private def gramParamsString(p: GramIndexParams): String =
-    s"v1 n=${p.n} hashed=${p.hashed} buckets=${p.nBuckets}"
-
-  private def gramReadParams(spark: org.apache.spark.sql.SparkSession,
-                             dir: String): GramIndexParams = {
-    val s = graft.ops.RangeLayout.readSidecar(spark, dir, GramParamsFile)
-      .getOrElse(throw graft.core.GraftError.InvalidConfig(
-        s"no committed gram index at $dir (missing $GramParamsFile)"))
-      .trim
-    try {
-      val kv = s.split(' ').drop(1).map(_.split('='))
-        .map(a => a(0) -> a(1)).toMap
-      GramIndexParams(kv("n").toInt, kv("hashed").toBoolean,
-        kv("buckets").toInt)
-    } catch {
-      case scala.util.control.NonFatal(_) =>
-        throw graft.core.GraftError.InvalidConfig(
-          s"unparseable $GramParamsFile at $dir: '$s' — not a committed " +
-            "gram index (delete the directory and rebuild)")
-    }
+  private def gramParams(spark: org.apache.spark.sql.SparkSession,
+                         dir: String): GramIndexParams = {
+    val s = PersistedIndex.read(spark, dir, PersistedIndex.Gram)
+    GramIndexParams(s.int("n"), s.bool("hashed"), s.int("buckets"))
   }
 
   /** `__gbucket` for a gram key (string or xxhash64 long — the same
@@ -833,28 +816,21 @@ object TextAnalysis {
     require(nBuckets >= 1 && nBuckets <= 65536,
       s"nBuckets must be in [1, 65536]: $nBuckets")
     val spark = docs.sparkSession
-    // rebuild discipline (the MinHash index rule): drop any existing
-    // stamp FIRST so a rebuild that crashes mid-write reads as ABSENT —
-    // through SidecarIO.delete, which also removes the staged `.new`
-    // twin a crashed fallback-scheme commit may have left (a raw delete
-    // would leave the stale params READING as committed over new data)
-    val stampPath = new org.apache.hadoop.fs.Path(dir, GramParamsFile)
-    val fs = stampPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.core.SidecarIO.delete(fs, stampPath)
-    val p = GramIndexParams(n, hashedKeys, nBuckets)
-    val withT = spanDocFrame(docs, idCol, textCol)
-    val grams = positionHits(withT, idCol, n, hashedKeys)
-      .select(col("__g")).distinct()
-      .withColumn("__gbucket", gramBucketCol(col("__g"), nBuckets))
-    grams.write.mode("overwrite").partitionBy("__gbucket")
-      .parquet(s"$dir/grams")
-    if (!fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/grams"))
-        .exists(_.getPath.getName.startsWith("__gbucket=")))
-      throw graft.core.GraftError.InvalidConfig(
-        "buildGramIndex: the base corpus has no text rows — an empty " +
-          "index serves no probe; build once the corpus is non-empty")
-    graft.ops.RangeLayout.writeSidecar(spark, dir, GramParamsFile,
-      gramParamsString(p))
+    PersistedIndex.commit(spark, dir,
+        PersistedIndex.gram(n, hashedKeys, nBuckets)) {
+      val withT = spanDocFrame(docs, idCol, textCol)
+      val grams = positionHits(withT, idCol, n, hashedKeys)
+        .select(col("__g")).distinct()
+        .withColumn("__gbucket", gramBucketCol(col("__g"), nBuckets))
+      grams.write.mode("overwrite").partitionBy("__gbucket")
+        .parquet(s"$dir/grams")
+      val gramsDir = new org.apache.hadoop.fs.Path(s"$dir/grams")
+      if (!gramsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .listStatus(gramsDir).exists(_.getPath.getName.startsWith("__gbucket=")))
+        throw graft.core.GraftError.InvalidConfig(
+          "buildGramIndex: the base corpus has no text rows — an empty " +
+            "index serves no probe; build once the corpus is non-empty")
+    }
   }
 
   /** Append a batch's grams to a committed index under its FROZEN
@@ -868,7 +844,7 @@ object TextAnalysis {
   def gramIndexAppend(spark: org.apache.spark.sql.SparkSession, dir: String,
                       newDocs: DataFrame, idCol: String,
                       textCol: String): Unit = {
-    val p = gramReadParams(spark, dir)
+    val p = gramParams(spark, dir)
     val withT = spanDocFrame(newDocs, idCol, textCol)
     positionHits(withT, idCol, p.n, p.hashed)
       .select(col("__g")).distinct()
@@ -890,7 +866,7 @@ object TextAnalysis {
   def gramIndexSpanCoverage(spark: org.apache.spark.sql.SparkSession,
                             dir: String, batch: DataFrame, idCol: String,
                             textCol: String): DataFrame = {
-    val p = gramReadParams(spark, dir)
+    val p = gramParams(spark, dir)
     val withT = spanDocFrame(batch, idCol, textCol)
     val hits = positionHits(withT, idCol, p.n, p.hashed)
       .withColumn("__gbucket", gramBucketCol(col("__g"), p.nBuckets))
@@ -922,7 +898,7 @@ object TextAnalysis {
   def gramIndexProbeAndAdmit(spark: org.apache.spark.sql.SparkSession,
                              dir: String, batch: DataFrame, idCol: String,
                              textCol: String): DataFrame = {
-    val p = gramReadParams(spark, dir)
+    val p = gramParams(spark, dir)
     val withT = spanDocFrame(batch, idCol, textCol)
     // ONE position pass for both halves, materialized so probe and append
     // read it instead of re-exploding the batch

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Checkpoints
+
 /** Iterative PageRank over an edge table — the graph-centrality layer on
   * top of the near-dup/interaction graphs the engine already builds
   * ([[graft.ext.DupClusters]] gives components; this ranks WITHIN the
@@ -46,9 +48,10 @@ import org.apache.spark.sql.functions._
   * localCheckpoint'd on an every-other cadence — constant-depth plans
   * instead of a k-deep lineage (the classic iterative-Spark trap) — and
   * every superseded checkpoint's blocks are RELEASED the moment its
-  * successor is materialized ([[release]]), so a call leaves exactly one
-  * cached frame behind instead of one per cut: deterministic block-manager
-  * footprint, deterministic run cost (the r12 e9d bench-variance fix).
+  * successor is materialized (`Checkpoints.release`), so a call leaves
+  * exactly one cached frame behind instead of one per cut: deterministic
+  * block-manager footprint, deterministic run cost (the r12 e9d
+  * bench-variance fix).
   * Everything keys on node id; no driver-side loops over data, only over
   * ITERATIONS.
   *
@@ -64,10 +67,10 @@ object PageRank {
   private final case class Graph(nodes: DataFrame, ed: DataFrame, n: Long,
                                  dangling: Option[DataFrame]) {
     /** Release the shared per-iteration frames once the final rank is
-      * materialized — see [[PageRank.eager]]/[[PageRank.release]]. */
+      * materialized — see [[PageRank.eager]]. */
     def release(): Unit = {
-      PageRank.release(nodes); PageRank.release(ed)
-      dangling.foreach(PageRank.release)
+      Checkpoints.release(nodes); Checkpoints.release(ed)
+      dangling.foreach(Checkpoints.release)
     }
   }
 
@@ -213,7 +216,7 @@ object PageRank {
       // cadence at the sf0.1 gate graph
       if (it % 2 == 0 || it == iterations) {
         rank = eager(rank)
-        live.foreach(release); live = List(rank)
+        live.foreach(Checkpoints.release); live = List(rank)
       }
     }
     g.release()
@@ -227,29 +230,10 @@ object PageRank {
     * 50-iteration cap), but its blocks are only freed by JVM GC of the
     * dataset reference — so repeated calls in one session (the bench's
     * min-of-3 loop) accumulated block-manager pressure and made run cost
-    * depend on GC timing (the r12 e9d min-vs-median variance). [[release]]
-    * is the missing half: an explicit unpersist of the checkpointed RDD
+    * depend on GC timing (the r12 e9d min-vs-median variance).
+    * `Checkpoints.release` is the missing half: an explicit unpersist of the checkpointed RDD
     * behind a frame, called the moment its successor is materialized. */
   private def eager(df: DataFrame): DataFrame = df.localCheckpoint()
-
-  /** Release bookkeeping, readable by the bench/specs: the LogicalRDD
-    * match below is deliberately total, so a Spark upgrade changing the
-    * checkpoint plan shape would silently regress eager frees to GC
-    * timing (the r12 e9d variance). These counters make "did the
-    * unpersist actually fire inside THIS session" a checkable fact
-    * instead of an inference (Bench prints them after the run). */
-  private[graft] val releasesFired = new java.util.concurrent.atomic.AtomicLong
-  private[graft] val releasesMissed = new java.util.concurrent.atomic.AtomicLong
-
-  /** Free a [[eager]] frame's checkpointed blocks NOW instead of at GC.
-    * Only call once nothing will read the frame again: a localCheckpoint
-    * has no lineage to recompute from, so a released frame is gone. */
-  private def release(df: DataFrame): Unit = df.queryExecution.logical match {
-    case lr: org.apache.spark.sql.execution.LogicalRDD =>
-      lr.rdd.unpersist(blocking = false)
-      releasesFired.incrementAndGet(); ()
-    case _ => releasesMissed.incrementAndGet(); ()
-  }
 
   /** ε-CONVERGENCE mode: iterate until max |rₖ₊₁ − rₖ| < `tol` or
     * `maxIterations` is hit, whichever first. The termination test costs
@@ -282,7 +266,7 @@ object PageRank {
       val delta = next
         .join(rank.select(col("node"), col("rank").as("__prev")), "node")
         .agg(max(abs(col("rank") - col("__prev")))).first().getDouble(0)
-      release(rank) // delta consumed it; only `next` stays live
+      Checkpoints.release(rank) // delta consumed it; only `next` stays live
       rank = next
       it += 1
       if (delta < tol) converged = true

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.PersistedIndex
+
 /** Range-clustered table layout: the scan-pruning complement to
   * [[Bucketing]] (which co-locates equi-JOINS by hash) and
   * `sync.Compact` (which fixes file SIZES). Clustering rows into
@@ -71,68 +73,11 @@ object RangeLayout {
   def manifestPath(path: String): String =
     path.stripSuffix("/") + "/_layout_manifest"
 
-  /** Layout parameters persisted beside the manifest (the
-    * `_GRAFT_LSH_PARAMS` convention from graft.ext.Similarity): a pruned
-    * read against a layout written with a different kind / clustering
-    * column / grid would consult manifest columns that describe the WRONG
-    * order and silently return a wrong (partial) row set — the guard
-    * turns that into a loud refusal. Writers record their exact
-    * parameterization; readers validate before trusting the manifest. */
-  val ParamsFile = "_GRAFT_LAYOUT_PARAMS"
-
-  private[graft] def writeSidecar(spark: SparkSession, path: String,
-                                  name: String, content: String): Unit = {
-    // write-temp-then-rename: several sidecars double as COMMIT MARKERS
-    // (their presence means "artifact complete"), so a crash mid-write
-    // must never leave a present-but-truncated stamp that readers parse
-    // as committed garbage — the rename makes presence ⇒ whole content
-    val dir = new org.apache.hadoop.fs.Path(path.stripSuffix("/"))
-    val p = new org.apache.hadoop.fs.Path(dir, name)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // every crash-window subtlety (torn write, missing-after-delete,
-    // non-atomic local FileContext rename, checksum-twin staleness)
-    // lives in ONE place — core.SidecarIO's scaladoc is the argument
-    graft.core.SidecarIO.write(fs, p, content)
-  }
-
-  private[graft] def readSidecar(spark: SparkSession, path: String,
-                                 name: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(path.stripSuffix("/"), name)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // committed-content read (SidecarIO two-phase crash window on
-    // no-AbstractFileSystem schemes — the stamp may live in `.new`)
-    graft.core.SidecarIO.read(fs, p)
-  }
-
-  private[ops] def writeParams(spark: SparkSession, path: String,
-                               params: String): Unit =
-    writeSidecar(spark, path, ParamsFile, params)
-
-  private[ops] def readParams(spark: SparkSession, path: String): Option[String] =
-    readSidecar(spark, path, ParamsFile)
-
-  private[ops] def parseParams(s: String): Map[String, String] =
-    s.split(",").map(_.split("=", 2))
-      .collect { case Array(k, v) => k -> v }.toMap
-
-  /** Read + parse the params sidecar, failing loud when absent (a layout
-    * without provenance cannot be trusted for pruning). */
-  private[ops] def loadParams(spark: SparkSession, path: String,
-                              wantKind: String): Map[String, String] = {
-    val raw = readParams(spark, path).getOrElse(throw new
-      IllegalArgumentException(s"$path has no $ParamsFile sidecar; refusing " +
-        "to prune against a layout of unknown provenance (rewrite it with " +
-        "writeClustered/writeZOrdered)"))
-    val params = parseParams(raw)
-    require(params.get("kind").contains(wantKind),
-      s"$path is a [${params.getOrElse("kind", "?")}] layout, not " +
-        s"[$wantKind]; its manifest describes a different clustering — " +
-        "refusing to prune")
-    params
-  }
-
-  private[ops] def rangeParamsString(sortCol: String, nBuckets: Int): String =
-    s"kind=range,by=$sortCol,buckets=$nBuckets"
+  /** Stamp file beside the manifest: a pruned read against a layout
+    * written with another kind, clustering column or grid would consult
+    * manifest columns that describe the wrong order and silently return a
+    * partial row set, so readers validate the stamp first. */
+  val ParamsFile: String = PersistedIndex.RangeLayout.file
 
   /** Write `df` range-clustered by `sortCol` (tie-broken by `tieBreak`)
     * into `nBuckets` hive partitions `bucket=k/`, rows sorted within each
@@ -144,11 +89,13 @@ object RangeLayout {
   def writeClustered(df: DataFrame, path: String, sortCol: String,
                      tieBreak: Seq[Column], nBuckets: Int): Unit = {
     val bucketed = withRangeBucket(df, col(sortCol) +: tieBreak, nBuckets)
-    bucketed.write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(path)
-    manifest(bucketed, "bucket", sortCol)
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(manifestPath(path))
-    writeParams(df.sparkSession, path, rangeParamsString(sortCol, nBuckets))
+    PersistedIndex.commit(df.sparkSession, path,
+        PersistedIndex.range(sortCol, nBuckets)) {
+      bucketed.write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(path)
+      manifest(bucketed, "bucket", sortCol)
+        .coalesce(1)
+        .write.mode(SaveMode.Overwrite).parquet(manifestPath(path))
+    }
   }
 
   /** Manifest-driven range scan of a [[writeClustered]] table: consult the
@@ -162,13 +109,12 @@ object RangeLayout {
     * so both prunings see plain comparisons. */
   def prunedRead(spark: SparkSession, path: String, sortCol: String,
                  lo: Column, hi: Column): DataFrame = {
-    // params guard: pruning on a column the layout was NOT clustered by
-    // would consult manifest stats describing a different order and
-    // silently return a partial row set
-    val params = loadParams(spark, path, wantKind = "range")
-    require(params.get("by").contains(sortCol),
-      s"$path is range-clustered by [${params.getOrElse("by", "?")}], not " +
-        s"[$sortCol]; refusing a pruned read on the wrong column")
+    // pruning on a column the layout was NOT clustered by would consult
+    // manifest stats describing a different order
+    val by = PersistedIndex.read(spark, path, PersistedIndex.RangeLayout).str("by")
+    require(by == sortCol,
+      s"$path is range-clustered by [$by], not [$sortCol]; refusing a " +
+        "pruned read on the wrong column")
     val mf = spark.read.parquet(manifestPath(path))
     val ids = mf.filter(col(s"min_$sortCol") <= hi && col(s"max_$sortCol") >= lo)
       .select(col("bucket").cast("long")).collect().map(_.getLong(0))
@@ -186,8 +132,8 @@ object RangeLayout {
     * counts, so false provenance refuses instead of landing in the params
     * sidecar. Bounded: the manifest has one row per bucket (CLI-capped at
     * 1e6) and the expected-share loop runs on the claimed nBuckets. */
-  private[ops] def verifyRankSplit(mf: DataFrame, nBuckets: Int,
-                                   path: String): Unit = {
+  private def verifyRankSplit(mf: DataFrame, nBuckets: Int,
+                              path: String): Unit = {
     val got = mf.select(col("bucket").cast("long"), col("n_rows").cast("long"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val total = BigInt(got.values.sum)
@@ -220,23 +166,34 @@ object RangeLayout {
     * wrongly — the exact silent corruption the sidecar prevents). */
   def stampExistingLayout(spark: SparkSession, path: String,
                           sortCol: String, nBuckets: Int): Unit = {
-    require(readParams(spark, path).isEmpty,
-      s"$path already has a $ParamsFile sidecar; refusing to re-stamp")
+    verifyManifestClaim(spark, path, PersistedIndex.RangeLayout, Seq(sortCol),
+      nBuckets)
+    PersistedIndex.write(spark, path, PersistedIndex.range(sortCol, nBuckets))
+  }
+
+  /** The shared half of both migration stamps (this and
+    * [[ZOrder.stampExistingLayout]]): no live stamp, a readable manifest
+    * with EXACTLY the bucket, count and min/max columns of the claimed
+    * layout (containment alone would let a z-order layout stamp as range
+    * and then prune wrongly), and the per-bucket counts of an
+    * `nBuckets`-way rank split. */
+  private[ops] def verifyManifestClaim(spark: SparkSession, path: String,
+                                       family: PersistedIndex.Family,
+                                       statsCols: Seq[String],
+                                       nBuckets: Int): Unit = {
+    PersistedIndex.requireUnstamped(spark, path, family)
     val mf = try spark.read.parquet(manifestPath(path))
       catch { case e: org.apache.spark.sql.AnalysisException =>
         throw new IllegalArgumentException(
           s"$path has no readable manifest at ${manifestPath(path)} — not " +
-            "a writeClustered layout; rewrite instead of stamping", e) }
-    // EXACT column-set match: a z-order manifest (stats for two dims) or
-    // any foreign shape must refuse — containment alone would let a
-    // z-order layout stamp as range and then prune wrongly
+            s"a ${family.what}; rewrite instead of stamping", e) }
     val cols = mf.columns.toSet
-    val want = Set("bucket", "n_rows", s"min_$sortCol", s"max_$sortCol")
+    val want = Set("bucket", "n_rows") ++
+      statsCols.flatMap(c => Seq(s"min_$c", s"max_$c"))
     require(cols == want,
       s"$path manifest has [${cols.mkString(", ")}], not exactly " +
-        s"[${want.mkString(", ")}] — not a writeClustered($sortCol) " +
-        "manifest; refusing to stamp a false provenance")
+        s"[${want.mkString(", ")}] — not a ${family.what} on " +
+        s"(${statsCols.mkString(", ")}); refusing to stamp a false provenance")
     verifyRankSplit(mf, nBuckets, path)
-    writeParams(spark, path, rangeParamsString(sortCol, nBuckets))
   }
 }

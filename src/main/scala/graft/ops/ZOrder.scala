@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.PersistedIndex
+
 /** Z-ORDER (Morton-curve) layout over TWO dimensions — the
   * multi-dimensional complement to [[RangeLayout]] (which clusters one
   * sort key): each dimension is normalized to a 16-bit grid and their
@@ -113,26 +115,19 @@ object ZOrder {
     // break schema comparisons against the source (the writeClustered
     // __rn rule; stampExistingLayout recomputes zval from data, so
     // nothing reads a stored copy)
-    bucketed.drop("zval")
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(path)
-    bucketed.groupBy("bucket")
-      .agg(count(lit(1)).as("n_rows"),
-        min(col(colA)).as(s"min_$colA"), max(col(colA)).as(s"max_$colA"),
-        min(col(colB)).as(s"min_$colB"), max(col(colB)).as(s"max_$colB"))
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(RangeLayout.manifestPath(path))
-    RangeLayout.writeParams(df.sparkSession, path,
-      zorderParamsString(colA, colB, nBuckets))
+    PersistedIndex.commit(df.sparkSession, path,
+        PersistedIndex.zorder(colA, colB, GridBits, nBuckets)) {
+      bucketed.drop("zval")
+        .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(path)
+      bucketed.groupBy("bucket")
+        .agg(count(lit(1)).as("n_rows"),
+          min(col(colA)).as(s"min_$colA"), max(col(colA)).as(s"max_$colA"),
+          min(col(colB)).as(s"min_$colB"), max(col(colB)).as(s"max_$colB"))
+        .coalesce(1)
+        .write.mode(SaveMode.Overwrite)
+        .parquet(RangeLayout.manifestPath(path))
+    }
   }
-
-  /** The exact sidecar content [[writeZOrdered]] records and
-    * [[prunedRead]] string-matches — ONE definition so the migration
-    * stamp can never drift from the writer (the
-    * [[RangeLayout.rangeParamsString]] rule). */
-  private[ops] def zorderParamsString(colA: String, colB: String,
-                                      nBuckets: Int): String =
-    s"kind=zorder,a=$colA,b=$colB,gridBits=$GridBits,buckets=$nBuckets"
 
   /** Manifest-pruned range read on EITHER z-ordered dimension: buckets
     * whose [min,max] of `dim` misses [lo, hi] are never opened
@@ -140,18 +135,15 @@ object ZOrder {
     * further inside survivors. */
   def prunedRead(spark: SparkSession, path: String, dim: String,
                  lo: Column, hi: Column): DataFrame = {
-    // params guard (the _GRAFT_LSH_PARAMS convention): a probe against a
-    // layout z-ordered on OTHER dimensions, a range layout, or a grid
-    // from a different library version must fail loud — its manifest
-    // describes a different clustering and pruning against it silently
-    // returns a partial row set
-    val params = RangeLayout.loadParams(spark, path, wantKind = "zorder")
-    require(params.get("a").contains(dim) || params.get("b").contains(dim),
-      s"$path is z-ordered on (${params.getOrElse("a", "?")}, " +
-        s"${params.getOrElse("b", "?")}); [$dim] is neither dimension — " +
+    // a layout z-ordered on OTHER dimensions or under a grid from another
+    // library version has a manifest describing a different clustering
+    val params = PersistedIndex.read(spark, path, PersistedIndex.ZOrderLayout)
+    val (a, b) = (params.str("a"), params.str("b"))
+    require(a == dim || b == dim,
+      s"$path is z-ordered on ($a, $b); [$dim] is neither dimension — " +
         "refusing a pruned read")
-    require(params.get("gridBits").contains(GridBits.toString),
-      s"$path was written with gridBits=${params.getOrElse("gridBits", "?")}" +
+    require(params.int("gridBits") == GridBits,
+      s"$path was written with gridBits=${params.str("gridBits")}" +
         s"; this library prunes gridBits=$GridBits layouts only")
     val mf = spark.read.parquet(RangeLayout.manifestPath(path))
     val ids = mf.filter(col(s"min_$dim") <= hi && col(s"max_$dim") >= lo)
@@ -172,27 +164,10 @@ object ZOrder {
     * version wrote. Refuses if a sidecar already exists. */
   def stampExistingLayout(spark: SparkSession, path: String, colA: String,
                           colB: String, nBuckets: Int): Unit = {
-    require(RangeLayout.readParams(spark, path).isEmpty,
-      s"$path already has a ${RangeLayout.ParamsFile} sidecar; refusing " +
-        "to re-stamp")
-    val mf = try spark.read.parquet(RangeLayout.manifestPath(path))
-      catch { case e: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalArgumentException(
-          s"$path has no readable manifest — not a writeZOrdered layout; " +
-            "rewrite instead of stamping", e) }
     require(colA != colB,
       s"z-order dimensions must differ, got ($colA, $colB)")
-    // EXACT column-set match (the RangeLayout.stampExistingLayout rule):
-    // a range manifest, a z-order on other dims, or any foreign shape
-    // refuses — containment alone would stamp false provenance
-    val cols = mf.columns.toSet
-    val want = Set("bucket", "n_rows",
-      s"min_$colA", s"max_$colA", s"min_$colB", s"max_$colB")
-    require(cols == want,
-      s"$path manifest has [${cols.mkString(", ")}], not exactly " +
-        s"[${want.mkString(", ")}] — not a writeZOrdered($colA, $colB) " +
-        "manifest; refusing to stamp a false provenance")
-    RangeLayout.verifyRankSplit(mf, nBuckets, path)
+    RangeLayout.verifyManifestClaim(spark, path, PersistedIndex.ZOrderLayout,
+      Seq(colA, colB), nBuckets)
     // The manifest's column set is SYMMETRIC in (a, b), so a dimension-
     // SWAPPED claim survives every check above yet records a false
     // interleave order (a takes the even Morton bits, b the odd). Verify
@@ -220,7 +195,7 @@ object ZOrder {
             "are likely swapped; refusing to stamp a false interleave order")
       case _ => () // single bucket: any interleave order is consistent
     }
-    RangeLayout.writeParams(spark, path,
-      zorderParamsString(colA, colB, nBuckets))
+    PersistedIndex.write(spark, path,
+      PersistedIndex.zorder(colA, colB, GridBits, nBuckets))
   }
 }

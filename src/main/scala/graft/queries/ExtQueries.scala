@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{PersistedIndex, Tables}
 import graft.ext.{Curation, Dedup, DupClusters, EmbeddingStats, Multimodal, Packing, Quantize, Sampling, Similarity, TextAnalysis, TextSimilarity}
 import graft.ops.{PageRank, RangeLayout, ZOrder}
 
@@ -371,72 +371,6 @@ object ExtQueries {
                                 dir: String): org.apache.spark.sql.DataFrame =
     cachedCorpus("spanIslands", s, dir)(
       TextAnalysis.dupSpanIslands(Tables.documents(s, dir), "doc_id", "text"))
-
-  /** e6i6's persisted gram index over the BASE slice (doc_id % 4 != 0)
-    * of the documents fixture, built once per fixture stamp into a
-    * per-JVM temp dir — the build-once/probe-many protocol of the ANN
-    * and MinHash indexes (the probe, not a refit, is the steady-state
-    * cost a resident admission service pays). String keys (hashed=false)
-    * so the DuckDB oracle computes the identical membership; the
-    * hashed=true production switch is spec-gated for equality. */
-  /** Collision-proof cache-dir path for a persisted gate index keyed by
-    * the full fixture identity. The old suffix was 32-bit
-    * `String.hashCode` (r16 advice): two different (dir, stamp) pairs
-    * could alias onto ONE cached index and a probe would silently read
-    * the wrong corpus. The sanitized key keeps the path readable; the
-    * appended 128-bit MD5 of the RAW key makes sanitization collisions
-    * ('a/b' vs 'a_b') impossible in practice. */
-  private[queries] def idxCacheDir(prefix: String, key: String): String = {
-    val safe = key.map(c =>
-      if (c.isLetterOrDigit || c == '.' || c == '-') c else '_')
-    val md5 = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    s"${System.getProperty("java.io.tmpdir")}/$prefix-$safe-$md5"
-  }
-
-  /** Build-once-commit-by-ONE-rename for the gate's cached indexes (the
-    * e1h discipline, shared): the build lands in a PROCESS-UNIQUE staging
-    * dir (pid + nanotime — two gate JVMs sharing /tmp must never build
-    * into the same staging path, the r16-advice race) and moves into
-    * place atomically. A failed rename is accepted only when a concurrent
-    * process committed the same key (params marker present — its index
-    * is byte-equivalent by construction); anything else errors. */
-  private[queries] def commitCachedIndex(idx: String, paramsFile: String,
-                                         stillValid: String => Boolean = _ => true)
-                                        (build: String => Unit): Unit = {
-    if (new java.io.File(idx, paramsFile).exists() && stillValid(idx)) return
-    val staging = idx + ".tmp-" + ProcessHandle.current().pid() +
-      "-" + java.lang.Long.toHexString(System.nanoTime())
-    graft.core.Tables.deleteRecursively(new java.io.File(staging))
-    build(staging)
-    graft.core.Tables.deleteRecursively(new java.io.File(idx))
-    if (!new java.io.File(staging).renameTo(new java.io.File(idx))) {
-      if (new java.io.File(idx, paramsFile).exists())
-        graft.core.Tables.deleteRecursively(new java.io.File(staging))
-      else sys.error(s"commitCachedIndex: rename $staging -> $idx failed")
-    }
-  }
-
-  private val gramIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def cachedGramIndex(s: org.apache.spark.sql.SparkSession,
-                              dir: String): String = {
-    val stamp = Tables.fixtureStamp(dir, "documents")
-    gramIndexCache.computeIfAbsent(
-      s"${System.identityHashCode(s.sparkContext)}|$dir@$stamp", { _ =>
-      // deterministic path keyed by the fixture stamp — rebuilds (new
-      // JVMs, new SparkContexts in one JVM) OVERWRITE the same directory
-      // instead of accumulating a fresh createTempDirectory copy per run
-      // under /tmp (r15 advice); buildGramIndex's rebuild discipline
-      // (stamp dropped first, written last) makes the overwrite safe
-      val d = idxCacheDir("graft-gramidx", s"$dir@$stamp") + "/idx"
-      TextAnalysis.buildGramIndex(
-        Tables.documents(s, dir).filter(col("doc_id") % 4 =!= 0),
-        "doc_id", "text", d, hashedKeys = false)
-      d
-    })
-  }
 
   val defs: Map[String, Q] = Map(
 
@@ -869,15 +803,10 @@ object ExtQueries {
       (s, dir) =>
         val docs = Tables.documents(s, dir)
         val stamp = Tables.fixtureStamp(dir, "documents")
-        val idx = idxCacheDir("graft-dhidx", s"$dir@$stamp@noise2")
-        // build + append staged, moved into place by ONE rename (the
-        // e1h discipline: an interruption between the two calls must
-        // not leave a committed-looking index missing [300,400)); a
-        // cached index whose stamp the current code refuses (e.g. a
-        // pre-v2 layout) is REBUILT, not served as a refusal
-        commitCachedIndex(idx, "_GRAFT_DHASH_PARAMS",
-          d => scala.util.Try(graft.ext.BandedHashIndex.readBands(
-            s, d, graft.ext.BandedHashIndex.DhParamsFile)).isSuccess) { staging =>
+        // build + append commit together: an interrupted pair never
+        // leaves a committed-looking index missing [300,400)
+        val idx = PersistedIndex.buildOnce(s, "dhidx",
+            s"$dir@$stamp@noise2") { staging =>
           Multimodal.buildDHashIndex(
             Multimodal.plantedNoisePngMedia(
               docs.filter(col("doc_id") < 300), "doc_id"), staging)
@@ -969,10 +898,8 @@ object ExtQueries {
       (s, dir) =>
         val docs = Tables.documents(s, dir)
         val stamp = Tables.fixtureStamp(dir, "documents")
-        val idx = idxCacheDir("graft-ahidx", s"$dir@$stamp@noise2")
-        commitCachedIndex(idx, "_GRAFT_AHASH_PARAMS",
-          d => scala.util.Try(graft.ext.BandedHashIndex.readBands(
-            s, d, graft.ext.BandedHashIndex.AhParamsFile)).isSuccess) { staging =>
+        val idx = PersistedIndex.buildOnce(s, "ahidx",
+            s"$dir@$stamp@noise2") { staging =>
           Multimodal.buildAudioHashIndex(
             Multimodal.plantedNoisePcmMedia(
               docs.filter(col("doc_id") < 300), "doc_id"), staging)
@@ -2550,7 +2477,15 @@ object ExtQueries {
         |       END AS dup_span_frac
         |FROM probe p LEFT JOIN c USING (doc_id)""".stripMargin) {
       (s, dir) =>
-        TextAnalysis.gramIndexSpanCoverage(s, cachedGramIndex(s, dir),
+        // the gram index over the BASE slice (doc_id % 4 != 0), string
+        // keys so the DuckDB oracle computes the identical membership
+        val idx = PersistedIndex.buildOnce(s, "gramidx",
+            s"$dir@${Tables.fixtureStamp(dir, "documents")}") { d =>
+          TextAnalysis.buildGramIndex(
+            Tables.documents(s, dir).filter(col("doc_id") % 4 =!= 0),
+            "doc_id", "text", d, hashedKeys = false)
+        }
+        TextAnalysis.gramIndexSpanCoverage(s, idx,
           Tables.documents(s, dir).filter(col("doc_id") % 4 === 0),
           "doc_id", "text")
     },
@@ -2744,12 +2679,9 @@ object ExtQueries {
           .select((col("doc_id") + 200000).as("doc_id"),
             regexp_replace(col("text"), " ", "  ").as("text"))
         val stamp = Tables.fixtureStamp(dir, "documents")
-        val idx = idxCacheDir("graft-mhidx", s"$dir@$stamp")
-        // build + append land in a staging dir and move into place by
-        // ONE rename: an interruption between the two calls must not
-        // leave a committed-looking index that silently lacks the
-        // appended [300,400) slice on every later (skipping) run
-        commitCachedIndex(idx, "_GRAFT_MH_PARAMS") { staging =>
+        // build + append commit together: an interrupted pair never
+        // leaves a committed-looking index missing [300,400)
+        val idx = PersistedIndex.buildOnce(s, "mhidx", s"$dir@$stamp") { staging =>
           Dedup.buildMinhashIndex(docs.filter(col("doc_id") < 300),
             "doc_id", "text", staging)
           Dedup.minhashIndexAppend(s, staging,

@@ -119,8 +119,8 @@ class PageRankSpec extends SparkSpec {
     // checkpoints; all but the final rank must be unpersisted by return.
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.size
-    val firedBefore = PageRank.releasesFired.get
-    val missedBefore = PageRank.releasesMissed.get
+    val firedBefore = graft.core.Checkpoints.releasesFired.get
+    val missedBefore = graft.core.Checkpoints.releasesMissed.get
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L), (4L, 1L))
     PageRank.pageRank(edges.toDF("src", "dst"), "src", "dst",
       iterations = 5, danglingMass = true).collect()
@@ -130,9 +130,9 @@ class PageRankSpec extends SparkSpec {
         s"got $before -> $after")
     // and the instrumented counters (what Bench prints as gate evidence)
     // must agree: every release attempt matched the LogicalRDD shape
-    assert(PageRank.releasesFired.get > firedBefore,
+    assert(graft.core.Checkpoints.releasesFired.get > firedBefore,
       "release counter did not advance — the unpersist never fired")
-    assert(PageRank.releasesMissed.get == missedBefore,
+    assert(graft.core.Checkpoints.releasesMissed.get == missedBefore,
       "release fell through the LogicalRDD match — blocks now free at GC")
   }
 }

@@ -115,8 +115,8 @@ class QuantizeSpec extends SparkSpec {
     // both are the mean reconstruction error over the same stored vectors
     val dir = tmpDir("pq-stamp") + "/idx"
     Quantize.buildPqIndex(e, "vec_id", "embedding", dir, m = 16, k = 16)
-    val builtStats = graft.ops.RangeLayout.readSidecar(spark, dir,
-      Quantize.PqStatsFile).get
+    val builtStats = graft.core.PersistedIndex.read(spark, dir,
+      graft.core.PersistedIndex.PqStats).text
     assert(new java.io.File(dir, Quantize.PqParamsFile).delete())
     assert(new java.io.File(dir, Quantize.PqStatsFile).delete())
     // false (m, k) claims refuse against the persisted codebooks
@@ -124,8 +124,8 @@ class QuantizeSpec extends SparkSpec {
       Quantize.stampExistingPqIndex(spark, dir, "embedding", m = 8, k = 16))
     assert(exClaim.getMessage.contains("false provenance"), exClaim.getMessage)
     Quantize.stampExistingPqIndex(spark, dir, "embedding", m = 16, k = 16)
-    val stamped = graft.ops.RangeLayout.readSidecar(spark, dir,
-      Quantize.PqStatsFile).get
+    val stamped = graft.core.PersistedIndex.read(spark, dir,
+      graft.core.PersistedIndex.PqStats).text
     // the baseline is re-derived from the same stored vectors, but the
     // index parquet partitions differently than the build corpus, so the
     // double avg's combine order (hence last ulps) may differ — compare

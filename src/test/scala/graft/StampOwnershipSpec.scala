@@ -1,0 +1,50 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Ownership guard: the persisted-index stamp and commit rules live in
+  * `graft.core.PersistedIndex` only. A `_GRAFT_*` sidecar name written
+  * as a literal, or a direct SidecarIO call, anywhere else in the main
+  * sources is a second copy of those rules and fails here. SidecarIO.scala
+  * is the sidecar primitive itself. The graft.sync exclusions are not
+  * index stamps: AggMaintenance's `_GRAFT_AGG_*` rollup sidecars and
+  * DestState's sync destination record keep their own SidecarIO calls. */
+class StampOwnershipSpec extends AnyFunSuite {
+
+  private val root = new java.io.File(sys.props("user.dir"), "src/main/scala")
+  private val owner = "graft/core/PersistedIndex.scala"
+  private val allowed = Set(owner, "graft/core/SidecarIO.scala",
+    "graft/sync/AggMaintenance.scala", "graft/sync/DestState.scala")
+
+  private val sidecarName = "\"_GRAFT_[A-Z0-9_]+\"".r
+  private val sidecarCall = "\\bSidecarIO\\.".r
+
+  private def sources(dir: java.io.File): Seq[java.io.File] =
+    Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
+      if (f.isDirectory) sources(f)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    }
+
+  /** Code lines of a source: comment and scaladoc lines are skipped. */
+  private def codeLines(f: java.io.File): Seq[(String, Int)] =
+    scala.io.Source.fromFile(f, "UTF-8").getLines().toSeq.zipWithIndex
+      .filterNot { case (l, _) =>
+        val t = l.trim
+        t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
+      }
+
+  test("index stamp names and SidecarIO calls appear only in PersistedIndex") {
+    assert(root.isDirectory, s"main sources not found at $root")
+    val files = sources(root)
+    assert(files.exists(_.getPath.endsWith(owner)), s"$owner is missing")
+    val offenders = for {
+      f <- files
+      rel = root.toPath.relativize(f.toPath).toString.replace('\\', '/')
+      if !allowed.contains(rel)
+      (line, i) <- codeLines(f)
+      if sidecarName.findFirstIn(line).isDefined ||
+        sidecarCall.findFirstIn(line).isDefined
+    } yield s"$rel:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+}
