@@ -237,9 +237,10 @@ private[graft] object PersistedIndex {
     * committer that loses the rename drops its own staging and returns
     * the winner's equivalent index. A build that throws leaves neither a
     * staging directory nor anything at the cache directory. An
-    * uncommitted directory there is moved aside and dropped before the
-    * rename (it can only come from a store without atomic directory
-    * rename, or from outside this protocol). */
+    * uncommitted directory there (only a store without atomic directory
+    * rename, or something outside this protocol, leaves one) is moved
+    * aside and dropped before the rename; should a racing committer's
+    * build have landed in between, the moved copy is left, not deleted. */
   def buildOnce(spark: SparkSession, kind: String, key: String)
                (build: String => Unit): String = {
     val dir = cacheDir(kind, key)

@@ -67,6 +67,7 @@ class IdxCacheSpec extends SparkSpec {
     assert(builds == 2)
     assert(new java.io.File(idx, "_GRAFT_COMMITTED").exists())
     assert(siblings(idx) == Set(new java.io.File(idx).getName))
+    graft.core.Tables.deleteRecursively(new java.io.File(idx))
   }
 
   test("buildOnce: a build that throws leaves no committed directory and no debris") {
@@ -119,5 +120,6 @@ class IdxCacheSpec extends SparkSpec {
         query, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toList
     assert(probed == brute)
+    graft.core.Tables.deleteRecursively(new java.io.File(idx))
   }
 }
