@@ -53,6 +53,26 @@ object Tables {
     f.delete(); ()
   }
 
+  /** A fresh local temp dir that one JVM-exit hook deletes: for harness
+    * state no later JVM reads (the replay twins' rollups and checkpoints,
+    * e2s/e2v's appended indexes), which a long-lived JVM running the gate
+    * repeatedly would otherwise pile up under the temp dir. Failures are
+    * swallowed: cleanup must never mask the run's own exit status. */
+  def scratchDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    scratchDirs.add(d)
+    d.toString
+  }
+  private lazy val scratchDirs = {
+    val q = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      q.forEach { f =>
+        try deleteRecursively(f)
+        catch { case _: Exception => () }
+      }))
+    q
+  }
+
   /** Cheap content stamp for one fixture table under `sfDir` — the max
     * lastModified + total byte size + file count of `name.parquet`
     * (file or directory). Process-lifetime caches keyed by fixture dir

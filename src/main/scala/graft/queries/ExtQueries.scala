@@ -255,11 +255,12 @@ object ExtQueries {
   /** e2s's build-then-append index, once per fixture dir: IVF built on the
     * vec_id < 400 slice, the held-out rest appended through the no-refit
     * path. Cached so repeated gate/bench runs measure the steady-state
-    * probe, not a fresh KMeans fit per run (the ensure* pattern; an
-    * explicit temp dir because appending into the shared content-addressed
-    * cache would mutate the index e2d/e2g probe). Keyed by dir plus the
-    * fixture's content stamp so an embeddings regeneration under the same
-    * dir within one JVM rebuilds instead of probing a stale index. */
+    * probe, not a fresh KMeans fit per run (the ensure* pattern; a
+    * JVM-exit-swept scratch dir because appending into the shared
+    * content-addressed cache would mutate the index e2d/e2g probe). Keyed
+    * by dir plus the fixture's content stamp so an embeddings regeneration
+    * under the same dir within one JVM rebuilds instead of probing a stale
+    * index. */
   private val appendedIvfCache =
     new java.util.concurrent.ConcurrentHashMap[
       String, (String, graft.ext.Similarity.IvfAppendStats)]()
@@ -269,8 +270,7 @@ object ExtQueries {
       : (String, graft.ext.Similarity.IvfAppendStats) =
     appendedIvfCache.computeIfAbsent(
       s"$dir@${Tables.fixtureStamp(dir, "embeddings")}", { _ =>
-      val idx = java.nio.file.Files.createTempDirectory("e2s-ivf")
-        .toString + "/idx"
+      val idx = Tables.scratchDir("e2s-ivf") + "/idx"
       Similarity.buildIvfIndex(emb.filter(col("vec_id") < 400),
         "vec_id", "embedding", idx)
       val stats = Similarity.ivfIndexAppend(s, idx,
@@ -281,7 +281,7 @@ object ExtQueries {
   /** e2v's build-then-append PQ index, once per fixture dir: codebooks
     * fit on the vec_id < 400 slice, the held-out rest appended through
     * the frozen-codebook no-refit path (the appendedIvfIndex protocol —
-    * an explicit temp dir so the append never mutates a shared cache;
+    * a scratch dir so the append never mutates a shared cache;
     * keyed by the fixture content stamp). */
   private val appendedPqCache =
     new java.util.concurrent.ConcurrentHashMap[
@@ -292,8 +292,7 @@ object ExtQueries {
       : (String, graft.ext.Quantize.PqAppendStats) =
     appendedPqCache.computeIfAbsent(
       s"$dir@${Tables.fixtureStamp(dir, "embeddings")}", { _ =>
-      val idx = java.nio.file.Files.createTempDirectory("e2v-pq")
-        .toString + "/idx"
+      val idx = Tables.scratchDir("e2v-pq") + "/idx"
       Quantize.buildPqIndex(emb.filter(col("vec_id") < 400),
         "vec_id", "embedding", idx)
       val stats = Quantize.pqIndexAppend(s, idx,

@@ -86,30 +86,6 @@ object StreamingReplayQueries {
     out.result()
   }
 
-  /** JVM-exit-swept scratch dirs for the replay twins. Each twin needs a
-    * FRESH mutable dir per invocation (the fold is the behavior under
-    * test — stamp-keyed reuse would skip it, and rollup/checkpoint state
-    * must not leak between iterations), so per-call createTempDirectory
-    * is correct — but a long-lived JVM running the gate repeatedly then
-    * accumulates fixture-sized copies under /tmp (the cachedGramIndex
-    * advice, twin flavor). One shutdown hook sweeps everything this
-    * module created. Failures are swallowed: cleanup must never mask the
-    * run's own exit status. */
-  private val scratchDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      scratchDirs.forEach { f =>
-        try Tables.deleteRecursively(f)
-        catch { case _: Exception => () }
-      }))
-  }
-  private def scratchDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
-    scratchDirs.add(d)
-    d.toString
-  }
-
   /** Run `body` with a reduced shuffle-partition count, restoring the
     * session's setting after. Stateful streaming ops commit one state-store
     * instance PER shuffle partition PER micro-batch; a gate replay with a
@@ -144,7 +120,7 @@ object StreamingReplayQueries {
       val rows = collectedEvents(s, dir)
         .map(e => RowImage(key = e.eventId, userId = e.userId,
           status = e.eventType, amount = e.value, ts = e.tsUs))
-      val dest = scratchDir("t6-replay") + "/balances"
+      val dest = Tables.scratchDir("t6-replay") + "/balances"
       withShufflePartitions(s, 4) {
         val mem = MemoryStream[RowImage]
         val q = IncrementalBalance.run(mem.toDS(), dest)
@@ -447,8 +423,8 @@ object StreamingReplayQueries {
       import s.implicits._
       import graft.sync.AggMaintenance
       val safeChunks = tsBoundaryChunks(collectedEvents(s, dir))
-      val rollup = scratchDir("t13-replay") + "/rollup"
-      val ckpt = scratchDir("t13-ckpt")
+      val rollup = Tables.scratchDir("t13-replay") + "/rollup"
+      val ckpt = Tables.scratchDir("t13-ckpt")
       withShufflePartitions(s, 4) {
         val mem = MemoryStream[Ev]
         val fold: (org.apache.spark.sql.Dataset[Ev], Long) => Unit =
@@ -501,8 +477,8 @@ object StreamingReplayQueries {
       import s.implicits._
       import graft.sync.AggMaintenance
       val safeChunks = tsBoundaryChunks(collectedEvents(s, dir))
-      val rollup = scratchDir("t14-replay") + "/rollup"
-      val ckpt = scratchDir("t14-ckpt")
+      val rollup = Tables.scratchDir("t14-replay") + "/rollup"
+      val ckpt = Tables.scratchDir("t14-ckpt")
       withShufflePartitions(s, 4) {
         val mem = MemoryStream[Ev]
         val fold: (org.apache.spark.sql.Dataset[Ev], Long) => Unit =
@@ -574,8 +550,8 @@ object StreamingReplayQueries {
       import s.implicits._
       import graft.sync.AggMaintenance
       val safeChunks = tsBoundaryChunks(collectedEvents(s, dir))
-      val rollup = scratchDir("t15-replay") + "/rollup"
-      val ckpt = scratchDir("t15-ckpt")
+      val rollup = Tables.scratchDir("t15-replay") + "/rollup"
+      val ckpt = Tables.scratchDir("t15-ckpt")
       withShufflePartitions(s, 4) {
         val mem = MemoryStream[Ev]
         val fold: (org.apache.spark.sql.Dataset[Ev], Long) => Unit =
@@ -673,8 +649,8 @@ object StreamingReplayQueries {
         tsUs = e.tsUs + span, eventType = "moved", value = e.value * 2))
       val rows = (base ++ updated).sortBy(e => (e.tsUs, e.eventId))
       val safeChunks = tsBoundaryChunks(rows)
-      val rollup = scratchDir("t16-replay") + "/rollup"
-      val ckpt = scratchDir("t16-ckpt")
+      val rollup = Tables.scratchDir("t16-replay") + "/rollup"
+      val ckpt = Tables.scratchDir("t16-ckpt")
       withShufflePartitions(s, 4) {
         val mem = MemoryStream[Ev]
         val fold: (org.apache.spark.sql.Dataset[Ev], Long) => Unit =
@@ -768,7 +744,7 @@ object StreamingReplayQueries {
       // fresh MUTABLE index per invocation: appends change it, and the
       // probe-before-append order means a reused index from a prior
       // iteration would already contain every generation's grams
-      val work = scratchDir("t17-gramidx")
+      val work = Tables.scratchDir("t17-gramidx")
       val idxDir = work + "/idx"
       val covDir = work + "/coverage"
       // 8 buckets, not the 64 default: the default sizes bucket files for
@@ -804,7 +780,7 @@ object StreamingReplayQueries {
               }
             } finally { b.unpersist(); () }
           }
-        val ckpt = scratchDir("t17-ckpt")
+        val ckpt = Tables.scratchDir("t17-ckpt")
         val q = mem.toDS().writeStream
           .option("checkpointLocation", ckpt)
           .foreachBatch(fold).start()
@@ -857,7 +833,7 @@ object StreamingReplayQueries {
       // fresh MUTABLE index per invocation (the t17 rule): the streamed
       // appends ARE the behavior under test; a stamp-keyed reuse would
       // skip them on every warm run and the twin would gate nothing
-      val idx = scratchDir("t18-mhidx") + "/idx"
+      val idx = Tables.scratchDir("t18-mhidx") + "/idx"
       Dedup.buildMinhashIndex(docs.filter(col("doc_id") < 300),
         "doc_id", "text", idx)
       val arrivals = docs
@@ -877,7 +853,7 @@ object StreamingReplayQueries {
               }
             } finally { b.unpersist(); () }
           }
-        val ckpt = scratchDir("t18-ckpt")
+        val ckpt = Tables.scratchDir("t18-ckpt")
         val q = mem.toDS().writeStream
           .option("checkpointLocation", ckpt)
           .foreachBatch(fold).start()
@@ -920,7 +896,7 @@ object StreamingReplayQueries {
         val docs = Tables.documents(s, dir).select("doc_id")
         // fresh MUTABLE index per invocation (the t18 rule): the streamed
         // appends ARE the behavior under test
-        val idx = scratchDir("t20-dhidx") + "/idx"
+        val idx = Tables.scratchDir("t20-dhidx") + "/idx"
         Multimodal.buildDHashIndex(
           Multimodal.plantedNoisePngMedia(
             docs.filter(col("doc_id") < 300), "doc_id"), idx)
@@ -943,7 +919,7 @@ object StreamingReplayQueries {
                 }
               } finally { ids.unpersist(); () }
             }
-          val ckpt = scratchDir("t20-ckpt")
+          val ckpt = Tables.scratchDir("t20-ckpt")
           val q = mem.toDS().writeStream
             .option("checkpointLocation", ckpt)
             .foreachBatch(fold).start()
@@ -982,7 +958,7 @@ object StreamingReplayQueries {
         import graft.ext.Multimodal
         val docs = Tables.documents(s, dir).select("doc_id")
         // fresh MUTABLE index per invocation (the t18 rule)
-        val idx = scratchDir("t21-ahidx") + "/idx"
+        val idx = Tables.scratchDir("t21-ahidx") + "/idx"
         Multimodal.buildAudioHashIndex(
           Multimodal.plantedNoisePcmMedia(
             docs.filter(col("doc_id") < 300), "doc_id"), idx)
@@ -1002,7 +978,7 @@ object StreamingReplayQueries {
                 }
               } finally { ids.unpersist(); () }
             }
-          val ckpt = scratchDir("t21-ckpt")
+          val ckpt = Tables.scratchDir("t21-ckpt")
           val q = mem.toDS().writeStream
             .option("checkpointLocation", ckpt)
             .foreachBatch(fold).start()
@@ -1075,7 +1051,7 @@ object StreamingReplayQueries {
       // fresh MUTABLE dest per invocation (the t18 rule: the fold IS the
       // behavior under test; mid-states differ between a warm re-fold
       // and a cold one)
-      val dest = scratchDir("t19-replay") + "/dest"
+      val dest = Tables.scratchDir("t19-replay") + "/dest"
       withShufflePartitions(s, 4) {
         val mem = MemoryStream[
           (Long, Long, Option[Long], Option[String], Option[Double], Boolean)]
@@ -1092,7 +1068,7 @@ object StreamingReplayQueries {
             }
           } finally { b.unpersist(); () }
         }
-        val ckpt = scratchDir("t19-ckpt")
+        val ckpt = Tables.scratchDir("t19-ckpt")
         val q = mem.toDS().writeStream
           .option("checkpointLocation", ckpt)
           .foreachBatch(fold).start()

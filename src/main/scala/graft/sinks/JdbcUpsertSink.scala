@@ -266,8 +266,8 @@ object JdbcUpsertSink {
           // leaves the stale row VISIBLE rather than resurrected-then-lost,
           // and the restart-marker replay converges either way
           if (tally.getLong(2) > 0L)
-            deleteByKeys(batch.filter(tombFlag), url, props, table, keyCols,
-              batchSize)
+            deleteKeys(batch.filter(tombFlag).select(keyCols.map(col): _*),
+              url, props, table, keyCols, batchSize)
           tally.getLong(0)
         } finally { batch.unpersist(); () }
     }
@@ -480,10 +480,18 @@ object JdbcUpsertSink {
                    batchSize: Int = MaxBatchSize): Long = {
     validateBatchSize(batchSize)
     require(keyCols.nonEmpty, "deleteByKeys needs at least one key column")
-    val keyed = orphans.select(keyCols.map(col): _*).distinct()
-      .repartition(keyCols.map(col): _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val sc = orphans.sparkSession.sparkContext
+    deleteKeys(orphans.select(keyCols.map(col): _*).distinct()
+      .repartition(keyCols.map(col): _*), url, props, table, keyCols,
+      batchSize)
+  }
+
+  /** [[deleteByKeys]] over `keyed`: key columns only, each key in one
+    * row of one partition already (a [[normalize]]d batch is), so one
+    * job deletes them and its tasks return the submitted count. */
+  private def deleteKeys(keyed: DataFrame, url: String, props: Properties,
+                         table: String, keyCols: Seq[String],
+                         batchSize: Int): Long = {
+    val sc = keyed.sparkSession.sparkContext
     val applied = sc.longAccumulator("reconcile.deleted")
     val noInfo = sc.longAccumulator("reconcile.deleteNoInfo")
     // Accumulator-based row attribution is only trustworthy when every
@@ -496,32 +504,29 @@ object JdbcUpsertSink {
     val retried = sc.longAccumulator("reconcile.deleteRetriedTasks")
     val speculative = sc.getConf.getBoolean("spark.speculation",
       defaultValue = false)
-    try {
-      val n = keyed.count()
-      val where = keyCols.map(k => s"$k = ?").mkString(" AND ")
-      val sql = s"DELETE FROM $table WHERE $where"
-      runPerPartition(keyed, url, props) { (conn, rows) =>
-        val tc = org.apache.spark.TaskContext.get()
-        if (tc != null && tc.attemptNumber() > 0) retried.add(1L)
-        val stmt = conn.prepareStatement(sql)
-        def flush(): Unit = stmt.executeBatch().foreach {
-          case java.sql.Statement.SUCCESS_NO_INFO => noInfo.add(1L)
-          case c if c > 0                         => applied.add(c.toLong)
-          case _                                  => () // 0 = key already gone
-        }
-        try {
-          var pending = 0
-          rows.foreach { row =>
-            bindRow(stmt, row, keyCols.indices)
-            stmt.addBatch()
-            pending += 1
-            if (pending >= batchSize) { flush(); pending = 0 }
-          }
-          if (pending > 0) flush()
-        } finally stmt.close()
+    val where = keyCols.map(k => s"$k = ?").mkString(" AND ")
+    val sql = s"DELETE FROM $table WHERE $where"
+    val submitted = runPerPartition(keyed, url, props) { (conn, rows) =>
+      val tc = org.apache.spark.TaskContext.get()
+      if (tc != null && tc.attemptNumber() > 0) retried.add(1L)
+      val stmt = conn.prepareStatement(sql)
+      def flush(): Unit = stmt.executeBatch().foreach {
+        case java.sql.Statement.SUCCESS_NO_INFO => noInfo.add(1L)
+        case c if c > 0                         => applied.add(c.toLong)
+        case _                                  => () // 0 = key already gone
       }
-      if (noInfo.value > 0L || retried.value > 0L || speculative) n
-      else applied.value
-    } finally { keyed.unpersist(); () }
+      try {
+        var pending = 0
+        rows.foreach { row =>
+          bindRow(stmt, row, keyCols.indices)
+          stmt.addBatch()
+          pending += 1
+          if (pending >= batchSize) { flush(); pending = 0 }
+        }
+        if (pending > 0) flush()
+      } finally stmt.close()
+    }
+    if (noInfo.value > 0L || retried.value > 0L || speculative) submitted
+    else applied.value
   }
 }

@@ -264,9 +264,9 @@ object AggMaintenance {
       (rootDf.toSeq ++ bakKids.map(p => spark.read.parquet(p.toString)))
         .reduceOption(_ unionByName _).getOrElse(emptyFromSchema())
     }
-    else if (ParquetMergeSink.hasData(fs, st.root)) spark.read.parquet(targetDir)
+    else if (ParquetMergeSink.hasData(fs, st.root)) st.flat(st.root)
     else if (st.inSwapWindow && ParquetMergeSink.hasData(fs, st.bak))
-      spark.read.parquet(st.bak.toString)
+      st.flat(st.bak)
     else emptyFromSchema()
   }
 
@@ -717,7 +717,7 @@ object AggMaintenance {
               Seq(st.stateRoot.toString) else Nil))
           val fresh = partial.getOrElse(keyed.get.delta(state.get))
           val m = if (!exists) fresh
-            else fold(spark.read.parquet(st.dir), fresh, s)
+            else fold(st.flat(st.root), fresh, s)
           // a keyed group whose last live key left reads cnt=0: gone
           (if (s.keyed) m.filter(col("cnt") > 0L) else m,
             keyed.map(_.newState(state.get)))
@@ -1001,6 +1001,16 @@ object AggMaintenance {
     def inSwapWindow: Boolean =
       !SidecarIO.exists(fs, new Path(root, WmFile)) &&
         SidecarIO.exists(fs, new Path(bak, WmFile))
+
+    /** The whole-directory rollup at `at` (the root or its backup), read
+      * with the schema its data was written with, from the schema sidecar
+      * beside it: no inference job. Inferred only without the sidecar. */
+    def flat(at: Path): DataFrame =
+      readText(fs, new Path(at, SchemaFile))
+        .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
+          .asInstanceOf[StructType])
+        .fold(spark.read.parquet(at.toString))(
+          spark.read.schema(_).parquet(at.toString))
 
     /** The contiguity rule: a replay (`hi` ≤ stored) is a reported no-op
       * (Left), a gap refuses typed (skipping [stored, lo) would undercount

@@ -19,6 +19,9 @@ import org.apache.spark.sql.functions.col
   * written by exactly one task → one file per partition (granularity note:
   * a single partition larger than `targetBytes` still compacts to one
   * file — split hot partitions upstream via the merge key bucketing).
+  * The rewrite keeps the rows and the schema a read infers, so a sync
+  * destination's state record ([[DestState]]: MAX and schema) stays true
+  * and is left as it is.
   */
 object Compact {
 

@@ -3,6 +3,7 @@ package graft.sync
 import java.sql.{Connection, ResultSet, SQLException, Types}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.core.SidecarIO
 import graft.sinks.JdbcUpsertSink
@@ -34,10 +35,40 @@ import graft.sinks.JdbcUpsertSink
   * @param params    the frozen parameterisation: `tomb=<col>` for a
   *                  tombstoned destination, None for a blind one (see
   *                  [[DestState.freeze]]).
+  * @param destMax   the destination's committed MAX(watermark), canonical
+  *                  (core.Watermark); None = unknown. Parquet only: it
+  *                  spares T1 the scan that would relearn it every poll.
+  * @param schema    the destination schema as a read returns it (every
+  *                  field nullable); None = unknown. Parquet only: T1
+  *                  reads with it instead of an inference job.
+  *
+  * `destMax` and `schema` say what the destination's rows are, so only
+  * the writes that know them exactly record them. A whole-directory write
+  * (the cold write, the unpartitioned rewrite) observes MAX beside the
+  * count its write job already takes, and writes the schema it wrote. A
+  * partitioned merge without deletes raises a known MAX to the observed
+  * MAX of the partitions it rewrote: its upserts only replace a key's row
+  * with a later one. Anything that may lower MAX or change the schema
+  * clears the field BEFORE its commit starts (a partitioned merge that
+  * deletes, an unpartitioned rewrite that deletes, `Reconcile`); Compact
+  * rewrites the same rows and leaves both. A missing field is relearned
+  * by T1's scan or inference, which records it.
+  *
+  * No stale-high MAX: every write that could leave the rows below a
+  * recorded MAX has cleared it before its commit, and the raises are
+  * bounded by rows the destination holds. A crash between a commit and
+  * its record write leaves the field stale-LOW, which is safe: the
+  * extract's lower bound is inclusive and the merge idempotent, so the
+  * next poll re-reads the committed batch, proves it applied and raises
+  * the field to the batch's live MAX. Like the merge, the record assumes
+  * one writer per destination (ROADMAP D8): a foreign write into the
+  * directory makes both fields stale.
   *
   * Every state change is one write of the record, through [[DestState.Store]]. */
 final case class DestState(restartWm: Option[Long], appliedWm: Option[Long],
-                           params: Option[String]) {
+                           params: Option[String],
+                           destMax: Option[Long] = None,
+                           schema: Option[StructType] = None) {
 
   /** T1's restart point, given the destination's MAX(watermark): the
     * higher of dest MAX and the applied bound (both promise "everything
@@ -52,6 +83,11 @@ final case class DestState(restartWm: Option[Long], appliedWm: Option[Long],
     * cleared, applied bound advanced but never regressed. */
   private def committed(hi: Option[Long]): DestState =
     copy(restartWm = None, appliedWm = (appliedWm ++ hi).maxOption)
+
+  /** A known MAX raised to `m`, the MAX of rows the destination now
+    * holds; an unknown one stays unknown. */
+  private[sync] def raised(m: Option[Long]): DestState =
+    copy(destMax = destMax.map(d => (m.toSeq :+ d).max))
 }
 
 object DestState {
@@ -100,8 +136,9 @@ object DestState {
 
   /** One destination's record and the lifecycle over it: [[open]] once
     * per run, then [[markRestart]] before a non-atomic commit and
-    * [[commit]] after a batch has landed. A change that leaves the record
-    * as it is writes nothing, so an idle poll costs one read. */
+    * [[commit]] after a batch has landed; [[describe]] changes only what
+    * the record says about the destination's rows. A change that leaves
+    * the record as it is writes nothing, so an idle poll costs one read. */
   private[graft] abstract class Store {
     protected def where: String
     protected def read(): Option[DestState]
@@ -141,7 +178,7 @@ object DestState {
       val found = current(populated)
       val fresh = DestState(None, None,
         freeze(found.params, tomb, populated, where))
-      val want = if (found == fresh || !populated) fresh else found
+      val want = if (populated) found else fresh
       stored match {
         case None =>
           if (!create(want)) {
@@ -159,9 +196,17 @@ object DestState {
 
     def markRestart(wm: Long): Unit = set(_.copy(restartWm = Some(wm)))
 
-    /** Clear the marker and advance the applied bound to `hi`, in one
-      * write. */
-    def commit(hi: Option[Long]): Unit = set(_.committed(hi))
+    /** Clear the marker, advance the applied bound to `hi` and record
+      * what the commit left in the destination (`seen`: its MAX and
+      * schema), in one write. */
+    def commit(hi: Option[Long],
+               seen: DestState => DestState = identity): Unit =
+      set(s => seen(s.committed(hi)))
+
+    /** Change only the destination's MAX and schema; the marker and the
+      * applied bound stay. Without a record there is nothing to change. */
+    def describe(f: DestState => DestState): Unit =
+      if (stored.isDefined) set(f)
 
     private def set(f: DestState => DestState): Unit = {
       val from = stored.getOrElse(
@@ -180,16 +225,25 @@ object DestState {
     private def beside(suffix: String) = new Path(dir.stripSuffix("/") + suffix)
     private val path = beside(".__merge_state")
 
+    /** Five lines, `restart=`, `applied=`, `params=`, `max=`, `schema=`
+      * (Catalyst JSON, one line); an empty value is None. A record from
+      * before the last two fields has three lines and reads them as
+      * None. */
     protected def read(): Option[DestState] =
       SidecarIO.read(fs, path).map { s =>
-        s.split("\n", 3) match {
-          case Array(r, a, p) if r.startsWith("restart=") &&
-              a.startsWith("applied=") && p.startsWith("params=") =>
-            DestState(r.drop(8).toLongOption, a.drop(8).toLongOption,
-              Some(p.drop(7)).filter(_.nonEmpty))
-          case _ =>
-            throw new java.io.IOException(s"unreadable sync state record $path")
-        }
+        def field(line: String, name: String): Option[String] =
+          if (line.startsWith(s"$name=")) Some(line.drop(name.length + 1))
+          else throw new java.io.IOException(s"unreadable sync state record $path")
+        val lines = s.split("\n", 5)
+        if (lines.length != 3 && lines.length != 5)
+          throw new java.io.IOException(s"unreadable sync state record $path")
+        val Seq(r, a, p, m, sc) = lines.toSeq.zip(
+          Seq("restart", "applied", "params", "max", "schema"))
+          .map { case (l, n) => field(l, n).filter(_.nonEmpty) }
+          .padTo(5, None)
+        DestState(r.flatMap(_.toLongOption), a.flatMap(_.toLongOption), p,
+          m.flatMap(_.toLongOption),
+          sc.map(DataType.fromJson(_).asInstanceOf[StructType]))
       }
 
     protected def create(s: DestState): Boolean = { update(s, s); true }
@@ -198,7 +252,9 @@ object DestState {
       SidecarIO.write(fs, path,
         s"restart=${to.restartWm.getOrElse("")}\n" +
           s"applied=${to.appliedWm.getOrElse("")}\n" +
-          s"params=${to.params.getOrElse("")}")
+          s"params=${to.params.getOrElse("")}\n" +
+          s"max=${to.destMax.getOrElse("")}\n" +
+          s"schema=${to.schema.fold("")(_.json)}")
 
     // the three sidecars the record replaces: pending marker, applied
     // bound, params stamp

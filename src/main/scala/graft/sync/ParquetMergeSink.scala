@@ -3,7 +3,9 @@ package graft.sync
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.graftshim.SchemaAccess.asNullable
 
 /** Keyed upsert ("MERGE") into a parquet table directory — the file-format
   * twin of the reference's `INSERT ... ON CONFLICT (pk) DO UPDATE` sink
@@ -76,7 +78,8 @@ object ParquetMergeSink {
     *                  against the batch's row count as the total.
     * @param state     the destination's state record as the caller
     *                  already read it (the sync lifecycle's T1), reused
-    *                  instead of a second read.
+    *                  instead of a second read. The merge keeps its MAX
+    *                  and schema fields by the rule on [[DestState]].
     */
   def merge(spark: SparkSession, targetDir: String, updates: DataFrame,
             keyCols: Seq[String], orderCol: String,
@@ -201,6 +204,18 @@ object ParquetMergeSink {
         store.commit(None)
         MergeResult(0L, 0L)
       }
+      // Before a commit starts, the record forgets what the commit may
+      // contradict (DestState: never a stale-high MAX or a stale schema):
+      // MAX when the batch deletes, the schema when the written data
+      // columns (all but the partition column, whose type a read infers
+      // from directory names) differ from it
+      def retract(written: StructType, partCol: Option[String]): Unit = {
+        def data(t: StructType) = t.fields.toSeq
+          .filterNot(f => partCol.exists(_.equalsIgnoreCase(f.name)))
+        store.describe(s => s.copy(
+          destMax = s.destMax.filter(_ => delCount == 0L),
+          schema = s.schema.filter(r => data(r) == data(asNullable(written)))))
+      }
       if (!exists) {
         val updateRows = knownRows.getOrElse(updates.count())
         // S3 create-dest-from-source-schema (session.py:194-197): still dedup
@@ -227,8 +242,8 @@ object ParquetMergeSink {
         val tmp = targetDir.stripSuffix("/") + ".__merge_tmp"
         if (fs.exists(new Path(tmp))) fs.delete(new Path(tmp), true)
         // an all-deletes cold batch legitimately stages ZERO rows
-        val written =
-          withProgress(updateRows)(write(deduped, tmp, uPart, Some(uOrder)))
+        val (written, writtenMax) = withProgress(updateRows)(
+          write(deduped, tmp, uPart, uOrder, sorted = true))
         val dst = new Path(targetDir)
         // hasData said false, so anything here is crashed-first-write debris
         if (fs.exists(dst)) fs.delete(dst, true)
@@ -238,14 +253,20 @@ object ParquetMergeSink {
         // cold-start deletes of never-synced keys leave no row to carry
         // their watermark — record the batch bound so the next poll's
         // restart point clears the already-applied delete feed
-        if (uTomb.isDefined && delCount > 0L)
-          store.commit(graft.core.Watermark
-            .toMicros(updates.agg(max(col(uOrder))).first().get(0)))
+        val applied =
+          if (uTomb.isDefined && delCount > 0L) graft.core.Watermark
+            .toMicros(updates.agg(max(col(uOrder))).first().get(0))
+          else None
+        // the cold write is the whole destination: its MAX is exact, and
+        // so is its schema, unless a read infers a partition column's type
+        store.commit(applied, _.copy(destMax = writtenMax,
+          schema = Option.when(uPart.isEmpty)(asNullable(deduped.schema))))
         return MergeResult(written, updateRows)
       }
       if (knownRows.contains(0L)) return idle()
 
-      val dest = destination.getOrElse(spark.read.parquet(targetDir))
+      val dest = destination.getOrElse(
+        readDestination(spark, targetDir, store.stored))
       // Schema drift must fail TYPED and loud before any projection: the
       // select-onto-target-columns below would silently DISCARD a column
       // the source gained (every future sync dropping that data), and a
@@ -345,12 +366,19 @@ object ParquetMergeSink {
         // the batch is PROVEN fully applied (no live novelty, no delete
         // with work left) — advancing here is what stops an idle
         // continuous sync from re-extracting the accumulated delete
-        // feed on every poll
-        store.commit(appliedHi)
+        // feed on every poll. Every live batch row has its destination
+        // twin, so their MAX raises a MAX left stale-low by a crash
+        // between an earlier commit and its record write
+        val liveHi =
+          if (graft.core.Watermark.supported(tagged.schema(tOrder).dataType))
+            graft.core.Watermark.toMicros(batch.liveHi)
+          else None
+        store.commit(appliedHi, _.raised(liveHi))
         return MergeResult(0L, updateRows)
       }
 
-      val written = withProgress(updateRows)(partitionByCol match {
+      // (rows written, what the commit leaves in the record)
+      val (written, seen) = withProgress(updateRows)(partitionByCol match {
         case Some(p) =>
           // Bounded rewrite: only target partitions that contain updated keys
           // participate. The partition list is a small driver-side scalar set
@@ -377,7 +405,9 @@ object ParquetMergeSink {
           // deleted) stages ZERO rows, yet its empty write still leaves one
           // schema-bearing part file: the written count, not the listing,
           // says whether the overwrite job and the staged re-read run
-          val stagedRows = write(merged, tmp, None)
+          val (stagedRows, stagedMax) =
+            write(merged, tmp, None, tOrder, sorted = false)
+          retract(merged.schema, Some(tPart))
           // Dynamic partition overwrite commits per partition, NOT atomically
           // across them: a crash can leave some partitions new (advancing
           // MAX(watermark) in dest) while others keep old rows. Record the
@@ -432,7 +462,9 @@ object ParquetMergeSink {
             }
           }
           fs.delete(new Path(tmp), true)
-          stagedRows
+          // without deletes a rewritten partition's rows only move to a
+          // later watermark, so the new MAX is the higher of the two
+          (stagedRows, (_: DestState).raised(stagedMax))
         case None =>
           val merged = dropTombWinners(
             dedupe(withTombFalse(target).unionByName(tagged), tKeys, tOrder))
@@ -442,14 +474,18 @@ object ParquetMergeSink {
           // empty dest reads as "no destination", and the next run's cold
           // re-extract converges).
           val tmp = targetDir.stripSuffix("/") + ".__merge_tmp"
-          val stagedRows = write(merged, tmp, None, Some(tOrder))
+          val (stagedRows, stagedMax) =
+            write(merged, tmp, None, tOrder, sorted = true)
+          retract(merged.schema, None)
           atomicSwap(fs, targetDir, tmp)
-          stagedRows
+          // the rewrite is the whole destination: MAX and schema exact
+          (stagedRows, (_: DestState).copy(destMax = stagedMax,
+            schema = Some(asNullable(merged.schema))))
       })
       // the marker clears with the bound: a surviving marker means a
       // possibly-partial commit, and min(marker) must keep winning over
       // this bound at the next restart
-      store.commit(appliedHi)
+      store.commit(appliedHi, seen)
       MergeResult(written, updateRows)
     } finally if (mustPersist) updates.unpersist()
   }
@@ -559,9 +595,11 @@ object ParquetMergeSink {
   }
 
   /** What one probe pass learns about a batch bound for an existing
-    * destination: its row count, the order column's min/max, and whether
-    * any live row lacks an identical destination twin. */
-  private final case class Probe(rows: Long, lo: Any, hi: Any, novel: Boolean)
+    * destination: its row count, the order column's min/max (and max over
+    * live rows), and whether any live row lacks an identical destination
+    * twin. */
+  private final case class Probe(rows: Long, lo: Any, hi: Any, liveHi: Any,
+                                 novel: Boolean)
 
   /** The merge's one scalar pass over a batch (`tagged`: the batch
     * projected onto the destination's columns) against `dest`, which the
@@ -584,26 +622,35 @@ object ParquetMergeSink {
     val r = tagged
       .select(dataCols.zip(outer).map { case (c, o) => col(c).as(o) } :+
         live.as("__live"): _*)
-      .select(order, (col("__live") && !twin).as("__novel"))
-      .agg(count(lit(1)), min(order), max(order), count_if(col("__novel")))
+      .select(order, col("__live"), (col("__live") && !twin).as("__novel"))
+      .agg(count(lit(1)), min(order), max(order),
+        max(when(col("__live"), order)), count_if(col("__novel")))
       .first()
-    Probe(r.getLong(0), r.get(1), r.get(2), r.getLong(3) > 0L)
+    Probe(r.getLong(0), r.get(1), r.get(2), r.get(3), r.getLong(4) > 0L)
   }
 
-  /** Write with the BRIN-analog layout (SURVEY §4.1): rows sorted WITHIN
-    * partitions by the watermark column, so parquet row-group min/max
-    * stats stay tight and T1 watermark reads / S1 range scans skip row
-    * groups — the storage-side twin of the reference's BRIN advisory. No
-    * global sort (that would be a range shuffle); only the free in-task
-    * ordering of data the merge already holds. Returns the rows written. */
+  /** Write with the BRIN-analog layout (SURVEY §4.1) when `sorted`: rows
+    * sorted WITHIN partitions by the watermark column, so parquet
+    * row-group min/max stats stay tight and T1 watermark reads / S1 range
+    * scans skip row groups — the storage-side twin of the reference's BRIN
+    * advisory. No global sort (that would be a range shuffle); only the
+    * free in-task ordering of data the merge already holds. Returns the
+    * rows written and their MAX(`orderCol`) ([[observedWrite]]). */
   private def write(df: DataFrame, dir: String, partitionByCol: Option[String],
-                    sortCol: Option[String] = None): Long = {
-    val out = sortCol.map(c => df.sortWithinPartitions(col(c))).getOrElse(df)
-    countedWrite(out) { o =>
+                    orderCol: String, sorted: Boolean): (Long, Option[Long]) = {
+    val out = if (sorted) df.sortWithinPartitions(col(orderCol)) else df
+    observedWrite(out, Some(orderCol)) { o =>
       val w = o.write.mode(SaveMode.Overwrite)
       partitionByCol.fold(w)(w.partitionBy(_)).parquet(dir)
     }
   }
+
+  /** The destination at `dir` read with the schema its state record holds
+    * (no inference job); inferred only when the record has none. */
+  private[sync] def readDestination(spark: SparkSession, dir: String,
+                                    recorded: Option[DestState]): DataFrame =
+    recorded.flatMap(_.schema)
+      .fold(spark.read.parquet(dir))(spark.read.schema(_).parquet(dir))
 
   /** Run `save` on `df` and return the rows it wrote, counted by the write
     * job itself: an observed `count(1)` over `df` instead of reading the
@@ -614,9 +661,21 @@ object ParquetMergeSink {
     * count arrives only through a `DataFrameWriter` action: an
     * `Observation` on a frame consumed by `foreachPartition` never
     * completes on Spark 4.1.2. */
-  private[sync] def countedWrite(df: DataFrame)(save: DataFrame => Unit): Long = {
+  private[sync] def countedWrite(df: DataFrame)(save: DataFrame => Unit): Long =
+    observedWrite(df, None)(save)._1
+
+  /** [[countedWrite]] that also observes MAX(`maxOf`) in the same write
+    * job, canonical (core.Watermark): None for an empty write or a column
+    * outside the watermark types. */
+  private[sync] def observedWrite(df: DataFrame, maxOf: Option[String])
+                                 (save: DataFrame => Unit): (Long, Option[Long]) = {
     val written = Observation()
-    save(df.observe(written, count(lit(1)).as("rows")))
-    written.get("rows").asInstanceOf[Long]
+    val wm = maxOf.filter(c =>
+      graft.core.Watermark.supported(df.schema(c).dataType))
+    save(df.observe(written, count(lit(1)).as("rows"),
+      wm.map(c => max(col(c)).as("max")).toSeq: _*))
+    val r = written.get
+    (r("rows").asInstanceOf[Long],
+      wm.flatMap(_ => graft.core.Watermark.toMicros(r("max"))))
   }
 }

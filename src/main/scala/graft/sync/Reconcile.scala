@@ -88,6 +88,10 @@ object Reconcile {
             s"(${many.mkString(", ")}) — not a merge-sink table; refusing " +
             "to rewrite it")
     }
+    // dropping rows may lower the destination's MAX, and the anti-join
+    // leads with the key columns: its record forgets both before the swap
+    DestState.parquet(fs, destPath)
+      .describe(_.copy(destMax = None, schema = None))
     ParquetMergeSink.atomicSwap(fs, destPath, tmp)
     (keptRows, total - keptRows)
   }

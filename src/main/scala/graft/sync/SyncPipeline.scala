@@ -79,9 +79,15 @@ object SyncPipeline {
     *          it, a tombstoned destination's applied bound raises it. No
     *          checkpoint: the state lives in the destination (README.md:90).
     *          A parquet destination heals an interrupted swap first and is
-    *          read once; the merge reuses that frame and its record. A
-    *          JDBC destination's record is opened first — the tombstone
-    *          freeze, whose targeted refusals must precede the drift check.
+    *          read once, with the schema its record holds; its MAX is the
+    *          record's too, so an idle poll scans nothing. A record
+    *          without either field (an older record, or one a
+    *          MAX-lowering write cleared) falls back to inference and a
+    *          MAX scan, and records what they found. The merge reuses
+    *          that frame and its record. A JDBC destination's record is
+    *          opened first — the tombstone freeze, whose targeted
+    *          refusals must precede the drift check — and its MAX is a
+    *          `SELECT MAX`.
     *   2.     start = the restart point, else the source MIN
     *          (session.py:50-65). T2: the cut is frozen at run start — the
     *          source MAX unless given (pypgsync.py:13).
@@ -187,9 +193,16 @@ object SyncPipeline {
         val state = DestState.parquet(fs, dir)
         ParquetMergeSink.recoverInterruptedSwap(fs, dir)
         val dest = Option.when(ParquetMergeSink.hasData(fs, new Path(dir)))(
-          spark.read.parquet(dir))
-        val destMax = dest.flatMap(d =>
-          Watermark.toMicros(d.agg(max(wm)).first().get(0)))
+          ParquetMergeSink.readDestination(spark, dir, state.stored))
+        // the record's MAX, else a scan of the watermark column; what the
+        // read learned fills the record's missing fields
+        val destMax = dest.flatMap { d =>
+          val m = state.stored.flatMap(_.destMax)
+            .orElse(Watermark.toMicros(d.agg(max(wm)).first().get(0)))
+          state.describe(s => s.copy(destMax = m,
+            schema = s.schema.orElse(Some(d.schema))))
+          m
+        }
         sequence(c, destMax,
           dest.flatMap(_ => state.current(populated = true).restart(destMax))) {
           (batch, known, start) =>

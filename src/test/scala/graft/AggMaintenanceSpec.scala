@@ -1678,4 +1678,31 @@ class AggMaintenanceSpec extends SparkSpec {
         lane)
     }
   }
+
+  test("whole-dir lanes: the stored rollup reads with its recorded schema, as an inference would, and without the sidecar still reads") {
+    val src = Seq((10L, 1L, "a", 1.0, 2.0, 7L), (20L, 2L, "b", 3.0, 4.0, 8L),
+      (30L, 3L, "a", 5.0, 6.0, 7L)).toDF("us", "k", "grp", "x", "y", "u")
+    val lanes: Seq[(String, String => AggMaintenance.AggResult)] = Seq(
+      "v1" -> (d => AggMaintenance.applySlice(
+        spark, d, src, "us", Seq("grp"), "x", 0L, 100L)),
+      "v2" -> (d => AggMaintenance.applySliceV2(
+        spark, d, src, "us", Seq("grp"), Seq("x", "y"), 0L, 100L)),
+      "v3" -> (d => AggMaintenance.applySliceDistinct(
+        spark, d, src, "us", Seq("grp"), Seq("u"), 0L, 100L)),
+      "keyed" -> (d => AggMaintenance.applySliceKeyed(
+        spark, d, src, "us", Seq("k"), Seq("grp"), "x", 0L, 100L)))
+    lanes.foreach { case (lane, apply) =>
+      val dir = tmpDir(s"agg-flat-schema-$lane") + "/rollup"
+      apply(dir)
+      val inferred = spark.read.parquet(dir)
+      val (got, jobs) = jobsIn(AggMaintenance.read(spark, dir))
+      assert(jobs == 0, s"$lane: the read ran $jobs Spark jobs")
+      assert(got.schema == inferred.schema, lane)
+      assert(got.collect().toSet == inferred.collect().toSet, lane)
+      val sidecar = new java.io.File(dir, "_GRAFT_AGG_SCHEMA")
+      assert(sidecar.delete(), lane)
+      assert(AggMaintenance.read(spark, dir).collect().toSet ==
+        inferred.collect().toSet, lane)
+    }
+  }
 }

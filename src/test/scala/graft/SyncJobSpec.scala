@@ -209,9 +209,11 @@ class SyncJobSpec extends SparkSpec {
     // min(max(dest MAX 500, applied 300), marker 100)
     assert(r.startingPoint.contains(100L), s"$r")
     assert(readDest(dest)(1L) == ((150L, 9.0, "recovered")))
-    // the folded record, after the batch through 500 landed
+    // the folded record, after the batch through 500 landed; the rewrite
+    // also records the destination's MAX and schema
     assert(stateOf(dest).stored.contains(
-      DestState(None, Some(500L), Some("tomb=del"))))
+      DestState(None, Some(500L), Some("tomb=del"), Some(500L),
+        Some(spark.read.parquet(dest).schema))))
     legacy.foreach { case (suffix, _) =>
       assert(!new java.io.File(dest + suffix).exists(), s"$suffix survived")
     }
