@@ -165,7 +165,8 @@ private[graft] object SidecarIO {
     * staged twin (p absent + twin present = committed, steps 4→5). Every
     * commit-marker existence probe must use this, not raw `fs.exists` —
     * a raw check reads "absent" inside the window and can roll back
-    * committed state (the healWholeDir hazard). */
+    * committed state (a rollup root's swap heal, `ParquetMergeSink.heal`,
+    * would restore its older backup over it). */
   def exists(fs: FileSystem, p: Path): Boolean =
     fs.exists(p) || fs.exists(newTwin(p))
 

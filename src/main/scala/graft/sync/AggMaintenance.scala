@@ -90,15 +90,19 @@ import graft.core.{SidecarIO, Watermark}
   * caller's opening cut.
   *   - Whole dir: rollup, key state, schema, stamp and watermark are
   *     staged in `<dir>.__agg_tmp` and committed by ONE two-rename swap
+  *     (ParquetMergeSink.swap, the one directory commit of graft.sync)
   *     through `<dir>.__agg_bak_dir` — the cold start too, empty or not —
   *     so no crash leaves data without its watermark or vice versa. The
-  *     next apply heals an interrupted swap; readers read around it.
+  *     next apply heals an interrupted swap (ParquetMergeSink.heal, the
+  *     root committed once it holds `_GRAFT_AGG_WM`); readers read around
+  *     it.
   *   - Partitioned (`__bucket=K` on pmod(hash(group), n); key state
   *     `__kbucket=J` on pmod(xxhash64(key), m)): one apply rewrites ONLY
   *     the buckets its slice touches — per-apply cost slice + touched
   *     buckets, for billion-group rollups (size n ≈ √groups). Each bucket's
-  *     data + its own watermark commit by one rename swap (staging and
-  *     backup live OUTSIDE the root, `<dir>.__agg_tmp` / `<dir>.__agg_bak`);
+  *     data + its own watermark commit by the same swap (staging and
+  *     backup live OUTSIDE the root, `<dir>.__agg_tmp` / `<dir>.__agg_bak`;
+  *     a bucket is committed once it exists);
   *     keyed rollup buckets swap before state buckets; the ROOT watermark
   *     commits last. A re-run skips buckets whose watermark reached `hi`,
   *     and a crashed attempt with a DIFFERENT cut is finished first by
@@ -363,8 +367,7 @@ object AggMaintenance {
       s"newKeyBuckets must be in [0, 65536] (0 = keep), got $newKeyBuckets")
     val st = new RollupState(spark, targetDir)
     val fs = st.fs
-    healWholeDir(fs, targetDir)
-    healBuckets(fs, st.root)
+    st.heal(buckets = true)
     val params = st.get(ParamsFile).getOrElse(throw InvalidConfig(
       s"no $ParamsFile at $targetDir — not a partitioned rollup"))
     val s = Stamp.parse(params)
@@ -384,7 +387,6 @@ object AggMaintenance {
     val wm = st.wm.getOrElse(throw InvalidConfig(
       s"rollup at $targetDir has no root watermark — not a committed " +
         "AggMaintenance table"))
-    if (s.keyed) healBuckets(fs, st.stateRoot)
     if ((bucketWms(fs, st.root, "__bucket=") ++
         bucketWms(fs, st.stateRoot, "__kbucket=")).exists(_ > wm))
       throw InvalidConfig(
@@ -420,7 +422,7 @@ object AggMaintenance {
     st.stage(st.tmp, Some(s.copy(buckets = Some(newBuckets),
         kbuckets = s.kbuckets.map(_ => kb)).render.get),
       st.get(SchemaFile), Some(wm))
-    swapWholeDir(fs, targetDir, st.tmp)
+    st.commitStaged()
   }
 
   /** The contractual avg/var derivation over v2 moment columns
@@ -665,13 +667,7 @@ object AggMaintenance {
                   lo: Long, hi: Long, s: Stamp): AggResult = {
     validate(s, source, lo, hi)
     val st = new RollupState(spark, targetDir)
-    // a crashed rebucket commits through the whole-dir swap too: heal it
-    // first, then interrupted bucket swaps
-    healWholeDir(st.fs, targetDir)
-    if (s.partitioned) {
-      healBuckets(st.fs, st.root)
-      if (s.keyed) healBuckets(st.fs, st.stateRoot)
-    }
+    st.heal(buckets = s.partitioned)
     st.check(s)
     if (s.partitioned) applyPartitioned(spark, st, source, lo, hi, s)
     else applyWholeDir(spark, st, source, lo, hi, s)
@@ -731,7 +727,7 @@ object AggMaintenance {
       newState.foreach(_.write.mode("overwrite")
         .parquet(new Path(st.tmp, StateDir).toString))
       st.stage(st.tmp, s.render, Some(merged.schema.json), Some(hi))
-      swapWholeDir(st.fs, st.dir, st.tmp)
+      st.commitStaged()
       AggResult(groups, rows, applied = true, watermarkUs = hi)
     } finally {
       partial.foreach(_.unpersist())
@@ -1072,6 +1068,28 @@ object AggMaintenance {
 
     /** Drop staging debris of a crashed attempt. */
     def clearTmp(): Unit = { if (fs.exists(tmp)) fs.delete(tmp, true); () }
+
+    /** Commit the stage as the whole rollup, through [[bak]]. */
+    def commitStaged(): Unit = ParquetMergeSink.swap(fs, root, tmp, bak)
+
+    /** Heal every swap a crash interrupted: the whole-dir swap first (a
+      * crashed rebucket commits through it too), then, with `buckets`,
+      * each bucket swap of the rollup and key-state namespaces. Every
+      * committed root carries `_GRAFT_AGG_WM`, counted under
+      * SidecarIO.exists's two-phase rule so a newer root is never rolled
+      * back to an older backup; a bucket is committed once it exists. */
+    def heal(buckets: Boolean): Unit = {
+      ParquetMergeSink.heal(fs, root, bak,
+        d => SidecarIO.exists(fs, new Path(d, WmFile)))
+      if (buckets) Seq(root, stateRoot).foreach { r =>
+        val bk = new Path(bakRoot(r.toString))
+        if (fs.exists(bk)) {
+          fs.listStatus(bk).foreach(b => ParquetMergeSink.heal(fs,
+            new Path(r, b.getPath.getName), b.getPath, fs.exists))
+          fs.delete(bk, true)
+        }
+      }
+    }
   }
 
   private def requireStamp(spark: SparkSession, targetDir: String,
@@ -1112,7 +1130,7 @@ object AggMaintenance {
     stored
   }
 
-  // ---- buckets, swaps and heals ----
+  // ---- buckets ----
 
   /** One bucket of a partitioned namespace, probed once per apply. */
   private final case class Bucket(id: Int, path: Path, wm: Option[Long],
@@ -1132,18 +1150,21 @@ object AggMaintenance {
   private def distinctInts(df: DataFrame): Seq[Int] =
     df.distinct().collect().map(_.getInt(0)).sorted.toSeq
 
-  /** Swap each staged bucket in with its own watermark = `hi`. The swaps
-    * are independent metadata ops run in parallel; a crash leaves a
-    * committed subset, which the bucket-wm skip and the interior split
-    * recover from. */
+  /** Swap each staged bucket in with its own watermark = `hi`, through a
+    * backup OUTSIDE the root (partition discovery never parses swap
+    * debris as data). The swaps are independent metadata ops run in
+    * parallel; a crash leaves a committed subset, which the bucket-wm
+    * skip and the interior split recover from. */
   private def commitBuckets(fs: FileSystem, root: Path, prefix: String,
                             buckets: Seq[Bucket], staging: Path,
                             hi: Long): Unit = {
+    val bk = new Path(bakRoot(root.toString))
+    if (buckets.nonEmpty) fs.mkdirs(bk)
     parMap(buckets) { b =>
       val staged = new Path(staging, s"$prefix${b.id}")
       if (!fs.exists(staged)) fs.mkdirs(staged) // bucket fully vacated
       writeWm(fs, new Path(staged, WmFile), hi)
-      swapBucket(fs, root, s"$prefix${b.id}", staged)
+      ParquetMergeSink.swap(fs, b.path, staged, new Path(bk, b.path.getName))
     }
     ()
   }
@@ -1164,79 +1185,6 @@ object AggMaintenance {
 
   private def bakRoot(targetDir: String): String =
     targetDir.stripSuffix("/") + ".__agg_bak"
-
-  /** Whole-dir swap through `<dir>.__agg_bak_dir`. Every committed state
-    * carries `_GRAFT_AGG_WM`, so [[healWholeDir]] can always tell which
-    * side of the two renames a crash hit. */
-  private def swapWholeDir(fs: FileSystem, targetDir: String,
-                           staged: Path): Unit = {
-    val dst = new Path(targetDir)
-    val bak = new Path(bakRoot(targetDir) + "_dir")
-    if (fs.exists(bak)) fs.delete(bak, true)
-    if (fs.exists(dst) && !fs.rename(dst, bak))
-      throw new java.io.IOException(s"swap: rename $dst -> $bak failed")
-    if (!fs.rename(staged, dst)) {
-      if (fs.exists(bak)) fs.rename(bak, dst) // restore; best effort
-      throw new java.io.IOException(
-        s"swap: rename $staged -> $dst failed (backup restored)")
-    }
-    fs.delete(bak, true)
-    ()
-  }
-
-  /** Heal a [[swapWholeDir]] crash window: a destination without its
-    * watermark beside a backup means the crash hit between the renames —
-    * restore the backup; a destination with one means the forward rename
-    * completed — drop the backup. SidecarIO.exists counts a watermark
-    * committed only in its two-phase `.new` twin, so a newer root is never
-    * rolled back to an older backup. */
-  private def healWholeDir(fs: FileSystem, targetDir: String): Unit = {
-    val bak = new Path(bakRoot(targetDir) + "_dir")
-    if (!fs.exists(bak)) return
-    if (!SidecarIO.exists(fs, new Path(targetDir, WmFile))) {
-      val dst = new Path(targetDir)
-      if (fs.exists(dst)) fs.delete(dst, true)
-      if (!fs.rename(bak, dst))
-        throw new java.io.IOException(
-          s"recovery: rename $bak -> $dst failed; manual intervention needed")
-    } else { fs.delete(bak, true); () }
-  }
-
-  /** Swap `root/bucketName` for `staged` through a backup OUTSIDE the
-    * root, so partition discovery never parses swap debris as data. */
-  private def swapBucket(fs: FileSystem, root: Path, bucketName: String,
-                         staged: Path): Unit = {
-    val dst = new Path(root, bucketName)
-    val bak = new Path(bakRoot(root.toString), bucketName)
-    fs.mkdirs(bak.getParent)
-    if (fs.exists(bak)) fs.delete(bak, true)
-    if (fs.exists(dst) && !fs.rename(dst, bak))
-      throw new java.io.IOException(s"bucket swap: rename $dst -> $bak failed")
-    if (!fs.rename(staged, dst)) {
-      if (fs.exists(bak)) fs.rename(bak, dst) // restore; best effort
-      throw new java.io.IOException(
-        s"bucket swap: rename $staged -> $dst failed (backup restored)")
-    }
-    fs.delete(bak, true)
-    ()
-  }
-
-  /** Restore interrupted bucket swaps: a backup whose bucket is gone IS
-    * the committed state — put it back; one whose bucket exists is stale. */
-  private def healBuckets(fs: FileSystem, root: Path): Unit = {
-    val bk = new Path(bakRoot(root.toString))
-    if (!fs.exists(bk)) return
-    fs.listStatus(bk).foreach { st =>
-      val dst = new Path(root, st.getPath.getName)
-      if (!fs.exists(dst)) {
-        if (!fs.rename(st.getPath, dst))
-          throw new java.io.IOException(
-            s"bucket recovery: rename ${st.getPath} -> $dst failed")
-      } else { fs.delete(st.getPath, true); () }
-    }
-    fs.delete(bk, true)
-    ()
-  }
 
   /** Bounded-parallel map over driver-side METADATA ops (sidecar reads,
     * rename swaps): O(touched buckets) RPCs, minutes sequentially at the

@@ -1,7 +1,7 @@
 package graft.sync
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Small-files maintenance for parquet table directories — the op every
@@ -11,17 +11,20 @@ import org.apache.spark.sql.functions.col
   * and open overhead dominates; the vectorized reader wants row groups in
   * the hundreds of MB).
   *
-  * Rewrites the table toward `targetBytes` per file and commits via the
-  * merge sink's atomic stage-and-swap, so a crash mid-compaction never
-  * loses the table (healed by `recoverInterruptedSwap` on the next merge
-  * or compact). Partition layout is preserved: with `partitionByCol` the
-  * rewrite hashes rows by the partition column so each hive partition is
-  * written by exactly one task → one file per partition (granularity note:
-  * a single partition larger than `targetBytes` still compacts to one
-  * file — split hot partitions upstream via the merge key bucketing).
-  * The rewrite keeps the rows and the schema a read infers, so a sync
-  * destination's state record ([[DestState]]: MAX and schema) stays true
-  * and is left as it is.
+  * Rewrites the table toward `targetBytes` per file through the merge
+  * sink's layout-preserving staged rewrite ([[ParquetMergeSink.rewrite]]),
+  * committed by its one swap, so a crash mid-compaction never loses the
+  * table (the swap's heal runs first on the next merge or compact). With
+  * `partitionByCol`, or the single partition column the listing shows,
+  * the rewrite hashes rows by the partition column so each hive
+  * partition is written by exactly one task → one file per partition
+  * (granularity note: a single partition larger than `targetBytes` still
+  * compacts to one file — split hot partitions upstream via the merge key
+  * bucketing). The table is read with the schema its state record holds
+  * ([[DestState]]), inferred only without one. The rewrite keeps the
+  * rows and that schema, so the record's MAX and schema stay true and
+  * are left as they are. A directory that holds no table (missing, or
+  * metadata only) refuses typed.
   */
 object Compact {
 
@@ -37,36 +40,24 @@ object Compact {
               targetBytes: Long = DefaultTargetBytes,
               partitionByCol: Option[String] = None): CompactResult = {
     require(targetBytes > 0, "targetBytes must be positive")
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    ParquetMergeSink.recoverInterruptedSwap(fs, dir)
-    val before = dataFiles(fs, new Path(dir))
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    ParquetMergeSink.healDestination(fs, dir)
+    val before = if (fs.exists(root)) dataFiles(fs, root) else Nil
+    if (before.isEmpty)
+      throw graft.core.GraftError.InvalidConfig(
+        s"$dir holds no parquet table (missing, or metadata only) — " +
+          "nothing to compact")
     val totalBytes = before.map(_.getLen).sum
     val nOut = math.max(1L, math.ceil(totalBytes.toDouble / targetBytes).toLong).toInt
-    val df = spark.read.parquet(dir)
-    val tmp = dir.stripSuffix("/") + ".__merge_tmp"
-    // an omitted partitionByCol must not FLATTEN a partitioned table: the
-    // layout is detectable from the listing, so auto-preserve it (and
-    // refuse a foreign multi-column layout rather than guess)
-    val effPart = partitionByCol.orElse {
-      ParquetMergeSink.partitionColsOf(fs, dir) match {
-        case Seq()  => None
-        case Seq(p) => Some(p)
-        case many => throw graft.core.GraftError.InvalidConfig(
-          s"$dir carries multiple partition column layouts " +
-            s"(${many.mkString(", ")}) — not a merge-sink table; refusing " +
-            "to compact it")
-      }
+    val df = ParquetMergeSink.readDestination(spark, dir,
+      DestState.parquet(fs, dir).stored)
+    val rows = ParquetMergeSink.rewrite(fs, dir,
+        dir.stripSuffix("/") + ".__merge_tmp", partitionByCol) {
+      case Some(p) => df.repartition(nOut, col(p))
+      case None    => df.repartition(nOut)
     }
-    val rows = effPart match {
-      case Some(p) =>
-        ParquetMergeSink.countedWrite(df.repartition(nOut, col(p)))(
-          _.write.mode(SaveMode.Overwrite).partitionBy(p).parquet(tmp))
-      case None =>
-        ParquetMergeSink.countedWrite(df.repartition(nOut))(
-          _.write.mode(SaveMode.Overwrite).parquet(tmp))
-    }
-    ParquetMergeSink.atomicSwap(fs, dir, tmp)
-    CompactResult(rows, before.length, dataFiles(fs, new Path(dir)).length)
+    CompactResult(rows, before.length, dataFiles(fs, root).length)
   }
 
   /** Non-hidden data files under `p`, recursively (skips `_SUCCESS`,

@@ -37,6 +37,16 @@ object ParquetMergeSink {
 
   /** Merge `updates` into the parquet table at `targetDir`.
     *
+    * `SyncPipeline.run` calls this inside the sync lifecycle (T1 → cut →
+    * extract → merge → report). The streaming callers call it directly,
+    * one micro-batch at a time: [[StreamingSync]], `IncrementalBalance.run`
+    * and the t19 replay fold. They need no T1, because a micro-batch's
+    * extent comes from the stream's checkpointed offsets, not from a
+    * watermark range. Everything else the lifecycle would give them the
+    * merge does itself: it heals an interrupted swap, opens and freezes
+    * the state record, and without `orderFloor` bounds its probe by the
+    * batch minimum.
+    *
     * @param keyCols   merge key (the reference's reflected primary key)
     * @param orderCol  monotone modification column (`updated`/`ts`)
     * @param partitionByCol optional target layout column; when set, only
@@ -145,7 +155,7 @@ object ParquetMergeSink {
           "drop partitionByCol to use the atomic whole-directory swap")
     }
     val fs = new Path(targetDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverInterruptedSwap(fs, targetDir)
+    healDestination(fs, targetDir)
     val exists = hasData(fs, new Path(targetDir))
     // the tombstone setting is part of the destination's frozen
     // parameterization — mixing tombstoned and tombstone-blind merges
@@ -220,7 +230,7 @@ object ParquetMergeSink {
         val updateRows = knownRows.getOrElse(updates.count())
         // S3 create-dest-from-source-schema (session.py:194-197): still dedup
         // within the batch (a key may appear twice in one extract). STAGED,
-        // then made visible by one rename: Spark's job commit moves task
+        // then made visible by the one swap: Spark's job commit moves task
         // files into the target sequentially, so a driver crash mid-commit
         // would leave SOME part files visible — hasData would then read
         // true and the next run would trust the partial destination's
@@ -244,12 +254,9 @@ object ParquetMergeSink {
         // an all-deletes cold batch legitimately stages ZERO rows
         val (written, writtenMax) = withProgress(updateRows)(
           write(deduped, tmp, uPart, uOrder, sorted = true))
-        val dst = new Path(targetDir)
-        // hasData said false, so anything here is crashed-first-write debris
-        if (fs.exists(dst)) fs.delete(dst, true)
-        if (!fs.rename(new Path(tmp), dst))
-          throw new java.io.IOException(
-            s"cold merge: rename $tmp -> $dst failed")
+        // hasData said false, so anything at targetDir is crashed-first-write
+        // debris: the swap moves it aside and drops it
+        swap(fs, new Path(targetDir), new Path(tmp), bakOf(targetDir))
         // cold-start deletes of never-synced keys leave no row to carry
         // their watermark — record the batch bound so the next poll's
         // restart point clears the already-applied delete feed
@@ -421,8 +428,10 @@ object ParquetMergeSink {
                             // above): rows without a watermark are outside
                             // the protocol
           }
+          // read back with the schema it was written with: no inference
+          lazy val staged =
+            spark.read.schema(asNullable(merged.schema)).parquet(tmp)
           if (stagedRows > 0L) {
-            val staged = spark.read.parquet(tmp)
             val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
             try
@@ -448,8 +457,7 @@ object ParquetMergeSink {
           if (delCount > 0L) {
             val stagedStrs: Set[String] =
               if (stagedRows == 0L) Set.empty
-              else spark.read.parquet(tmp)
-                .select(col(tPart).cast("string")).distinct()
+              else staged.select(col(tPart).cast("string")).distinct()
                 .collect().flatMap(r => Option(r.getString(0))).toSet
             val deletePartStrs = updates.filter(tombFlag.get)
               .select(uPartCol.cast("string")).distinct()
@@ -469,7 +477,7 @@ object ParquetMergeSink {
           val merged = dropTombWinners(
             dedupe(withTombFalse(target).unionByName(tagged), tKeys, tOrder))
           // Parquet dirs can't be read and overwritten in one job: stage then
-          // swap the whole directory (atomicSwap). An everything-deleted
+          // swap the whole directory. An everything-deleted
           // merge legitimately stages zero rows; the swap still runs (the
           // empty dest reads as "no destination", and the next run's cold
           // re-extract converges).
@@ -477,7 +485,7 @@ object ParquetMergeSink {
           val (stagedRows, stagedMax) =
             write(merged, tmp, None, tOrder, sorted = true)
           retract(merged.schema, None)
-          atomicSwap(fs, targetDir, tmp)
+          swap(fs, new Path(targetDir), new Path(tmp), bakOf(targetDir))
           // the rewrite is the whole destination: MAX and schema exact
           (stagedRows, (_: DestState).copy(destMax = stagedMax,
             schema = Some(asNullable(merged.schema))))
@@ -490,78 +498,106 @@ object ParquetMergeSink {
     } finally if (mustPersist) updates.unpersist()
   }
 
-  private def bakDir(targetDir: String): String =
-    targetDir.stripSuffix("/") + ".__merge_old"
+  /** The backup of a sync destination's [[swap]]. */
+  private def bakOf(targetDir: String): Path =
+    new Path(targetDir.stripSuffix("/") + ".__merge_old")
 
-  /** Replace `targetDir` with the staged `tmpDir` via two renames, checking
-    * each (HDFS-style filesystems return false instead of throwing) and
-    * restoring the backup if the forward swap fails. A crash between the
-    * two renames is healed by [[recoverInterruptedSwap]] on the next call.
-    * Shared by the unpartitioned merge and the Compact maintenance op. */
-  private[sync] def atomicSwap(fs: FileSystem, targetDir: String,
-                               tmpDir: String): Unit = {
-    val dst = new Path(targetDir)
-    val bak = new Path(bakDir(targetDir))
+  /** The one directory commit of graft.sync: replace `dst` with the
+    * staged `staged` through the backup `bak`, in four steps:
+    *   1. drop a stale backup;
+    *   2. if `dst` exists, rename it to `bak`;
+    *   3. rename `staged` to `dst`, restoring the backup if that fails;
+    *   4. drop the backup.
+    * Each rename is checked (HDFS-style stores return false instead of
+    * throwing). A crash between steps 2 and 3 leaves `bak` without `dst`,
+    * one after step 3 leaves both; [[heal]] tells them apart on the next
+    * call. Every staged rewrite commits here: the cold and
+    * whole-directory merges, Compact and Reconcile ([[rewrite]]), and
+    * AggMaintenance's whole-directory rollups, `rebucket` and each
+    * rollup bucket. Each caller keeps its own backup path. */
+  private[sync] def swap(fs: FileSystem, dst: Path, staged: Path,
+                         bak: Path): Unit = {
     if (fs.exists(bak)) fs.delete(bak, true)
-    if (!fs.rename(dst, bak))
+    if (fs.exists(dst) && !fs.rename(dst, bak))
       throw new java.io.IOException(s"swap: rename $dst -> $bak failed")
-    if (!fs.rename(new Path(tmpDir), dst)) {
-      fs.rename(bak, dst) // restore; best effort before surfacing
+    if (!fs.rename(staged, dst)) {
+      if (fs.exists(bak)) fs.rename(bak, dst) // restore; best effort
       throw new java.io.IOException(
-        s"swap: rename $tmpDir -> $dst failed (backup restored)")
+        s"swap: rename $staged -> $dst failed (backup restored)")
     }
     fs.delete(bak, true)
     ()
   }
 
-  /** Distinct hive partition column names of a single-level `col=value/`
-    * layout at `dir` (the merge sink's own partitioned shape) — empty for
-    * an unpartitioned table. Maintenance rewrites (Reconcile, Compact)
-    * consult this so they PRESERVE the layout instead of silently
-    * flattening a partitioned destination (which the next dynamic
-    * partition overwrite would then corrupt into mixed root-files-plus-
-    * partition-dirs). */
-  private[sync] def partitionColsOf(fs: org.apache.hadoop.fs.FileSystem,
-                                    dir: String): Seq[String] = {
-    val p = new Path(dir)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.contains("=") &&
-        !st.getPath.getName.startsWith(".")) // swap/stage debris is not layout
-      .map(_.getPath.getName.split("=", 2)(0))
-      .distinct
+  /** Heal a [[swap]] a crash interrupted, before anything else touches
+    * `dst`. Without a backup there is nothing to heal. When
+    * `committed(dst)` holds, the forward rename landed and the backup is
+    * stale: drop it (a full copy of the old data, which an idle
+    * destination would otherwise carry forever). Otherwise the backup IS
+    * the committed state: clear whatever `dst` holds and restore it. The
+    * commit test is the caller's: [[hasData]] for a sync destination,
+    * the watermark sidecar for a rollup root, plain existence for a
+    * rollup bucket. */
+  private[sync] def heal(fs: FileSystem, dst: Path, bak: Path,
+                         committed: Path => Boolean): Unit =
+    if (fs.exists(bak)) {
+      if (committed(dst)) { fs.delete(bak, true); () }
+      else {
+        if (fs.exists(dst)) fs.delete(dst, true)
+        if (!fs.rename(bak, dst))
+          throw new java.io.IOException(
+            s"heal: rename $bak -> $dst failed; manual intervention needed")
+      }
+    }
+
+  /** [[heal]] for the sync destination at `targetDir`: committed once it
+    * holds data. */
+  private[sync] def healDestination(fs: FileSystem, targetDir: String): Unit =
+    heal(fs, new Path(targetDir), bakOf(targetDir), hasData(fs, _))
+
+  /** The layout-preserving staged rewrite of the table at `dir` shared by
+    * Compact and Reconcile: `shape` (given the partition column the
+    * rewrite writes under) is written to `staged` by one counted job and
+    * committed by [[swap]]. The layout is `partitionByCol`, else the
+    * single-level `col=value/` layout the listing shows (the merge sink's
+    * own shape), so a maintenance rewrite never FLATTENS a partitioned
+    * destination, which the next dynamic partition overwrite would then
+    * corrupt into root files plus partition dirs. A listing with several
+    * partition columns is not a merge-sink table: refused before any
+    * write. Returns the rows written. */
+  private[sync] def rewrite(fs: FileSystem, dir: String, staged: String,
+                            partitionByCol: Option[String])
+                           (shape: Option[String] => DataFrame): Long = {
+    val part = partitionByCol.orElse {
+      fs.listStatus(new Path(dir)).toSeq
+        .filter(st => st.isDirectory && st.getPath.getName.contains("=") &&
+          !st.getPath.getName.startsWith(".")) // swap/stage debris
+        .map(_.getPath.getName.split("=", 2)(0)).distinct match {
+        case Seq()  => None
+        case Seq(p) => Some(p)
+        case many => throw graft.core.GraftError.InvalidConfig(
+          s"$dir carries multiple partition column layouts " +
+            s"(${many.mkString(", ")}) — not a merge-sink table; refusing " +
+            "to rewrite it")
+      }
+    }
+    val rows = countedWrite(shape(part)) { df =>
+      val w = df.write.mode(SaveMode.Overwrite)
+      part.fold(w)(w.partitionBy(_)).parquet(staged)
+    }
+    swap(fs, new Path(dir), new Path(staged), bakOf(dir))
+    rows
   }
 
   /** True when the path holds actual table data — at least one entry that
     * is not a hidden/metadata artifact (`_temporary`, `_SUCCESS`, dotfiles).
     * A crashed first write leaves only such artifacts and must read as
     * "no destination yet", not wedge every subsequent run. */
-  private[sync] def hasData(fs: org.apache.hadoop.fs.FileSystem, path: Path): Boolean =
+  private[sync] def hasData(fs: FileSystem, path: Path): Boolean =
     fs.exists(path) && fs.listStatus(path).exists { st =>
       val n = st.getPath.getName
       !n.startsWith("_") && !n.startsWith(".")
     }
-
-  /** Heal a crash window between the two swap renames: destination gone but
-    * backup present → the backup IS the previous destination; restore it.
-    * Destination healthy with a backup still present → the crash hit after
-    * the forward rename; the backup is stale — DROP it (it is a full table
-    * copy, and an idle destination whose polls keep early-returning would
-    * otherwise carry it forever; same rule as AggMaintenance.healWholeDir). */
-  private[sync] def recoverInterruptedSwap(fs: org.apache.hadoop.fs.FileSystem,
-                                           targetDir: String): Unit = {
-    val dst = new Path(targetDir)
-    val bak = new Path(bakDir(targetDir))
-    if (!hasData(fs, dst) && hasData(fs, bak)) {
-      if (fs.exists(dst)) fs.delete(dst, true)
-      if (!fs.rename(bak, dst))
-        throw new java.io.IOException(
-          s"merge recovery: rename $bak -> $dst failed; manual intervention needed")
-    } else if (hasData(fs, dst) && fs.exists(bak)) {
-      fs.delete(bak, true)
-      ()
-    }
-  }
 
   /** Last-writer-wins per key: max_by(payload, (orderCol, __src, hash)) in
     * one hash aggregate. `__src` breaks order ties in favour of the update

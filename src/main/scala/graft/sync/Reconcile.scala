@@ -1,6 +1,6 @@
 package graft.sync
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** DELETE reconciliation for the watermark sync family: a watermark scan
@@ -51,48 +51,34 @@ object Reconcile {
       .join(source.select(keys.map(col): _*).distinct(), keys, "left_anti")
   }
 
-  /** Rewrite the parquet destination without the orphaned keys. Staged
-    * write + [[ParquetMergeSink.atomicSwap]]: the cleaned rows land in
-    * `<dest>.reconcile.tmp` first and swap in via the backup-rename
-    * protocol, so a crash at ANY point leaves either the original or the
-    * cleaned table recoverable (an interrupted swap is healed by
-    * [[ParquetMergeSink.recoverInterruptedSwap]], which this and every
-    * merge entry point run first).
+  /** Rewrite the parquet destination without the orphaned keys, through
+    * the merge sink's layout-preserving staged rewrite
+    * ([[ParquetMergeSink.rewrite]]): the cleaned rows land in
+    * `<dest>.reconcile.tmp` first and swap in by its one swap, so a crash
+    * at ANY point leaves either the original or the cleaned table
+    * recoverable (the swap's heal runs first here and in every merge).
+    * The destination is read with the schema its state record holds,
+    * inferred only without one.
     * @return (rows kept, rows dropped): the kept rows are counted by the
     *         write job that stages them */
   def applyDeletes(spark: SparkSession, destPath: String,
                    orphans: DataFrame, keys: Seq[String]): (Long, Long) = {
     val fs = new org.apache.hadoop.fs.Path(destPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    ParquetMergeSink.recoverInterruptedSwap(fs, destPath)
-    val dest = spark.read.parquet(destPath)
+    ParquetMergeSink.healDestination(fs, destPath)
+    val state = DestState.parquet(fs, destPath)
+    val dest = ParquetMergeSink.readDestination(spark, destPath, state.stored)
     val total = dest.count()
     val kept = dest.join(orphans.select(keys.map(col): _*), keys, "left_anti")
-    val tmp = destPath.stripSuffix("/") + ".reconcile.tmp"
-    // PRESERVE a hive-partitioned layout: a flat rewrite of a partitioned
-    // merge destination would land everything in root-level files, and
-    // the next partitioned merge's dynamic overwrite never touches those
-    // — mixed layout, broken partition discovery. Single-level layouts
-    // are the merge sink's own shape; anything deeper is foreign and
-    // refuses rather than guessing.
-    val keptRows = ParquetMergeSink.partitionColsOf(fs, destPath) match {
-      case Seq() =>
-        ParquetMergeSink.countedWrite(kept)(
-          _.write.mode(SaveMode.Overwrite).parquet(tmp))
-      case Seq(p) =>
-        ParquetMergeSink.countedWrite(kept.repartition(col(p)))(
-          _.write.mode(SaveMode.Overwrite).partitionBy(p).parquet(tmp))
-      case many =>
-        throw graft.core.GraftError.InvalidConfig(
-          s"$destPath carries multiple partition column layouts " +
-            s"(${many.mkString(", ")}) — not a merge-sink table; refusing " +
-            "to rewrite it")
-    }
     // dropping rows may lower the destination's MAX, and the anti-join
-    // leads with the key columns: its record forgets both before the swap
-    DestState.parquet(fs, destPath)
-      .describe(_.copy(destMax = None, schema = None))
-    ParquetMergeSink.atomicSwap(fs, destPath, tmp)
+    // leads with the key columns: its record forgets both before the
+    // rewrite starts
+    state.describe(_.copy(destMax = None, schema = None))
+    val keptRows = ParquetMergeSink.rewrite(fs, destPath,
+        destPath.stripSuffix("/") + ".reconcile.tmp", None) {
+      case Some(p) => kept.repartition(col(p))
+      case None    => kept
+    }
     (keptRows, total - keptRows)
   }
 }

@@ -13,7 +13,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * The destination stays self-describing: if the checkpoint is lost, a
   * batch `SyncJob` run recovers from `MAX(watermark)` in the destination
   * (T1) and the idempotent merge absorbs any overlap — the two modes
-  * compose safely against the same destination.
+  * compose safely against the same destination. Why a micro-batch runs
+  * the merge without the sync lifecycle's T1 is stated once, on
+  * [[ParquetMergeSink.merge]].
   */
 object StreamingSync {
 

@@ -191,7 +191,7 @@ object SyncPipeline {
         // destination
         val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
         val state = DestState.parquet(fs, dir)
-        ParquetMergeSink.recoverInterruptedSwap(fs, dir)
+        ParquetMergeSink.healDestination(fs, dir)
         val dest = Option.when(ParquetMergeSink.hasData(fs, new Path(dir)))(
           ParquetMergeSink.readDestination(spark, dir, state.stored))
         // the record's MAX, else a scan of the watermark column; what the

@@ -101,4 +101,36 @@ class CompactSpec extends SparkSpec {
     assert(files(dir).forall(_.getParentFile.getName.startsWith("bucket=")),
       "root-level data files would corrupt the next partitioned merge")
   }
+
+  test("a directory that holds no table refuses typed before any write") {
+    val work = tmpDir("compact-notable")
+    val missing = work + "/typo"
+    val e = intercept[graft.core.GraftError.InvalidConfig](
+      Compact.compact(spark, missing))
+    assert(e.getMessage.contains("holds no parquet table"), e.getMessage)
+    assert(!new java.io.File(missing).exists() &&
+      !new java.io.File(missing + ".__merge_tmp").exists())
+    // a crashed first write leaves metadata only
+    val meta = work + "/meta"
+    assert(new java.io.File(meta, "_temporary").mkdirs() &&
+      new java.io.File(meta, "_SUCCESS").createNewFile())
+    intercept[graft.core.GraftError.InvalidConfig](Compact.compact(spark, meta))
+    assert(!new java.io.File(meta + ".__merge_tmp").exists())
+    assert(new java.io.File(meta).list().toSet == Set("_temporary", "_SUCCESS"))
+  }
+
+  test("Compact of a recorded unpartitioned destination runs no schema-inference job") {
+    val work = tmpDir("compact-jobs")
+    val cfg = graft.sync.SyncConfig(keyCols = Seq("id"), watermarkCol = "updated")
+    val rows = (1L to 200L).map(i => (i, i, s"v$i")).toDF("id", "updated", "s")
+    new graft.sync.SyncJob(spark, cfg).run(rows.repartition(4), work + "/dest", 1000L)
+    // the same files without the state record beside them
+    rows.repartition(4).write.parquet(work + "/bare")
+    val (r, recorded) = jobsIn(Compact.compact(spark, work + "/dest"))
+    val (_, bare) = jobsIn(Compact.compact(spark, work + "/bare"))
+    info(s"recorded: $recorded jobs; without a record: $bare jobs")
+    assert(r.rows == 200L && r.filesAfter == 1, s"$r")
+    assert(recorded == bare - 1, "the recorded read still infers its schema")
+    assert(recorded <= 2, s"Compact ran $recorded Spark jobs")
+  }
 }

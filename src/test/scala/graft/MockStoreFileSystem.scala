@@ -1,8 +1,9 @@
 package graft
 
 import java.net.URI
-import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, Path,
-  RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus,
+  Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
 /** A RawLocalFileSystem masquerading as an object-store scheme with no
@@ -22,7 +23,11 @@ import org.apache.hadoop.util.Progressable
   * [[MockStoreFileSystem.failOnCreate]] injects a crash: the next `create`
   * of a file whose name contains the armed string throws, one-shot, so
   * every write before it stays on disk exactly as a killed process would
-  * leave it. */
+  * leave it.
+  *
+  * [[MockStoreFileSystem.swapOps]] enumerates the crash points of one
+  * directory swap: it counts the `rename`s and `delete`s that name one of
+  * the swap's own directories exactly and throws at the k-th, one-shot. */
 class MockStoreFileSystem extends RawLocalFileSystem {
   override def getScheme: String = "graftmock"
   override def getUri: URI = URI.create("graftmock:///")
@@ -36,6 +41,24 @@ class MockStoreFileSystem extends RawLocalFileSystem {
           s"$f (simulated concurrent-commit delete)")
       case _ => super.open(f, bufferSize)
     }
+  }
+
+  // RawLocalFileSystem loads a listed status's permission lazily, through
+  // a `file:` URI a `graftmock:` path is not (a recursive `listFiles`
+  // asks for it): hand out statuses that carry one already
+  override def listStatus(f: Path): Array[FileStatus] =
+    super.listStatus(f).map(s => new FileStatus(s.getLen, s.isDirectory,
+      s.getReplication, s.getBlockSize, s.getModificationTime,
+      s.getAccessTime, FsPermission.getFileDefault, "", "", s.getPath))
+
+  override def rename(src: Path, dst: Path): Boolean = {
+    MockStoreFileSystem.swapOps.foreach(_.visit(src, dst))
+    super.rename(src, dst)
+  }
+
+  override def delete(f: Path, recursive: Boolean): Boolean = {
+    MockStoreFileSystem.swapOps.foreach(_.visit(f))
+    super.delete(f, recursive)
   }
 
   override def create(f: Path, overwrite: Boolean, bufferSize: Int,
@@ -59,4 +82,24 @@ object MockStoreFileSystem {
   /** File-name fragment whose next `create` throws — armed by a spec,
     * consumed by the first matching `create`. */
   @volatile var failOnCreate: Option[String] = None
+
+  /** Counts the `rename`/`delete` calls that name one of `dirs` exactly
+    * (compared by path, scheme dropped) and throws instead of running the
+    * `crashAt`-th (1-based; 0 only counts). Only the swap's own
+    * directories count, so Spark's task-commit renames underneath them
+    * stay out of the count. Thread-safe: bucket swaps run in parallel. */
+  final class SwapOps(dirs: Seq[String], crashAt: Int) {
+    private def key(p: Path) = p.toUri.getPath.stripSuffix("/")
+    private val watched = dirs.map(d => key(new Path(d))).toSet
+    private val seen = new java.util.concurrent.atomic.AtomicInteger()
+    def count: Int = seen.get
+    def visit(paths: Path*): Unit =
+      if (paths.exists(p => watched(key(p))) &&
+          seen.incrementAndGet() == crashAt)
+        throw new java.io.IOException(
+          s"${paths.mkString(" -> ")} (simulated crash at swap op $crashAt)")
+  }
+
+  /** The armed swap-op counter, if any. */
+  @volatile var swapOps: Option[SwapOps] = None
 }

@@ -8,13 +8,20 @@ import org.scalatest.funsuite.AnyFunSuite
   * sources is a second copy of those rules and fails here. SidecarIO.scala
   * is the sidecar primitive itself. The graft.sync exclusions are not
   * index stamps: AggMaintenance's `_GRAFT_AGG_*` rollup sidecars and
-  * DestState's sync destination record keep their own SidecarIO calls. */
+  * DestState's sync destination record keep their own SidecarIO calls.
+  *
+  * The same guard keeps graft.sync's one directory swap and its heal in
+  * `ParquetMergeSink`: a `.rename(` anywhere else under `graft/sync` is a
+  * second copy of that protocol. (SidecarIO and PersistedIndex, outside
+  * graft.sync, keep their own renames: different protocols.) */
 class StampOwnershipSpec extends AnyFunSuite {
 
   private val root = new java.io.File(sys.props("user.dir"), "src/main/scala")
   private val owner = "graft/core/PersistedIndex.scala"
   private val allowed = Set(owner, "graft/core/SidecarIO.scala",
     "graft/sync/AggMaintenance.scala", "graft/sync/DestState.scala")
+
+  private val swapOwner = "graft/sync/ParquetMergeSink.scala"
 
   private val sidecarName = "\"_GRAFT_[A-Z0-9_]+\"".r
   private val sidecarCall = "\\bSidecarIO\\.".r
@@ -44,6 +51,19 @@ class StampOwnershipSpec extends AnyFunSuite {
       (line, i) <- codeLines(f)
       if sidecarName.findFirstIn(line).isDefined ||
         sidecarCall.findFirstIn(line).isDefined
+    } yield s"$rel:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  test("graft.sync renames directories only in ParquetMergeSink's one swap and heal") {
+    val files = sources(new java.io.File(root, "graft/sync"))
+    assert(files.exists(_.getPath.endsWith(swapOwner)), s"$swapOwner is missing")
+    val offenders = for {
+      f <- files
+      rel = root.toPath.relativize(f.toPath).toString.replace('\\', '/')
+      if rel != swapOwner
+      (line, i) <- codeLines(f)
+      if line.contains(".rename(")
     } yield s"$rel:${i + 1}: ${line.trim}"
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }

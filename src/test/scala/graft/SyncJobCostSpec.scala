@@ -90,7 +90,7 @@ class SyncJobCostSpec extends SparkSpec {
     assert(deltaJobs <= 6, s"delta poll ran $deltaJobs Spark jobs")
   }
 
-  test("a partitioned tombstoned poll that deletes every key of its partitions runs at most 18 Spark jobs") {
+  test("a partitioned tombstoned poll that deletes every key of its partitions runs at most 16 Spark jobs") {
     val work = tmpDir("sync-cost-vacate")
     val dest = work + "/dest"
     val job = new SyncJob(spark, cfg.copy(partitionByCol = Some("bucket"),
@@ -124,6 +124,6 @@ class SyncJobCostSpec extends SparkSpec {
     val state = DestState.parquet(new org.apache.hadoop.fs.Path(dest)
       .getFileSystem(spark.sparkContext.hadoopConfiguration), dest)
     assert(state.stored.exists(_.restartWm.isEmpty), "restart marker left")
-    assert(jobs <= 18, s"vacating poll ran $jobs Spark jobs")
+    assert(jobs <= 16, s"vacating poll ran $jobs Spark jobs")
   }
 }
