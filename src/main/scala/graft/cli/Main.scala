@@ -1,8 +1,13 @@
 package graft.cli
 
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{avg, coalesce, col, count, count_if,
+  explode, expr, lit, max, min, split, sum, trim, when}
+
 import graft.core.{GraftSession, GraftError}
 import graft.sources.JdbcSource
-import graft.sync.{SyncConfig, SyncEndpoint, SyncPipeline, SyncReport}
+import graft.sync.{ParquetMergeSink, SyncConfig, SyncEndpoint, SyncPipeline,
+  SyncReport}
 
 /** Thin command layer (SURVEY §3.1/§3.2, reference cli.py): `single` runs
   * one watermark-driven incremental sync, `continuous` polls every
@@ -18,66 +23,10 @@ import graft.sync.{SyncConfig, SyncEndpoint, SyncPipeline, SyncReport}
   * JDBC source, `--key` may be omitted: the primary key is reflected from
   * the catalog (S2), like the reference's autoload.
   *
-  *   runMain graft.cli.Main single --source <parquet|jdbc:...#t> \
-  *     --dest <parquet|jdbc:...#t> [--key K[,K2]] --watermark W [--cut N]
-  *   runMain graft.cli.Main continuous ... [--delay 5] [--iterations N]
-  *   runMain graft.cli.Main compact --dest <parquet dir> \
-  *     [--target-bytes N] [--partition-by COL]
-  *   runMain graft.cli.Main curate --source <parquet docs> --dest <parquet out> \
-  *     [--id-col doc_id] [--text-col text] [--jaccard 0.8] \
-  *     [--min-tokens N] [--max-tokens N]
-  *   runMain graft.cli.Main neardup --source <parquet docs> --dest <parquet pairs> \
-  *     [--mode minhash|simhash|exact|containment|containment-sampled] \
-  *     [--id-col doc_id] [--text-col text] \
-  *     [--jaccard 0.8]
-  *   runMain graft.cli.Main semantic-dedup --source <parquet embeddings> \
-  *     --dest <parquet survivors> [--id-col vec_id] [--vector-col embedding] \
-  *     [--threshold 0.99]
-  *   runMain graft.cli.Main quality --source <parquet docs> --dest <parquet out> \
-  *     [--id-col doc_id] [--text-col text] [--min-tokens N] [--max-tokens N]
-  *   runMain graft.cli.Main admit --source <parquet fresh docs> \
-  *     --base <parquet corpus> --dest <parquet admitted> \
-  *     [--bloom PATH] [--expected-items N] [--fpp 0.01] \
-  *     [--id-col doc_id] [--text-col text]
-  *   runMain graft.cli.Main decontaminate --source <parquet corpus> \
-  *     --benchmark <parquet eval docs> --dest <parquet clean docs> \
-  *     [--mode shingle|span|jaccard|containment] [--report PATH] \
-  *     [--ngram 3|16] [--max-contamination 0.0] [--jaccard 0.8] \
-  *     [--threshold 0.99 for containment] [--id-col doc_id] [--text-col text]
-  *   runMain graft.cli.Main spans --source <parquet docs> --dest <parquet out> \
-  *     [--id-col doc_id] [--text-col text] [--ngram 16]
-  *   runMain graft.cli.Main layout --source <parquet> --dest <parquet dir> \
-  *     --by COL[,COL2 for z-order] --key TIEBREAK[,K2] [--buckets 16]
-  *   runMain graft.cli.Main mix --source <parquet docs> --dest <parquet out> \
-  *     --by STRATACOL (--quota-tokens N | --alpha A --target-tokens N) \
-  *     [--id-col doc_id] [--text-col text]
-  *   runMain graft.cli.Main dedup-lines --source <parquet docs> \
-  *     --dest <parquet cleaned> [--min-docs 2] [--report PATH] \
-  *     [--id-col doc_id] [--text-col text]
-  *   runMain graft.cli.Main dedup-spans --source <parquet docs> \
-  *     --dest <parquet cleaned> [--min-span 0] [--ngram 16] \
-  *     [--report PATH] [--id-col doc_id] [--text-col text]
-  *   runMain graft.cli.Main diff --source <parquet new> --base <parquet prev> \
-  *     --dest <parquet statuses> [--id-col doc_id] [--text-col text]
-  *   runMain graft.cli.Main reconcile --source <parquet|jdbc:...#t> \
-  *     --dest <parquet synced copy> --key K[,K2] [--report PATH] [--apply]
-  *   runMain graft.cli.Main bpe-train --source <parquet docs> \
-  *     --dest <parquet merge table> --merges N [--text-col text]
-  *   runMain graft.cli.Main tokenize --source <parquet docs> \
-  *     --base <parquet merge table> --dest <parquet counts> \
-  *     [--id-col doc_id] [--text-col text]
-  *   runMain graft.cli.Main pipeline --source <parquet docs> \
-  *     --benchmark <parquet eval docs> --dest <work dir> --by STRATACOL \
-  *     (--quota-tokens N | --alpha A --target-tokens N) \
-  *     [--min-span 24] [--min-docs 2] [--min-tokens N] [--max-tokens N] \
-  *     [--max-contamination 0.0] [--shards 16] [--capacity 2048] \
-  *     [--id-col doc_id] [--text-col text]
-  *   runMain graft.cli.Main agg --source <parquet|jdbc:...#t> \
-  *     --dest <rollup dir> --by GROUPCOL[,G2] --watermark W \
-  *     [--value-col value | --value-col V1,V2 | --moments | --distinct C[,C2]] \
-  *     [--cut N] [--partitioned] [--buckets 64] [--kbuckets M]
-  *     (default cut assumes a QUIESCED source; for a concurrently
-  *     appended source pass an explicit --cut — see runAgg's contract)
+  * Every verb is declared once, in `Main.verbs`: its usage fragment, the
+  * options it requires, the endpoint options that may name a JDBC table,
+  * and its runner. The usage text (printed for an unknown verb), the
+  * option checks and the dispatch all follow from that table.
   */
 object Main {
 
@@ -118,18 +67,123 @@ object Main {
                           bands: Int = 4,
                           maxHamming: Int = 3)
 
+  /** One verb, or several sharing one runner (`name` "a|b"): its usage
+    * fragment (the text after the verb), its runner, which returns the rows
+    * it wrote (0 for a run that writes no rows of its own), the options it
+    * cannot run without, and the endpoint options that may name a JDBC
+    * table (any other endpoint must be a parquet path). */
+  private final case class Verb(name: String, usage: String,
+                                run: (SparkSession, Args) => Long,
+                                required: Seq[String] = Seq("source", "dest"),
+                                jdbc: Set[String] = Set.empty)
+
+  private val verbs: Seq[Verb] = Seq(
+    Verb("single|continuous", "--source (PATH|jdbc:...#table) " +
+      "--dest (PATH|jdbc:...#table) [--key K[,K2]] --watermark W [--cut N] " +
+      "[--delay SEC] [--iterations N] [--partition-by COL] " +
+      "[--tombstone COL, CDC deletes] [--progress] [--source-user U] " +
+      "[--source-password P] [--dest-user U] [--dest-password P]", runSync,
+      Seq("source", "dest", "watermark"), Set("source", "dest")),
+    Verb("compact", "--dest PATH [--target-bytes N] [--partition-by COL]",
+      runCompact, Seq("dest")),
+    Verb("curate", "--source PATH --dest PATH [--id-col doc_id] " +
+      "[--text-col text] [--jaccard 0.8] [--min-tokens N] [--max-tokens N]",
+      runCurate),
+    Verb("neardup", "--source PATH --dest PATH " +
+      "[--mode minhash|simhash|exact|containment|containment-sampled] " +
+      "[--id-col doc_id] [--text-col text] [--jaccard 0.8] " +
+      "[--threshold 0.99 for containment modes]", runNearDup),
+    Verb("semantic-dedup", "--source PATH --dest PATH [--id-col vec_id] " +
+      "[--vector-col embedding] [--threshold 0.99]", runSemanticDedup),
+    Verb("quality", "--source PATH --dest PATH [--id-col doc_id] " +
+      "[--text-col text] [--min-tokens N] [--max-tokens N]", runQuality),
+    Verb("admit", "--source PATH --base PATH --dest PATH [--bloom PATH] " +
+      "[--expected-items N] [--fpp 0.01] [--id-col doc_id] [--text-col text]",
+      runAdmit, Seq("source", "dest", "base")),
+    Verb("decontaminate", "--source PATH --benchmark PATH --dest PATH " +
+      "[--mode shingle|span|jaccard|containment] [--report PATH] " +
+      "[--ngram 3|16] [--max-contamination 0.0] [--jaccard 0.8] " +
+      "[--threshold 0.99 for containment] [--id-col doc_id] [--text-col text]",
+      runDecontaminate, Seq("source", "dest", "benchmark")),
+    Verb("dedup-lines", "--source PATH --dest PATH [--min-docs 2] " +
+      "[--report PATH] [--id-col doc_id] [--text-col text]", runDedupLines),
+    Verb("dedup-spans", "--source PATH --dest PATH [--min-span 0] " +
+      "[--ngram 16] [--report PATH] [--id-col doc_id] [--text-col text]",
+      runDedupSpans),
+    Verb("diff", "--source PATH --base PATH --dest PATH [--id-col doc_id] " +
+      "[--text-col text]", runDiff, Seq("source", "dest", "base")),
+    Verb("reconcile", "--source (PATH|jdbc:...#table) --dest PATH " +
+      "--key K[,K2] [--report PATH] [--apply]", runReconcile,
+      jdbc = Set("source", "dest")),
+    Verb("bpe-train", "--source PATH --dest PATH --merges N " +
+      "[--id-col doc_id] [--text-col text]", runBpeTrain,
+      Seq("source", "dest", "merges")),
+    Verb("tokenize", "--source PATH --base MERGES_PATH --dest PATH " +
+      "[--id-col doc_id] [--text-col text]", runTokenize,
+      Seq("source", "dest", "base")),
+    Verb("spans", "--source PATH --dest PATH [--id-col doc_id] " +
+      "[--text-col text] [--ngram 16]", runSpans),
+    Verb("layout", "--source PATH --dest PATH --by COL[,COL2 for z-order] " +
+      "--key TIEBREAK[,K2] [--buckets 16]", runLayout,
+      Seq("source", "dest", "by")),
+    Verb("mix", "--source PATH --dest PATH --by STRATACOL " +
+      "(--quota-tokens N | --alpha A --target-tokens N) [--id-col doc_id] " +
+      "[--text-col text]", runMix, Seq("source", "dest", "by")),
+    Verb("pipeline", "--source PATH --benchmark PATH --dest WORKDIR " +
+      "--by STRATACOL (--quota-tokens N | --alpha A --target-tokens N) " +
+      "[--min-span 24] [--min-docs 2] [--min-tokens N] [--max-tokens N] " +
+      "[--max-contamination 0.0] [--shards 16] [--capacity 2048] " +
+      "[--id-col doc_id] [--text-col text]", runPipeline,
+      Seq("source", "dest", "benchmark", "by")),
+    Verb("agg", "--source (PATH|jdbc:...#table) --dest PATH " +
+      "--by GROUPCOL[,G2] --watermark W " +
+      "[--key K[,K2] last-writer-wins keyed lane] " +
+      "[--tombstone COL, keyed CDC deletes] " +
+      "[--value-col value | --value-col V1,V2 | --moments | " +
+      "--distinct C[,C2]] [--cut N] [--partitioned] [--buckets 64] " +
+      "[--kbuckets 4x-buckets, keyed state store]", runAgg,
+      Seq("source", "dest", "watermark", "by"), Set("source")),
+    Verb("agg-read", "--source ROLLUP_DIR --dest OUT_PARQUET " +
+      "[--mode plain|derived|distinct|minmax] " +
+      "[--by G[,G2] outer groups, composition modes only] " +
+      "[--value-col V, minmax only]", runAggRead),
+    Verb("rebucket",
+      "--dest PATH --buckets N [--kbuckets M, keyed layouts only]",
+      runRebucket, Seq("dest", "buckets")),
+    Verb("span-index", "--mode build|append|probe --source PATH " +
+      "--dest (INDEX_DIR for build/append, OUT_PARQUET for probe) " +
+      "[--base INDEX_DIR, probe only] [--ngram 16] [--buckets 64] " +
+      "[--id-col doc_id] [--text-col text]", runSpanIndex)) ++
+    Seq("dhash-index" -> false, "ahash-index" -> true).map {
+      case (name, audio) => Verb(name, "--mode build|append|probe " +
+        "--source MEDIA_PARQUET " +
+        "--dest (INDEX_DIR for build/append, OUT_PARQUET for probe) " +
+        "[--base INDEX_DIR, probe only] [--bands 4] " +
+        "[--max-hamming 3, probe only] [--id-col media_id] " +
+        "[--content-col content]", runHashIndex(_, _, audio))
+    }
+
+  private val byName: Map[String, Verb] =
+    verbs.flatMap(v => v.name.split('|').map(_ -> v)).toMap
+
+  private val usage = verbs.map { v =>
+    s"graft ${if (v.name.contains('|')) s"(${v.name})" else v.name} ${v.usage}"
+  }.mkString("usage: ", " | ", ". Note: agg and reconcile commit their " +
+    "watermark/state sidecars via atomic rename; object stores with no " +
+    "AbstractFileSystem binding (e.g. s3a) use a staged two-phase commit " +
+    "(.new twin written before the old sidecar is touched) so readers see " +
+    "a committed value at every crash point")
+
+  /** The options that name an endpoint. */
+  private val endpoints = Seq("source", "dest", "base", "benchmark")
+
   private val boolFlags =
     Set("progress", "apply", "partitioned", "moments", "minmax")
 
   private[cli] def parse(argv: Array[String]): Args = {
-    if (argv.isEmpty || !Set("single", "continuous", "compact", "curate",
-        "neardup", "semantic-dedup", "quality", "admit",
-        "decontaminate", "spans", "layout", "mix",
-        "dedup-lines", "dedup-spans", "diff", "reconcile",
-        "bpe-train", "tokenize", "pipeline", "agg",
-        "agg-read", "rebucket", "span-index",
-        "dhash-index", "ahash-index").contains(argv(0)))
-      throw GraftError.InvalidConfig("usage: graft (single|continuous) --source (PATH|jdbc:...#table) --dest (PATH|jdbc:...#table) [--key K[,K2]] --watermark W [--cut N] [--delay SEC] [--iterations N] [--partition-by COL] [--tombstone COL, CDC deletes] [--progress] [--source-user U] [--source-password P] [--dest-user U] [--dest-password P] | graft compact --dest PATH [--target-bytes N] [--partition-by COL] | graft curate --source PATH --dest PATH [--id-col doc_id] [--text-col text] [--jaccard 0.8] [--min-tokens N] [--max-tokens N] | graft neardup --source PATH --dest PATH [--mode minhash|simhash|exact|containment|containment-sampled] [--id-col doc_id] [--text-col text] [--jaccard 0.8] [--threshold 0.99 for containment modes] | graft semantic-dedup --source PATH --dest PATH [--id-col vec_id] [--vector-col embedding] [--threshold 0.99] | graft quality --source PATH --dest PATH [--id-col doc_id] [--text-col text] [--min-tokens N] [--max-tokens N] | graft admit --source PATH --base PATH --dest PATH [--bloom PATH] [--expected-items N] [--fpp 0.01] [--id-col doc_id] [--text-col text] | graft decontaminate --source PATH --benchmark PATH --dest PATH [--mode shingle|span|jaccard|containment] [--report PATH] [--ngram 3|16] [--max-contamination 0.0] [--jaccard 0.8] [--threshold 0.99 for containment] [--id-col doc_id] [--text-col text] | graft dedup-lines --source PATH --dest PATH [--min-docs 2] [--report PATH] [--id-col doc_id] [--text-col text] | graft dedup-spans --source PATH --dest PATH [--min-span 0] [--ngram 16] [--report PATH] [--id-col doc_id] [--text-col text] | graft diff --source PATH --base PATH --dest PATH [--id-col doc_id] [--text-col text] | graft reconcile --source (PATH|jdbc:...#table) --dest PATH --key K[,K2] [--report PATH] [--apply] | graft bpe-train --source PATH --dest PATH --merges N [--id-col doc_id] [--text-col text] | graft tokenize --source PATH --base MERGES_PATH --dest PATH [--id-col doc_id] [--text-col text] | graft spans --source PATH --dest PATH [--id-col doc_id] [--text-col text] [--ngram 16] | graft layout --source PATH --dest PATH --by COL[,COL2 for z-order] --key TIEBREAK[,K2] [--buckets 16] | graft mix --source PATH --dest PATH --by STRATACOL (--quota-tokens N | --alpha A --target-tokens N) [--id-col doc_id] [--text-col text] | graft pipeline --source PATH --benchmark PATH --dest WORKDIR --by STRATACOL (--quota-tokens N | --alpha A --target-tokens N) [--min-span 24] [--min-docs 2] [--min-tokens N] [--max-tokens N] [--max-contamination 0.0] [--shards 16] [--capacity 2048] [--id-col doc_id] [--text-col text] | graft agg --source (PATH|jdbc:...#table) --dest PATH --by GROUPCOL[,G2] --watermark W [--key K[,K2] last-writer-wins keyed lane] [--tombstone COL, keyed CDC deletes] [--value-col value | --value-col V1,V2 | --moments | --distinct C[,C2]] [--cut N] [--partitioned] [--buckets 64] [--kbuckets 4x-buckets, keyed state store] | graft agg-read --source ROLLUP_DIR --dest OUT_PARQUET [--mode plain|derived|distinct|minmax] [--by G[,G2] outer groups, composition modes only] [--value-col V, minmax only] | graft rebucket --dest PATH --buckets N [--kbuckets M, keyed layouts only] | graft span-index --mode build|append|probe --source PATH --dest (INDEX_DIR for build/append, OUT_PARQUET for probe) [--base INDEX_DIR, probe only] [--ngram 16] [--buckets 64] [--id-col doc_id] [--text-col text] | graft dhash-index --mode build|append|probe --source MEDIA_PARQUET --dest (INDEX_DIR for build/append, OUT_PARQUET for probe) [--base INDEX_DIR, probe only] [--bands 4] [--max-hamming 3, probe only] [--id-col media_id] [--content-col content] | graft ahash-index --mode build|append|probe --source MEDIA_PARQUET --dest (INDEX_DIR for build/append, OUT_PARQUET for probe) [--base INDEX_DIR, probe only] [--bands 4] [--max-hamming 3, probe only] [--id-col media_id] [--content-col content]. Note: agg and reconcile commit their watermark/state sidecars via atomic rename; object stores with no AbstractFileSystem binding (e.g. s3a) use a staged two-phase commit (.new twin written before the old sidecar is touched) so readers see a committed value at every crash point")
+    val verb = argv.headOption.flatMap(byName.get)
+      .getOrElse(throw GraftError.InvalidConfig(usage))
+    val cmd = argv(0)
     val opts = scala.collection.mutable.Map.empty[String, String]
     var i = 1
     while (i < argv.length) {
@@ -142,8 +196,18 @@ object Main {
         throw GraftError.InvalidConfig(s"option --$name requires a value")
       else { opts(name) = argv(i + 1); i += 2 }
     }
-    def req(k: String) = opts.getOrElse(k,
-      throw GraftError.InvalidConfig(s"missing required option --$k"))
+    for (k <- verb.required if !opts.contains(k))
+      throw GraftError.InvalidConfig(s"missing required option --$k")
+    // the endpoint rule: an option the verb does not list may only name a
+    // parquet path (refused here, before any Spark session starts)
+    for (k <- endpoints; v <- opts.get(k))
+      SyncEndpoint.parse(v) match {
+        case _: SyncEndpoint.JdbcTable if !verb.jdbc(k) =>
+          throw GraftError.InvalidConfig(
+            s"$cmd applies to parquet paths (--$k)")
+        case _ => ()
+      }
+    def opt(k: String) = opts.getOrElse(k, "")
     // numeric options are config surface: a bad value is the USER'S error
     // (exit 2 per M3), never a runtime failure
     def num(name: String, v: String, min: Long = Long.MinValue,
@@ -156,18 +220,20 @@ object Main {
         throw GraftError.InvalidConfig(s"--$name must be <= $max, got $n")
       n
     }
-    // compact is a dest-only maintenance verb (no source/key/watermark);
-    // curate takes source+dest but no watermark
-    val syncCmd = argv(0) == "single" || argv(0) == "continuous"
-    if (argv(0) == "rebucket") req("buckets")
-    Args(argv(0),
-      if (argv(0) == "compact" || argv(0) == "rebucket")
-        opts.getOrElse("source", "") else req("source"),
-      req("dest"),
+    // a number in the unit interval `in`, written as the messages print
+    // it: "(0,1]" excludes 0, "[0,1)" excludes 1; NaN refuses
+    def fraction(name: String, v: String, in: String): Double = {
+      val d = v.toDoubleOption.getOrElse(throw GraftError.InvalidConfig(
+        s"--$name expects a number in $in, got '$v'"))
+      if (!((if (in.head == '[') d >= 0.0 else d > 0.0) &&
+            (if (in.last == ']') d <= 1.0 else d < 1.0)))
+        throw GraftError.InvalidConfig(s"--$name must be in $in, got $d")
+      d
+    }
+    Args(cmd, opt("source"), opt("dest"),
       opts.get("key").map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
         .getOrElse(Nil),
-      if (syncCmd || argv(0) == "agg") req("watermark")
-      else opts.getOrElse("watermark", ""),
+      opt("watermark"),
       opts.get("cut").map(num("cut", _)),
       // max bound before ×1000: an absurd-but-parsed delay would wrap
       // negative and die at runtime (exit 1) instead of as config (exit 2)
@@ -183,31 +249,23 @@ object Main {
       opts.get("dest-user"), opts.get("dest-password"),
       opts.get("target-bytes").map(num("target-bytes", _, min = 1)),
       opts.getOrElse("id-col",
-        if (argv(0) == "semantic-dedup") "vec_id"
-        else if (argv(0) == "dhash-index" || argv(0) == "ahash-index")
-          "media_id"
+        if (cmd == "semantic-dedup") "vec_id"
+        else if (cmd == "dhash-index" || cmd == "ahash-index") "media_id"
         else "doc_id"),
       opts.getOrElse("text-col", "text"),
-      {
-        val j = opts.getOrElse("jaccard", "0.8")
-        val d = j.toDoubleOption.getOrElse(throw GraftError.InvalidConfig(
-          s"--jaccard expects a number in (0,1], got '$j'"))
-        if (d <= 0.0 || d > 1.0) throw GraftError.InvalidConfig(
-          s"--jaccard must be in (0,1], got $d")
-        d
-      },
+      fraction("jaccard", opts.getOrElse("jaccard", "0.8"), "(0,1]"),
       opts.get("min-tokens").map(num("min-tokens", _, min = 0)),
       opts.get("max-tokens").map(num("max-tokens", _, min = 1)),
       {
         // --mode is verb-scoped: neardup picks its cascade, decontaminate
         // picks the overlap MEASURE (shingle tally vs merged span coverage)
         val (dflt, allowed) =
-          if (argv(0) == "decontaminate")
+          if (cmd == "decontaminate")
             ("shingle", Set("shingle", "span", "jaccard", "containment"))
-          else if (argv(0) == "agg-read")
+          else if (cmd == "agg-read")
             ("plain", Set("plain", "derived", "distinct", "minmax"))
-          else if (argv(0) == "span-index" || argv(0) == "dhash-index" ||
-                   argv(0) == "ahash-index")
+          else if (cmd == "span-index" || cmd == "dhash-index" ||
+                   cmd == "ahash-index")
             ("build", Set("build", "append", "probe"))
           else ("minhash", Set("minhash", "simhash", "exact",
             "containment", "containment-sampled"))
@@ -218,54 +276,35 @@ object Main {
         m
       },
       opts.getOrElse("vector-col", "embedding"),
-      {
-        val t = opts.getOrElse("threshold", "0.99")
-        val d = t.toDoubleOption.getOrElse(throw GraftError.InvalidConfig(
-          s"--threshold expects a number in (0,1], got '$t'"))
-        if (d <= 0.0 || d > 1.0) throw GraftError.InvalidConfig(
-          s"--threshold must be in (0,1], got $d")
-        d
-      }) match {
+      fraction("threshold", opts.getOrElse("threshold", "0.99"), "(0,1]")
+    ) match {
       case a if a.minTokens.exists(mn => a.maxTokens.exists(_ < mn)) =>
         // a swapped range would silently quality-drop the whole corpus
         throw GraftError.InvalidConfig(
           s"--min-tokens (${a.minTokens.get}) must be <= --max-tokens (${a.maxTokens.get})")
       case a => a.copy(
-        base = if (argv(0) == "admit" || argv(0) == "diff" ||
-                   argv(0) == "tokenize") req("base")
-               else opts.getOrElse("base", ""),
-        benchmark = if (argv(0) == "decontaminate" ||
-                        argv(0) == "pipeline") req("benchmark")
-                    else opts.getOrElse("benchmark", ""),
+        base = opt("base"),
+        benchmark = opt("benchmark"),
         bloom = opts.get("bloom"),
         expectedItems =
           opts.get("expected-items").map(num("expected-items", _, min = 1)),
-        fpp = {
-          val v = opts.getOrElse("fpp", "0.01")
-          val d = v.toDoubleOption.getOrElse(throw GraftError.InvalidConfig(
-            s"--fpp expects a number in (0,1), got '$v'"))
-          if (d <= 0.0 || d >= 1.0) throw GraftError.InvalidConfig(
-            s"--fpp must be in (0,1), got $d")
-          d
-        },
+        fpp = fraction("fpp", opts.getOrElse("fpp", "0.01"), "(0,1)"),
         report = opts.get("report"),
         // span modes work in exact-substring windows (chars), shingle
         // decontamination in tokens — different natural defaults, one flag
         ngramN = num("ngram", opts.getOrElse("ngram",
-          if (argv(0) == "spans" || argv(0) == "dedup-spans" ||
-            argv(0) == "span-index" ||
-            (argv(0) == "decontaminate" &&
+          if (cmd == "spans" || cmd == "dedup-spans" ||
+            cmd == "span-index" ||
+            (cmd == "decontaminate" &&
               opts.get("mode").contains("span"))) "16" else "3"),
           min = 1, max = 64).toInt,
-        by = if (argv(0) == "layout" || argv(0) == "mix" ||
-                 argv(0) == "pipeline" || argv(0) == "agg") req("by")
-             else opts.getOrElse("by", ""),
+        by = opt("by"),
         // agg's partitioned rollup caps buckets where the engine does
         // (65536) and defaults to the documented 64; layout keeps 16
         buckets = num("buckets", opts.getOrElse("buckets",
-            if (argv(0) == "agg" || argv(0) == "span-index") "64" else "16"),
-          min = 1, max = if (argv(0) == "agg" || argv(0) == "rebucket" ||
-            argv(0) == "span-index") 65536 else 1000000).toInt,
+            if (cmd == "agg" || cmd == "span-index") "64" else "16"),
+          min = 1, max = if (cmd == "agg" || cmd == "rebucket" ||
+            cmd == "span-index") 65536 else 1000000).toInt,
         // keyed-partitioned state bucket count; 0 = derive (4 × --buckets:
         // keys are finer-grained than groups)
         kbuckets = num("kbuckets", opts.getOrElse("kbuckets", "0"),
@@ -278,11 +317,10 @@ object Main {
         // production form); the standalone dedup-spans verb keeps 0 (cut
         // every detected window) for backward compatibility
         minSpan = num("min-span", opts.getOrElse("min-span",
-          if (argv(0) == "pipeline") "24" else "0"),
+          if (cmd == "pipeline") "24" else "0"),
           min = 0, max = Int.MaxValue).toInt,
         applyChanges = opts.contains("apply"),
-        merges = num("merges", opts.getOrElse("merges",
-          if (argv(0) == "bpe-train") req("merges") else "6"),
+        merges = num("merges", opts.getOrElse("merges", "6"),
           min = 1, max = 65536).toInt,
         shards = num("shards", opts.getOrElse("shards", "16"),
           min = 1, max = 1000000).toInt,
@@ -302,23 +340,22 @@ object Main {
           min = 0, max = 63).toInt,
         distinctCols = opts.get("distinct"),
         valueColSet = opts.contains("value-col"),
-        alpha = opts.get("alpha").map { v =>
-          val d = v.toDoubleOption.getOrElse(throw GraftError.InvalidConfig(
-            s"--alpha expects a number in [0,1], got '$v'"))
-          if (d < 0.0 || d > 1.0) throw GraftError.InvalidConfig(
-            s"--alpha must be in [0,1], got $d")
-          d
-        },
-        maxContamination = {
-          val v = opts.getOrElse("max-contamination", "0.0")
-          val d = v.toDoubleOption.getOrElse(throw GraftError.InvalidConfig(
-            s"--max-contamination expects a number in [0,1], got '$v'"))
-          if (d < 0.0 || d > 1.0) throw GraftError.InvalidConfig(
-            s"--max-contamination must be in [0,1], got $d")
-          d
-        })
+        alpha = opts.get("alpha").map(fraction("alpha", _, "[0,1]")),
+        maxContamination = fraction("max-contamination",
+          opts.getOrElse("max-contamination", "0.0"), "[0,1]"))
     }
   }
+
+  /** Run the verb `a` was parsed for; the rows it wrote. */
+  private[cli] def dispatch(spark: SparkSession, a: Args): Long =
+    byName(a.cmd).run(spark, a)
+
+  /** Overwrite `dest` with `df`. The write job itself observes `count(1)`
+    * and then `aggs` ([[ParquetMergeSink.observedWrite]]), so a summary
+    * needs no second read of `dest`. */
+  private def write(df: DataFrame, dest: String, aggs: Column*): Row =
+    ParquetMergeSink.observedWrite(df, count(lit(1)) +: aggs: _*)(
+      _.write.mode("overwrite").parquet(dest))
 
   private def render(r: SyncReport): Unit =
     println(f"synced ${r.candidateRows} rows in ${r.elapsedMs} ms " +
@@ -329,35 +366,7 @@ object Main {
     val exit = try {
       val a = parse(argv)
       val spark = GraftSession.local("graft-cli")
-      try {
-        a.cmd match {
-          case "compact"        => runCompact(spark, a)
-          case "curate"         => runCurate(spark, a)
-          case "neardup"        => runNearDup(spark, a)
-          case "semantic-dedup" => runSemanticDedup(spark, a)
-          case "quality"        => runQuality(spark, a)
-          case "admit"          => runAdmit(spark, a)
-          case "decontaminate"  => runDecontaminate(spark, a)
-          case "spans"          => runSpans(spark, a)
-          case "layout"         => runLayout(spark, a)
-          case "mix"            => runMix(spark, a)
-          case "dedup-lines"    => runDedupLines(spark, a)
-          case "dedup-spans"    => runDedupSpans(spark, a)
-          case "diff"           => runDiff(spark, a)
-          case "reconcile"      => runReconcile(spark, a)
-          case "bpe-train"      => runBpeTrain(spark, a)
-          case "pipeline"       => runPipeline(spark, a)
-          case "tokenize"       => runTokenize(spark, a)
-          case "agg"            => runAgg(spark, a)
-          case "agg-read"       => runAggRead(spark, a)
-          case "rebucket"       => runRebucket(spark, a)
-          case "span-index"     => runSpanIndex(spark, a)
-          case "dhash-index"    => runHashIndex(spark, a, audio = false)
-          case "ahash-index"    => runHashIndex(spark, a, audio = true)
-          case _                => runSync(spark, a)
-        }
-        0
-      } finally spark.stop()
+      try { dispatch(spark, a); 0 } finally spark.stop()
     } catch {
       // M3: config/connectivity errors (the user's fault) exit 2, anything
       // else (engine/runtime failure) exits 1 — distinct, scriptable codes.
@@ -372,26 +381,21 @@ object Main {
     * substrings, merged into maximal intervals. Runs the hashed-key
     * production form (8-byte shuffle payloads); the oracle-gated exact
     * twin is `e6i_dup_span_coverage`. */
-  private[cli] def runSpans(spark: org.apache.spark.sql.SparkSession, a: Args): Unit = {
-    import org.apache.spark.sql.functions.{avg, coalesce, col, count, lit, sum}
-    if (a.source.startsWith("jdbc:") || a.dest.startsWith("jdbc:"))
-      throw GraftError.InvalidConfig("spans applies to parquet paths")
+  private[cli] def runSpans(spark: SparkSession, a: Args): Long = {
     val docs = spark.read.parquet(a.source)
-    graft.ext.TextAnalysis.dupSpanCoverage(docs, a.idCol, a.textCol,
-        n = a.ngramN, hashedKeys = true)
-      .write.mode("overwrite").parquet(a.dest)
     // coalesce the summary scalars: avg/sum over an empty (or
     // all-NULL-frac) result are SQL NULL, and getDouble/getLong on NULL
     // would crash a command whose write already SUCCEEDED (the runDiff
     // rule)
-    val s = spark.read.parquet(a.dest).agg(
-      count(col(a.idCol)).as("docs"),
-      coalesce(avg(col("dup_span_frac")), lit(0.0)).as("mean"),
-      coalesce(sum((col("dup_span_frac") >= 0.5).cast("long")), lit(0L))
-        .as("heavy")).first()
-    println(f"span coverage ${a.source}: ${s.getLong(0)} docs, " +
-      f"mean frac ${s.getDouble(1)}%.4f, ${s.getLong(2)} docs >= 0.5 " +
+    val s = write(graft.ext.TextAnalysis.dupSpanCoverage(docs, a.idCol,
+        a.textCol, n = a.ngramN, hashedKeys = true), a.dest,
+      count(col(a.idCol)),
+      coalesce(avg(col("dup_span_frac")), lit(0.0)),
+      coalesce(sum((col("dup_span_frac") >= 0.5).cast("long")), lit(0L)))
+    println(f"span coverage ${a.source}: ${s.getLong(1)} docs, " +
+      f"mean frac ${s.getDouble(2)}%.4f, ${s.getLong(3)} docs >= 0.5 " +
       s"-> ${a.dest}")
+    s.getLong(0)
   }
 
   /** Line-level boilerplate removal (ext/TextAnalysis.dropDuplicatedLines)
@@ -400,11 +404,7 @@ object Main {
     * doc row intact, and report how many line occurrences were removed.
     * `--report PATH` additionally writes the per-doc lineDupStats measure
     * the removal acts on. */
-  private[cli] def runDedupLines(spark: org.apache.spark.sql.SparkSession,
-                                 a: Args): Unit = {
-    import org.apache.spark.sql.functions.{col, explode, split, sum, trim}
-    if (a.source.startsWith("jdbc:") || a.dest.startsWith("jdbc:"))
-      throw GraftError.InvalidConfig("dedup-lines applies to parquet paths")
+  private[cli] def runDedupLines(spark: SparkSession, a: Args): Long = {
     val docs = spark.read.parquet(a.source)
     val stats = graft.ext.TextAnalysis.lineDupStats(docs, a.idCol, a.textCol)
     a.report.foreach(p => stats.write.mode("overwrite").parquet(p))
@@ -412,8 +412,8 @@ object Main {
       docs, a.idCol, a.textCol, a.minDocs)
     // cleaned text replaces the original column; every other column rides
     // along untouched (one id-keyed join — the doc table is the big side)
-    docs.drop(a.textCol).join(cleaned, Seq(a.idCol))
-      .write.mode("overwrite").parquet(a.dest)
+    val rows = write(docs.drop(a.textCol).join(cleaned, Seq(a.idCol)), a.dest)
+      .getLong(0)
     // the printed DROP count is what the removal actually removed at
     // --min-docs (derived from the before/after line totals), never the
     // ≥2-docs stats measure — at --min-docs 5 the stats frame can show
@@ -431,6 +431,7 @@ object Main {
       s"dropped ${math.max(0L, totalLines - keptLines)} line occurrences " +
       s"at min-docs=${a.minDocs} -> ${a.dest}" +
       a.report.map(p => s", stats -> $p").getOrElse(""))
+    rows
   }
 
   /** Duplicated-span removal (ext/TextAnalysis.removeDuplicatedSpans) as a
@@ -440,11 +441,7 @@ object Main {
     * doc row intact. Runs the hashed-key production form; the oracle-gated
     * exact twins are `e6i3`/`e6i4`. `--report PATH` writes the full
     * per-doc removal frame (text_len, removed_chars, clean_text). */
-  private[cli] def runDedupSpans(spark: org.apache.spark.sql.SparkSession,
-                                 a: Args): Unit = {
-    import org.apache.spark.sql.functions.{coalesce, col, sum}
-    if (a.source.startsWith("jdbc:") || a.dest.startsWith("jdbc:"))
-      throw GraftError.InvalidConfig("dedup-spans applies to parquet paths")
+  private[cli] def runDedupSpans(spark: SparkSession, a: Args): Long = {
     val docs = spark.read.parquet(a.source)
     val removed = graft.ext.TextAnalysis.removeDuplicatedSpans(
       docs, a.idCol, a.textCol, n = a.ngramN, minSpan = a.minSpan,
@@ -455,17 +452,17 @@ object Main {
     // null-text docs from the cleaned corpus. Every doc row rides through
     // (null text stays null), matching dedup-lines' keep-every-row
     // contract and the docstring's keep-every-other-column promise.
-    docs.join(removed.select(col(a.idCol), col("clean_text")),
+    val rows = write(docs.join(removed.select(col(a.idCol), col("clean_text")),
         Seq(a.idCol), "left")
       .withColumn(a.textCol, coalesce(col("clean_text"), col(a.textCol)))
-      .drop("clean_text")
-      .write.mode("overwrite").parquet(a.dest)
+      .drop("clean_text"), a.dest).getLong(0)
     val t = removed.agg(sum(col("text_len")).as("chars"),
       sum(col("removed_chars")).as("removed")).first()
     println(s"dedup-spans ${a.source}: ${t.get(0)} chars, " +
       s"${t.get(1)} removed in duplicated spans (ngram=${a.ngramN}, " +
       s"min-span=${a.minSpan}) -> ${a.dest}" +
       a.report.map(p => s", report -> $p").getOrElse(""))
+    rows
   }
 
   /** Corpus snapshot diff (ext/Dedup.corpusDiff) as a CLI verb: classify
@@ -473,30 +470,19 @@ object Main {
     * as added/removed/modified/unchanged by content fingerprint, write the
     * per-id status frame, and print the summary counts a pipeline run
     * report wants. */
-  private[cli] def runDiff(spark: org.apache.spark.sql.SparkSession,
-                           a: Args): Unit = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum, when}
-    if (a.source.startsWith("jdbc:") || a.dest.startsWith("jdbc:") ||
-        a.base.startsWith("jdbc:"))
-      throw GraftError.InvalidConfig("diff applies to parquet paths")
-    if (a.base.isEmpty)
-      throw GraftError.InvalidConfig("missing required option --base")
+  private[cli] def runDiff(spark: SparkSession, a: Args): Long = {
     val prev = spark.read.parquet(a.base)
     val next = spark.read.parquet(a.source)
-    val d = graft.ext.Dedup.corpusDiff(prev, next, a.idCol, a.textCol)
-    d.write.mode("overwrite").parquet(a.dest)
     // coalesce: sum(...) over zero rows is NULL (both snapshots empty) —
     // the summary must print "0 ids", not NPE after a successful write.
-    val s = spark.read.parquet(a.dest).agg(
-      count(lit(1)).as("n"),
-      coalesce(sum(when(col("status") === "added", 1L).otherwise(0L)), lit(0L)).as("a"),
-      coalesce(sum(when(col("status") === "removed", 1L).otherwise(0L)), lit(0L)).as("r"),
-      coalesce(sum(when(col("status") === "modified", 1L).otherwise(0L)), lit(0L)).as("m"),
-      coalesce(sum(when(col("status") === "unchanged", 1L).otherwise(0L)), lit(0L)).as("u"))
-      .first()
+    def n(status: String) = coalesce(
+      sum(when(col("status") === status, 1L).otherwise(0L)), lit(0L))
+    val s = write(graft.ext.Dedup.corpusDiff(prev, next, a.idCol, a.textCol),
+      a.dest, n("added"), n("removed"), n("modified"), n("unchanged"))
     println(s"diff ${a.base} -> ${a.source}: ${s.getLong(0)} ids " +
       s"(${s.getLong(1)} added, ${s.getLong(2)} removed, " +
       s"${s.getLong(3)} modified, ${s.getLong(4)} unchanged) -> ${a.dest}")
+    s.getLong(0)
   }
 
   /** DELETE reconciliation (sync/Reconcile) as a CLI verb: report (and
@@ -512,45 +498,45 @@ object Main {
     * ordinary key rows, so the pass would silently find zero orphans
     * and stop repairing (see [[graft.sync.Reconcile]]); CDC-fed
     * destinations get deletes in-band via --tombstone instead. */
-  private[cli] def runReconcile(spark: org.apache.spark.sql.SparkSession,
-                                a: Args): Unit = {
-    import org.apache.spark.sql.functions.col
+  private[cli] def runReconcile(spark: SparkSession, a: Args): Long = {
     if (a.keys.isEmpty)
       throw GraftError.InvalidConfig("reconcile requires --key K[,K2]")
     // key-only projection on either kind of endpoint — the orphan pass
     // never moves wide rows (parquet prunes columns from footers, JDBC
     // pushes SELECT k FROM t)
-    def readKeys(ep: graft.sync.SyncEndpoint) = ep match {
-      case graft.sync.SyncEndpoint.ParquetDir(dir) =>
+    def readKeys(ep: SyncEndpoint) = ep match {
+      case SyncEndpoint.ParquetDir(dir) =>
         spark.read.parquet(dir).select(a.keys.map(col): _*)
-      case graft.sync.SyncEndpoint.JdbcTable(url, table, props) =>
+      case SyncEndpoint.JdbcTable(url, table, props) =>
         spark.read.jdbc(url,
           s"(SELECT ${a.keys.mkString(", ")} FROM $table) graft_rc", props)
     }
-    val srcEp = graft.sync.SyncEndpoint.parse(a.source, a.sourceUser,
-      a.sourcePassword)
-    val destEp = graft.sync.SyncEndpoint.parse(a.dest, a.destUser,
-      a.destPassword)
+    val srcEp = SyncEndpoint.parse(a.source, a.sourceUser, a.sourcePassword)
+    val destEp = SyncEndpoint.parse(a.dest, a.destUser, a.destPassword)
     val orphans = graft.sync.Reconcile.deletedKeys(
         readKeys(srcEp), readKeys(destEp), a.keys)
       .localCheckpoint() // consumed up to three times: report, count, apply
     a.report.foreach(p => orphans.write.mode("overwrite").parquet(p))
     val n = orphans.count()
     if (a.applyChanges) {
-      val dropped = destEp match {
-        case graft.sync.SyncEndpoint.ParquetDir(dir) =>
-          graft.sync.Reconcile.applyDeletes(spark, dir, orphans, a.keys)._2
-        case graft.sync.SyncEndpoint.JdbcTable(url, table, props) =>
-          graft.sinks.JdbcUpsertSink.deleteByKeys(
-            orphans, url, props, table, a.keys)
+      // a parquet destination is rewritten (its kept rows); a JDBC one
+      // only loses rows
+      val (kept, dropped) = destEp match {
+        case SyncEndpoint.ParquetDir(dir) =>
+          graft.sync.Reconcile.applyDeletes(spark, dir, orphans, a.keys)
+        case SyncEndpoint.JdbcTable(url, table, props) =>
+          (0L, graft.sinks.JdbcUpsertSink.deleteByKeys(
+            orphans, url, props, table, a.keys))
       }
       println(s"reconcile ${a.source} -> ${a.dest}: $n orphaned keys, " +
         s"dropped $dropped" +
         a.report.map(p => s", report -> $p").getOrElse(""))
+      kept
     } else {
       println(s"reconcile ${a.source} -> ${a.dest}: $n orphaned keys " +
         s"(dest rows absent upstream; rerun with --apply to drop them)" +
         a.report.map(p => s", report -> $p").getOrElse(""))
+      0L
     }
   }
 
@@ -582,9 +568,7 @@ object Main {
     * params stamp refuses a mismatch loudly rather than mixing hash
     * spaces (the stamp records the build-time count; there is no silent
     * migration). */
-  private[cli] def runAgg(spark: org.apache.spark.sql.SparkSession,
-                          a: Args): Unit = {
-    import org.apache.spark.sql.functions.{col, min, max}
+  private[cli] def runAgg(spark: SparkSession, a: Args): Long = {
     val groupCols = a.by.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
     if (groupCols.isEmpty)
       throw GraftError.InvalidConfig("agg requires --by GROUPCOL[,G2]")
@@ -681,25 +665,34 @@ object Main {
       throw GraftError.InvalidConfig(
         "--kbuckets sizes the keyed partitioned lane's state store; it " +
           "requires both --key and --partitioned")
-    val srcEp = SyncEndpoint.parse(a.source, a.sourceUser, a.sourcePassword)
-    val source = srcEp match {
-      case SyncEndpoint.ParquetDir(dir) => spark.read.parquet(dir)
-      case SyncEndpoint.JdbcTable(url, table, props) =>
-        spark.read.jdbc(url, table, props)
-    }
+    // the source and its watermark bounds (absent on an empty source). A
+    // JDBC table is preflighted (a missing one is GraftError.MissingTable)
+    // and bounded by the sync lifecycle's MIN/MAX statement on the
+    // server: no Spark job. A parquet source's bounds pass is LAZY: a
+    // warm rollup with an explicit --cut needs neither bound, and the
+    // steady-state cron tick must not pay a full min/max scan it never
+    // reads (Option.orElse / getOrElse take their alternative by name, so
+    // `lazy val` defers the job until a bound is actually consumed)
+    val (source, bounds) =
+      SyncEndpoint.parse(a.source, a.sourceUser, a.sourcePassword) match {
+        case SyncEndpoint.ParquetDir(dir) =>
+          val df = spark.read.parquet(dir)
+          (df, () => {
+            val b = df.agg(min(col(a.watermark)).as("lo"),
+              max(col(a.watermark)).as("hi")).first()
+            (graft.core.Watermark.toMicros(b.get(0)),
+              graft.core.Watermark.toMicros(b.get(1)))
+          })
+        case SyncEndpoint.JdbcTable(url, table, props) =>
+          val b = new JdbcSource(url, props).checkedBounds(table, a.watermark)
+          (spark.read.jdbc(url, table, props),
+            () => (b.map(_.loUs), b.map(_.hiUs)))
+      }
     val stored = graft.sync.AggMaintenance.watermark(spark, a.dest)
-    // bounds pass over the order column, LAZY: a warm rollup with an
-    // explicit --cut needs neither bound, and the steady-state cron tick
-    // must not pay a full min/max scan it never reads (Option.orElse /
-    // getOrElse take their alternative by name, so `lazy val` defers the
-    // job until a bound is actually consumed; absent on an empty source)
-    lazy val b = source.agg(min(col(a.watermark)).as("lo"),
-      max(col(a.watermark)).as("hi")).first()
-    lazy val srcLo = graft.core.Watermark.toMicros(b.get(0))
-    lazy val srcHi = graft.core.Watermark.toMicros(b.get(1))
+    lazy val (srcLo, srcHi) = bounds()
     val lo = stored.orElse(srcLo).getOrElse {
       println(s"agg ${a.source} -> ${a.dest}: source empty and no rollup " +
-        "yet; nothing to do"); return
+        "yet; nothing to do"); return 0L
     }
     // --cut is the caller's T2-style snapshot cut; the default folds
     // through the source's current max (half-open, hence +1)
@@ -707,7 +700,7 @@ object Main {
     if (hi <= lo) {
       println(s"agg ${a.source} -> ${a.dest}: up to date " +
         s"(watermark $lo, cut $hi)")
-      return
+      return 0L
     }
     // default --kbuckets: the stored stamp's kbuckets= on a warm rollup
     // (a rebucket --buckets N keeps the state space — re-deriving
@@ -764,6 +757,7 @@ object Main {
       println(s"agg ${a.source} -> ${a.dest}: folded [$lo, $hi) " +
         s"sliceRows=${r.sliceRows} groups=${r.groupsWritten} " +
         s"watermark=${r.watermarkUs}")
+    r.groupsWritten
   }
 
   /** Rollup READ as a CLI verb — the missing read half of `agg`: every
@@ -776,11 +770,7 @@ object Main {
     * keyed rollup). Flags are mode-scoped and refuse when silently
     * ignorable — an unused `--by` or `--value-col` is a misconfigured
     * invocation, not noise. */
-  private[cli] def runAggRead(spark: org.apache.spark.sql.SparkSession,
-                              a: Args): Unit = {
-    if (a.source.startsWith("jdbc:") || a.dest.startsWith("jdbc:"))
-      throw GraftError.InvalidConfig(
-        "agg-read reads a parquet rollup into a parquet output")
+  private[cli] def runAggRead(spark: SparkSession, a: Args): Long = {
     val composition = a.mode == "distinct" || a.mode == "minmax"
     val outerCols = a.by.split(",", -1).toSeq.map(_.trim)
     if (composition && (a.by.isEmpty || outerCols.exists(_.isEmpty)))
@@ -818,11 +808,11 @@ object Main {
       case "minmax"   => AggMaintenance.readKeyedMinMax(
         spark, a.source, outerCols, a.valueCol)
     }
-    df.write.mode("overwrite").parquet(a.dest)
-    val n = spark.read.parquet(a.dest).count()
+    val n = write(df, a.dest).getLong(0)
     println(s"agg-read ${a.source} [${a.mode}]: $n rows -> ${a.dest} " +
       s"(watermark ${AggMaintenance.watermark(spark, a.source)
         .getOrElse(-1L)})")
+    n
   }
 
   /** The persisted gram index (TextAnalysis.buildGramIndex family) as a
@@ -832,10 +822,7 @@ object Main {
     * span coverage against the EXISTING corpus (text_len, covered_chars,
     * dup_span_frac) without re-exploding base text. Index params are
     * frozen in the build's stamp; append/probe re-derive them. */
-  private[cli] def runSpanIndex(spark: org.apache.spark.sql.SparkSession,
-                                a: Args): Unit = {
-    if (a.source.startsWith("jdbc:") || a.dest.startsWith("jdbc:"))
-      throw GraftError.InvalidConfig("span-index applies to parquet paths")
+  private[cli] def runSpanIndex(spark: SparkSession, a: Args): Long = {
     val docs = spark.read.parquet(a.source)
     a.mode match {
       case "build" =>
@@ -843,21 +830,22 @@ object Main {
           a.dest, n = a.ngramN, nBuckets = a.buckets)
         println(s"span-index build ${a.source}: n=${a.ngramN} " +
           s"buckets=${a.buckets} -> ${a.dest}")
+        0L
       case "append" =>
         graft.ext.TextAnalysis.gramIndexAppend(spark, a.dest, docs,
           a.idCol, a.textCol)
         println(s"span-index append ${a.source} -> ${a.dest}")
+        0L
       case "probe" =>
         if (a.base.isEmpty)
           throw GraftError.InvalidConfig(
             "span-index --mode probe needs --base INDEX_DIR (the " +
               "committed index; --dest is the coverage output)")
-        val out = graft.ext.TextAnalysis.gramIndexSpanCoverage(
-          spark, a.base, docs, a.idCol, a.textCol)
-        out.write.mode("overwrite").parquet(a.dest)
-        val n = spark.read.parquet(a.dest).count()
+        val n = write(graft.ext.TextAnalysis.gramIndexSpanCoverage(
+          spark, a.base, docs, a.idCol, a.textCol), a.dest).getLong(0)
         println(s"span-index probe ${a.source} vs ${a.base}: " +
           s"$n docs -> ${a.dest}")
+        n
     }
   }
 
@@ -874,30 +862,28 @@ object Main {
     * stamp names are distinct, so probing an image index with the audio
     * verb (or vice versa) refuses typed instead of silently missing
     * everything. */
-  private[cli] def runHashIndex(spark: org.apache.spark.sql.SparkSession,
-                                a: Args, audio: Boolean): Unit = {
+  private[cli] def runHashIndex(spark: SparkSession, a: Args,
+                                audio: Boolean): Long = {
     val verb = if (audio) "ahash-index" else "dhash-index"
-    if (a.source.startsWith("jdbc:") || a.dest.startsWith("jdbc:"))
-      throw GraftError.InvalidConfig(s"$verb applies to parquet paths")
     if (64 % a.bands != 0)
       throw GraftError.InvalidConfig(
         s"--bands must divide 64, got ${a.bands}")
     // maxHamming < bands is checked by the probe, against the band count
     // the index stamp froze; build and append never read maxHamming
-    val media = spark.read.parquet(a.source)
-      .select(org.apache.spark.sql.functions.col(a.idCol).cast("long")
-          .as("media_id"),
-        org.apache.spark.sql.functions.col(a.contentCol).as("content"))
+    val media = spark.read.parquet(a.source).select(
+      col(a.idCol).cast("long").as("media_id"), col(a.contentCol).as("content"))
     import graft.ext.Multimodal
     a.mode match {
       case "build" =>
         if (audio) Multimodal.buildAudioHashIndex(media, a.dest, bands = a.bands)
         else Multimodal.buildDHashIndex(media, a.dest, bands = a.bands)
         println(s"$verb build ${a.source}: bands=${a.bands} -> ${a.dest}")
+        0L
       case "append" =>
         if (audio) Multimodal.audioIndexAppend(spark, a.dest, media)
         else Multimodal.dhashIndexAppend(spark, a.dest, media)
         println(s"$verb append ${a.source} -> ${a.dest}")
+        0L
       case "probe" =>
         if (a.base.isEmpty)
           throw GraftError.InvalidConfig(
@@ -908,10 +894,10 @@ object Main {
             maxHamming = a.maxHamming)
           else Multimodal.dhashIndexProbe(spark, a.base, media,
             maxHamming = a.maxHamming)
-        out.write.mode("overwrite").parquet(a.dest)
-        val n = spark.read.parquet(a.dest).count()
+        val n = write(out, a.dest).getLong(0)
         println(s"$verb probe ${a.source} vs ${a.base}: " +
           s"$n pairs (hamming <= ${a.maxHamming}) -> ${a.dest}")
+        n
     }
   }
 
@@ -920,62 +906,50 @@ object Main {
     * that unfreezes the stamp's `buckets=` as the group count grows.
     * Requires an explicit --buckets (a silent default would relabel a
     * production layout to an arbitrary size). */
-  private[cli] def runRebucket(spark: org.apache.spark.sql.SparkSession,
-                               a: Args): Unit = {
-    if (a.dest.startsWith("jdbc:"))
-      throw GraftError.InvalidConfig("rebucket applies to parquet rollups")
+  private[cli] def runRebucket(spark: SparkSession, a: Args): Long = {
     graft.sync.AggMaintenance.rebucket(spark, a.dest, a.buckets,
       newKeyBuckets = a.kbuckets)
     println(s"rebucket ${a.dest}: now ${a.buckets} buckets" +
       (if (a.kbuckets > 0) s", ${a.kbuckets} state kbuckets" else "") +
       s" (watermark ${graft.sync.AggMaintenance.watermark(spark, a.dest)
         .getOrElse(-1L)})")
+    0L
   }
 
   /** BPE tokenizer TRAINING (ext/TextAnalysis.bpeTrain) as a CLI verb:
     * run --merges rounds over the corpus and write the merge table
     * (round, pair, cnt) — the model artifact `tokenize` applies. */
-  private[cli] def runBpeTrain(spark: org.apache.spark.sql.SparkSession,
-                               a: Args): Unit = {
-    if (a.source.startsWith("jdbc:") || a.dest.startsWith("jdbc:"))
-      throw GraftError.InvalidConfig("bpe-train applies to parquet paths")
+  private[cli] def runBpeTrain(spark: SparkSession, a: Args): Long = {
     val docs = spark.read.parquet(a.source)
     val (table, excluded) = graft.ext.TextAnalysis.bpeTrainCounted(
       docs, a.textCol, merges = a.merges)
-    table.coalesce(1).write.mode("overwrite").parquet(a.dest)
-    val n = spark.read.parquet(a.dest).count()
+    val n = write(table.coalesce(1), a.dest).getLong(0)
     println(s"bpe-train ${a.source}: $n merges (asked ${a.merges}" +
       (if (n < a.merges) ", pair space exhausted" else "") +
       s")${if (excluded > 0) s", $excluded sentinel tokens excluded" else ""}" +
       s" -> ${a.dest}")
+    n
   }
 
   /** BPE tokenizer APPLICATION (ext/TextAnalysis.bpeEncodeWith) as a CLI
     * verb: apply the --base merge table in training order and write
     * per-doc token/symbol counts. */
-  private[cli] def runTokenize(spark: org.apache.spark.sql.SparkSession,
-                               a: Args): Unit = {
-    import org.apache.spark.sql.functions.{col, sum}
-    if (a.source.startsWith("jdbc:") || a.dest.startsWith("jdbc:"))
-      throw GraftError.InvalidConfig("tokenize applies to parquet paths")
+  private[cli] def runTokenize(spark: SparkSession, a: Args): Long = {
     val docs = spark.read.parquet(a.source)
     val mergeTable = spark.read.parquet(a.base)
-    graft.ext.TextAnalysis.bpeEncodeWith(docs, a.idCol, a.textCol, mergeTable)
-      .write.mode("overwrite").parquet(a.dest)
-    val t = spark.read.parquet(a.dest)
-      .agg(sum(col("n_tokens")), sum(col("n_symbols"))).first()
-    println(s"tokenize ${a.source}: ${t.get(0)} tokens -> ${t.get(1)} " +
+    val t = write(graft.ext.TextAnalysis.bpeEncodeWith(docs, a.idCol,
+        a.textCol, mergeTable), a.dest,
+      sum(col("n_tokens")), sum(col("n_symbols")))
+    println(s"tokenize ${a.source}: ${t.get(1)} tokens -> ${t.get(2)} " +
       s"symbols under ${mergeTable.count()} merges (${a.base}) -> ${a.dest}")
+    t.getLong(0)
   }
 
   /** Range-clustered layout (ops/RangeLayout) as a CLI verb: rewrite a
     * parquet corpus into deterministic rank-split `bucket=k/` dirs sorted
     * by --by (tie-broken by --key), with the per-bucket min/max/count
     * manifest sidecar a range scan prunes against. */
-  private[cli] def runLayout(spark: org.apache.spark.sql.SparkSession, a: Args): Unit = {
-    import org.apache.spark.sql.functions.col
-    if (a.source.startsWith("jdbc:") || a.dest.startsWith("jdbc:"))
-      throw GraftError.InvalidConfig("layout applies to parquet paths")
+  private[cli] def runLayout(spark: SparkSession, a: Args): Long = {
     if (a.keys.isEmpty)
       throw GraftError.InvalidConfig(
         "layout requires --key (tie-break column(s) completing the total order)")
@@ -996,6 +970,7 @@ object Main {
         println(s"layout ${a.source} by $one: ${mf.length} buckets -> ${a.dest}")
         mf.foreach(r => println(
           s"  bucket=${r.get(0)} rows=${r.get(1)} min=${r.get(2)} max=${r.get(3)}"))
+        mf.map(_.getLong(1)).sum
       case Array(ca, cb) =>
         graft.ops.ZOrder.writeZOrdered(df, a.dest, ca, cb,
           a.keys.map(col), a.buckets)
@@ -1006,6 +981,7 @@ object Main {
         mf.foreach(r => println(
           s"  bucket=${r.get(0)} rows=${r.get(1)} $ca=[${r.get(2)},${r.get(3)}] " +
             s"$cb=[${r.get(4)},${r.get(5)}]"))
+        mf.map(_.getLong(1)).sum
       case more => throw GraftError.InvalidConfig(
         s"layout --by takes one column (range) or two (z-order), got ${more.length}")
     }
@@ -1015,14 +991,10 @@ object Main {
     * each --by stratum's expected token contribution (tokenQuotaSample);
     * `--alpha` + `--target-tokens` rebalances expected contributions to
     * ∝ tot^α under the total budget (temperatureMix). Exactly one mode. */
-  private[cli] def runMix(spark: org.apache.spark.sql.SparkSession, a: Args): Unit = {
-    import org.apache.spark.sql.functions.{col, count, sum}
-    if (a.source.startsWith("jdbc:") || a.dest.startsWith("jdbc:"))
-      throw GraftError.InvalidConfig("mix applies to parquet paths")
+  private[cli] def runMix(spark: SparkSession, a: Args): Long = {
     // mode validation is config surface — it must fire (exit 2) before the
     // source is even touched
-    type Mix = (org.apache.spark.sql.DataFrame,
-                org.apache.spark.sql.Column) => org.apache.spark.sql.DataFrame
+    type Mix = (DataFrame, Column) => DataFrame
     val mode: Mix = (a.quotaTokens, a.alpha, a.targetTokens) match {
       case (Some(q), None, None) =>
         (d, t) => graft.ext.Sampling.tokenQuotaSample(d, a.by, a.idCol, t, q)
@@ -1033,23 +1005,23 @@ object Main {
     }
     val docs = spark.read.parquet(a.source)
     val tokens = graft.ext.TextAnalysis.tokenCount(col(a.textCol))
-    mode(docs, tokens).write.mode("overwrite").parquet(a.dest)
+    val rows = write(mode(docs, tokens), a.dest).getLong(0)
     val s = spark.read.parquet(a.dest)
       .groupBy(col(a.by)).agg(count(col(a.idCol)).as("docs"),
         sum(tokens).as("tokens"))
       .orderBy(col(a.by)).collect()
     println(s"mix ${a.source} by ${a.by} -> ${a.dest}")
     s.foreach(r => println(s"  ${r.get(0)}: docs=${r.get(1)} tokens=${r.get(2)}"))
+    rows
   }
 
-  private[cli] def runCompact(spark: org.apache.spark.sql.SparkSession, a: Args): Unit = {
-    if (a.dest.startsWith("jdbc:"))
-      throw GraftError.InvalidConfig("compact applies to parquet directories")
+  private[cli] def runCompact(spark: SparkSession, a: Args): Long = {
     val r = graft.sync.Compact.compact(spark, a.dest,
       a.targetBytes.getOrElse(graft.sync.Compact.DefaultTargetBytes),
       a.partitionBy)
     println(s"compacted ${a.dest}: ${r.filesBefore} -> ${r.filesAfter} " +
       s"files (${r.rows} rows)")
+    r.rows
   }
 
   /** The END-TO-END curation pipeline as ONE command — the pass a corpus
@@ -1068,13 +1040,9 @@ object Main {
     * decontamination) — to tune a single stage, run its verb standalone.
     * Working dirs are real parquet (restart-friendly: a failed stage
     * leaves every earlier stage's output on disk), and per-stage rows are
-    * counted from what landed on disk, not from the plan. */
-  private[cli] def runPipeline(spark: org.apache.spark.sql.SparkSession,
-                               a: Args): Unit = {
-    import org.apache.spark.sql.functions.{col, count, expr, lit, when}
-    if (a.source.startsWith("jdbc:") || a.dest.startsWith("jdbc:") ||
-        a.benchmark.startsWith("jdbc:"))
-      throw GraftError.InvalidConfig("pipeline applies to parquet paths")
+    * the rows each stage's write job wrote, not an estimate from the
+    * plan. */
+  private[cli] def runPipeline(spark: SparkSession, a: Args): Long = {
     // the mix stage runs FIFTH — its mode contract (exactly one of
     // --quota-tokens | --alpha + --target-tokens) must refuse here, before
     // four stages of real work, not when runMix finally fires (config
@@ -1117,14 +1085,10 @@ object Main {
         "semantics)")
     var last = a.source
     val ledger = scala.collection.mutable.ArrayBuffer[(String, Long, Double)]()
-    def stage(name: String, out: String)(body: String => Unit): Unit = {
+    def stage(name: String, out: String)(body: String => Long): Unit = {
       val s0 = System.nanoTime()
-      body(out)
-      // seconds BEFORE the on-disk recount: the ledger attributes each
-      // stage's own cost, and the recount is bookkeeping, not stage work
-      val sec = (System.nanoTime() - s0) / 1e9
-      val rows = spark.read.parquet(out).count()
-      ledger += ((name, rows, sec))
+      val rows = body(out)
+      ledger += ((name, rows, (System.nanoTime() - s0) / 1e9))
       last = out
     }
     stage("dedup-spans", s"$work/01_despanned")(o =>
@@ -1149,8 +1113,7 @@ object Main {
               .between(mn.getOrElse(0L), mx.getOrElse(Long.MaxValue)))
             .select(a.idCol)
       }
-      docs.join(passIds, Seq(a.idCol), "left_semi")
-        .write.mode("overwrite").parquet(o)
+      write(docs.join(passIds, Seq(a.idCol), "left_semi"), o).getLong(0)
     }
     stage("decontaminate", s"$work/04_decontaminated")(o =>
       runDecontaminate(spark, a.copy(source = last, dest = o,
@@ -1162,10 +1125,11 @@ object Main {
       val (packed, dropped) = graft.ext.Packing.packBinsCounted(docs,
         a.idCol, graft.ext.TextAnalysis.tokenCount(col(a.textCol)),
         nShards = a.shards, capacity = a.capacity)
-      packed.write.mode("overwrite").parquet(o)
+      val rows = write(packed, o).getLong(0)
       if (dropped.value > 0L)
         println(s"pipeline[pack] dropped ${dropped.value} unpackable rows" +
           " (null/malformed id) — see Packing.packBinsCounted")
+      rows
     }
     val packs = spark.read.parquet(last)
       .select("shard", "pack_id").distinct().count()
@@ -1174,6 +1138,7 @@ object Main {
     ledger.foreach { case (name, rows, sec) =>
       println(f"  $name%-14s rows=$rows%-9d ${sec}%6.1f s") }
     println(f"pipeline done: $packs packs in $last, ${total}%.1f s total")
+    ledger.last._2
   }
 
   /** The composed training-data curation pass (ext/Curation) as a CLI
@@ -1181,10 +1146,7 @@ object Main {
     * MinHash-LSH near-dedup (the production edge generator), one verdict
     * row per doc written to parquet. Parquet-only: curation is a corpus
     * operation, not a sync. */
-  private[cli] def runCurate(spark: org.apache.spark.sql.SparkSession, a: Args): Unit = {
-    import org.apache.spark.sql.functions.col
-    if (a.source.startsWith("jdbc:") || a.dest.startsWith("jdbc:"))
-      throw GraftError.InvalidConfig("curate applies to parquet paths")
+  private[cli] def runCurate(spark: SparkSession, a: Args): Long = {
     val docs = spark.read.parquet(a.source)
     graft.functions.GraftFunctions.register(spark)
     val edges = graft.ext.Dedup.minhashNearDups(docs, a.idCol, a.textCol,
@@ -1194,13 +1156,13 @@ object Main {
       case (mn, mx) => Some(graft.ext.TextAnalysis.tokenCount(col(a.textCol))
         .between(mn.getOrElse(0L), mx.getOrElse(Long.MaxValue)))
     }
-    graft.ext.Curation.curate(docs, a.idCol, a.textCol, edges,
-        qualityPass = qualityPass)
-      .write.mode("overwrite").parquet(a.dest)
+    val rows = write(graft.ext.Curation.curate(docs, a.idCol, a.textCol,
+      edges, qualityPass = qualityPass), a.dest).getLong(0)
     val counts = spark.read.parquet(a.dest)
       .groupBy("drop_reason").count().collect()
       .map(r => s"${r.getString(0)}=${r.getLong(1)}").sorted.mkString(" ")
     println(s"curated ${a.source}: $counts -> ${a.dest}")
+    rows
   }
 
   /** Near-duplicate detection as a standalone verb: `minhash` runs the
@@ -1210,42 +1172,35 @@ object Main {
     * distance; `exact` writes a (id, keeper_id) map — min-id keeper per
     * identical text. The hot-band drop ledger prints when the cap
     * truncated candidate generation (never silent). */
-  private[cli] def runNearDup(spark: org.apache.spark.sql.SparkSession,
-                              a: Args): Unit = {
-    import org.apache.spark.sql.functions.{col, min}
-    if (a.source.startsWith("jdbc:") || a.dest.startsWith("jdbc:"))
-      throw GraftError.InvalidConfig("neardup applies to parquet paths")
+  private[cli] def runNearDup(spark: SparkSession, a: Args): Long = {
     val docs = spark.read.parquet(a.source)
     graft.functions.GraftFunctions.register(spark)
-    a.mode match {
+    if (a.mode == "exact") {
+      val keeper = docs.groupBy(col(a.textCol))
+        .agg(min(col(a.idCol)).as("keeper_id"))
+      val n = write(docs.select(col(a.idCol), col(a.textCol))
+        .join(keeper, a.textCol)
+        .select(col(a.idCol), col("keeper_id")), a.dest).getLong(0)
+      println(s"neardup exact ${a.source}: $n docs, " +
+        s"${spark.read.parquet(a.dest).select("keeper_id").distinct().count()}" +
+        s" keepers -> ${a.dest}")
+      return n
+    }
+    // the pairs and the cap note, which prints when the cap truncated
+    // candidate generation
+    val (pairs, capped) = a.mode match {
       case "minhash" =>
         val (pairs, stats) = graft.ext.Dedup.minhashNearDupsCounted(
           docs, a.idCol, a.textCol, threshold = a.jaccard,
           nativeShingles = true)
-        pairs.write.mode("overwrite").parquet(a.dest)
-        val capped = if (stats.droppedBands > 0)
+        (pairs, if (stats.droppedBands > 0)
           s" [capped: ${stats.droppedBands} bands / ${stats.droppedRows} rows dropped]"
-        else ""
-        println(s"neardup minhash ${a.source}: " +
-          s"${spark.read.parquet(a.dest).count()} pairs -> ${a.dest}$capped")
+        else "")
       case "simhash" =>
         val hashed = docs.select(col(a.idCol),
           graft.ext.TextAnalysis.simhash64(col(a.textCol)).as("__simhash"))
-        graft.ext.TextAnalysis.simhashCandidates(hashed, a.idCol, "__simhash")
-          .select("a_id", "b_id", "hamming")
-          .write.mode("overwrite").parquet(a.dest)
-        println(s"neardup simhash ${a.source}: " +
-          s"${spark.read.parquet(a.dest).count()} pairs -> ${a.dest}")
-      case "exact" =>
-        val keeper = docs.groupBy(col(a.textCol))
-          .agg(min(col(a.idCol)).as("keeper_id"))
-        docs.select(col(a.idCol), col(a.textCol))
-          .join(keeper, a.textCol)
-          .select(col(a.idCol), col("keeper_id"))
-          .write.mode("overwrite").parquet(a.dest)
-        val out = spark.read.parquet(a.dest)
-        println(s"neardup exact ${a.source}: ${out.count()} docs, " +
-          s"${out.select("keeper_id").distinct().count()} keepers -> ${a.dest}")
+        (graft.ext.TextAnalysis.simhashCandidates(hashed, a.idCol, "__simhash")
+          .select("a_id", "b_id", "hamming"), "")
       case "containment" =>
         // asymmetric quote/subset pairs at --threshold; the maxDf
         // boilerplate-shingle cap is ON by default (opt out only in the
@@ -1254,11 +1209,8 @@ object Main {
         val (pairs, dropped) = graft.ext.Dedup.containmentPairsCounted(
           docs, a.idCol, a.textCol, minContainment = a.threshold,
           nativeShingles = true)
-        pairs.write.mode("overwrite").parquet(a.dest)
-        val capped = if (dropped > 0)
-          s" [capped: $dropped boilerplate shingles dropped]" else ""
-        println(s"neardup containment ${a.source}: " +
-          s"${spark.read.parquet(a.dest).count()} pairs -> ${a.dest}$capped")
+        (pairs, if (dropped > 0)
+          s" [capped: $dropped boilerplate shingles dropped]" else "")
       case "containment-sampled" =>
         // the 100 TB form: deterministic 1/16 gram-space slice bounds the
         // pair-join mass by the sample rate even under degenerate
@@ -1267,57 +1219,48 @@ object Main {
           graft.ext.Dedup.containmentPairsSampledCounted(
             docs, a.idCol, a.textCol, minContainment = a.threshold,
             nativeShingles = true, hashedKeys = true)
-        pairs.write.mode("overwrite").parquet(a.dest)
-        val capped = if (dropped > 0)
-          s" [capped: $dropped sampled shingles dropped]" else ""
-        println(s"neardup containment-sampled ${a.source}: " +
-          s"${spark.read.parquet(a.dest).count()} pairs -> ${a.dest}$capped")
+        (pairs, if (dropped > 0)
+          s" [capped: $dropped sampled shingles dropped]" else "")
     }
+    val n = write(pairs, a.dest).getLong(0)
+    println(s"neardup ${a.mode} ${a.source}: $n pairs -> ${a.dest}$capped")
+    n
   }
 
   /** Embedding-space dedup as a verb: one canonical survivor per
     * cosine-similarity component at --threshold, cells auto-sized to the
     * distinct corpus. Writes the surviving rows (schema unchanged). */
-  private[cli] def runSemanticDedup(spark: org.apache.spark.sql.SparkSession,
-                                    a: Args): Unit = {
-    if (a.source.startsWith("jdbc:") || a.dest.startsWith("jdbc:"))
-      throw GraftError.InvalidConfig("semantic-dedup applies to parquet paths")
+  private[cli] def runSemanticDedup(spark: SparkSession, a: Args): Long = {
     val emb = spark.read.parquet(a.source)
     graft.functions.GraftFunctions.register(spark)
     val (survivors, stats) = graft.ext.Similarity.semanticDedupCounted(
       emb, a.idCol, a.vectorCol, threshold = a.threshold,
       nClusters = graft.ext.Similarity.AutoClusters)
-    survivors.write.mode("overwrite").parquet(a.dest)
-    val kept = spark.read.parquet(a.dest).count()
+    val kept = write(survivors, a.dest).getLong(0)
     val capped = if (stats.droppedBands > 0)
       s" [capped: ${stats.droppedBands} cells / ${stats.droppedRows} rows skipped pairing]"
     else ""
     println(s"semantic-dedup ${a.source}: kept $kept of ${emb.count()} " +
       s"-> ${a.dest}$capped")
+    kept
   }
 
   /** Per-document quality profile: the Gopher rule conjunction (measures +
     * per-rule flags + gopher_pass) joined with the composite quality score
     * and the n-gram language guess — the triage table a curation run
     * starts from. */
-  private[cli] def runQuality(spark: org.apache.spark.sql.SparkSession,
-                              a: Args): Unit = {
-    import org.apache.spark.sql.functions.col
-    if (a.source.startsWith("jdbc:") || a.dest.startsWith("jdbc:"))
-      throw GraftError.InvalidConfig("quality applies to parquet paths")
+  private[cli] def runQuality(spark: SparkSession, a: Args): Long = {
     val docs = spark.read.parquet(a.source)
     val rules = graft.ext.TextAnalysis.gopherRules(docs, a.idCol, a.textCol,
       minTokens = a.minTokens.getOrElse(50L),
       maxTokens = a.maxTokens.getOrElse(100000L))
-    rules.join(docs.select(col(a.idCol),
+    val q = write(rules.join(docs.select(col(a.idCol),
         graft.ext.TextAnalysis.qualityScore(col(a.textCol)).as("quality_score"),
         graft.ext.TextAnalysis.langId(col(a.textCol)).as("lang_guess")),
-        a.idCol)
-      .write.mode("overwrite").parquet(a.dest)
-    val out = spark.read.parquet(a.dest)
-    println(s"quality ${a.source}: " +
-      s"${out.filter(col("gopher_pass") === 1L).count()}/${out.count()} " +
+        a.idCol), a.dest, count_if(col("gopher_pass") === 1L))
+    println(s"quality ${a.source}: ${q.getLong(1)}/${q.getLong(0)} " +
       s"pass gopher -> ${a.dest}")
+    q.getLong(0)
   }
 
   /** Incremental admission as a verb: keep only the --source rows whose
@@ -1328,12 +1271,8 @@ object Main {
     * file exists, else built from --base and written there — so a daily
     * admission job pays the base scan once per corpus version, not once
     * per drop. */
-  private[cli] def runAdmit(spark: org.apache.spark.sql.SparkSession,
-                            a: Args): Unit = {
+  private[cli] def runAdmit(spark: SparkSession, a: Args): Long = {
     import java.nio.file.{Files, Paths}
-    if (a.source.startsWith("jdbc:") || a.dest.startsWith("jdbc:") ||
-        a.base.startsWith("jdbc:"))
-      throw GraftError.InvalidConfig("admit applies to parquet paths")
     val fresh = spark.read.parquet(a.source)
     val base = spark.read.parquet(a.base)
     val (bloomBytes, bloomNote) = a.bloom match {
@@ -1346,11 +1285,11 @@ object Main {
         (b, other.fold(s"built (${b.length} bytes)")(p =>
           s"built -> $p (${b.length} bytes)"))
     }
-    graft.ext.Dedup.incrementalDedupBloom(fresh, base, a.textCol, bloomBytes)
-      .write.mode("overwrite").parquet(a.dest)
-    val kept = spark.read.parquet(a.dest).count()
+    val kept = write(graft.ext.Dedup.incrementalDedupBloom(fresh, base,
+      a.textCol, bloomBytes), a.dest).getLong(0)
     println(s"admit ${a.source}: kept $kept of ${fresh.count()} " +
       s"-> ${a.dest} [bloom: $bloomNote]")
+    kept
   }
 
   /** Train/benchmark decontamination as a verb: drop every --source doc
@@ -1362,16 +1301,11 @@ object Main {
     * measures merged character-span coverage instead of shingle tally;
     * `--mode jaccard` applies the per-benchmark-ITEM rule (drop on exact
     * pairwise Jaccard ≥ --jaccard against any single example). */
-  private[cli] def runDecontaminate(spark: org.apache.spark.sql.SparkSession,
-                                    a: Args): Unit = {
-    import org.apache.spark.sql.functions.col
-    if (a.source.startsWith("jdbc:") || a.dest.startsWith("jdbc:") ||
-        a.benchmark.startsWith("jdbc:"))
-      throw GraftError.InvalidConfig("decontaminate applies to parquet paths")
+  private[cli] def runDecontaminate(spark: SparkSession, a: Args): Long = {
     val corpus = spark.read.parquet(a.source)
     val bench = spark.read.parquet(a.benchmark)
     graft.functions.GraftFunctions.register(spark)
-    if (a.mode == "span") {
+    val clean = if (a.mode == "span") {
       // span mode: drop docs whose characters covered by benchmark-shared
       // --ngram-char substrings exceed the threshold (the "n-char overlap
       // with the eval set" hygiene rule); hashed production form
@@ -1385,7 +1319,6 @@ object Main {
         .filter(col("contaminated_frac") > a.maxContamination)
         .select(a.idCol)
       corpus.join(dropIds, Seq(a.idCol), "left_anti")
-        .write.mode("overwrite").parquet(a.dest)
     } else if (a.mode == "jaccard" || a.mode == "containment") {
       // per-benchmark-ITEM rules (ext/Dedup.contaminationPairs): `jaccard`
       // drops every doc whose exact shingle-set Jaccard against ANY single
@@ -1406,7 +1339,6 @@ object Main {
       // null-text docs have no shingles, match nothing, keep — the span
       // mode's "no measurable overlap" rule
       corpus.join(pairs.select(a.idCol).distinct(), Seq(a.idCol), "left_anti")
-        .write.mode("overwrite").parquet(a.dest)
     } else {
       val profile = graft.ext.Dedup.contamination(corpus, bench, a.idCol,
         a.textCol, shingleN = a.ngramN, nativeShingles = true)
@@ -1417,9 +1349,8 @@ object Main {
           col("contamination") <= a.maxContamination)
         .select(a.idCol)
       corpus.join(keepIds, a.idCol)
-        .write.mode("overwrite").parquet(a.dest)
     }
-    val kept = spark.read.parquet(a.dest).count()
+    val kept = write(clean, a.dest).getLong(0)
     val thr = a.mode match {
       case "jaccard"     => s"jaccard>=${a.jaccard}"
       case "containment" => s"containment>=${a.threshold}"
@@ -1429,44 +1360,47 @@ object Main {
       s"${corpus.count()} (vs ${bench.count()} benchmark docs, " +
       s"n=${a.ngramN}, $thr) -> ${a.dest}" +
       a.report.fold("")(r => s" [report: $r]"))
+    kept
   }
 
-  private def runSync(spark: org.apache.spark.sql.SparkSession, a: Args): Unit = {
-        val source = SyncEndpoint.parse(a.source, a.sourceUser, a.sourcePassword)
-        val dest = SyncEndpoint.parse(a.dest, a.destUser, a.destPassword)
-        // S2 — key defaulting from the reflected primary key (jdbc source)
-        val keys = (a.keys, source) match {
-          case (ks, _) if ks.nonEmpty => ks
-          case (_, SyncEndpoint.JdbcTable(url, table, props)) =>
-            new JdbcSource(url, props).primaryKey(table)
-          case _ => throw GraftError.InvalidConfig(
-            "--key is required for a parquet source (no catalog to reflect)")
+  private def runSync(spark: SparkSession, a: Args): Long = {
+    val source = SyncEndpoint.parse(a.source, a.sourceUser, a.sourcePassword)
+    val dest = SyncEndpoint.parse(a.dest, a.destUser, a.destPassword)
+    // S2 — key defaulting from the reflected primary key (jdbc source)
+    val keys = (a.keys, source) match {
+      case (ks, _) if ks.nonEmpty => ks
+      case (_, SyncEndpoint.JdbcTable(url, table, props)) =>
+        new JdbcSource(url, props).primaryKey(table)
+      case _ => throw GraftError.InvalidConfig(
+        "--key is required for a parquet source (no catalog to reflect)")
+    }
+    val cfg = SyncConfig(keys, a.watermark, partitionByCol = a.partitionBy,
+      tombstoneCol = a.tombstone)
+    // M1/M2 progress rendering (reference cli.py:120-133: rows/s, %, ETA)
+    val onProgress: graft.sync.Progress => Unit =
+      if (a.progress) {
+        val t0 = System.nanoTime()
+        p => {
+          val elapsedSec = (System.nanoTime() - t0) / 1e9
+          val rate = if (elapsedSec > 0) p.rowsProcessed / elapsedSec else 0.0
+          val etaSec =
+            if (rate > 0 && p.totalRows > p.rowsProcessed)
+              (p.totalRows - p.rowsProcessed) / rate
+            else 0.0
+          println(f"  progress ${p.rowsProcessed}/${p.totalRows} rows " +
+            f"(${p.percent}%.1f%%, $rate%.0f rows/s, eta $etaSec%.1f s)")
         }
-        val cfg = SyncConfig(keys, a.watermark, partitionByCol = a.partitionBy,
-          tombstoneCol = a.tombstone)
-        // M1/M2 progress rendering (reference cli.py:120-133: rows/s, %, ETA)
-        val onProgress: graft.sync.Progress => Unit =
-          if (a.progress) {
-            val t0 = System.nanoTime()
-            p => {
-              val elapsedSec = (System.nanoTime() - t0) / 1e9
-              val rate = if (elapsedSec > 0) p.rowsProcessed / elapsedSec else 0.0
-              val etaSec =
-                if (rate > 0 && p.totalRows > p.rowsProcessed)
-                  (p.totalRows - p.rowsProcessed) / rate
-                else 0.0
-              println(f"  progress ${p.rowsProcessed}/${p.totalRows} rows " +
-                f"(${p.percent}%.1f%%, $rate%.0f rows/s, eta $etaSec%.1f s)")
-            }
-          } else _ => ()
-        a.cmd match {
-          case "single" =>
-            render(SyncPipeline.run(spark, cfg, source, dest, a.cut, onProgress))
-          case "continuous" =>
-            SyncPipeline.continuous(spark, cfg, source, dest, a.delay,
-              a.iterations, shouldStop = { r => render(r); false },
-              onProgress = onProgress)
-            ()
-        }
+      } else _ => ()
+    val reports = a.cmd match {
+      case "single" =>
+        val r = SyncPipeline.run(spark, cfg, source, dest, a.cut, onProgress)
+        render(r)
+        Seq(r)
+      case "continuous" =>
+        SyncPipeline.continuous(spark, cfg, source, dest, a.delay,
+          a.iterations, shouldStop = { r => render(r); false },
+          onProgress = onProgress)
+    }
+    reports.map(_.rowsWritten).sum
   }
 }

@@ -1,7 +1,7 @@
 package graft.sync
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
@@ -675,10 +675,16 @@ object ParquetMergeSink {
   private def write(df: DataFrame, dir: String, partitionByCol: Option[String],
                     orderCol: String, sorted: Boolean): (Long, Option[Long]) = {
     val out = if (sorted) df.sortWithinPartitions(col(orderCol)) else df
-    observedWrite(out, Some(orderCol)) { o =>
+    // MAX is canonical (core.Watermark): None for an empty write or a
+    // column outside the watermark types
+    val wm = Some(orderCol)
+      .filter(c => graft.core.Watermark.supported(out.schema(c).dataType))
+    val r = observedWrite(out,
+        count(lit(1)) +: wm.map(c => max(col(c))).toSeq: _*) { o =>
       val w = o.write.mode(SaveMode.Overwrite)
       partitionByCol.fold(w)(w.partitionBy(_)).parquet(dir)
     }
+    (r.getLong(0), wm.flatMap(_ => graft.core.Watermark.toMicros(r.get(1))))
   }
 
   /** The destination at `dir` read with the schema its state record holds
@@ -689,29 +695,26 @@ object ParquetMergeSink {
       .fold(spark.read.parquet(dir))(spark.read.schema(_).parquet(dir))
 
   /** Run `save` on `df` and return the rows it wrote, counted by the write
-    * job itself: an observed `count(1)` over `df` instead of reading the
-    * written files back. Pass the frame exactly as it is written, after
-    * any `repartition` or `sortWithinPartitions`: the count then sits
-    * directly under the write, in its result stage, where Spark applies
-    * each task's update once even under task retry or speculation. The
-    * count arrives only through a `DataFrameWriter` action: an
+    * job itself ([[observedWrite]] of `count(1)`). */
+  private[sync] def countedWrite(df: DataFrame)(save: DataFrame => Unit): Long =
+    observedWrite(df, count(lit(1)))(save).getLong(0)
+
+  /** Run `save` on `df` and return `aggs` over the rows it wrote, in their
+    * order, computed by the write job itself: an observation over `df`
+    * instead of reading the written files back. `aggs` are aggregate
+    * expressions, none DISTINCT. Pass the frame exactly as it is written,
+    * after any `repartition` or `sortWithinPartitions`: the observation
+    * then sits directly under the write, in its result stage, where Spark
+    * applies each task's update once even under task retry or
+    * speculation. It arrives only through a `DataFrameWriter` action: an
     * `Observation` on a frame consumed by `foreachPartition` never
     * completes on Spark 4.1.2. */
-  private[sync] def countedWrite(df: DataFrame)(save: DataFrame => Unit): Long =
-    observedWrite(df, None)(save)._1
-
-  /** [[countedWrite]] that also observes MAX(`maxOf`) in the same write
-    * job, canonical (core.Watermark): None for an empty write or a column
-    * outside the watermark types. */
-  private[sync] def observedWrite(df: DataFrame, maxOf: Option[String])
-                                 (save: DataFrame => Unit): (Long, Option[Long]) = {
+  private[graft] def observedWrite(df: DataFrame, aggs: Column*)
+                                  (save: DataFrame => Unit): Row = {
     val written = Observation()
-    val wm = maxOf.filter(c =>
-      graft.core.Watermark.supported(df.schema(c).dataType))
-    save(df.observe(written, count(lit(1)).as("rows"),
-      wm.map(c => max(col(c)).as("max")).toSeq: _*))
+    val named = aggs.zipWithIndex.map { case (c, i) => c.as(s"_$i") }
+    save(df.observe(written, named.head, named.tail: _*))
     val r = written.get
-    (r("rows").asInstanceOf[Long],
-      wm.flatMap(_ => graft.core.Watermark.toMicros(r("max"))))
+    Row.fromSeq(named.indices.map(i => r(s"_$i")))
   }
 }

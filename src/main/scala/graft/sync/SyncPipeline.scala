@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.Watermark
+import graft.core.{GraftError, Watermark}
 import graft.sinks.JdbcUpsertSink
 import graft.sources.JdbcSource
 
@@ -20,14 +20,15 @@ object SyncEndpoint {
   final case class JdbcTable(url: String, table: String,
                              props: Properties) extends SyncEndpoint
 
-  /** `jdbc:<subprotocol>:...#<table>` → [[JdbcTable]]; anything else is a
+  /** `jdbc:<subprotocol>:...#<table>` → [[JdbcTable]] (a `jdbc:` endpoint
+    * without its table is `GraftError.InvalidConfig`); anything else is a
     * parquet directory. Credentials never ride in the URL (X6, reference
     * utils.py:5-13): they arrive separately and travel in Properties. */
   def parse(s: String, user: Option[String] = None,
             password: Option[String] = None): SyncEndpoint =
     if (s.startsWith("jdbc:")) {
       val i = s.lastIndexOf('#')
-      require(i > 0 && i < s.length - 1,
+      if (i <= 0 || i == s.length - 1) throw GraftError.InvalidConfig(
         s"jdbc endpoint needs a '#table' suffix: $s")
       val props = new Properties()
       user.foreach(props.setProperty("user", _))

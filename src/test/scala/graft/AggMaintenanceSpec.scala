@@ -243,8 +243,8 @@ class AggMaintenanceSpec extends SparkSpec {
     val dir = tmpDir("agg-crashread")
     AggMaintenance.applySlice(spark, dir, src, "us", Seq("grp"), "v", 0L, 50L)
     val committed = snapshot(dir)
-    // simulate the swapWholeDir crash window: destination renamed to the
-    // backup, staged dir never moved in
+    // simulate the whole-directory swap's crash window: destination
+    // renamed to the backup, staged dir never moved in
     val bak = new java.io.File(dir + ".__agg_bak_dir")
     assert(new java.io.File(dir).renameTo(bak))
     // a reader mid-window sees the committed watermark and rows, and
@@ -270,8 +270,8 @@ class AggMaintenanceSpec extends SparkSpec {
     AggMaintenance.applySlicePartitioned(
       spark, dir, src, "us", Seq("grp"), "v", 0L, 50L, nBuckets = 8)
     val committed = snapshot(dir)
-    // simulate swapBucket's crash window for gA's bucket: renamed to the
-    // backup root, staged never moved in
+    // simulate a bucket swap's crash window for gA's bucket: renamed to
+    // the backup root, staged never moved in
     val name = s"__bucket=${bucketOf(gA)}"
     val bakKid = new java.io.File(dir + ".__agg_bak", name)
     assert(bakKid.getParentFile.mkdirs() || bakKid.getParentFile.isDirectory)

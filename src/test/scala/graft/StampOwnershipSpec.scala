@@ -13,7 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * The same guard keeps graft.sync's one directory swap and its heal in
   * `ParquetMergeSink`: a `.rename(` anywhere else under `graft/sync` is a
   * second copy of that protocol. (SidecarIO and PersistedIndex, outside
-  * graft.sync, keep their own renames: different protocols.) */
+  * graft.sync, keep their own renames: different protocols.)
+  *
+  * And it keeps `SyncEndpoint.parse` the one `jdbc:` classifier for the
+  * CLI: a `startsWith("jdbc:")` under `graft/cli` is a second copy of it. */
 class StampOwnershipSpec extends AnyFunSuite {
 
   private val root = new java.io.File(sys.props("user.dir"), "src/main/scala")
@@ -64,6 +67,18 @@ class StampOwnershipSpec extends AnyFunSuite {
       if rel != swapOwner
       (line, i) <- codeLines(f)
       if line.contains(".rename(")
+    } yield s"$rel:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  test("graft.cli classifies endpoints only through SyncEndpoint.parse") {
+    val files = sources(new java.io.File(root, "graft/cli"))
+    assert(files.nonEmpty, "graft/cli sources not found")
+    val offenders = for {
+      f <- files
+      rel = root.toPath.relativize(f.toPath).toString.replace('\\', '/')
+      (line, i) <- codeLines(f)
+      if line.contains("startsWith(\"jdbc:\")")
     } yield s"$rel:${i + 1}: ${line.trim}"
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }

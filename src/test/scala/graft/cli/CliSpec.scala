@@ -18,31 +18,7 @@ class CliSpec extends SparkSpec {
 
   private def run(argv: String*): Main.Args = {
     val a = Main.parse(argv.toArray)
-    a.cmd match {
-      case "neardup"        => Main.runNearDup(spark, a)
-      case "semantic-dedup" => Main.runSemanticDedup(spark, a)
-      case "quality"        => Main.runQuality(spark, a)
-      case "curate"         => Main.runCurate(spark, a)
-      case "admit"          => Main.runAdmit(spark, a)
-      case "decontaminate"  => Main.runDecontaminate(spark, a)
-      case "spans"          => Main.runSpans(spark, a)
-      case "layout"         => Main.runLayout(spark, a)
-      case "mix"            => Main.runMix(spark, a)
-      case "dedup-lines"    => Main.runDedupLines(spark, a)
-      case "dedup-spans"    => Main.runDedupSpans(spark, a)
-      case "diff"           => Main.runDiff(spark, a)
-      case "reconcile"      => Main.runReconcile(spark, a)
-      case "bpe-train"      => Main.runBpeTrain(spark, a)
-      case "tokenize"       => Main.runTokenize(spark, a)
-      case "pipeline"       => Main.runPipeline(spark, a)
-      case "agg"            => Main.runAgg(spark, a)
-      case "agg-read"       => Main.runAggRead(spark, a)
-      case "rebucket"       => Main.runRebucket(spark, a)
-      case "span-index"     => Main.runSpanIndex(spark, a)
-      case "dhash-index"    => Main.runHashIndex(spark, a, audio = false)
-      case "ahash-index"    => Main.runHashIndex(spark, a, audio = true)
-      case other            => fail(s"unexpected verb $other")
-    }
+    Main.dispatch(spark, a)
     a
   }
 
@@ -1169,5 +1145,105 @@ class CliSpec extends SparkSpec {
       "--dest", "d", "--by", "lang")).minSpan == 24)
     assert(Main.parse(Array("dedup-spans", "--source", "s",
       "--dest", "d")).minSpan == 0)
+  }
+
+  test("agg over a JDBC source folds like the one-shot groupBy, refuses a missing table typed, and idles with no Spark job") {
+    val url = s"jdbc:derby:memory:cliagg${System.nanoTime()};create=true"
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      val st = conn.createStatement()
+      st.executeUpdate("CREATE TABLE EV (US BIGINT, GRP VARCHAR(8), V DOUBLE)")
+      def insert(rows: (Long, String, Double)*): Unit = rows.foreach {
+        case (us, g, v) =>
+          st.executeUpdate(s"INSERT INTO EV VALUES ($us, '$g', $v)"); ()
+      }
+      val work = tmpDir("cli-agg-jdbc")
+      def tick(table: String, rollup: String) =
+        run("agg", "--source", s"$url#$table", "--dest", rollup,
+          "--by", "GRP", "--watermark", "US", "--value-col", "V")
+      insert((10L, "a", 1.5), (20L, "b", 2.0), (30L, "a", -1.0))
+      tick("EV", s"$work/rollup")
+      insert((40L, "b", 4.25), (50L, "c", 9.0))
+      tick("EV", s"$work/rollup")
+      val oneShot = spark.read.jdbc(url, "EV", new java.util.Properties())
+        .groupBy("GRP").agg(count(lit(1)), sum("V")).collect()
+        .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
+      val got = graft.sync.AggMaintenance.read(spark, s"$work/rollup")
+        .select(col("GRP"), col("cnt"), col("sum_val").cast("double"))
+        .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2))))
+        .toMap
+      assert(got == oneShot && got.size == 3, s"got $got, one-shot $oneShot")
+      // the up-to-date tick takes the source bounds from one server-side
+      // MIN/MAX statement: no Spark job at all
+      val (_, idleJobs) = jobsIn(tick("EV", s"$work/rollup"))
+      info(s"up-to-date JDBC agg tick: $idleJobs Spark jobs")
+      assert(idleJobs == 0, s"up-to-date tick ran $idleJobs Spark jobs")
+      assertThrows[GraftError.MissingTable](tick("NOPE", s"$work/missing"))
+    } finally conn.close()
+  }
+
+  test("semantic-dedup runs at most 49 Spark jobs and agg-read --mode plain 1: their counts come from the write job") {
+    import spark.implicits._
+    val work = tmpDir("cli-observed")
+    spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .filter(col("vec_id") < 50).write.parquet(s"$work/emb")
+    val (_, semJobs) = jobsIn(
+      run("semantic-dedup", "--source", s"$work/emb", "--dest", s"$work/sem"))
+    Seq((10L, "a", 1.5), (20L, "b", 2.0)).toDF("us", "grp", "v")
+      .write.parquet(s"$work/src")
+    run("agg", "--source", s"$work/src", "--dest", s"$work/rollup",
+      "--by", "grp", "--watermark", "us", "--value-col", "v")
+    val (_, readJobs) = jobsIn(run("agg-read", "--source", s"$work/rollup",
+      "--dest", s"$work/plain", "--mode", "plain"))
+    info(s"semantic-dedup: $semJobs Spark jobs; agg-read plain: $readJobs")
+    assert(spark.read.parquet(s"$work/plain").count() == 2L)
+    assert(semJobs <= 49, s"semantic-dedup ran $semJobs Spark jobs")
+    assert(readJobs <= 1, s"agg-read --mode plain ran $readJobs Spark jobs")
+  }
+
+  test("a JDBC endpoint on an option its verb keeps parquet refuses at parse, naming the option") {
+    val t = "jdbc:derby:memory:cliep#T"
+    def refusal(argv: String*): String =
+      intercept[GraftError.InvalidConfig](Main.parse(argv.toArray)).getMessage
+    assert(refusal("agg", "--source", "s", "--dest", t, "--by", "g",
+      "--watermark", "w").endsWith("agg applies to parquet paths (--dest)"))
+    assert(refusal("tokenize", "--source", "s", "--base", t, "--dest", "d")
+      .endsWith("tokenize applies to parquet paths (--base)"))
+    assert(refusal("compact", "--dest", t)
+      .endsWith("compact applies to parquet paths (--dest)"))
+    assert(refusal("pipeline", "--source", "s", "--benchmark", t,
+      "--dest", "d", "--by", "lang")
+      .endsWith("pipeline applies to parquet paths (--benchmark)"))
+    // the verbs that name JDBC tables still parse them
+    Main.parse(Array("single", "--source", t, "--dest", t, "--watermark", "w"))
+    Main.parse(Array("continuous", "--source", t, "--dest", t,
+      "--watermark", "w"))
+    Main.parse(Array("reconcile", "--source", t, "--dest", t, "--key", "k"))
+    Main.parse(Array("agg", "--source", t, "--dest", "d", "--by", "g",
+      "--watermark", "w"))
+  }
+
+  test("bounded fractional flags accept each closed bound and refuse each open one and a non-number") {
+    // (flag, lower bound accepted, upper bound accepted, interval text)
+    val flags = Seq(("jaccard", false, true, "(0,1]"),
+      ("threshold", false, true, "(0,1]"), ("fpp", false, false, "(0,1)"),
+      ("alpha", true, true, "[0,1]"),
+      ("max-contamination", true, true, "[0,1]"))
+    def parse(flag: String, v: String) = Main.parse(Array("neardup",
+      "--source", "s", "--dest", "d", s"--$flag", v))
+    for ((flag, loOk, hiOk, interval) <- flags) {
+      for ((v, ok) <- Seq("0" -> loOk, "1" -> hiOk, "-0.5" -> false,
+          "1.5" -> false)) {
+        if (ok) parse(flag, v)
+        else {
+          val e = intercept[GraftError.InvalidConfig](parse(flag, v))
+          assert(e.getMessage.endsWith(
+            s"--$flag must be in $interval, got ${v.toDouble}"), e.getMessage)
+        }
+      }
+      val e = intercept[GraftError.InvalidConfig](parse(flag, "x"))
+      assert(e.getMessage.endsWith(
+        s"--$flag expects a number in $interval, got 'x'"), e.getMessage)
+    }
   }
 }
