@@ -2,7 +2,7 @@ package graft.cli
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{avg, coalesce, col, count, count_if,
-  explode, expr, lit, max, min, split, sum, trim, when}
+  expr, filter, lit, max, min, size, split, sum, trim, when}
 
 import graft.core.{GraftSession, GraftError}
 import graft.sources.JdbcSource
@@ -411,20 +411,22 @@ object Main {
     val cleaned = graft.ext.TextAnalysis.dropDuplicatedLines(
       docs, a.idCol, a.textCol, a.minDocs)
     // cleaned text replaces the original column; every other column rides
-    // along untouched (one id-keyed join — the doc table is the big side)
-    val rows = write(docs.drop(a.textCol).join(cleaned, Seq(a.idCol)), a.dest)
-      .getLong(0)
+    // along untouched (one id-keyed join — the doc table is the big side).
+    // The write job also counts the kept lines, by the same line
+    // convention as lineDupStats (trimmed, empties excluded), so the
+    // before/after difference is exactly the removed occurrences
+    val text = col(a.textCol)
+    val written = write(docs.drop(a.textCol).join(cleaned, Seq(a.idCol)),
+      a.dest, sum(when(text.isNotNull,
+        size(filter(split(text, "\n"), l => trim(l) =!= "")))).cast("long"))
+    val rows = written.getLong(0)
+    val keptLines = Option(written.get(1)).fold(0L)(_.asInstanceOf[Long])
     // the printed DROP count is what the removal actually removed at
     // --min-docs (derived from the before/after line totals), never the
     // ≥2-docs stats measure — at --min-docs 5 the stats frame can show
     // heavy duplication that was deliberately NOT acted on
     val t = stats.agg(sum(col("n_lines")).as("lines"),
       sum(col("n_dup_lines")).as("dups")).first()
-    // same line convention as lineDupStats (trimmed, empties excluded),
-    // so the before/after difference is exactly the removed occurrences
-    val keptLines = cleaned
-      .select(explode(split(col(a.textCol), "\n")).as("__l"))
-      .filter(trim(col("__l")) =!= "").count()
     val totalLines = Option(t.get(0)).map(_.asInstanceOf[Long]).getOrElse(0L)
     println(s"dedup-lines ${a.source}: $totalLines lines, " +
       s"${Option(t.get(1)).getOrElse(0L)} in >=2-doc duplicates (measure); " +

@@ -273,6 +273,29 @@ private[graft] object SidecarIO {
     }
   }
 
+  /** Read a state record written by [[writeRecord]]: its fields in `names`
+    * order, an empty value as None. A record with a field count in
+    * `older` predates the last fields, which read as None; any other
+    * shape refuses as an unreadable `what`. */
+  def readRecord(fs: FileSystem, p: Path, names: Seq[String], what: String,
+                 older: Set[Int] = Set.empty): Option[Seq[Option[String]]] =
+    read(fs, p).map { s =>
+      val fields = s.split("\n", names.length).toSeq.zip(names)
+      if (fields.size != names.size && !older(fields.size) ||
+          fields.exists { case (l, n) => !l.startsWith(s"$n=") })
+        throw new java.io.IOException(s"unreadable $what $p")
+      fields.map { case (l, n) =>
+        Some(l.drop(n.length + 1)).filter(_.nonEmpty)
+      }.padTo(names.size, None)
+    }
+
+  /** Commit a state record: one `name=value` line per field, in order,
+    * None as an empty value; the whole record is one [[write]]. */
+  def writeRecord(fs: FileSystem, p: Path, names: Seq[String],
+                  values: Seq[Option[String]]): Unit =
+    write(fs, p, names.zip(values)
+      .map { case (n, v) => s"$n=${v.getOrElse("")}" }.mkString("\n"))
+
   private def isLocal(fs: FileSystem): Boolean =
     "file" == fs.getUri.getScheme
 }

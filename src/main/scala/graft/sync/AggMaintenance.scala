@@ -1,10 +1,11 @@
 package graft.sync
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset,
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, Row,
   SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
+import org.apache.spark.graftshim.SchemaAccess.asNullable
 import graft.core.GraftError.InvalidConfig
 import graft.core.{SidecarIO, Watermark}
 
@@ -21,7 +22,7 @@ import graft.core.{SidecarIO, Watermark}
   *
   * LANES. Every lane folds a MERGEABLE summary with the same union+regroup
   * combine; a lane is a metric set × append-only-or-keyed × layout, named
-  * by the stamp `_GRAFT_AGG_PARAMS` carries:
+  * by the stamp its state record carries (`params=`):
   *
   * {{{
   * apply lane                    stamp prefix      layout         metrics per group     readers
@@ -45,8 +46,10 @@ import graft.core.{SidecarIO, Watermark}
   * After the prefix a stamp carries `key=…` (keyed lanes), `group=…`,
   * `value=…` / `values=…` / `distinct=…`, `order=…` and, for a tombstoned
   * keyed lane, `tomb=…`. A call whose stamp differs from the stored one
-  * refuses typed, naming the lane that owns the table. Column names may not carry a stamp delimiter (space, '+',
-  * '='): two parameterizations would otherwise stamp identically.
+  * refuses typed, naming the lane that owns the table. Column names may
+  * not carry a stamp delimiter (space, '+', '=', newline): two
+  * parameterizations would otherwise stamp identically, and the record
+  * is one field per line.
   *
   * APPEND-ONLY lanes (v1/v2/v3) fold slices as pure EVENT streams: a
   * re-arriving row is NEW MASS and counts twice — right for
@@ -82,19 +85,26 @@ import graft.core.{SidecarIO, Watermark}
   * that does not cast to boolean refuses typed; the column is part of the
   * stamp (`tomb=`), so tombstoned and tombstone-blind applies never mix.
   *
-  * EXACTLY-ONCE. The applied watermark `_GRAFT_AGG_WM` (canonical epoch-µs
-  * long — core.Watermark) is the commit marker. Slices apply contiguously:
+  * EXACTLY-ONCE. A rollup root keeps its state in ONE framed record,
+  * `_GRAFT_AGG_RECORD` (core.SidecarIO.writeRecord), three fields in this
+  * order: `wm=` the applied watermark (canonical epoch-µs long —
+  * core.Watermark), the commit marker; `params=` the stamp (empty for v1
+  * whole-dir); `schema=` the rollup schema as Catalyst JSON (an empty
+  * rollup may have no part files). Each state change is one write of the
+  * record. Slices apply contiguously:
   * a replay (`hi` ≤ stored) is a reported no-op, a gap (`lo` ≠ stored) a
   * typed refusal, an EMPTY slice still advances the watermark in place
   * (an idle poll must not wedge the chain). The first apply's `lo` is the
-  * caller's opening cut.
-  *   - Whole dir: rollup, key state, schema, stamp and watermark are
-  *     staged in `<dir>.__agg_tmp` and committed by ONE two-rename swap
+  * caller's opening cut. A root written before the record (one sidecar
+  * per field, [[SidecarLayout]]) reads as that record, at the root and at
+  * the backup alike; its first commit migrates it.
+  *   - Whole dir: rollup, key state and record are staged in
+  *     `<dir>.__agg_tmp` and committed by ONE two-rename swap
   *     (ParquetMergeSink.swap, the one directory commit of graft.sync)
   *     through `<dir>.__agg_bak_dir` — the cold start too, empty or not —
   *     so no crash leaves data without its watermark or vice versa. The
   *     next apply heals an interrupted swap (ParquetMergeSink.heal, the
-  *     root committed once it holds `_GRAFT_AGG_WM`); readers read around
+  *     root committed once its record holds `wm`); readers read around
   *     it.
   *   - Partitioned (`__bucket=K` on pmod(hash(group), n); key state
   *     `__kbucket=J` on pmod(xxhash64(key), m)): one apply rewrites ONLY
@@ -102,11 +112,12 @@ import graft.core.{SidecarIO, Watermark}
   *     buckets, for billion-group rollups (size n ≈ √groups). Each bucket's
   *     data + its own watermark commit by the same swap (staging and
   *     backup live OUTSIDE the root, `<dir>.__agg_tmp` / `<dir>.__agg_bak`;
-  *     a bucket is committed once it exists);
-  *     keyed rollup buckets swap before state buckets; the ROOT watermark
-  *     commits last. A re-run skips buckets whose watermark reached `hi`,
-  *     and a crashed attempt with a DIFFERENT cut is finished first by
-  *     splitting the apply at each interior bucket watermark. Reads are
+  *     a bucket is committed once it exists; its watermark is its own
+  *     one-field `_GRAFT_AGG_WM`); keyed rollup buckets swap before state
+  *     buckets; the ROOT record's watermark commits last. A re-run skips
+  *     buckets whose watermark reached `hi`, and a crashed attempt with
+  *     a DIFFERENT cut is finished first by splitting the apply at each
+  *     interior bucket watermark. Reads are
   *     bucket-atomic, not slice-atomic, against a LIVE writer.
   * Sidecar writes go through core.SidecarIO, crash-atomic where the store
   * has an atomic path and two-phase elsewhere; every read serves the
@@ -123,12 +134,10 @@ object AggMaintenance {
   final case class AggResult(groupsWritten: Long, sliceRows: Long,
                              applied: Boolean, watermarkUs: Long)
 
-  private val WmFile = "_GRAFT_AGG_WM"
-  /** Rollup schema as Catalyst JSON: an empty rollup may have no part
-    * files, so [[read]] serves its schema from here. */
-  private val SchemaFile = "_GRAFT_AGG_SCHEMA"
-  private val ParamsFile = "_GRAFT_AGG_PARAMS"
+  private val RecordFile = "_GRAFT_AGG_RECORD"
+  private val RecordFields = Seq("wm", "params", "schema")
   private val StateDir = "_GRAFT_AGG_STATE"
+  private val BucketWm = SidecarLayout.Wm
   /** Exact accumulation types (the a4 DECIMAL rule): 28 integral digits of
     * sum headroom; (18,4)² summed in (38,8) leaves 30 for sum-of-squares. */
   private val SumType = "decimal(28,4)"
@@ -232,66 +241,60 @@ object AggMaintenance {
     * Read-only: inside a whole-dir swap crash window the committed value
     * comes from the backup without touching anything. */
   def watermark(spark: SparkSession, targetDir: String): Option[Long] =
-    new RollupState(spark, targetDir).committed(WmFile)
-      .flatMap(_.trim.toLongOption)
+    new RollupState(spark, targetDir).committed._2.flatMap(_.wm)
 
   /** The full rollup (group columns, then the lane's metrics); an empty
-    * rollup is served schema-correct from the schema sidecar, a
+    * rollup is served schema-correct from the record's schema, a
     * partitioned one without its `__bucket` column. Read-only: the
     * committed side of every interrupted swap is read around, never
     * healed (a concurrent apply may own the swap). */
-  def read(spark: SparkSession, targetDir: String): DataFrame = {
-    val st = new RollupState(spark, targetDir)
-    val fs = st.fs
-    def emptyFromSchema(): DataFrame = {
-      val sj = st.committed(SchemaFile).getOrElse(throw InvalidConfig(
-        s"no rollup at $targetDir (no data files and no $SchemaFile)"))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.DataType.fromJson(sj)
-          .asInstanceOf[StructType])
-    }
+  def read(spark: SparkSession, targetDir: String): DataFrame =
+    read(new RollupState(spark, targetDir))
+
+  private def read(st: RollupState): DataFrame = {
+    val (at, rec) = st.committed
+    val schema = rec.flatMap(_.schema)
+    def empty(): DataFrame = st.spark.createDataFrame(st.spark.sparkContext
+      .emptyRDD[Row], schema.getOrElse(throw InvalidConfig(s"no rollup at " +
+        s"${st.dir} (no data files and no schema in its state record)")))
     // the stamp falls back to the backup too: inside a rebucket's swap
     // window the root is absent, and a partitioned table read through the
     // flat branch would surface the internal __bucket column
-    if (st.stamp.exists(_.partitioned)) {
-      val serveRoot = if (st.inSwapWindow) st.bak else st.root
-      val rootBuckets = bucketDirs(fs, serveRoot, "__bucket=").map(_.getName)
-      val bk = new Path(bakRoot(targetDir))
-      val bakKids =
-        if (!fs.exists(bk)) Seq.empty
-        else fs.listStatus(bk).toSeq.map(_.getPath)
-          .filterNot(p => rootBuckets.contains(p.getName))
-      val rootDf =
-        if (rootBuckets.isEmpty) None
-        else Some(spark.read.parquet(serveRoot.toString).drop("__bucket"))
-      (rootDf.toSeq ++ bakKids.map(p => spark.read.parquet(p.toString)))
-        .reduceOption(_ unionByName _).getOrElse(emptyFromSchema())
+    if (rec.flatMap(_.params).exists(Stamp.parse(_).partitioned)) {
+      val rootBuckets = bucketDirs(st.fs, at, "__bucket=").map(_.getName)
+      val bakKids = bucketDirs(st.fs, new Path(bakRoot(st.dir)), "__bucket=")
+        .filterNot(p => rootBuckets.contains(p.getName))
+      val rootDf = Option.when(rootBuckets.nonEmpty)(readParquet(st.spark,
+        schema, at, Seq(at), Some("__bucket")).drop("__bucket"))
+      (rootDf.toSeq ++ bakKids.map(p =>
+        readParquet(st.spark, schema, p, Seq(p))))
+        .reduceOption(_ unionByName _).getOrElse(empty())
     }
-    else if (ParquetMergeSink.hasData(fs, st.root)) st.flat(st.root)
-    else if (st.inSwapWindow && ParquetMergeSink.hasData(fs, st.bak))
-      st.flat(st.bak)
-    else emptyFromSchema()
+    else if (ParquetMergeSink.hasData(st.fs, at))
+      readParquet(st.spark, schema, at, Seq(at))
+    else empty()
   }
 
   /** A v2/keyedv2 rollup with `avg_v` and `var_v` (sample variance, DOUBLE)
     * derived per value column by [[deriveMomentCols]]; refuses typed on
     * any other lane (v1 keeps no sum-of-squares). */
-  def readDerived(spark: SparkSession, targetDir: String): DataFrame =
-    deriveMomentCols(read(spark, targetDir), requireStamp(spark, targetDir,
-      Set("v2", "keyedv2"), "v2/keyedv2 moments rollup").values)
+  def readDerived(spark: SparkSession, targetDir: String): DataFrame = {
+    val st = new RollupState(spark, targetDir)
+    deriveMomentCols(read(st), requireStamp(st, Set("v2", "keyedv2"),
+      "v2/keyedv2 moments rollup").values)
+  }
 
   /** A v3 rollup with `approx_distinct_v` (BIGINT) per sketched column. An
     * all-NULL column reads 0 — hll_sketch_agg emits an EMPTY sketch for
     * zero non-null inputs, which is SQL's COUNT(DISTINCT); the coalesce
     * also covers a null sketch cell. Refuses typed on any other lane. */
-  def readDistinct(spark: SparkSession, targetDir: String): DataFrame =
-    requireStamp(spark, targetDir, Set("v3"), "v3 distinct-count rollup")
-      .values.foldLeft(read(spark, targetDir)) { (df, v) =>
-        df.withColumn(s"approx_distinct_$v",
-          coalesce(when(col(s"hll_$v").isNotNull,
-            hll_sketch_estimate(col(s"hll_$v"))), lit(0L)))
-      }
+  def readDistinct(spark: SparkSession, targetDir: String): DataFrame = {
+    val st = new RollupState(spark, targetDir)
+    requireStamp(st, Set("v3"), "v3 distinct-count rollup").values
+      .foldLeft(read(st)) { (df, v) => df.withColumn(s"approx_distinct_$v",
+        coalesce(when(col(s"hll_$v").isNotNull,
+          hll_sketch_estimate(col(s"hll_$v"))), lit(0L))) }
+  }
 
   /** EXACT keyed distinct counts from a keyed rollup grouped by
     * (outer..., distinct...): its live groups are precisely the tuples
@@ -301,14 +304,14 @@ object AggMaintenance {
     * group columns. Returns (outer..., distinct_groups, cnt). */
   def readKeyedDistinct(spark: SparkSession, targetDir: String,
                         outerGroupCols: Seq[String]): DataFrame = {
-    val stored = keyedGroupColsFor(spark, targetDir, "readKeyedDistinct",
-      outerGroupCols)
+    val st = new RollupState(spark, targetDir)
+    val stored = keyedGroupColsFor(st, "readKeyedDistinct", outerGroupCols)
     if (outerGroupCols.size >= stored.size)
       throw InvalidConfig(
         "outer group columns cover every stored group column — nothing " +
           "is left to count distinct; rebuild the rollup with the " +
           "distinct column appended to its group columns")
-    read(spark, targetDir)
+    read(st)
       .groupBy(outerGroupCols.map(col): _*)
       .agg(count(lit(1)).as("distinct_groups"),
         sum(col("cnt")).cast("long").as("cnt"))
@@ -321,8 +324,8 @@ object AggMaintenance {
   def readKeyedMinMax(spark: SparkSession, targetDir: String,
                       outerGroupCols: Seq[String],
                       valueGroupCol: String): DataFrame = {
-    val stored = keyedGroupColsFor(spark, targetDir, "readKeyedMinMax",
-      outerGroupCols)
+    val st = new RollupState(spark, targetDir)
+    val stored = keyedGroupColsFor(st, "readKeyedMinMax", outerGroupCols)
     if (!stored.contains(valueGroupCol))
       throw InvalidConfig(
         s"value column '$valueGroupCol' is not a group column of this " +
@@ -334,7 +337,7 @@ object AggMaintenance {
         s"value column '$valueGroupCol' is also an outer group column — " +
           "a min/max over a column the result is grouped by is the " +
           "column itself")
-    read(spark, targetDir)
+    read(st)
       .groupBy(outerGroupCols.map(col): _*)
       .agg(min(col(valueGroupCol)).as(s"min_$valueGroupCol"),
         max(col(valueGroupCol)).as(s"max_$valueGroupCol"),
@@ -368,8 +371,8 @@ object AggMaintenance {
     val st = new RollupState(spark, targetDir)
     val fs = st.fs
     st.heal(buckets = true)
-    val params = st.get(ParamsFile).getOrElse(throw InvalidConfig(
-      s"no $ParamsFile at $targetDir — not a partitioned rollup"))
+    val params = st.rec.flatMap(_.params).getOrElse(throw InvalidConfig(
+      s"no params stamp at $targetDir — not a partitioned rollup"))
     val s = Stamp.parse(params)
     val oldBuckets = s.buckets.getOrElse(throw InvalidConfig(
       s"rollup at $targetDir is stamped '$params' — rebucket applies " +
@@ -406,7 +409,7 @@ object AggMaintenance {
           .repartition(col(c))
           .write.mode("overwrite").partitionBy(c).parquet(to.toString)
         parMap(bucketDirs(fs, to, s"$c="))(b =>
-          writeWm(fs, new Path(b, WmFile), wm))
+          writeWm(fs, new Path(b, BucketWm), wm))
         ()
       }
     relabel(st.root, st.tmp, "__bucket",
@@ -419,10 +422,8 @@ object AggMaintenance {
         if (kb == oldKb) None
         else Some(pmod(xxhash64(s.key.map(col): _*), lit(kb.toLong))
           .cast("int")))
-    st.stage(st.tmp, Some(s.copy(buckets = Some(newBuckets),
-        kbuckets = s.kbuckets.map(_ => kb)).render.get),
-      st.get(SchemaFile), Some(wm))
-    st.commitStaged()
+    st.commitStaged(Rec(Some(wm), s.copy(buckets = Some(newBuckets),
+      kbuckets = s.kbuckets.map(_ => kb)).render, st.rec.flatMap(_.schema)))
   }
 
   /** The contractual avg/var derivation over v2 moment columns
@@ -477,7 +478,7 @@ object AggMaintenance {
 
   // ---- lanes: stamp, metrics, admission ----
 
-  /** A lane's full parameterization and its `_GRAFT_AGG_PARAMS` text.
+  /** A lane's full parameterization and its record's `params=` text.
     * `buckets=` is always the second token (partitioned-ness is keyed off
     * it); v1 whole-dir is the one unstamped layout. `values` rides under
     * `value=` (v1, keyed), `values=` (v2, keyedv2) or `distinct=` (v3). */
@@ -652,11 +653,12 @@ object AggMaintenance {
         (if (s.kind == "v3") "distinct" else "value") -> s.values,
         "order" -> Seq(s.order), "tombstone" -> s.tomb.toSeq).foreach {
         case (role, cols) => cols.foreach { c =>
-          if (c.isEmpty || c.exists(ch => ch == ' ' || ch == '+' || ch == '='))
+          if (c.isEmpty || c.exists(" +=\n".contains(_)))
             throw InvalidConfig(
               s"$role column '$c' is empty or contains a params-stamp " +
-                "delimiter (space, '+', '=') — different parameterizations " +
-                "could stamp identically; rename the column")
+                "delimiter (space, '+', '=', newline) — different " +
+                "parameterizations could stamp identically, and a newline " +
+                "would break the state record; rename the column")
         }
       }
   }
@@ -710,10 +712,10 @@ object AggMaintenance {
         else {
           val state = keyed.map(k => k.readState(spark, st.stateRoot,
             if (ParquetMergeSink.hasData(st.fs, st.stateRoot))
-              Seq(st.stateRoot.toString) else Nil))
+              Seq(st.stateRoot) else Nil))
           val fresh = partial.getOrElse(keyed.get.delta(state.get))
-          val m = if (!exists) fresh
-            else fold(st.flat(st.root), fresh, s)
+          val m = if (!exists) fresh else fold(readParquet(spark,
+            st.rec.flatMap(_.schema), st.root, Seq(st.root)), fresh, s)
           // a keyed group whose last live key left reads cnt=0: gone
           (if (s.keyed) m.filter(col("cnt") > 0L) else m,
             keyed.map(_.newState(state.get)))
@@ -726,8 +728,7 @@ object AggMaintenance {
         else ParquetMergeSink.countedWrite(merged)(save)
       newState.foreach(_.write.mode("overwrite")
         .parquet(new Path(st.tmp, StateDir).toString))
-      st.stage(st.tmp, s.render, Some(merged.schema.json), Some(hi))
-      st.commitStaged()
+      st.commitStaged(Rec(Some(hi), s.render, Some(merged.schema)))
       AggResult(groups, rows, applied = true, watermarkUs = hi)
     } finally {
       partial.foreach(_.unpersist())
@@ -776,8 +777,8 @@ object AggMaintenance {
       if (stored.isEmpty) { // cold start: stamp the layout before any data
         fs.mkdirs(st.root)
         if (s.keyed) fs.mkdirs(st.stateRoot)
-        st.stage(st.root, s.render, Some(partial.fold(emptyRollup(source, s))(
-          _.drop("__bucket")).schema.json), None)
+        st.write(Rec(None, s.render, Some(partial.fold(
+          emptyRollup(source, s))(_.drop("__bucket")).schema)))
       }
       // append-only: ONE collect answers touched buckets and row count
       val perBucket = partial.map(_.groupBy("__bucket").agg(sum(col("cnt")))
@@ -790,7 +791,7 @@ object AggMaintenance {
         "__kbucket=", distinctInts(k.latest.select(kbucketOf))))
       val fresh = partial.getOrElse {
         val d = keyed.get.delta(keyed.get.readState(spark, st.stateRoot,
-          probesK.filter(_.hasData).map(_.path.toString)))
+          probesK.filter(_.hasData).map(_.path)))
           .withColumn("__bucket", bucketOf).persist()
         delta = Some(d)
         d
@@ -819,11 +820,11 @@ object AggMaintenance {
         // plan size O(1) and listing O(touched) in the touched-bucket
         // count (a per-bucket union of ~31k scans blew up driver analysis
         // — r12; `basePath` keeps __bucket a partition column)
-        val existing = pendingB.filter(_.hasData).map(_.path.toString)
+        val existing = pendingB.filter(_.hasData).map(_.path)
         val m =
           if (existing.isEmpty) pendingFresh
-          else fold(spark.read.option("basePath", st.dir)
-            .parquet(existing: _*), pendingFresh, s)
+          else fold(readParquet(spark, st.rec.flatMap(_.schema), st.root,
+            existing, Some("__bucket")), pendingFresh, s)
         // repartition BY BUCKET: one owning task, so one file, per bucket
         // per slice. A replay whose pending buckets all end vacated writes
         // an empty frame, and the empty swaps below are the right commit
@@ -839,7 +840,7 @@ object AggMaintenance {
         // (state ∖ slice keys) ∪ slice latest is idempotent per bucket, so
         // a re-run over an already-rewritten state bucket is harmless
         k.newState(k.readState(spark, st.stateRoot,
-            pendingK.filter(_.hasData).map(_.path.toString)))
+            pendingK.filter(_.hasData).map(_.path)))
           .withColumn("__kbucket", kbucketOf)
           .filter(col("__kbucket").isin(pendingK.map(_.id): _*))
           .repartition(col("__kbucket"))
@@ -947,10 +948,11 @@ object AggMaintenance {
     }
     lazy val emptyState: DataFrame = ranked.select(stateCols: _*).limit(0)
 
-    def readState(spark: SparkSession, root: Path, dirs: Seq[String])
+    def readState(spark: SparkSession, root: Path, dirs: Seq[Path])
         : DataFrame =
       if (dirs.isEmpty) emptyState
-      else spark.read.option("basePath", root.toString).parquet(dirs: _*)
+      else readParquet(spark, Some(emptyState.schema), root, dirs,
+          Option.when(s.partitioned)("__kbucket"))
         .select((s.key ++ s.group).map(col) ++
           s.values.map(v => col(v).cast(ValType).as(v)): _*)
 
@@ -974,11 +976,54 @@ object AggMaintenance {
 
   // ---- rollup state on disk ----
 
-  /** The one reader and writer of a rollup's sidecars (`_GRAFT_AGG_WM`,
-    * `_GRAFT_AGG_PARAMS`, `_GRAFT_AGG_SCHEMA`). Applies read the root (they
-    * healed first); readers read [[committed]] values, which fall back to
-    * the whole-dir backup inside a swap crash window. */
-  private final class RollupState(spark: SparkSession, val dir: String) {
+  /** A rollup root's state record: the applied watermark (canonical µs),
+    * the params stamp (None: v1 whole-dir) and the rollup schema. `sidecars`
+    * marks one read from the [[SidecarLayout]]. */
+  private final case class Rec(wm: Option[Long], params: Option[String],
+                               schema: Option[StructType],
+                               sidecars: Boolean = false)
+
+  /** The layout before the record: one sidecar per field, read where a
+    * root (or its backup) has no record. A whole-dir commit drops them
+    * with the old root; an in-place commit drops them after writing the
+    * record. A bucket's watermark file keeps the name [[Wm]]. */
+  private object SidecarLayout {
+    val Wm = "_GRAFT_AGG_WM"
+    private val files = Seq(Wm, "_GRAFT_AGG_PARAMS", "_GRAFT_AGG_SCHEMA")
+    def read(fs: FileSystem, at: Path): Option[Seq[Option[String]]] =
+      Some(files.map(f => SidecarIO.read(fs, new Path(at, f))))
+        .filter(_.exists(_.isDefined))
+    def drop(fs: FileSystem, at: Path): Unit =
+      files.foreach(f => SidecarIO.delete(fs, new Path(at, f)))
+  }
+
+  /** The record under `at`, else the sidecar layout there. */
+  private def readRec(fs: FileSystem, at: Path): Option[Rec] = {
+    def rec(sidecars: Boolean)(f: Seq[Option[String]]) = Rec(
+      f(0).flatMap(_.trim.toLongOption), f(1),
+      f(2).map(DataType.fromJson(_).asInstanceOf[StructType]), sidecars)
+    SidecarIO.readRecord(fs, new Path(at, RecordFile), RecordFields,
+      "rollup state record").map(rec(sidecars = false))
+      .orElse(SidecarLayout.read(fs, at).map(rec(sidecars = true)))
+  }
+
+  /** Parquet at `paths` under `base`, read with the recorded `schema`
+    * (made nullable, plus partition column `part` as INT) — no inference
+    * job; inferred only without a schema. */
+  private def readParquet(spark: SparkSession, schema: Option[StructType],
+                          base: Path, paths: Seq[Path],
+                          part: Option[String] = None): DataFrame = {
+    val r = spark.read.option("basePath", base.toString)
+    schema.map(asNullable).fold(r)(s =>
+      r.schema(part.fold(s)(s.add(_, IntegerType))))
+      .parquet(paths.map(_.toString): _*)
+  }
+
+  /** The one reader and writer of a rollup root's record. Applies heal
+    * first, then read the root's record once ([[rec]]) and keep it
+    * current through every [[write]]; readers read [[committed]], the
+    * backup's inside a whole-dir swap crash window. */
+  private final class RollupState(val spark: SparkSession, val dir: String) {
     val root = new Path(dir)
     val fs: FileSystem =
       root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -986,34 +1031,29 @@ object AggMaintenance {
     val tmp = new Path(dir.stripSuffix("/") + ".__agg_tmp")
     val bak = new Path(bakRoot(dir) + "_dir")
 
-    def get(name: String): Option[String] = readText(fs, new Path(root, name))
-    def committed(name: String): Option[String] =
-      get(name).orElse(readText(fs, new Path(bak, name)))
-    def stamp: Option[Stamp] = committed(ParamsFile).map(Stamp.parse)
-    def wm: Option[Long] = readWm(fs, new Path(root, WmFile))
-    /** The destination lacks its watermark while the backup has one: a
-      * whole-dir swap crashed between its renames, the backup is the
-      * committed state. */
-    def inSwapWindow: Boolean =
-      !SidecarIO.exists(fs, new Path(root, WmFile)) &&
-        SidecarIO.exists(fs, new Path(bak, WmFile))
+    private lazy val stored = readRec(fs, root)
+    private var written: Option[Option[Rec]] = None
+    def rec: Option[Rec] = written.getOrElse(stored)
+    private lazy val bakRec = readRec(fs, bak)
+    def wm: Option[Long] = rec.flatMap(_.wm)
+    def stamp: Option[Stamp] = committed._2.flatMap(_.params).map(Stamp.parse)
 
-    /** The whole-directory rollup at `at` (the root or its backup), read
-      * with the schema its data was written with, from the schema sidecar
-      * beside it: no inference job. Inferred only without the sidecar. */
-    def flat(at: Path): DataFrame =
-      readText(fs, new Path(at, SchemaFile))
-        .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[StructType])
-        .fold(spark.read.parquet(at.toString))(
-          spark.read.schema(_).parquet(at.toString))
+    /** The committed directory and its record: the backup when the root's
+      * record lacks its watermark while the backup's has one (a whole-dir
+      * swap crashed between its renames), else the root. */
+    def committed: (Path, Option[Rec]) =
+      if (rec.exists(_.wm.isDefined) || !bakRec.exists(_.wm.isDefined))
+        (root, rec) else (bak, bakRec)
 
     /** The contiguity rule: a replay (`hi` ≤ stored) is a reported no-op
       * (Left), a gap refuses typed (skipping [stored, lo) would undercount
-      * forever), anything else proceeds with the stored watermark. */
+      * forever), anything else proceeds with the stored watermark. A
+      * replay beside a record also drops old sidecars that a
+      * crash left between the record write and their drop. */
     def advance(lo: Long, hi: Long): Either[AggResult, Option[Long]] =
       wm match {
         case Some(w) if hi <= w =>
+          if (!rec.exists(_.sidecars)) SidecarLayout.drop(fs, root)
           Left(AggResult(0L, 0L, applied = false, watermarkUs = w))
         case Some(w) if lo != w => throw InvalidConfig(
           s"non-contiguous slice: stored watermark is $w but slice starts " +
@@ -1023,7 +1063,7 @@ object AggMaintenance {
 
     /** Commit `hi` as the root watermark in place. */
     def advanceInPlace(hi: Long, rows: Long): AggResult = {
-      writeWm(fs, new Path(root, WmFile), hi)
+      write(rec.fold(Rec(Some(hi), None, None))(_.copy(wm = Some(hi))))
       AggResult(0L, rows, applied = true, watermarkUs = hi)
     }
 
@@ -1036,7 +1076,7 @@ object AggMaintenance {
       def refuse(why: String) = throw InvalidConfig(s"rollup at $dir $why")
       val want = s.render
       lazy val hasData = ParquetMergeSink.hasData(fs, root)
-      get(ParamsFile) match {
+      rec.flatMap(_.params) match {
         case have if have == want =>
         case Some(p) =>
           val owner = Stamp.parse(p).lane
@@ -1054,33 +1094,39 @@ object AggMaintenance {
         case None =>
       }
       if (!s.partitioned && hasData && wm.isEmpty)
-        refuse(s"has data but no $WmFile sidecar — not an AggMaintenance " +
-          "table (refusing to merge into an unknown layout)")
+        refuse("has data but no watermark in its state record — not an " +
+          "AggMaintenance table (refusing to merge into an unknown layout)")
     }
 
-    /** Write the stamp, schema and watermark sidecars under `at`. */
-    def stage(at: Path, params: Option[String], schemaJson: Option[String],
-              hi: Option[Long]): Unit = {
-      params.foreach(writeText(fs, new Path(at, ParamsFile), _))
-      schemaJson.foreach(writeText(fs, new Path(at, SchemaFile), _))
-      hi.foreach(writeWm(fs, new Path(at, WmFile), _))
+    /** Write `r` as the root's record — one sidecar commit — in place,
+      * then drop the root's old sidecars if it had them; or
+      * staged `at` [[tmp]], the root's once [[commitStaged]] swaps it in. */
+    def write(r: Rec, at: Path = root): Unit = {
+      SidecarIO.writeRecord(fs, new Path(at, RecordFile), RecordFields,
+        Seq(r.wm.map(_.toString), r.params, r.schema.map(_.json)))
+      if (at == root && rec.exists(_.sidecars)) SidecarLayout.drop(fs, root)
+      written = Some(Some(r.copy(sidecars = false)))
     }
 
     /** Drop staging debris of a crashed attempt. */
     def clearTmp(): Unit = { if (fs.exists(tmp)) fs.delete(tmp, true); () }
 
-    /** Commit the stage as the whole rollup, through [[bak]]. */
-    def commitStaged(): Unit = ParquetMergeSink.swap(fs, root, tmp, bak)
+    /** Commit the stage, with record `r`, as the whole rollup, through
+      * [[bak]]; the old root's sidecars go with it. */
+    def commitStaged(r: Rec): Unit = {
+      write(r, tmp)
+      ParquetMergeSink.swap(fs, root, tmp, bak)
+    }
 
     /** Heal every swap a crash interrupted: the whole-dir swap first (a
       * crashed rebucket commits through it too), then, with `buckets`,
-      * each bucket swap of the rollup and key-state namespaces. Every
-      * committed root carries `_GRAFT_AGG_WM`, counted under
-      * SidecarIO.exists's two-phase rule so a newer root is never rolled
-      * back to an older backup; a bucket is committed once it exists. */
+      * each bucket swap of the rollup and key-state namespaces. A root is
+      * committed once its record holds `wm` (read under SidecarIO's
+      * two-phase rule, so a newer root is never rolled back to an older
+      * backup); a bucket once it exists. */
     def heal(buckets: Boolean): Unit = {
       ParquetMergeSink.heal(fs, root, bak,
-        d => SidecarIO.exists(fs, new Path(d, WmFile)))
+        readRec(fs, _).exists(_.wm.isDefined))
       if (buckets) Seq(root, stateRoot).foreach { r =>
         val bk = new Path(bakRoot(r.toString))
         if (fs.exists(bk)) {
@@ -1092,16 +1138,15 @@ object AggMaintenance {
     }
   }
 
-  private def requireStamp(spark: SparkSession, targetDir: String,
-                           kinds: Set[String], what: String): Stamp = {
-    val p = new RollupState(spark, targetDir).committed(ParamsFile)
-      .getOrElse(throw InvalidConfig(
-        s"rollup at $targetDir carries no $ParamsFile stamp — not a $what"))
+  private def requireStamp(st: RollupState, kinds: Set[String],
+                           what: String): Stamp = {
+    val p = st.committed._2.flatMap(_.params).getOrElse(throw InvalidConfig(
+      s"rollup at ${st.dir} carries no params stamp — not a $what"))
     val s = Stamp.parse(p)
     if (!kinds(s.kind))
-      throw InvalidConfig(s"rollup at $targetDir is '$p', not a $what")
+      throw InvalidConfig(s"rollup at ${st.dir} is '$p', not a $what")
     if (s.group.isEmpty || s.values.isEmpty)
-      throw InvalidConfig(s"malformed stamp at $targetDir: '$p'")
+      throw InvalidConfig(s"malformed stamp at ${st.dir}: '$p'")
     s
   }
 
@@ -1109,8 +1154,7 @@ object AggMaintenance {
     * double-count re-arrivals, so their group set is not the mirror's) and
     * a distinct, non-empty outer prefix drawn from the stored group
     * columns. Returns the stored group columns. */
-  private def keyedGroupColsFor(spark: SparkSession, targetDir: String,
-                                reader: String,
+  private def keyedGroupColsFor(st: RollupState, reader: String,
                                 outerGroupCols: Seq[String]): Seq[String] = {
     require(outerGroupCols.nonEmpty,
       s"$reader requires at least one outer group column")
@@ -1118,7 +1162,7 @@ object AggMaintenance {
     // identically-named ambiguous result columns
     require(outerGroupCols.distinct == outerGroupCols,
       s"duplicate outer group columns: ${outerGroupCols.mkString(", ")}")
-    val stored = requireStamp(spark, targetDir, Set("keyed", "keyedv2"),
+    val stored = requireStamp(st, Set("keyed", "keyedv2"),
       s"KEYED rollup, which $reader needs (append-only lanes double-count " +
         "re-arrivals, so their group set is not a live set of the mirror)")
       .group
@@ -1143,7 +1187,7 @@ object AggMaintenance {
                     ids: Seq[Int]): Seq[Bucket] =
     parMap(ids) { b =>
       val p = new Path(root, s"$prefix$b")
-      Bucket(b, p, readWm(fs, new Path(p, WmFile)),
+      Bucket(b, p, readWm(fs, new Path(p, BucketWm)),
         ParquetMergeSink.hasData(fs, p))
     }
 
@@ -1163,7 +1207,7 @@ object AggMaintenance {
     parMap(buckets) { b =>
       val staged = new Path(staging, s"$prefix${b.id}")
       if (!fs.exists(staged)) fs.mkdirs(staged) // bucket fully vacated
-      writeWm(fs, new Path(staged, WmFile), hi)
+      writeWm(fs, new Path(staged, BucketWm), hi)
       ParquetMergeSink.swap(fs, b.path, staged, new Path(bk, b.path.getName))
     }
     ()
@@ -1181,7 +1225,7 @@ object AggMaintenance {
   private def bucketWms(fs: FileSystem, root: Path,
                         prefix: String): Seq[Long] =
     parMap(bucketDirs(fs, root, prefix))(p =>
-      readWm(fs, new Path(p, WmFile))).flatten
+      readWm(fs, new Path(p, BucketWm))).flatten
 
   private def bakRoot(targetDir: String): String =
     targetDir.stripSuffix("/") + ".__agg_bak"
@@ -1235,18 +1279,11 @@ object AggMaintenance {
       } finally { pool.shutdown(); () }
     }
 
+  /** A bucket's watermark: one field, a commit marker rewritten in place
+    * (every crash-window subtlety lives in core.SidecarIO). */
   private def readWm(fs: FileSystem, p: Path): Option[Long] =
-    readText(fs, p).flatMap(_.trim.toLongOption)
+    SidecarIO.read(fs, p).flatMap(_.trim.toLongOption)
 
   private def writeWm(fs: FileSystem, p: Path, wm: Long): Unit =
-    writeText(fs, p, wm.toString)
-
-  // Sidecars are COMMIT MARKERS, some rewritten in place (the empty-slice
-  // advance, the partitioned root commit): every crash-window subtlety
-  // lives in core.SidecarIO, whose read serves the committed content
-  private def readText(fs: FileSystem, p: Path): Option[String] =
-    SidecarIO.read(fs, p)
-
-  private def writeText(fs: FileSystem, p: Path, s: String): Unit =
-    SidecarIO.write(fs, p, s)
+    SidecarIO.write(fs, p, wm.toString)
 }

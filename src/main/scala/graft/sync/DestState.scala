@@ -225,36 +225,24 @@ object DestState {
     private def beside(suffix: String) = new Path(dir.stripSuffix("/") + suffix)
     private val path = beside(".__merge_state")
 
-    /** Five lines, `restart=`, `applied=`, `params=`, `max=`, `schema=`
-      * (Catalyst JSON, one line); an empty value is None. A record from
-      * before the last two fields has three lines and reads them as
-      * None. */
+    /** Five fields, `restart=`, `applied=`, `params=`, `max=`, `schema=`
+      * (Catalyst JSON, one line), in one [[SidecarIO.writeRecord]] record.
+      * A record from before the last two fields has three lines and reads
+      * them as None. */
+    private val fields = Seq("restart", "applied", "params", "max", "schema")
+
     protected def read(): Option[DestState] =
-      SidecarIO.read(fs, path).map { s =>
-        def field(line: String, name: String): Option[String] =
-          if (line.startsWith(s"$name=")) Some(line.drop(name.length + 1))
-          else throw new java.io.IOException(s"unreadable sync state record $path")
-        val lines = s.split("\n", 5)
-        if (lines.length != 3 && lines.length != 5)
-          throw new java.io.IOException(s"unreadable sync state record $path")
-        val Seq(r, a, p, m, sc) = lines.toSeq.zip(
-          Seq("restart", "applied", "params", "max", "schema"))
-          .map { case (l, n) => field(l, n).filter(_.nonEmpty) }
-          .padTo(5, None)
-        DestState(r.flatMap(_.toLongOption), a.flatMap(_.toLongOption), p,
-          m.flatMap(_.toLongOption),
+      SidecarIO.readRecord(fs, path, fields, "sync state record", Set(3)).map {
+        case Seq(r, a, p, m, sc) => DestState(r.flatMap(_.toLongOption),
+          a.flatMap(_.toLongOption), p, m.flatMap(_.toLongOption),
           sc.map(DataType.fromJson(_).asInstanceOf[StructType]))
       }
 
     protected def create(s: DestState): Boolean = { update(s, s); true }
 
     protected def update(from: DestState, to: DestState): Unit =
-      SidecarIO.write(fs, path,
-        s"restart=${to.restartWm.getOrElse("")}\n" +
-          s"applied=${to.appliedWm.getOrElse("")}\n" +
-          s"params=${to.params.getOrElse("")}\n" +
-          s"max=${to.destMax.getOrElse("")}\n" +
-          s"schema=${to.schema.fold("")(_.json)}")
+      SidecarIO.writeRecord(fs, path, fields, Seq(to.restartWm, to.appliedWm,
+        to.params, to.destMax, to.schema.map(_.json)).map(_.map(_.toString)))
 
     // the three sidecars the record replaces: pending marker, applied
     // bound, params stamp

@@ -11,9 +11,9 @@ import graft.sync.AggMaintenance
   * its persisted partial, the partitioned apply its touched buckets and
   * row count in one collect, and the staged write counts its own groups; a
   * scalar pass added back beside those, a staged directory read back to
-  * count it, or a schema inference of the stored rollup (the whole-dir
-  * apply reads it with its `_GRAFT_AGG_SCHEMA`), shows up here as extra
-  * jobs. The keyed lanes (flat, with
+  * count it, or a schema inference of the stored rollup (every apply
+  * reads it with the schema its state record carries), shows up here as
+  * extra jobs. The keyed lanes (flat, with
   * and without a tombstone column, and bucket-partitioned) and the v3
   * distinct-count lane are pinned at the counts they ran when the pins
   * were added, so folding lanes onto shared cores cannot add a job
@@ -48,7 +48,7 @@ class AggMaintenanceCostSpec extends SparkSpec {
     assert(emptyJobs <= 2, s"empty slice ran $emptyJobs Spark jobs")
   }
 
-  test("applySlicePartitioned: a data-bearing slice into an existing rollup runs at most 8 Spark jobs; an empty slice at most 2") {
+  test("applySlicePartitioned: a data-bearing slice into an existing rollup runs at most 7 Spark jobs; an empty slice at most 2") {
     val work = tmpDir("agg-cost-part")
     val src = source(work)
     val dir = work + "/rollup"
@@ -63,7 +63,7 @@ class AggMaintenanceCostSpec extends SparkSpec {
       empty.applied && empty.watermarkUs == 3000L, s"$empty")
     assert(AggMaintenance.read(spark, dir).agg(sum("cnt")).first()
       .getLong(0) == 2000L)
-    assert(dataJobs <= 8, s"data-bearing slice ran $dataJobs Spark jobs")
+    assert(dataJobs <= 7, s"data-bearing slice ran $dataJobs Spark jobs")
     assert(emptyJobs <= 2, s"empty slice ran $emptyJobs Spark jobs")
   }
 
@@ -104,9 +104,9 @@ class AggMaintenanceCostSpec extends SparkSpec {
       tombstoneCol = Some("del")))
   }
 
-  test("applySliceKeyedPartitioned: a data-bearing slice runs at most 20 Spark jobs; an empty slice at most 3") {
+  test("applySliceKeyedPartitioned: a data-bearing slice runs at most 17 Spark jobs; an empty slice at most 3") {
     val src = keyedSource(tmpDir("agg-cost-keyed-part-src"))
-    pin("keyed-part", 20, 3)((dir, lo, hi) =>
+    pin("keyed-part", 17, 3)((dir, lo, hi) =>
       AggMaintenance.applySliceKeyedPartitioned(spark, dir, src, "ts",
         Seq("k"), Seq("acct"), "amount", lo, hi, nBuckets = 8,
         nKeyBuckets = 8))
@@ -116,5 +116,41 @@ class AggMaintenanceCostSpec extends SparkSpec {
     val src = source(tmpDir("agg-cost-distinct-src"))
     pin("distinct", 7, 2)((dir, lo, hi) => AggMaintenance.applySliceDistinct(
       spark, dir, src, "ts", Seq("acct"), Seq("id"), lo, hi))
+  }
+
+  test("applySliceV2: a data-bearing apply makes one state-record commit and one root-state read; readDerived one read") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.graftmock.impl", classOf[MockStoreFileSystem].getName)
+    val work = tmpDir("agg-cost-record")
+    val src = source(work)
+    val dir = s"graftmock:$work/rollup"
+    def apply(lo: Long, hi: Long) = AggMaintenance.applySliceV2(
+      spark, dir, src, "ts", Seq("acct"), Seq("amount"), lo, hi)
+    apply(0L, 1000L)
+    val state = (RollupRecord.File +: RollupRecord.SidecarFiles).toSet
+    /** (sidecar commits, state reads) of `body`: a commit creates its
+      * `.name.tmp`; a read opens the file or its `.name.new` twin. */
+    def stateOps(body: => Any): (Int, Int) = {
+      val log = new java.util.concurrent.ConcurrentLinkedQueue[
+        (String, org.apache.hadoop.fs.Path)]()
+      MockStoreFileSystem.calls = Some(log)
+      try body finally MockStoreFileSystem.calls = None
+      val ops = log.toArray.toSeq.map {
+        case (op: String, p: org.apache.hadoop.fs.Path) => op -> p.getName
+      }
+      def twin(n: String, suffix: String) =
+        n.startsWith(".") && state(n.drop(1).stripSuffix(suffix))
+      (ops.count { case (op, n) => op == "create" && twin(n, ".tmp") },
+        ops.count { case (op, n) =>
+          op == "open" && (state(n) || twin(n, ".new")) })
+    }
+    val (commits, reads) = stateOps(apply(1000L, 2000L))
+    info(s"data-bearing apply: $commits sidecar commits, $reads state reads")
+    assert(commits == 1 && reads == 1, s"$commits commits, $reads reads")
+    val (_, derivedReads) = stateOps(
+      AggMaintenance.readDerived(spark, dir).collect())
+    assert(derivedReads == 1, s"readDerived made $derivedReads state reads")
+    assert(AggMaintenance.readDerived(spark, dir).agg(sum("cnt")).first()
+      .getLong(0) == 2000L)
   }
 }

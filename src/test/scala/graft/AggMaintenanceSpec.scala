@@ -173,6 +173,11 @@ class AggMaintenanceSpec extends SparkSpec {
       AggMaintenance.applySliceDistinct(
         spark, dir, rows((10L, "a", 1.0)).withColumnRenamed("v", "v=x"),
         "us", Seq("grp"), Seq("v=x"), 0L, 50L))
+    // a newline would split the state record's params= field
+    assertThrows[graft.core.GraftError.InvalidConfig](
+      AggMaintenance.applySliceV2(
+        spark, dir, rows((10L, "a", 1.0)).withColumnRenamed("v", "v\nw"),
+        "us", Seq("grp"), Seq("v\nw"), 0L, 50L))
   }
 
   test("partitioned: a bucket already committed by a crashed attempt is not re-merged") {
@@ -191,11 +196,7 @@ class AggMaintenanceSpec extends SparkSpec {
     AggMaintenance.applySlicePartitioned(
       spark, dir, src.filter(col("grp") === gA),
       "us", Seq("grp"), "v", 50L, 100L, nBuckets = 8)
-    // rewind outside the Hadoop fs → drop its checksum sidecar too
-    java.nio.file.Files.deleteIfExists(
-      new java.io.File(dir, "._GRAFT_AGG_WM.crc").toPath)
-    java.nio.file.Files.writeString(
-      new java.io.File(dir, "_GRAFT_AGG_WM").toPath, "50")
+    RollupRecord.rewind(dir, 50L)
     // the re-run of the FULL slice must skip gA's bucket (its watermark
     // already reads 100 — re-merging would double-count) and fold only gB
     AggMaintenance.applySlicePartitioned(
@@ -223,10 +224,7 @@ class AggMaintenanceSpec extends SparkSpec {
     AggMaintenance.applySlicePartitioned(
       spark, dir, base.filter(col("grp") === gA),
       "us", Seq("grp"), "v", 50L, 100L, nBuckets = 8)
-    java.nio.file.Files.deleteIfExists(
-      new java.io.File(dir, "._GRAFT_AGG_WM.crc").toPath)
-    java.nio.file.Files.writeString(
-      new java.io.File(dir, "_GRAFT_AGG_WM").toPath, "50")
+    RollupRecord.rewind(dir, 50L)
     // the source grew; the re-run folds [50, 150) in one call
     val grown = base.unionByName(rows((110L, gA, 10.0), (120L, gB, 20.0)))
     val r = AggMaintenance.applySlicePartitioned(
@@ -951,9 +949,7 @@ class AggMaintenanceSpec extends SparkSpec {
     // the re-run must no-op the merges and just advance the root wm
     val d1 = tmpDir("agg-kp-c1")
     applyKP(d1, src, 0L, 100L); applyKP(d1, src, 100L, 200L)
-    val fs1 = new org.apache.hadoop.fs.Path(d1).getFileSystem(conf)
-    graft.core.SidecarIO.write(fs1,
-      new org.apache.hadoop.fs.Path(d1, "_GRAFT_AGG_WM"), "100")
+    RollupRecord.rewind(d1, 100L)
     val r1 = applyKP(d1, src, 100L, 200L)
     assert(r1.applied && r1.watermarkUs == 200L)
     assert(snapshotK(d1) == wantSnap)
@@ -977,8 +973,7 @@ class AggMaintenanceSpec extends SparkSpec {
     org.apache.hadoop.fs.FileUtil.copy(fs2,
       new org.apache.hadoop.fs.Path(pre2, s"_GRAFT_AGG_STATE/$victim"),
       fs2, dstK, false, conf)
-    graft.core.SidecarIO.write(fs2,
-      new org.apache.hadoop.fs.Path(d2, "_GRAFT_AGG_WM"), "100")
+    RollupRecord.rewind(d2, 100L)
     val r2 = applyKP(d2, src, 100L, 200L)
     assert(r2.applied && snapshotK(d2) == wantSnap)
     // and the repaired state store retracts correctly on the NEXT slice
@@ -1011,8 +1006,7 @@ class AggMaintenanceSpec extends SparkSpec {
     fs3.delete(dstB, true)
     org.apache.hadoop.fs.FileUtil.copy(fs3,
       new org.apache.hadoop.fs.Path(pre3, victimB), fs3, dstB, false, conf)
-    graft.core.SidecarIO.write(fs3,
-      new org.apache.hadoop.fs.Path(d3, "_GRAFT_AGG_WM"), "100")
+    RollupRecord.rewind(d3, 100L)
     val r3 = applyKP(d3, src, 100L, 200L)
     assert(r3.applied && snapshotK(d3) == wantSnap)
   }
@@ -1056,8 +1050,7 @@ class AggMaintenanceSpec extends SparkSpec {
     org.apache.hadoop.fs.FileUtil.copy(fs,
       new org.apache.hadoop.fs.Path(pre, "_GRAFT_AGG_STATE"), fs,
       new org.apache.hadoop.fs.Path(d, "_GRAFT_AGG_STATE"), false, conf)
-    graft.core.SidecarIO.write(fs,
-      new org.apache.hadoop.fs.Path(d, "_GRAFT_AGG_WM"), "100")
+    RollupRecord.rewind(d, 100L)
     val r = applyKP(d, src, 100L, 200L)
     assert(r.applied && r.groupsWritten == 0L)
     assert(snapshotK(d) == snapshotK(want))
@@ -1434,8 +1427,8 @@ class AggMaintenanceSpec extends SparkSpec {
     // stage the stacked crash: stale backup beside the root, root's wm
     // committed only in its `.new` twin
     copyTree(s"$work/slice1copy", s"$dir.__agg_bak_dir")
-    Files.move(Paths.get(dir, "_GRAFT_AGG_WM"),
-      Paths.get(dir, "._GRAFT_AGG_WM.new"))
+    Files.move(Paths.get(dir, RollupRecord.File),
+      Paths.get(dir, s".${RollupRecord.File}.new"))
     // reads serve the TWIN-committed state (wm 200, both slices)
     assert(AggMaintenance.watermark(spark, dir).contains(200L))
     assert(snapshot(dir).keySet == Set("a", "b"))
@@ -1553,11 +1546,7 @@ class AggMaintenanceSpec extends SparkSpec {
     val src = Seq((10L, 1L, "a", "p", 1.0, 2.0, 7L, false))
       .toDF("us", "k", "grp", "g2", "x", "y", "u", "del")
     val g = Seq("grp", "g2")
-    def stamp(dir: String): Option[String] = {
-      val p = new org.apache.hadoop.fs.Path(dir, "_GRAFT_AGG_PARAMS")
-      graft.core.SidecarIO.read(
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-    }
+    def stamp(dir: String): Option[String] = RollupRecord.field(dir, "params")
     val tomb = Some("del")
     // (lane, exact stamp, cold apply of [0, 100))
     val lanes: Seq[(String, String, String => Any)] = Seq(
@@ -1665,7 +1654,7 @@ class AggMaintenanceSpec extends SparkSpec {
           spark, d, src, "us", Seq("k"), Seq("grp"), "x", 0L, 100L)))
     lanes.foreach { case (lane, want, apply) =>
       val dir = s"graftmock:${tmpDir(s"agg-cold-crash-$lane")}/rollup"
-      MockStoreFileSystem.failOnCreate = Some("_GRAFT_AGG_WM")
+      MockStoreFileSystem.failOnCreate = Some(RollupRecord.File)
       try intercept[java.io.IOException](apply(dir))
       finally MockStoreFileSystem.failOnCreate = None
       val r = apply(dir)
@@ -1673,9 +1662,7 @@ class AggMaintenanceSpec extends SparkSpec {
       assert(AggMaintenance.watermark(spark, dir).contains(100L), lane)
       val got = AggMaintenance.read(spark, dir)
       assert(got.count() == 0L && got.columns.contains("cnt"), lane)
-      val p = new org.apache.hadoop.fs.Path(dir, "_GRAFT_AGG_PARAMS")
-      assert(graft.core.SidecarIO.read(p.getFileSystem(conf), p) == want,
-        lane)
+      assert(RollupRecord.field(dir, "params") == want, lane)
     }
   }
 
@@ -1699,10 +1686,115 @@ class AggMaintenanceSpec extends SparkSpec {
       assert(jobs == 0, s"$lane: the read ran $jobs Spark jobs")
       assert(got.schema == inferred.schema, lane)
       assert(got.collect().toSet == inferred.collect().toSet, lane)
-      val sidecar = new java.io.File(dir, "_GRAFT_AGG_SCHEMA")
-      assert(sidecar.delete(), lane)
+      assert(RollupRecord.field(dir, "schema").isDefined, lane)
+      RollupRecord.set(dir, "schema", None)
       assert(AggMaintenance.read(spark, dir).collect().toSet ==
         inferred.collect().toSet, lane)
+    }
+  }
+
+  test("state record: a sidecar-layout root reads as its record, applies, and migrates to the record") {
+    val src = Seq((10L, 1L, "a", 1.0, 2.0), (20L, 2L, "b", 3.0, 4.0),
+      (60L, 1L, "b", 5.0, 6.0), (70L, 3L, "a", 7.0, 8.0))
+      .toDF("us", "k", "grp", "x", "y")
+    val lanes: Seq[(String, (String, Long, Long) => AggMaintenance.AggResult)] =
+      Seq(
+        "v1" -> ((d, lo, hi) => AggMaintenance.applySlice(
+          spark, d, src, "us", Seq("grp"), "x", lo, hi)),
+        "v2" -> ((d, lo, hi) => AggMaintenance.applySliceV2(
+          spark, d, src, "us", Seq("grp"), Seq("x", "y"), lo, hi)),
+        "keyed" -> ((d, lo, hi) => AggMaintenance.applySliceKeyed(
+          spark, d, src, "us", Seq("k"), Seq("grp"), "x", lo, hi)),
+        "v2 partitioned" -> ((d, lo, hi) =>
+          AggMaintenance.applySlicePartitionedV2(
+            spark, d, src, "us", Seq("grp"), Seq("x", "y"), lo, hi, 4)),
+        "keyedv2 partitioned" -> ((d, lo, hi) =>
+          AggMaintenance.applySliceKeyedPartitionedV2(spark, d, src, "us",
+            Seq("k"), Seq("grp"), Seq("x", "y"), lo, hi, 4, 4)))
+    def rows(d: String) =
+      AggMaintenance.read(spark, d).collect().map(_.toString).toSet
+    lanes.foreach { case (lane, apply) =>
+      val want = tmpDir("agg-sidecars-want") + "/rollup"
+      apply(want, 0L, 50L); apply(want, 50L, 100L)
+      val dir = tmpDir("agg-sidecars") + "/rollup"
+      apply(dir, 0L, 50L)
+      val before = rows(dir)
+      val fields = RollupRecord.read(dir).get
+      RollupRecord.toSidecarLayout(dir)
+      assert(RollupRecord.present(dir) == RollupRecord.SidecarFiles.zip(fields)
+        .collect { case (f, Some(_)) => f }.toSet, lane)
+      // every reader serves the sidecar layout as it served the record
+      assert(rows(dir) == before, lane)
+      assert(AggMaintenance.watermark(spark, dir).contains(50L), lane)
+      // a replay changes nothing and keeps the layout
+      assert(!apply(dir, 0L, 50L).applied, lane)
+      assert(!RollupRecord.present(dir).contains(RollupRecord.File), lane)
+      // the first commit migrates: the record, none of the sidecars
+      val r = apply(dir, 50L, 100L)
+      assert(r.applied && r.watermarkUs == 100L, lane)
+      assert(RollupRecord.present(dir) == Set(RollupRecord.File), lane)
+      assert(rows(dir) == rows(want), lane)
+      assert(RollupRecord.read(dir) == RollupRecord.read(want), lane)
+    }
+    // the record's exact text: three fields, an empty value for None
+    val v1 = tmpDir("agg-record-v1") + "/rollup"
+    lanes.head._2(v1, 0L, 50L)
+    val text = graft.core.SidecarIO.read(RollupRecord.fs(v1),
+      new org.apache.hadoop.fs.Path(v1, RollupRecord.File)).get
+    assert(text.startsWith("wm=50\nparams=\nschema={\"type\":\"struct\"") &&
+      !text.drop(1).contains("\n\n"), text)
+    val v2 = tmpDir("agg-record-v2") + "/rollup"
+    lanes(1)._2(v2, 0L, 50L)
+    assert(RollupRecord.read(v2).get.take(2) == Seq(Some("50"),
+      Some("v2 flat group=grp values=x+y order=us")))
+  }
+
+  test("partitioned lanes: the recorded bucket schema and the key-state schema read as an inference does") {
+    import org.apache.spark.sql.types._
+    val src = Seq((10L, 1L, "a", 1.0, 2.0, 7L), (20L, 2L, "b", 3.0, 4.0, 8L),
+      (30L, 3L, "a", 5.0, 6.0, 7L)).toDF("us", "k", "grp", "x", "y", "u")
+    val lanes: Seq[(String, Seq[String], String => AggMaintenance.AggResult)] =
+      Seq(
+        ("v1", Nil, d => AggMaintenance.applySlicePartitioned(
+          spark, d, src, "us", Seq("grp"), "x", 0L, 100L, 4)),
+        ("v2", Nil, d => AggMaintenance.applySlicePartitionedV2(
+          spark, d, src, "us", Seq("grp"), Seq("x", "y"), 0L, 100L, 4)),
+        ("v3", Nil, d => AggMaintenance.applySlicePartitionedDistinct(
+          spark, d, src, "us", Seq("grp"), Seq("u"), 0L, 100L, 4)),
+        ("keyed", Seq("x"), d => AggMaintenance.applySliceKeyedPartitioned(
+          spark, d, src, "us", Seq("k"), Seq("grp"), "x", 0L, 100L, 4, 4)),
+        ("keyedv2", Seq("x", "y"),
+          d => AggMaintenance.applySliceKeyedPartitionedV2(spark, d, src,
+            "us", Seq("k"), Seq("grp"), Seq("x", "y"), 0L, 100L, 4, 4)))
+    def nullable(s: StructType) = StructType(s.map(_.copy(nullable = true)))
+    lanes.foreach { case (lane, values, apply) =>
+      val dir = tmpDir(s"agg-part-schema-$lane") + "/rollup"
+      apply(dir)
+      // buckets: the record's schema, nullable, plus __bucket INT
+      val inferred = spark.read.parquet(dir)
+      val bucketSchema = nullable(DataType.fromJson(
+        RollupRecord.field(dir, "schema").get).asInstanceOf[StructType])
+        .add("__bucket", IntegerType)
+      assert(bucketSchema == inferred.schema, lane)
+      assert(spark.read.schema(bucketSchema).parquet(dir).collect().toSet ==
+        inferred.collect().toSet, lane)
+      val (got, jobs) = jobsIn(AggMaintenance.read(spark, dir))
+      assert(jobs == 0, s"$lane: the read ran $jobs Spark jobs")
+      assert(got.collect().toSet == inferred.drop("__bucket").collect().toSet,
+        lane)
+      // key state: the slice's key and group columns, values as
+      // decimal(18,4), plus __kbucket INT
+      if (values.nonEmpty) {
+        val stateDir = s"$dir/_GRAFT_AGG_STATE"
+        val state = spark.read.parquet(stateDir)
+        val stateSchema = nullable(StructType(
+          src.select(col("k"), col("grp")).schema.fields.toSeq ++
+            values.map(v => StructField(v, DecimalType(18, 4)))))
+          .add("__kbucket", IntegerType)
+        assert(stateSchema == state.schema, lane)
+        assert(spark.read.schema(stateSchema).parquet(stateDir).collect()
+          .toSet == state.collect().toSet, lane)
+      }
     }
   }
 }

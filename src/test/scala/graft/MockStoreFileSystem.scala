@@ -26,13 +26,17 @@ import org.apache.hadoop.util.Progressable
   * leave it.
   *
   * [[MockStoreFileSystem.swapOps]] enumerates the crash points of one
-  * directory swap: it counts the `rename`s and `delete`s that name one of
-  * the swap's own directories exactly and throws at the k-th, one-shot. */
+  * directory swap: it counts the `rename`s, `delete`s and `create`s that
+  * name one of the watched paths exactly and throws at the k-th, one-shot.
+  *
+  * [[MockStoreFileSystem.calls]] logs every `open` and `create`, so a spec
+  * can count the sidecar reads and commits of one call. */
 class MockStoreFileSystem extends RawLocalFileSystem {
   override def getScheme: String = "graftmock"
   override def getUri: URI = URI.create("graftmock:///")
 
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    MockStoreFileSystem.calls.foreach(_.add("open" -> f))
     MockStoreFileSystem.raceOnOpen match {
       case Some((name, writerAction)) if f.getName == name =>
         MockStoreFileSystem.raceOnOpen = None
@@ -64,6 +68,8 @@ class MockStoreFileSystem extends RawLocalFileSystem {
   override def create(f: Path, overwrite: Boolean, bufferSize: Int,
                       replication: Short, blockSize: Long,
                       progress: Progressable): FSDataOutputStream = {
+    MockStoreFileSystem.calls.foreach(_.add("create" -> f))
+    MockStoreFileSystem.swapOps.foreach(_.visit(f))
     MockStoreFileSystem.failOnCreate match {
       case Some(name) if f.getName.contains(name) =>
         MockStoreFileSystem.failOnCreate = None
@@ -83,11 +89,11 @@ object MockStoreFileSystem {
     * consumed by the first matching `create`. */
   @volatile var failOnCreate: Option[String] = None
 
-  /** Counts the `rename`/`delete` calls that name one of `dirs` exactly
-    * (compared by path, scheme dropped) and throws instead of running the
-    * `crashAt`-th (1-based; 0 only counts). Only the swap's own
-    * directories count, so Spark's task-commit renames underneath them
-    * stay out of the count. Thread-safe: bucket swaps run in parallel. */
+  /** Counts the `rename`/`delete`/`create` calls that name one of `dirs`
+    * exactly (compared by path, scheme dropped) and throws instead of
+    * running the `crashAt`-th (1-based; 0 only counts). Only the watched
+    * paths count, so Spark's task-commit renames underneath them stay out
+    * of the count. Thread-safe: bucket swaps run in parallel. */
   final class SwapOps(dirs: Seq[String], crashAt: Int) {
     private def key(p: Path) = p.toUri.getPath.stripSuffix("/")
     private val watched = dirs.map(d => key(new Path(d))).toSet
@@ -102,4 +108,9 @@ object MockStoreFileSystem {
 
   /** The armed swap-op counter, if any. */
   @volatile var swapOps: Option[SwapOps] = None
+
+  /** The armed call log, if any: ("open" | "create", path), in order. */
+  @volatile var calls
+      : Option[java.util.concurrent.ConcurrentLinkedQueue[(String, Path)]] =
+    None
 }

@@ -209,4 +209,33 @@ class SidecarIOSpec extends SparkSpec {
         graft.core.SidecarIO.read(fs, p))
     finally MockStoreFileSystem.raceOnOpen = None
   }
+
+  test("state records: name=value lines in field order; an older prefix pads, any other shape refuses") {
+    import graft.core.SidecarIO
+    val dir = tmpDir("sidecar-io-record")
+    val p = new Path(dir, "_GRAFT_TEST_RECORD")
+    val fs = fsFor(p)
+    val names = Seq("wm", "params", "schema")
+    SidecarIO.writeRecord(fs, p, names, Seq(Some("100"), None, Some("{}")))
+    assert(SidecarIO.read(fs, p).contains("wm=100\nparams=\nschema={}"))
+    assert(SidecarIO.readRecord(fs, p, names, "test record").contains(
+      Seq(Some("100"), None, Some("{}"))))
+    // a value may carry '=': only the leading name= is the field's
+    SidecarIO.writeRecord(fs, p, names, Seq(None, Some("a=b c"), None))
+    assert(SidecarIO.readRecord(fs, p, names, "test record").contains(
+      Seq(None, Some("a=b c"), None)))
+    // an accepted older prefix reads its missing fields as None
+    SidecarIO.write(fs, p, "wm=7")
+    assert(SidecarIO.readRecord(fs, p, names, "test record", Set(1))
+      .contains(Seq(Some("7"), None, None)))
+    Seq("wm=7", "wm=1\nschema=\nparams=", "x=1\nparams=\nschema=")
+      .foreach { text =>
+        SidecarIO.write(fs, p, text)
+        val e = intercept[java.io.IOException](
+          SidecarIO.readRecord(fs, p, names, "test record"))
+        assert(e.getMessage.contains("unreadable test record"), text)
+      }
+    assert(SidecarIO.readRecord(fs, new Path(dir, "absent"), names,
+      "test record").isEmpty)
+  }
 }

@@ -16,7 +16,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * graft.sync, keep their own renames: different protocols.)
   *
   * And it keeps `SyncEndpoint.parse` the one `jdbc:` classifier for the
-  * CLI: a `startsWith("jdbc:")` under `graft/cli` is a second copy of it. */
+  * CLI: a `startsWith("jdbc:")` under `graft/cli` is a second copy of it.
+  *
+  * A rollup root keeps its state in one record; the three sidecars it
+  * replaced are named only by AggMaintenance's `SidecarLayout`, the reader
+  * of roots written before the record. */
 class StampOwnershipSpec extends AnyFunSuite {
 
   private val root = new java.io.File(sys.props("user.dir"), "src/main/scala")
@@ -79,6 +83,33 @@ class StampOwnershipSpec extends AnyFunSuite {
       rel = root.toPath.relativize(f.toPath).toString.replace('\\', '/')
       (line, i) <- codeLines(f)
       if line.contains("startsWith(\"jdbc:\")")
+    } yield s"$rel:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  test("the three old rollup sidecar names appear only in AggMaintenance's SidecarLayout") {
+    val sidecarNames = "\"_GRAFT_AGG_(WM|PARAMS|SCHEMA)\"".r
+    val agg = "graft/sync/AggMaintenance.scala"
+    val files = sources(root)
+    assert(files.exists(_.getPath.endsWith(agg)), s"$agg is missing")
+    // the reader's span: its `object` line up to the first closing brace
+    // at the object's own indent
+    val aggLines = codeLines(new java.io.File(root, agg))
+    val start = aggLines.indexWhere(_._1.contains("object SidecarLayout {"))
+    assert(start >= 0, "SidecarLayout is missing")
+    val indent = aggLines(start)._1.takeWhile(_ == ' ')
+    val end = aggLines.indexWhere(_._1 == s"$indent}", start)
+    assert(end > start, "SidecarLayout has no closing brace")
+    val inside = aggLines.slice(start, end + 1).map(_._2).toSet
+    assert(aggLines.exists { case (l, i) =>
+      inside(i) && sidecarNames.findFirstIn(l).isDefined }, "SidecarLayout " +
+      "no longer names the old sidecars: update this guard")
+    val offenders = for {
+      f <- files
+      rel = root.toPath.relativize(f.toPath).toString.replace('\\', '/')
+      (line, i) <- codeLines(f)
+      if sidecarNames.findFirstIn(line).isDefined
+      if rel != agg || !inside(i)
     } yield s"$rel:${i + 1}: ${line.trim}"
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }

@@ -2,20 +2,22 @@ package graft
 
 import org.apache.hadoop.fs.Path
 
-import graft.core.SidecarIO
 import graft.sync.{AggMaintenance, Compact, DestState, Reconcile, SyncConfig,
   SyncJob}
 
 /** Every crash point of the one directory swap (`ParquetMergeSink.swap`)
-  * under every caller. An uncrashed call counts the renames and deletes
-  * that name the caller's own swap directories (destination, stage,
-  * backup) exactly: the swap's own, and a partitioned stage write's job
-  * commit moving a bucket dir into the stage. Then, for each k, a fresh
-  * copy of the pre-state runs
+  * under every caller, and of every rollup state-record commit. An
+  * uncrashed call counts the renames and deletes that name the caller's
+  * own swap directories (destination, stage, backup) exactly: the swap's
+  * own, and a partitioned stage write's job commit moving a bucket dir
+  * into the stage. A rollup caller also counts every create, rename and
+  * delete of the record and of the sidecar layout's three sidecars (and
+  * their `.tmp`/`.new` twins) in its root, stage and backup. Then, for
+  * each k, a fresh copy of the pre-state runs
   * the call with a crash at op k, and a clean rerun must heal and end at
   * exactly the uncrashed state, with no stage or backup left. Between
-  * the crash and the rerun a rollup read serves, per group, the old or
-  * the new committed row, never neither. */
+  * the crash and the rerun a rollup read serves, per group and for the
+  * watermark, the old or the new committed value, never neither. */
 class SwapCrashSpec extends SparkSpec {
   import spark.implicits._
 
@@ -36,6 +38,14 @@ class SwapCrashSpec extends SparkSpec {
                                   call: String => Unit,
                                   state: String => Any,
                                   rows: Option[String => Map[String, String]] = None)
+
+  /** Every path whose ops `c` counts on `d`. */
+  private def watched(c: Caller, d: String): Seq[String] =
+    c.swaps(d).flatMap { case (a, b, k) => Seq(a, b, k) } ++ (
+      if (c.rows.isEmpty) Nil
+      else Seq(d, d + ".__agg_tmp", d + ".__agg_bak_dir").flatMap(dir =>
+        (RollupRecord.File +: RollupRecord.SidecarFiles).flatMap(f =>
+          Seq(s"$dir/$f", s"$dir/.$f.tmp", s"$dir/.$f.new"))))
 
   // ---- sync destinations ----
 
@@ -80,12 +90,21 @@ class SwapCrashSpec extends SparkSpec {
         (0 until 2).map(b => (s"$root/$prefix$b", s"$staging/$prefix$b",
           s"$root.__agg_bak/$prefix$b"))
     }
+  /** Group → row, and the watermark under `<wm>`; before a cold start
+    * there is no rollup to read. */
   private def rollupRows(d: String): Map[String, String] =
-    AggMaintenance.read(spark, d).collect()
+    (try AggMaintenance.read(spark, d).collect()
       .map(r => r.get(0).toString -> r.toString).toMap
+    catch {
+      case e: graft.core.GraftError.InvalidConfig
+          if e.getMessage.contains("no rollup") => Map.empty[String, String]
+    }) + ("<wm>" -> AggMaintenance.watermark(spark, d).toString)
   private def rollupState(d: String): Any =
-    (rollupRows(d), AggMaintenance.watermark(spark, d),
-      SidecarIO.read(fs(d), new Path(d, "_GRAFT_AGG_PARAMS")))
+    (rollupRows(d), RollupRecord.field(d, "params"), RollupRecord.present(d))
+  /** The pre-state built by `build`, turned into the sidecar layout. */
+  private def sidecars(build: String => Unit)(d: String): Unit = {
+    build(d); RollupRecord.toSidecarLayout(d)
+  }
 
   private val callers = Seq(
     Caller("cold merge", _ => (), merged(_, ".__merge_tmp"), sync(batch1),
@@ -105,12 +124,25 @@ class SwapCrashSpec extends SparkSpec {
       keyedBuckets(50L, 100L), rollupState, Some(rollupRows)),
     Caller("rebucket", keyedBuckets(0L, 100L), wholeDir,
       d => AggMaintenance.rebucket(spark, d, 3), rollupState,
-      Some(rollupRows)))
+      Some(rollupRows)),
+    Caller("whole-directory rollup cold start", _ => (), wholeDir,
+      v2(0L, 50L), rollupState, Some(rollupRows)),
+    Caller("whole-directory rollup empty advance", v2(0L, 50L), wholeDir,
+      v2(50L, 55L), rollupState, Some(rollupRows)),
+    Caller("partitioned rollup cold start", _ => (), bucketSwaps,
+      keyedBuckets(0L, 50L), rollupState, Some(rollupRows)),
+    Caller("partitioned rollup empty root advance", keyedBuckets(0L, 100L),
+      bucketSwaps, keyedBuckets(100L, 150L), rollupState, Some(rollupRows)),
+    Caller("whole-directory rollup apply on a sidecar-layout root",
+      sidecars(v2(0L, 50L)), wholeDir, v2(50L, 100L), rollupState,
+      Some(rollupRows)),
+    Caller("partitioned rollup apply on a sidecar-layout root",
+      sidecars(keyedBuckets(0L, 50L)), bucketSwaps, keyedBuckets(50L, 100L),
+      rollupState, Some(rollupRows)))
 
   /** Run `call` on `d` with the swap-op counter armed. */
   private def counted(c: Caller, d: String, crashAt: Int): Int = {
-    val ops = new MockStoreFileSystem.SwapOps(
-      c.swaps(d).flatMap { case (a, b, k) => Seq(a, b, k) }, crashAt)
+    val ops = new MockStoreFileSystem.SwapOps(watched(c, d), crashAt)
     MockStoreFileSystem.swapOps = Some(ops)
     try c.call(d) finally MockStoreFileSystem.swapOps = None
     ops.count
@@ -149,6 +181,9 @@ class SwapCrashSpec extends SparkSpec {
         }
         c.call(d)
         assert(c.state(d) == want, s"op $k: the rerun did not converge")
+        if (c.rows.isDefined)
+          assert(RollupRecord.present(d) == Set(RollupRecord.File),
+            s"op $k: the root holds ${RollupRecord.present(d)}")
         c.swaps(d).foreach { case (_, staged, bak) =>
           assert(!exists(staged) && !exists(bak),
             s"op $k: $staged or $bak left behind")

@@ -327,6 +327,25 @@ class CliSpec extends SparkSpec {
         "--source", "jdbc:postgresql://h/db#t", "--dest", "d"))))
   }
 
+  test("dedup-lines counts its kept lines in its write job: the summary is exact in at most 13 Spark jobs") {
+    import spark.implicits._
+    val work = tmpDir("cli-dedup-lines-cost")
+    Seq((0L, "boiler\n  \nalpha", "en"), (1L, "boiler\nbeta\n", "de"),
+        (2L, "gamma", "fr"), (3L, null, "it"))
+      .toDF("doc_id", "text", "lang")
+      .write.parquet(s"$work/in")
+    val out = new java.io.ByteArrayOutputStream()
+    val (_, jobs) = jobsIn(Console.withOut(out)(run("dedup-lines",
+      "--source", s"$work/in", "--dest", s"$work/out")))
+    info(s"dedup-lines: $jobs Spark jobs")
+    // 5 non-blank lines, boilerplate in 2 docs; 3 lines kept, a NULL text
+    // keeps none
+    assert(out.toString.trim == s"dedup-lines $work/in: 5 lines, 2 in " +
+      s">=2-doc duplicates (measure); dropped 2 line occurrences at " +
+      s"min-docs=2 -> $work/out")
+    assert(jobs <= 13, s"dedup-lines ran $jobs Spark jobs")
+  }
+
   test("dedup-spans cuts duplicated substrings, keeps other columns, honors min-span") {
     import spark.implicits._
     val work = tmpDir("cli-dedup-spans")
