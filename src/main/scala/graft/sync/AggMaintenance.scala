@@ -137,7 +137,6 @@ object AggMaintenance {
   private val RecordFile = "_GRAFT_AGG_RECORD"
   private val RecordFields = Seq("wm", "params", "schema")
   private val StateDir = "_GRAFT_AGG_STATE"
-  private val BucketWm = SidecarLayout.Wm
   /** Exact accumulation types (the a4 DECIMAL rule): 28 integral digits of
     * sum headroom; (18,4)² summed in (38,8) leaves 30 for sum-of-squares. */
   private val SumType = "decimal(28,4)"
@@ -398,22 +397,22 @@ object AggMaintenance {
           "apply to completion first, then rebucket")
     st.clearTmp()
     // one bucketed namespace rewritten into the stage (relabeled when
-    // `label` is set), every written bucket's watermark restarted at wm
-    def relabel(from: Path, to: Path, c: String, label: Option[Column])
-        : Unit =
+    // `label` is set), every written bucket's watermark restarted at wm;
+    // read with `schema` when it is known (the rollup's, from the record)
+    def relabel(from: Path, to: Path, c: String, label: Option[Column],
+                schema: Option[StructType]): Unit =
       if (bucketDirs(fs, from, s"$c=").isEmpty) { fs.mkdirs(to); () }
       else {
-        val df = spark.read.option("basePath", from.toString)
-          .parquet(from.toString)
+        val df = readParquet(spark, schema, from, Seq(from), Some(c))
         label.fold(df)(l => df.drop(c).withColumn(c, l))
           .repartition(col(c))
           .write.mode("overwrite").partitionBy(c).parquet(to.toString)
-        parMap(bucketDirs(fs, to, s"$c="))(b =>
-          writeWm(fs, new Path(b, BucketWm), wm))
+        parMap(bucketDirs(fs, to, s"$c="))(writeWm(fs, _, wm))
         ()
       }
     relabel(st.root, st.tmp, "__bucket",
-      Some(pmod(hash(s.group.map(col): _*), lit(newBuckets))))
+      Some(pmod(hash(s.group.map(col): _*), lit(newBuckets))),
+      st.rec.flatMap(_.schema))
     // the key-state store rides inside the rollup dir: the swap would drop
     // it unless it is staged too (labels kept unless kbuckets changed —
     // the two hash spaces are independent)
@@ -421,7 +420,7 @@ object AggMaintenance {
       relabel(st.stateRoot, new Path(st.tmp, StateDir), "__kbucket",
         if (kb == oldKb) None
         else Some(pmod(xxhash64(s.key.map(col): _*), lit(kb.toLong))
-          .cast("int")))
+          .cast("int")), None)
     st.commitStaged(Rec(Some(wm), s.copy(buckets = Some(newBuckets),
       kbuckets = s.kbuckets.map(_ => kb)).render, st.rec.flatMap(_.schema)))
   }
@@ -977,34 +976,27 @@ object AggMaintenance {
   // ---- rollup state on disk ----
 
   /** A rollup root's state record: the applied watermark (canonical µs),
-    * the params stamp (None: v1 whole-dir) and the rollup schema. `sidecars`
-    * marks one read from the [[SidecarLayout]]. */
+    * the params stamp (None: v1 whole-dir) and the rollup schema. */
   private final case class Rec(wm: Option[Long], params: Option[String],
-                               schema: Option[StructType],
-                               sidecars: Boolean = false)
+                               schema: Option[StructType])
 
-  /** The layout before the record: one sidecar per field, read where a
-    * root (or its backup) has no record. A whole-dir commit drops them
-    * with the old root; an in-place commit drops them after writing the
-    * record. A bucket's watermark file keeps the name [[Wm]]. */
+  /** The layout before the record: one sidecar per field, in field order,
+    * read where a root (or its backup) has no record. A whole-dir commit
+    * drops them with the old root; an in-place commit drops any after
+    * writing the record. A bucket's watermark file keeps the name [[Wm]]. */
   private object SidecarLayout {
     val Wm = "_GRAFT_AGG_WM"
-    private val files = Seq(Wm, "_GRAFT_AGG_PARAMS", "_GRAFT_AGG_SCHEMA")
-    def read(fs: FileSystem, at: Path): Option[Seq[Option[String]]] =
-      Some(files.map(f => SidecarIO.read(fs, new Path(at, f))))
-        .filter(_.exists(_.isDefined))
-    def drop(fs: FileSystem, at: Path): Unit =
-      files.foreach(f => SidecarIO.delete(fs, new Path(at, f)))
+    def files(at: Path): Seq[Path] =
+      Seq(Wm, "_GRAFT_AGG_PARAMS", "_GRAFT_AGG_SCHEMA").map(new Path(at, _))
   }
 
   /** The record under `at`, else the sidecar layout there. */
   private def readRec(fs: FileSystem, at: Path): Option[Rec] = {
-    def rec(sidecars: Boolean)(f: Seq[Option[String]]) = Rec(
-      f(0).flatMap(_.trim.toLongOption), f(1),
-      f(2).map(DataType.fromJson(_).asInstanceOf[StructType]), sidecars)
+    lazy val old = SidecarLayout.files(at).map(SidecarIO.read(fs, _))
     SidecarIO.readRecord(fs, new Path(at, RecordFile), RecordFields,
-      "rollup state record").map(rec(sidecars = false))
-      .orElse(SidecarLayout.read(fs, at).map(rec(sidecars = true)))
+      "rollup state record").orElse(Option.when(old.exists(_.isDefined))(old))
+      .map(f => Rec(f(0).flatMap(_.trim.toLongOption), f(1),
+        f(2).map(DataType.fromJson(_).asInstanceOf[StructType])))
   }
 
   /** Parquet at `paths` under `base`, read with the recorded `schema`
@@ -1032,8 +1024,8 @@ object AggMaintenance {
     val bak = new Path(bakRoot(dir) + "_dir")
 
     private lazy val stored = readRec(fs, root)
-    private var written: Option[Option[Rec]] = None
-    def rec: Option[Rec] = written.getOrElse(stored)
+    private var written: Option[Rec] = None
+    def rec: Option[Rec] = written.orElse(stored)
     private lazy val bakRec = readRec(fs, bak)
     def wm: Option[Long] = rec.flatMap(_.wm)
     def stamp: Option[Stamp] = committed._2.flatMap(_.params).map(Stamp.parse)
@@ -1053,7 +1045,7 @@ object AggMaintenance {
     def advance(lo: Long, hi: Long): Either[AggResult, Option[Long]] =
       wm match {
         case Some(w) if hi <= w =>
-          if (!rec.exists(_.sidecars)) SidecarLayout.drop(fs, root)
+          if (SidecarIO.exists(fs, new Path(root, RecordFile))) dropSidecars()
           Left(AggResult(0L, 0L, applied = false, watermarkUs = w))
         case Some(w) if lo != w => throw InvalidConfig(
           s"non-contiguous slice: stored watermark is $w but slice starts " +
@@ -1099,14 +1091,18 @@ object AggMaintenance {
     }
 
     /** Write `r` as the root's record — one sidecar commit — in place,
-      * then drop the root's old sidecars if it had them; or
-      * staged `at` [[tmp]], the root's once [[commitStaged]] swaps it in. */
+      * then drop any old sidecars there (a crash between the two leaves
+      * them, and the record wins); or staged `at` [[tmp]], the root's
+      * once [[commitStaged]] swaps it in. */
     def write(r: Rec, at: Path = root): Unit = {
       SidecarIO.writeRecord(fs, new Path(at, RecordFile), RecordFields,
         Seq(r.wm.map(_.toString), r.params, r.schema.map(_.json)))
-      if (at == root && rec.exists(_.sidecars)) SidecarLayout.drop(fs, root)
-      written = Some(Some(r.copy(sidecars = false)))
+      if (at == root) dropSidecars()
+      written = Some(r)
     }
+
+    private def dropSidecars(): Unit =
+      SidecarLayout.files(root).foreach(SidecarIO.delete(fs, _))
 
     /** Drop staging debris of a crashed attempt. */
     def clearTmp(): Unit = { if (fs.exists(tmp)) fs.delete(tmp, true); () }
@@ -1187,8 +1183,7 @@ object AggMaintenance {
                     ids: Seq[Int]): Seq[Bucket] =
     parMap(ids) { b =>
       val p = new Path(root, s"$prefix$b")
-      Bucket(b, p, readWm(fs, new Path(p, BucketWm)),
-        ParquetMergeSink.hasData(fs, p))
+      Bucket(b, p, readWm(fs, p), ParquetMergeSink.hasData(fs, p))
     }
 
   private def distinctInts(df: DataFrame): Seq[Int] =
@@ -1207,7 +1202,7 @@ object AggMaintenance {
     parMap(buckets) { b =>
       val staged = new Path(staging, s"$prefix${b.id}")
       if (!fs.exists(staged)) fs.mkdirs(staged) // bucket fully vacated
-      writeWm(fs, new Path(staged, BucketWm), hi)
+      writeWm(fs, staged, hi)
       ParquetMergeSink.swap(fs, b.path, staged, new Path(bk, b.path.getName))
     }
     ()
@@ -1224,8 +1219,7 @@ object AggMaintenance {
     * buckets or `__kbucket=` state buckets). */
   private def bucketWms(fs: FileSystem, root: Path,
                         prefix: String): Seq[Long] =
-    parMap(bucketDirs(fs, root, prefix))(p =>
-      readWm(fs, new Path(p, BucketWm))).flatten
+    parMap(bucketDirs(fs, root, prefix))(readWm(fs, _)).flatten
 
   private def bakRoot(targetDir: String): String =
     targetDir.stripSuffix("/") + ".__agg_bak"
@@ -1279,11 +1273,14 @@ object AggMaintenance {
       } finally { pool.shutdown(); () }
     }
 
-  /** A bucket's watermark: one field, a commit marker rewritten in place
-    * (every crash-window subtlety lives in core.SidecarIO). */
-  private def readWm(fs: FileSystem, p: Path): Option[Long] =
-    SidecarIO.read(fs, p).flatMap(_.trim.toLongOption)
+  /** The watermark of the bucket at `b`: one field in its own file (the
+    * name [[SidecarLayout.Wm]] it shares with the layout before the
+    * record), a commit marker rewritten in place (every crash-window
+    * subtlety lives in core.SidecarIO). */
+  private def readWm(fs: FileSystem, b: Path): Option[Long] =
+    SidecarIO.read(fs, new Path(b, SidecarLayout.Wm))
+      .flatMap(_.trim.toLongOption)
 
-  private def writeWm(fs: FileSystem, p: Path, wm: Long): Unit =
-    SidecarIO.write(fs, p, wm.toString)
+  private def writeWm(fs: FileSystem, b: Path, wm: Long): Unit =
+    SidecarIO.write(fs, new Path(b, SidecarLayout.Wm), wm.toString)
 }

@@ -118,6 +118,19 @@ class AggMaintenanceCostSpec extends SparkSpec {
       spark, dir, src, "ts", Seq("acct"), Seq("id"), lo, hi))
   }
 
+  test("rebucket: relabeling a partitioned rollup runs at most 2 Spark jobs") {
+    val work = tmpDir("agg-cost-rebucket")
+    val src = source(work)
+    val dir = work + "/rollup"
+    AggMaintenance.applySlicePartitioned(spark, dir, src, "ts", Seq("acct"),
+      "amount", 0L, 2000L, nBuckets = 4)
+    val (_, jobs) = jobsIn(AggMaintenance.rebucket(spark, dir, 8))
+    info(s"rebucket: $jobs jobs")
+    assert(AggMaintenance.read(spark, dir).agg(sum("cnt")).first()
+      .getLong(0) == 2000L)
+    assert(jobs <= 2, s"rebucket ran $jobs Spark jobs")
+  }
+
   test("applySliceV2: a data-bearing apply makes one state-record commit and one root-state read; readDerived one read") {
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.graftmock.impl", classOf[MockStoreFileSystem].getName)

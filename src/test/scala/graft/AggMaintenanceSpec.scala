@@ -1735,6 +1735,20 @@ class AggMaintenanceSpec extends SparkSpec {
       assert(RollupRecord.present(dir) == Set(RollupRecord.File), lane)
       assert(rows(dir) == rows(want), lane)
       assert(RollupRecord.read(dir) == RollupRecord.read(want), lane)
+      // old sidecars beside a record (a crash between the in-place record
+      // write and their drop) are ignored, and the next in-place commit,
+      // not only a replay, drops them
+      val both = tmpDir("agg-sidecars-both") + "/rollup"
+      apply(both, 0L, 50L)
+      RollupRecord.toSidecarLayout(both, keepRecord = true)
+      assert(RollupRecord.present(both) == RollupRecord.SidecarFiles
+        .zip(fields).collect { case (f, Some(_)) => f }.toSet +
+        RollupRecord.File, lane)
+      assert(rows(both) == before, lane)
+      val idle = apply(both, 50L, 55L)
+      assert(idle.applied && idle.watermarkUs == 55L, lane)
+      assert(RollupRecord.present(both) == Set(RollupRecord.File), lane)
+      assert(rows(both) == before, lane)
     }
     // the record's exact text: three fields, an empty value for None
     val v1 = tmpDir("agg-record-v1") + "/rollup"

@@ -35,12 +35,14 @@ object RollupRecord {
   def rewind(dir: String, wm: Long): Unit = set(dir, "wm", Some(wm.toString))
 
   /** Turn the root into the sidecar layout: each set field in its own
-    * sidecar, and no record. */
-  def toSidecarLayout(dir: String): Unit = {
+    * sidecar, and no record — or, with `keepRecord`, the record beside
+    * them, as a crash between an in-place record write and the old
+    * sidecars' drop leaves it. */
+  def toSidecarLayout(dir: String, keepRecord: Boolean = false): Unit = {
     SidecarFiles.zip(read(dir).get).foreach { case (f, v) =>
       v.foreach(SidecarIO.write(fs(dir), new Path(dir, f), _))
     }
-    SidecarIO.delete(fs(dir), new Path(dir, File))
+    if (!keepRecord) SidecarIO.delete(fs(dir), new Path(dir, File))
   }
 
   /** Which of the record and the old sidecars the root holds, counted
