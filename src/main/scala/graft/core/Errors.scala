@@ -26,6 +26,23 @@ object GraftError {
          else "") +
         " — migrate the destination (full re-sync into a fresh directory," +
         " or alter the destination schema) before continuing")
+
+  object SchemaDrift {
+
+    /** The drift of a `source` column set against a `dest` one, compared
+      * case-folded (the case-insensitive catalogs and Spark's own
+      * resolution fold identifiers, so a case-only rename is no drift);
+      * each side keeps its own casing in the message. None when the sets
+      * agree. */
+    def between(source: Seq[String], dest: Seq[String]): Option[SchemaDrift] = {
+      def missing(from: Seq[String], in: Seq[String]) = {
+        val folded = in.map(_.toLowerCase).toSet
+        from.filterNot(c => folded(c.toLowerCase))
+      }
+      val (added, removed) = (missing(source, dest), missing(dest, source))
+      Option.when(added.nonEmpty || removed.nonEmpty)(SchemaDrift(added, removed))
+    }
+  }
 }
 
 /** Connection configuration (SURVEY §2.7 X6, reference utils.py:5-13) —

@@ -4,11 +4,10 @@ import java.sql.{Connection, DriverManager, PreparedStatement}
 import java.util.Properties
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.DbConfig
+import graft.sync.LastWriterWins
 
 /** JDBC upsert ("MERGE") sink (SURVEY §2.1 S4/S5, reference
   * session.py:135-151): PostgreSQL gets the native batched
@@ -19,15 +18,14 @@ import graft.core.DbConfig
   * of psycopg2's `use_batch_mode` (session.py:83-86).
   *
   * Scale contract:
-  *   - rows are first deduped per key (last-writer-wins by the watermark
-  *     column) and repartitioned on the key, so each key is written by
-  *     exactly one task and apply order stops mattering — the
-  *     order-independent replacement for the reference's apply-in-
-  *     ascending-`updated` rule (session.py:126-133);
+  *   - rows are first repartitioned on the key and reduced per key by
+  *     [[graft.sync.LastWriterWins]], so each key is written by exactly
+  *     one task and apply order stops mattering — the order-independent
+  *     replacement for the reference's apply-in-ascending-`updated` rule
+  *     (session.py:126-133);
   *   - one connection + one transaction per partition; batches of
-  *     `batchSize` rows (reference chunksize, default 10000 with the
-  *     *intended* ≤10000 validation the reference mis-implemented,
-  *     SURVEY §0.2);
+  *     [[MaxBatchSize]] rows (the reference's chunksize default, within
+  *     its intended ≤10000 bound, SURVEY §0.2);
   *   - retries are safe across batches: the ordering guard means an older
   *     row never overwrites a newer one.
   *
@@ -40,65 +38,18 @@ import graft.core.DbConfig
   */
 object JdbcUpsertSink {
 
+  /** Rows per `executeBatch` round trip: the reference's chunksize. */
   val MaxBatchSize = 10000
 
-  /** The reference's intended chunk validation (cli.py:17-24, fixed). */
-  def validateBatchSize(n: Int): Int = {
-    require(n > 0 && n <= MaxBatchSize,
-      s"batch size must be in [1, $MaxBatchSize], got $n")
-    n
-  }
-
-  /** PostgreSQL upsert statement — pure, unit-testable (delegates to
-    * [[SqlDialect.Postgres]]). With `orderCol` the DO UPDATE carries the
-    * ordering guard (`WHERE table.orderCol <= EXCLUDED.orderCol`, tie in
-    * the update's favour), mirroring ParquetMergeSink's (orderCol, __src)
-    * last-writer-wins rule. */
-  def upsertSql(table: String, columns: Seq[String], keyCols: Seq[String],
-                orderCol: Option[String] = None): String =
-    SqlDialect.Postgres.upsertSql(table, columns, keyCols, orderCol).get
-
-  /** S3 — create the destination table preserving the primary key (Spark's
-    * JDBC auto-create drops PKs, SURVEY §7.3). Pure DDL builder (PG). */
-  def createTableSql(table: String, schema: org.apache.spark.sql.types.StructType,
-                     keyCols: Seq[String]): String =
-    SqlDialect.Postgres.createTableSql(table, schema, keyCols)
-
   /** Per-key last-writer-wins dedup + co-location shuffle — the pre-write
-    * normalization (SURVEY §2.1 S4 Spark mapping). */
+    * normalization (SURVEY §2.1 S4 Spark mapping): the key repartition,
+    * then [[graft.sync.LastWriterWins.reduce]] inside its stage. The
+    * partition count is fixed: AQE would coalesce a small batch's key
+    * shuffle to one write task, and each partition is one connection. */
   def normalize(df: DataFrame, keyCols: Seq[String], orderCol: String): DataFrame = {
-    // deterministic tie-break on equal watermarks: orderCol alone would
-    // let row_number pick by shuffle arrival order, so a retry/re-run
-    // could crown a different winner and the destination's final value
-    // would depend on scheduling (the ParquetMergeSink (orderCol, __src)
-    // discipline). Break ties on xxhash64 of the payload, not the payload
-    // struct itself: a struct of ALL non-key columns puts entire wide text
-    // payloads into the sort key of every dedup shuffle, and fails at
-    // analysis for unorderable payload types (MapType). Hash collisions
-    // are fine — equal-hash rows are near-certainly identical payloads,
-    // and exact ties are interchangeable. Map-bearing columns are excluded
-    // from the hash (xxhash64 rejects MapType at analysis, same as the
-    // ordering did); ties then break on the remaining columns — rows equal
-    // on orderCol AND every non-map column are treated as interchangeable.
-    def hashable(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-      case _: org.apache.spark.sql.types.MapType => false
-      case a: org.apache.spark.sql.types.ArrayType => hashable(a.elementType)
-      case s: org.apache.spark.sql.types.StructType => s.fields.forall(f => hashable(f.dataType))
-      case _ => true
-    }
-    val hashCols = df.schema.fields.toIndexedSeq
-      .filterNot(f => keyCols.contains(f.name))
-      .filter(f => hashable(f.dataType)).map(f => col(f.name))
-    val payloadHash = if (hashCols.isEmpty) lit(0L) else xxhash64(hashCols: _*)
-    val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(col(orderCol).desc, payloadHash.desc)
-    // a fixed partition count: AQE would coalesce a small batch's key
-    // shuffle to one write task, and each partition is one connection
     val writers = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    df.repartition(writers, keyCols.map(col): _*)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
+    LastWriterWins.reduce(df.repartition(writers, keyCols.map(col): _*),
+      keyCols, orderCol)
   }
 
   /** Case-folding table existence check: catalogs fold unquoted identifiers
@@ -193,13 +144,8 @@ object JdbcUpsertSink {
           // positional-INSERT-askew hazard this check exists to prevent.
           System.err.println(s"[graft] WARN: JDBC driver returned no column " +
             s"metadata for existing table '$table'; schema-drift check skipped")
-        else {
-          val srcCols = schema.fieldNames.map(_.toLowerCase)
-          val added = srcCols.filterNot(destCols).toSeq.sorted
-          val removed = (destCols -- srcCols).toSeq.sorted
-          if (added.nonEmpty || removed.nonEmpty)
-            throw graft.core.GraftError.SchemaDrift(added, removed)
-        }
+        else graft.core.GraftError.SchemaDrift.between(schema.fieldNames.toSeq,
+          destCols.toSeq.sorted).foreach(throw _)
       }
     } finally conn.close()
   }
@@ -210,74 +156,56 @@ object JdbcUpsertSink {
     * the write, whose tasks count the rows they apply.
     *
     * `tombstoneCol` (CDC deletes — the ParquetMergeSink.merge contract on
-    * the JDBC front): after the per-key last-writer-wins dedup, a winner
-    * whose flag reads true issues a batched `DELETE WHERE pk = ?` beside
-    * the upsert batch instead of an upsert. Payload-free (NULL non-key)
-    * delete rows are accepted; deleting an absent key is a no-op; the
-    * column itself never reaches the destination table (it is transport
-    * metadata — callers create/drift-check the dest WITHOUT it). Winner
-    * resolution is shared with the upsert path: `normalize`'s payload-hash
-    * tie-break already covers a same-watermark delete/upsert pair, because
-    * the flag column participates in the hash. SyncPipeline freezes the
+    * the JDBC front): the column is replaced by its normalized flag
+    * ([[graft.sync.LastWriterWins.flag]]) before `normalize`, so the
+    * winner of a same-watermark delete/upsert pair is the one the parquet
+    * merge crowns; a winner whose flag reads true issues a batched
+    * `DELETE WHERE pk = ?` beside the upsert batch instead of an upsert.
+    * Payload-free (NULL non-key) delete rows are accepted; deleting an
+    * absent key is a no-op; the column itself never reaches the
+    * destination table (it is transport metadata — callers
+    * create/drift-check the dest WITHOUT it). SyncPipeline freezes the
     * setting in the destination's state record so tombstone-blind re-runs
     * refuse (see `sync.DestState.freeze`). */
   def write(df: DataFrame, url: String, props: Properties, table: String,
             keyCols: Seq[String], orderCol: String,
-            batchSize: Int = MaxBatchSize,
-            tombstoneCol: Option[String] = None): Long = {
-    validateBatchSize(batchSize)
-    tombstoneCol.foreach { t =>
-      require(df.columns.contains(t),
-        s"tombstone column '$t' is not in the update batch")
-      require(!keyCols.contains(t) && t != orderCol,
-        s"tombstone column '$t' cannot also be a key/order column")
-      graft.sync.AggMaintenance.requireTombstoneType(df, t)
-    }
-    val normalized = normalize(df, keyCols, orderCol)
-    tombstoneCol match {
-      // tombstone-blind: the write's own tasks count what they apply
-      case None =>
-        upsert(normalized, url, props, table, keyCols, orderCol, batchSize)
-      case Some(t) =>
-        // the flag gate, the count, the upserts and the delete pass all
-        // read one snapshot of the batch
-        val batch = normalized.persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          val tombFlag = coalesce(col(t).try_cast("boolean"), lit(false))
-          // ONE pass answers rows, malformed flags and delete winners (the
-          // keyed IVM lanes' admission pattern). Malformed: a non-NULL flag
-          // whose boolean cast is NULL must refuse typed, never silently
-          // apply a delete marker as an upsert
-          val tally = batch.agg(count(lit(1)),
-            count(when(col(t).isNotNull && col(t).try_cast("boolean").isNull,
-              lit(1))),
-            count(when(tombFlag, lit(1)))).first()
-          if (tally.getLong(1) > 0L)
-            throw graft.core.GraftError.InvalidConfig(
-              s"batch carries row(s) whose tombstone '$t' does not cast to " +
-                "boolean — treating malformed delete markers as upserts " +
-                "would silently mix tombstoned and tombstone-blind " +
-                "semantics; repair the source")
-          upsert(batch.filter(!tombFlag).drop(t), url, props, table, keyCols,
-            orderCol, batchSize)
-          // delete winners AFTER the upserts: the sets are key-disjoint
-          // (normalize keeps one winner per key), so ordering is semantics-
-          // free — but deleting last means a crash between the two phases
-          // leaves the stale row VISIBLE rather than resurrected-then-lost,
-          // and the restart-marker replay converges either way
-          if (tally.getLong(2) > 0L)
-            deleteKeys(batch.filter(tombFlag).select(keyCols.map(col): _*),
-              url, props, table, keyCols, batchSize)
-          tally.getLong(0)
-        } finally { batch.unpersist(); () }
-    }
+            tombstoneCol: Option[String] = None): Long = tombstoneCol match {
+    // tombstone-blind: the write's own tasks count what they apply
+    case None =>
+      upsert(normalize(df, keyCols, orderCol), url, props, table, keyCols,
+        orderCol)
+    case Some(t) =>
+      LastWriterWins.requireTombstone(df, t, keyCols :+ orderCol)
+      val tomb = col(LastWriterWins.Tomb)
+      // the flag gate, the count, the upserts and the delete pass all
+      // read one snapshot of the batch
+      val batch = normalize(df.withColumn(LastWriterWins.Tomb,
+        LastWriterWins.flag(t)).drop(t), keyCols, orderCol)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        // ONE pass answers rows, malformed winners and delete winners
+        val tally = batch.agg(count(lit(1)),
+          count(when(LastWriterWins.malformed(tomb), lit(1))),
+          count(when(tomb, lit(1)))).first()
+        LastWriterWins.requireWellFormed("batch", t, tally.getLong(1))
+        upsert(batch.filter(!tomb).drop(LastWriterWins.Tomb), url, props,
+          table, keyCols, orderCol)
+        // delete winners AFTER the upserts: the sets are key-disjoint
+        // (normalize keeps one winner per key), so ordering is semantics-
+        // free — but deleting last means a crash between the two phases
+        // leaves the stale row VISIBLE rather than resurrected-then-lost,
+        // and the restart-marker replay converges either way
+        if (tally.getLong(2) > 0L)
+          deleteKeys(batch.filter(tomb).select(keyCols.map(col): _*),
+            url, props, table, keyCols)
+        tally.getLong(0)
+      } finally { batch.unpersist(); () }
   }
 
   /** Upsert the normalized (deduped, key-partitioned) rows by the URL's
     * dialect; returns the rows the write tasks applied. */
   private def upsert(normalized: DataFrame, url: String, props: Properties,
-                     table: String, keyCols: Seq[String], orderCol: String,
-                     batchSize: Int): Long = {
+                     table: String, keyCols: Seq[String], orderCol: String): Long = {
     val columns = normalized.columns.toSeq
     SqlDialect.forUrl(url).upsertSql(table, columns, keyCols, Some(orderCol)) match {
       case Some(sql) =>
@@ -289,22 +217,14 @@ object JdbcUpsertSink {
               bindRow(stmt, row, columns.indices)
               stmt.addBatch()
               pending += 1
-              if (pending >= batchSize) { stmt.executeBatch(); pending = 0 }
+              if (pending >= MaxBatchSize) { stmt.executeBatch(); pending = 0 }
             }
             if (pending > 0) stmt.executeBatch()
           } finally stmt.close()
         }
       case None =>
-        writeGeneric(normalized, url, props, table, columns, keyCols,
-          orderCol, batchSize)
+        writeGeneric(normalized, url, props, table, columns, keyCols, orderCol)
     }
-  }
-
-  /** Backwards-compatible PG entry point. */
-  def write(df: DataFrame, cfg: DbConfig, table: String, keyCols: Seq[String],
-            orderCol: String): Unit = {
-    write(df, cfg.jdbcUrl, cfg.properties, table, keyCols, orderCol)
-    ()
   }
 
   /** Dialect-generic upsert: batched guarded UPDATE (`... AND orderCol <=
@@ -315,8 +235,7 @@ object JdbcUpsertSink {
     * executeBatch round-trips per chunk. */
   private def writeGeneric(normalized: DataFrame, url: String, props: Properties,
                            table: String, columns: Seq[String],
-                           keyCols: Seq[String], orderCol: String,
-                           batchSize: Int): Long = {
+                           keyCols: Seq[String], orderCol: String): Long = {
     val nonKey = columns.filterNot(keyCols.contains)
     val insertSql = s"INSERT INTO $table (${columns.mkString(", ")}) VALUES " +
       s"(${columns.map(_ => "?").mkString(", ")})"
@@ -342,7 +261,7 @@ object JdbcUpsertSink {
           bindRow(upd, row, updIdx)
           upd.executeUpdate() == 0
         }
-      rows.grouped(batchSize).foreach { chunk =>
+      rows.grouped(MaxBatchSize).foreach { chunk =>
         val misses =
           if (updateSql == null) chunk
           else {
@@ -466,7 +385,8 @@ object JdbcUpsertSink {
     * and key-repartitioned first, so each key is deleted by exactly one
     * task and batches can be retried safely (a second DELETE of the same
     * key is a no-op); one connection + one transaction per partition,
-    * `addBatch`/`executeBatch` in `batchSize` chunks — the S5 discipline.
+    * `addBatch`/`executeBatch` in [[MaxBatchSize]] chunks — the S5
+    * discipline.
     * Returns rows the database ACTUALLY deleted (summed `executeBatch`
     * update counts), so already-deleted keys report 0, not the submitted
     * count. Drivers that answer `SUCCESS_NO_INFO` for any batch element
@@ -476,21 +396,17 @@ object JdbcUpsertSink {
     * duplicate that matched zero already-deleted rows — a silent
     * undercount otherwise). */
   def deleteByKeys(orphans: DataFrame, url: String, props: Properties,
-                   table: String, keyCols: Seq[String],
-                   batchSize: Int = MaxBatchSize): Long = {
-    validateBatchSize(batchSize)
+                   table: String, keyCols: Seq[String]): Long = {
     require(keyCols.nonEmpty, "deleteByKeys needs at least one key column")
     deleteKeys(orphans.select(keyCols.map(col): _*).distinct()
-      .repartition(keyCols.map(col): _*), url, props, table, keyCols,
-      batchSize)
+      .repartition(keyCols.map(col): _*), url, props, table, keyCols)
   }
 
   /** [[deleteByKeys]] over `keyed`: key columns only, each key in one
     * row of one partition already (a [[normalize]]d batch is), so one
     * job deletes them and its tasks return the submitted count. */
   private def deleteKeys(keyed: DataFrame, url: String, props: Properties,
-                         table: String, keyCols: Seq[String],
-                         batchSize: Int): Long = {
+                         table: String, keyCols: Seq[String]): Long = {
     val sc = keyed.sparkSession.sparkContext
     val applied = sc.longAccumulator("reconcile.deleted")
     val noInfo = sc.longAccumulator("reconcile.deleteNoInfo")
@@ -521,7 +437,7 @@ object JdbcUpsertSink {
           bindRow(stmt, row, keyCols.indices)
           stmt.addBatch()
           pending += 1
-          if (pending >= batchSize) { flush(); pending = 0 }
+          if (pending >= MaxBatchSize) { flush(); pending = 0 }
         }
         if (pending > 0) flush()
       } finally stmt.close()

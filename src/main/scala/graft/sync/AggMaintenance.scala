@@ -457,24 +457,6 @@ object AggMaintenance {
             .otherwise(lit(null).cast("double")))
     }
 
-  /** Tombstone flags are read as `coalesce(try_cast(boolean), false)`, so
-    * a value whose cast is NULL would silently read as "upsert". Two gates
-    * close that: this schema gate (boolean, numeric and string only — the
-    * types whose boolean cast is total or checkable per row) and the
-    * per-slice data gate of the keyed admission pass. */
-  private[graft] def requireTombstoneType(source: DataFrame,
-                                          t: String): Unit =
-    source.schema(t).dataType match {
-      case org.apache.spark.sql.types.BooleanType => ()
-      case _: org.apache.spark.sql.types.NumericType => ()
-      case org.apache.spark.sql.types.StringType => ()
-      case other => throw InvalidConfig(
-        s"tombstone column '$t' is ${other.simpleString} — only boolean, " +
-          "numeric, or string columns can mark CDC deletes (the flag is " +
-          "read via a boolean cast, which this type does not support " +
-          "losslessly); cast the column explicitly in the source")
-    }
-
   // ---- lanes: stamp, metrics, admission ----
 
   /** A lane's full parameterization and its record's `params=` text.
@@ -633,13 +615,8 @@ object AggMaintenance {
         s"order column '${s.order}' cannot also be a key/group/value " +
           "column in the keyed lane (a group that moves on every touch has " +
           "no stable retraction target)")
-      s.tomb.foreach { t =>
-        require(!(s.key ++ s.group ++ s.values :+ s.order).contains(t),
-          s"tombstone column '$t' cannot also be a key/group/value/order " +
-            "column (a delete marker that moves the group it deletes from " +
-            "is unresolvable)")
-        requireTombstoneType(source, t)
-      }
+      s.tomb.foreach(LastWriterWins.requireTombstone(source, _,
+        s.key ++ s.group ++ s.values :+ s.order))
     }
     val wmType = source.schema(s.order).dataType
     require(Watermark.supported(wmType),
@@ -893,12 +870,8 @@ object AggMaintenance {
   private final class KeyedSlice(slice: DataFrame, s: Stamp, lo: Long,
                                  hi: Long) {
     private val stateCols = (s.key ++ s.group ++ s.values).map(col)
-    // try_cast: under ANSI a malformed string flag would otherwise kill
-    // the job mid-shuffle; NULL from try_cast feeds the __tombBad gate
     private val tombC = s.tomb.map(t =>
-      coalesce(col(t).try_cast("boolean"), lit(false)).as("__tomb"))
-    private val tombBadC = s.tomb.map(t =>
-      (col(t).isNotNull && col(t).try_cast("boolean").isNull).as("__tombBad"))
+      LastWriterWins.flag(t).as("__tomb"))
     // the normalized flag joins the payload-hash tie-break, so a same-ts
     // delete/upsert pair ranks deterministically
     private val w = org.apache.spark.sql.expressions.Window
@@ -908,7 +881,7 @@ object AggMaintenance {
     private val ranked = slice
       .select((s.key ++ s.group).map(col) ++
         s.values.map(v => col(v).cast(ValType).as(v)) ++
-        (col(s.order) +: tombC.toSeq) ++ tombBadC.toSeq: _*)
+        (col(s.order) +: tombC.toSeq): _*)
       .withColumn("__rn", row_number().over(w))
       .persist()
 
@@ -917,25 +890,21 @@ object AggMaintenance {
     lazy val rows: Long = {
       val a = ranked.agg(count(lit(1)),
         count(when(s.key.map(col(_).isNull).reduce(_ || _), lit(1))),
-        count(when(if (s.tomb.isDefined) col("__tombBad") else lit(false),
-          lit(1)))).first()
+        count(when(if (s.tomb.isDefined)
+          LastWriterWins.malformed(col("__tomb")) else lit(false), lit(1))))
+        .first()
       if (a.getLong(1) > 0L)
         throw InvalidConfig(
           s"slice [$lo, $hi) carries ${a.getLong(1)} row(s) with a NULL key " +
             s"(${s.key.mkString(", ")}) — a NULL key cannot be matched to " +
             "its prior arrival, so last-writer-wins semantics are " +
             "undefined; filter or repair the source")
-      if (a.getLong(2) > 0L)
-        throw InvalidConfig(
-          s"slice [$lo, $hi) carries ${a.getLong(2)} row(s) whose tombstone " +
-            s"'${s.tomb.get}' does not cast to boolean — treating malformed " +
-            "delete markers as upserts would silently mix tombstoned and " +
-            "tombstone-blind semantics; repair the source or cast the " +
-            "column explicitly")
+      s.tomb.foreach(
+        LastWriterWins.requireWellFormed(s"slice [$lo, $hi)", _, a.getLong(2)))
       a.getLong(0)
     }
     lazy val latest: DataFrame = ranked.filter(col("__rn") === 1)
-      .drop("__rn", s.order, "__tombBad")
+      .drop("__rn", s.order)
     // a deleted key retracts (it is in `keys`) but never re-adds
     private lazy val live =
       if (s.tomb.isEmpty) latest else latest.filter(!col("__tomb"))

@@ -7,21 +7,23 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.graftshim.SchemaAccess.asNullable
 
+import LastWriterWins.{Src, Tomb}
+
 /** Keyed upsert ("MERGE") into a parquet table directory — the file-format
   * twin of the reference's `INSERT ... ON CONFLICT (pk) DO UPDATE` sink
   * (SURVEY §2.1 S4, reference session.py:135-151).
   *
-  * Semantics: last-writer-wins per key by `orderCol`, updates beating the
-  * existing row on ties. This replaces the reference's apply-in-ascending-
-  * `updated`-order rule (session.py:126-133) with an order-independent
-  * keyed reduction — equivalent final state, no global sort, idempotent
-  * under replay (T3: at-least-once extract + idempotent apply).
+  * Semantics: [[LastWriterWins]] per key by `orderCol`, updates beating
+  * the existing row on ties — equivalent final state to the reference's
+  * ascending apply, no global sort, idempotent under replay (T3:
+  * at-least-once extract + idempotent apply).
   *
-  * Scale notes (100 TB): the reduction is a single hash aggregation
-  * `groupBy(keys).agg(max_by(payload, (orderCol, precedence)))` — one
-  * shuffle on the merge key, map-side partial aggregation, no window sort.
-  * The rewrite is the parquet-format cost: without table-format metadata a
-  * merge rewrites the target. For bounded rewrites at scale, partition the
+  * Scale notes (100 TB): the reduction is one keyed aggregation
+  * `groupBy(keys).agg(max_by(payload, (orderCol, precedence, hash)))`,
+  * which Spark plans as a SortAggregate: one shuffle on the merge key and
+  * a sort within each partition, never a global sort. The rewrite is the
+  * parquet-format cost: without table-format metadata a merge rewrites the
+  * target. For bounded rewrites at scale, partition the
   * target (`partitionByCol`) — then only partitions containing updated keys
   * are rewritten (dynamic partition overwrite), the parquet analog of the
   * reference's bounded 10M-row slices.
@@ -121,24 +123,8 @@ object ParquetMergeSink {
     val uKeys = keyCols.map(uResolve)
     val uPart = partitionByCol.map(uResolve)
     val uTomb = tombstoneCol.map(uResolve)
-    uTomb.foreach { t =>
-      require(!uKeys.contains(t) && t != uOrder && !uPart.contains(t),
-        s"tombstone column '$t' cannot also be a key/order/partition " +
-          "column (a delete marker that is its own addressing column is " +
-          "unresolvable)")
-      require(updates.columns.contains(t),
-        s"tombstone column '$t' is not in the update batch")
-      // the tombstoned merge rides internal __tomb/__src columns through
-      // the dedupe — a user column under either name would silently
-      // collide with them (withColumn REPLACES, drop drops BOTH)
-      require(t != "__tomb" && t != "__src" &&
-          !updates.columns.contains("__tomb"),
-        "tombstoned merge reserves the internal column names " +
-          "'__tomb'/'__src'; rename the colliding batch column")
-      // type gate — shared with the keyed IVM lanes (r15 advice): only
-      // types whose boolean read is total or per-row checkable
-      AggMaintenance.requireTombstoneType(updates, t)
-    }
+    uTomb.foreach(LastWriterWins.requireTombstone(updates, _,
+      (uKeys :+ uOrder) ++ uPart))
     // The partitioned path's crash safety RESTS on the restart marker
     // (dynamic partition overwrite is not atomic across partitions), and
     // the marker stores the canonical-long restart watermark (epoch-micros
@@ -163,10 +149,12 @@ object ParquetMergeSink {
     // A cold start resets the record here, before any data commit.
     val store = state.getOrElse(DestState.parquet(fs, targetDir))
     store.open(uTomb, exists)
-    // normalized delete flag: try_cast (never a raw ANSI cast error
-    // mid-shuffle), NULL reads as false — the common CDC shape
-    val tombFlag = uTomb.map(t =>
-      coalesce(col(t).try_cast("boolean"), lit(false)))
+    val tombFlag = uTomb.map(LastWriterWins.flag)
+
+    def dropTombWinners(df: DataFrame): DataFrame =
+      if (uTomb.isEmpty) df else df.filter(!col(Tomb)).drop(Tomb)
+    def dedupe(df: DataFrame, keys: Seq[String], order: String): DataFrame =
+      LastWriterWins.reduce(df, keys, order, precedence = Some(Src))
 
     def withProgress[A](rows: Long)(body: => A): A = onProgress match {
       case Some(f) => TaskProgressListener.withProgress(spark, rows, f)(body)
@@ -189,18 +177,12 @@ object ParquetMergeSink {
           val flag = tombFlag.get
           val aggs = Seq(
             count(lit(1)).as("n"),
-            count(when(col(t).isNotNull &&
-              col(t).try_cast("boolean").isNull, lit(1))).as("bad"),
+            count(when(LastWriterWins.malformed(flag), lit(1))).as("bad"),
             count(when(flag, lit(1))).as("dels")) ++
             uPart.map(pc => count(when(flag && col(pc).isNull, lit(1)))
               .as("delnullpart"))
           val r = updates.agg(aggs.head, aggs.drop(1): _*).first()
-          if (r.getLong(1) > 0L)
-            throw graft.core.GraftError.InvalidConfig(
-              s"batch carries ${r.getLong(1)} row(s) whose tombstone '$t' " +
-                "does not cast to boolean — treating malformed delete " +
-                "markers as upserts would silently mix tombstoned and " +
-                "tombstone-blind semantics; repair the source")
+          LastWriterWins.requireWellFormed("batch", t, r.getLong(1))
           if (uPart.isDefined && r.getLong(3) > 0L)
             throw graft.core.GraftError.InvalidConfig(
               s"batch carries ${r.getLong(3)} delete row(s) with a NULL " +
@@ -243,12 +225,10 @@ object ParquetMergeSink {
         // never-synced keys are no-ops by construction
         val prepared = uTomb match {
           case None => updates
-          case Some(t) => updates.withColumn("__tomb", tombFlag.get).drop(t)
+          case Some(t) => updates.withColumn(Tomb, tombFlag.get).drop(t)
         }
-        val deduped0 = dedupe(prepared.withColumn("__src", lit(1)), uKeys, uOrder)
-        val deduped =
-          if (uTomb.isDefined) deduped0.filter(!col("__tomb")).drop("__tomb")
-          else deduped0
+        val deduped = dropTombWinners(
+          dedupe(prepared.withColumn(Src, lit(1)), uKeys, uOrder))
         val tmp = targetDir.stripSuffix("/") + ".__merge_tmp"
         if (fs.exists(new Path(tmp))) fs.delete(new Path(tmp), true)
         // an all-deletes cold batch legitimately stages ZERO rows
@@ -279,11 +259,8 @@ object ParquetMergeSink {
       // the source gained (every future sync dropping that data), and a
       // column the source lost would die as a raw AnalysisException. A
       // sync tool's contract on drift is "stop and tell the operator",
-      // never either of those.
-      // Compare case-folded (matching JdbcUpsertSink.ensureTable and Spark's
-      // own case-insensitive resolution) — a case-only rename must not read
-      // as the same column added AND removed; original casing is kept for
-      // the error message.
+      // never either of those. The comparison is case-folded
+      // (GraftError.SchemaDrift.between, shared with JdbcUpsertSink).
       val targetCols = dest.columns
       // case-colliding columns within one frame defeat fold comparison
       // AND fold projection — refuse before any of it
@@ -296,18 +273,15 @@ object ParquetMergeSink {
               "resolve them unambiguously")
       }
       // the tombstone column is transport metadata, never destination
-      // schema — exclude it from drift on both sides
-      val targetFold = targetCols.map(_.toLowerCase).toSet
-      val updateFold = updates.columns.map(_.toLowerCase).toSet
-      val added = updates.columns.filterNot(c => targetFold(c.toLowerCase) ||
-        uTomb.exists(_.equalsIgnoreCase(c))).toSeq
-      val removed = targetCols.filterNot(c => updateFold(c.toLowerCase)).toSeq
-      if (added.nonEmpty || removed.nonEmpty) {
-        // an empty batch carries nothing to drift; the probe that would
-        // tell is not run on a batch that cannot be projected
-        if (knownRows.isEmpty && updates.isEmpty) return idle()
-        throw graft.core.GraftError.SchemaDrift(added, removed)
-      }
+      // schema — excluded from drift
+      graft.core.GraftError.SchemaDrift.between(updates.columns.toSeq
+          .filterNot(c => uTomb.exists(_.equalsIgnoreCase(c))), targetCols.toSeq)
+        .foreach { drift =>
+          // an empty batch carries nothing to drift; the probe that would
+          // tell is not run on a batch that cannot be projected
+          if (knownRows.isEmpty && updates.isEmpty) return idle()
+          throw drift
+        }
       // Project by the UPDATES' actual column names aliased to the
       // target's casing: resolving target-cased names against updates
       // relies on spark.sql.caseSensitive=false — under a case-sensitive
@@ -322,16 +296,14 @@ object ParquetMergeSink {
       // flag decides survival
       val tagged = updates.select(targetCols
         .map(tc => col(updatesByFold(tc.toLowerCase)).as(tc))
-        .toIndexedSeq ++ tombFlag.map(_.as("__tomb")).toSeq: _*)
-        .withColumn("__src", lit(1))
-      val target = dest.withColumn("__src", lit(0))
+        .toIndexedSeq ++ tombFlag.map(_.as(Tomb)).toSeq: _*)
+        .withColumn(Src, lit(1))
+      val target = dest.withColumn(Src, lit(0))
       val tResolve = resolveAgainst(targetCols, "target") _
       val tOrder = tResolve(orderCol)
       val tKeys = keyCols.map(tResolve)
       def withTombFalse(df: DataFrame): DataFrame =
-        if (uTomb.isEmpty) df else df.withColumn("__tomb", lit(false))
-      def dropTombWinners(df: DataFrame): DataFrame =
-        if (uTomb.isEmpty) df else df.filter(!col("__tomb")).drop("__tomb")
+        if (uTomb.isEmpty) df else df.withColumn(Tomb, lit(false))
 
       // T3/T5 no-op detection: the inclusive lower bound re-extracts
       // watermark ties every poll; a re-extracted row IDENTICAL to its
@@ -354,7 +326,7 @@ object ParquetMergeSink {
       // only LIVE rows take the identical-twin test — a payload-free
       // delete row has no destination twin by construction and would
       // otherwise read as novel on every poll, re-rewriting an idle dest
-      val live = if (uTomb.isEmpty) lit(true) else !col("__tomb")
+      val live = if (uTomb.isEmpty) lit(true) else !col(Tomb)
       val batch = probe(tagged, dest.filter(col(tOrder) >= floor), tOrder, live)
       val updateRows = knownRows.getOrElse(batch.rows)
       if (updateRows == 0) return idle()
@@ -366,7 +338,7 @@ object ParquetMergeSink {
       // deletes at all) detects a delete that still has work to do
       val novelDelete =
         if (delCount == 0L) 0L
-        else tagged.filter(col("__tomb")).select(tKeys.map(col): _*)
+        else tagged.filter(col(Tomb)).select(tKeys.map(col): _*)
           .join(target.select(tKeys.map(col): _*), tKeys, "left_semi")
           .limit(1).count()
       if (!batch.novel && novelDelete == 0) {
@@ -598,37 +570,6 @@ object ParquetMergeSink {
       val n = st.getPath.getName
       !n.startsWith("_") && !n.startsWith(".")
     }
-
-  /** Last-writer-wins per key: max_by(payload, (orderCol, __src, hash)) in
-    * one hash aggregate. `__src` breaks order ties in favour of the update
-    * — the deterministic replacement for "apply in ascending updated
-    * order". The payload hash breaks remaining EXACT (orderCol, __src)
-    * ties deterministically (JdbcUpsertSink.normalize's discipline): a
-    * same-timestamp delete/upsert pair for one key, or two differing
-    * same-timestamp updates, must crown the same winner on every retry —
-    * max_by alone would pick by shuffle arrival order. Map-typed columns
-    * are excluded from the hash (xxhash64 rejects MapType at analysis);
-    * rows equal on everything else are interchangeable. */
-  private def dedupe(df: DataFrame, keyCols: Seq[String], orderCol: String): DataFrame = {
-    def hashable(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-      case _: org.apache.spark.sql.types.MapType => false
-      case a: org.apache.spark.sql.types.ArrayType => hashable(a.elementType)
-      case s: org.apache.spark.sql.types.StructType =>
-        s.fields.forall(f => hashable(f.dataType))
-      case _ => true
-    }
-    val payloadCols = df.columns.filterNot(keyCols.contains).filter(_ != "__src")
-    val payload = struct(payloadCols.map(col).toIndexedSeq: _*)
-    val hashCols = df.schema.fields.toIndexedSeq
-      .filter(f => payloadCols.contains(f.name) && hashable(f.dataType))
-      .map(f => col(f.name))
-    val tie = if (hashCols.isEmpty) lit(0L) else xxhash64(hashCols: _*)
-    val ord = struct(col(orderCol), col("__src"), tie)
-    df.groupBy(keyCols.map(col).toIndexedSeq: _*)
-      .agg(max_by(payload, ord).as("__payload"))
-      .select(keyCols.map(col) ++
-        payloadCols.map(c => col(s"__payload.$c").as(c)): _*)
-  }
 
   /** What one probe pass learns about a batch bound for an existing
     * destination: its row count, the order column's min/max (and max over

@@ -4,9 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.types._
 
 import graft.core.{DbConfig, GraftError}
-import graft.sinks.JdbcUpsertSink
+import graft.sinks.SqlDialect
 
-/** Pure-unit coverage of the JDBC path (SURVEY §2.1 S3/S4/S5, §2.7 X6):
+/** Pure-unit coverage of the JDBC path (SURVEY §2.1 S3/S4, §2.7 X6):
   * the PostgreSQL SQL shapes (ON CONFLICT upsert, PK-preserving DDL).
   * The live end-to-end pipeline is exercised against embedded Derby in
   * JdbcSyncSpec; PostgreSQL differs only in these (unit-pinned) strings.
@@ -23,37 +23,31 @@ class JdbcSpec extends AnyFunSuite {
   }
 
   test("S4: upsert SQL matches the reference's ON CONFLICT shape") {
-    val sql = JdbcUpsertSink.upsertSql("user_balance",
-      Seq("user_id", "balance", "updated"), Seq("user_id"))
+    val sql = SqlDialect.Postgres.upsertSql("user_balance",
+      Seq("user_id", "balance", "updated"), Seq("user_id"), None).get
     assert(sql == "INSERT INTO user_balance (user_id, balance, updated) " +
       "VALUES (?, ?, ?) ON CONFLICT (user_id) DO UPDATE SET " +
       "balance = EXCLUDED.balance, updated = EXCLUDED.updated")
   }
 
   test("S4: ordering guard makes stale-batch replays a no-op") {
-    val sql = JdbcUpsertSink.upsertSql("user_balance",
+    val sql = SqlDialect.Postgres.upsertSql("user_balance",
       Seq("user_id", "balance", "updated"), Seq("user_id"),
-      orderCol = Some("updated"))
+      orderCol = Some("updated")).get
     assert(sql.endsWith("DO UPDATE SET balance = EXCLUDED.balance, " +
       "updated = EXCLUDED.updated " +
       "WHERE user_balance.updated <= EXCLUDED.updated"))
   }
 
   test("S4: key-only table degrades to DO NOTHING") {
-    val sql = JdbcUpsertSink.upsertSql("ids", Seq("id"), Seq("id"))
+    val sql = SqlDialect.Postgres.upsertSql("ids", Seq("id"), Seq("id"), None).get
     assert(sql.endsWith("ON CONFLICT (id) DO NOTHING"))
   }
 
   test("S4: composite key conflict target") {
-    val sql = JdbcUpsertSink.upsertSql("t", Seq("a", "b", "v"), Seq("a", "b"))
+    val sql = SqlDialect.Postgres.upsertSql("t", Seq("a", "b", "v"), Seq("a", "b"),
+      None).get
     assert(sql.contains("ON CONFLICT (a, b) DO UPDATE SET v = EXCLUDED.v"))
-  }
-
-  test("S5: batch size validation — the reference's intended (broken) rule, fixed") {
-    assert(JdbcUpsertSink.validateBatchSize(10000) == 10000)
-    assert(JdbcUpsertSink.validateBatchSize(1) == 1)
-    assertThrows[IllegalArgumentException](JdbcUpsertSink.validateBatchSize(10001))
-    assertThrows[IllegalArgumentException](JdbcUpsertSink.validateBatchSize(0))
   }
 
   test("S3: create-table DDL preserves primary key and types") {
@@ -62,7 +56,7 @@ class JdbcSpec extends AnyFunSuite {
       StructField("balance", DecimalType(18, 2), nullable = false),
       StructField("updated", LongType, nullable = false),
       StructField("note", StringType, nullable = true)))
-    val ddl = JdbcUpsertSink.createTableSql("user_balance", schema, Seq("user_id"))
+    val ddl = SqlDialect.Postgres.createTableSql("user_balance", schema, Seq("user_id"))
     assert(ddl == "CREATE TABLE IF NOT EXISTS user_balance (" +
       "user_id TEXT NOT NULL, balance NUMERIC(18,2) NOT NULL, " +
       "updated BIGINT NOT NULL, note TEXT, PRIMARY KEY (user_id))")

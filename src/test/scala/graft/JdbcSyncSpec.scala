@@ -835,6 +835,42 @@ class JdbcSyncSpec extends SparkSpec with JdbcSyncBehaviors {
       assert(stateRow(url, "RACESYNC").exists(_.restartWm.isEmpty))
   }
 
+  test("parquet and Derby fronts crown the same winners of same-watermark ties") {
+    val url = freshDb("fronts")
+    val dir = tmpDir("jdbc-fronts")
+    import spark.implicits._
+    val keys = 1L to 240L
+    def pqDest(d: String): Map[Long, (Long, Double, String)] =
+      spark.read.parquet(d).select("ID", "UPDATED", "AMOUNT", "STATUS")
+        .as[(Long, Long, Double, String)].collect()
+        .map { case (id, u, a, st) => id -> ((u, a, st)) }.toMap
+    // every key carries an upsert and a payload-free delete on one
+    // watermark, flagged by a STRING column: the tie-break hash must see
+    // the same normalized flag on both fronts
+    keys.flatMap(i => Seq(
+      (i, 100L, java.lang.Double.valueOf(i * 0.5), s"s$i", "false"),
+      (i, 100L, null.asInstanceOf[java.lang.Double], null.asInstanceOf[String],
+        "true")))
+      .toDF("ID", "UPDATED", "AMOUNT", "STATUS", "DEL")
+      .write.parquet(dir + "/tomb")
+    val tombSrc = SyncEndpoint.ParquetDir(dir + "/tomb")
+    SyncPipeline.run(spark, cfgT, tombSrc, SyncEndpoint.ParquetDir(dir + "/tpq"))
+    SyncPipeline.run(spark, cfgT, tombSrc, SyncEndpoint.parse(s"$url#TFRONT"))
+    val live = pqDest(dir + "/tpq").keySet
+    assert(live.nonEmpty && live.size < keys.size,
+      s"${live.size} of ${keys.size} keys live: the ties never split")
+    assert(readTable(url, "TFRONT").keySet == live)
+    // a blind batch: two payloads per key on one watermark
+    keys.flatMap(i => Seq((i, 100L, i * 0.5, s"a$i"), (i, 100L, i * 2.0, s"b$i")))
+      .toDF("ID", "UPDATED", "AMOUNT", "STATUS").write.parquet(dir + "/blind")
+    val blindSrc = SyncEndpoint.ParquetDir(dir + "/blind")
+    SyncPipeline.run(spark, cfg, blindSrc, SyncEndpoint.ParquetDir(dir + "/bpq"))
+    SyncPipeline.run(spark, cfg, blindSrc, SyncEndpoint.parse(s"$url#BFRONT"))
+    val winners = pqDest(dir + "/bpq")
+    assert(winners.size == keys.size)
+    assert(readTable(url, "BFRONT") == winners)
+  }
+
   test("S6: a destination database that does not exist fails typed") {
     val dir = tmpDir("jdbc-nodb") + "/src"
     writeTombSrc(dir, Seq((1L, 100L, 1.0, "A", false)))

@@ -20,7 +20,12 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * A rollup root keeps its state in one record; the three sidecars it
   * replaced are named only by AggMaintenance's `SidecarLayout`, the reader
-  * of roots written before the record. */
+  * of roots written before the record.
+  *
+  * Every keyed writer reads CDC delete markers through
+  * `graft.sync.LastWriterWins`: a boolean `try_cast` or the malformed-flag
+  * refusal text anywhere else under `graft/sync` or `graft/sinks` is a
+  * second copy of that contract. */
 class StampOwnershipSpec extends AnyFunSuite {
 
   private val root = new java.io.File(sys.props("user.dir"), "src/main/scala")
@@ -71,6 +76,22 @@ class StampOwnershipSpec extends AnyFunSuite {
       if rel != swapOwner
       (line, i) <- codeLines(f)
       if line.contains(".rename(")
+    } yield s"$rel:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  test("graft.sync and graft.sinks read tombstone flags only through LastWriterWins") {
+    val lww = "graft/sync/LastWriterWins.scala"
+    val files = Seq("graft/sync", "graft/sinks")
+      .flatMap(d => sources(new java.io.File(root, d)))
+    assert(files.exists(_.getPath.endsWith(lww)), s"$lww is missing")
+    val offenders = for {
+      f <- files
+      rel = root.toPath.relativize(f.toPath).toString.replace('\\', '/')
+      if rel != lww
+      (line, i) <- codeLines(f)
+      if line.contains("try_cast(\"boolean\")") ||
+        line.contains("does not cast to")
     } yield s"$rel:${i + 1}: ${line.trim}"
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }
