@@ -3,10 +3,14 @@ package graft.sinks
 import java.sql.{Connection, DriverManager, PreparedStatement}
 import java.util.Properties
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
+import graft.sources.JdbcSource
+import graft.sources.JdbcSource.Catalog
 import graft.sync.LastWriterWins
 
 /** JDBC upsert ("MERGE") sink (SURVEY §2.1 S4/S5, reference
@@ -23,18 +27,21 @@ import graft.sync.LastWriterWins
   *     one task and apply order stops mattering — the order-independent
   *     replacement for the reference's apply-in-ascending-`updated` rule
   *     (session.py:126-133);
-  *   - one connection + one transaction per partition; batches of
+  *   - one write loop for every write: one connection + one transaction
+  *     per partition, upserts and CDC deletes alike, in chunks of
   *     [[MaxBatchSize]] rows (the reference's chunksize default, within
   *     its intended ≤10000 bound, SURVEY §0.2);
   *   - retries are safe across batches: the ordering guard means an older
   *     row never overwrites a newer one.
   *
-  * Crash note: per-partition transactions commit independently, so a
-  * mid-run crash leaves a partial apply. SyncPipeline brackets JDBC-dest
-  * runs with a restart marker in the destination's state record
-  * (sync.DestState, a `graft_sync_dest` row) so recovery re-extracts the
-  * whole interrupted batch — the parallel-safe
-  * replacement for the reference's sequential ascending apply.
+  * Crash note: a task's upserts and deletes commit in its one
+  * transaction, but tasks commit independently, so a mid-run crash leaves
+  * a partial apply: some tasks' keys applied, none of another's.
+  * SyncPipeline brackets JDBC-dest runs with a restart marker in the
+  * destination's state record (sync.DestState, a `graft_sync_dest` row)
+  * so recovery re-extracts the whole interrupted batch — the
+  * parallel-safe replacement for the reference's sequential ascending
+  * apply.
   */
 object JdbcUpsertSink {
 
@@ -52,103 +59,43 @@ object JdbcUpsertSink {
       keyCols, orderCol)
   }
 
-  /** Case-folding table existence check: catalogs fold unquoted identifiers
-    * differently (Derby upper, PG lower), so an exact-case-only getTables
-    * probe reads a live table as absent — and a dialect without CREATE
-    * TABLE IF NOT EXISTS then fails the second run with already-exists. */
-  private[graft] def tableExists(conn: Connection, name: String): Boolean = {
-    // both type labels: Derby/PG report "TABLE", information_schema-style
-    // drivers (DuckDB) report "BASE TABLE" — one-label filters miss live
-    // tables there and the create below would fail with already-exists.
-    // Matched rows are re-checked for EXACT (case-insensitive) name
-    // equality: the name argument is a JDBC metadata PATTERN where '_'
-    // matches any character, so 'sync_dest' would otherwise read a lone
-    // 'syncXdest' as existence and skip the CREATE it must run.
-    def check(n: String): Boolean = {
-      val rs = conn.getMetaData.getTables(null, null, n,
-        Array("TABLE", "BASE TABLE"))
-      try {
-        while (rs.next())
-          if (rs.getString("TABLE_NAME").equalsIgnoreCase(name)) return true
-        false
-      } finally rs.close()
-    }
-    check(name) || check(name.toUpperCase) || check(name.toLowerCase)
-  }
-
   /** S3 — create `table` from `schema` when absent (reference
-    * session.py:194-197 create-dest-from-source-schema). When the table
-    * EXISTS, its column set is checked against the source schema: drift
-    * fails as the typed [[graft.core.GraftError.SchemaDrift]] up front —
-    * without this, a column the source gained dies mid-batch as a raw
-    * per-partition SQLException (or worse for a lost column: the prepared
-    * INSERT binds by position and could write columns askew on a lax
-    * dialect). Same contract as the parquet merge sink: stop and tell the
-    * operator. Name comparison is case-folded (the case-insensitive
-    * catalogs — Derby, default PG — fold identifiers). */
-  def ensureTable(url: String, props: Properties, table: String,
-                  schema: org.apache.spark.sql.types.StructType,
-                  keyCols: Seq[String]): Unit = {
-    val dialect = SqlDialect.forUrl(url)
-    val conn = DriverManager.getConnection(url, props)
-    try {
-      if (!tableExists(conn, table)) {
+    * session.py:194-197 create-dest-from-source-schema), on `conn`, a
+    * connection to `url`. When the table EXISTS, its column set (of the
+    * table the one catalog lookup, `graft.sources.JdbcSource.Catalog`,
+    * resolves: a same-named twin in another schema is never read) is
+    * checked against the source schema: drift fails as the typed
+    * [[graft.core.GraftError.SchemaDrift]] up front — without this, a
+    * column the source gained dies mid-batch as a raw per-partition
+    * SQLException (or worse for a lost column: the prepared INSERT binds
+    * by position and could write columns askew on a lax dialect). Same
+    * contract as the parquet merge sink: stop and tell the operator. Name
+    * comparison is case-folded (the case-insensitive catalogs — Derby,
+    * default PG — fold identifiers). */
+  private[graft] def ensureTable(conn: Connection, url: String, table: String,
+                                 schema: StructType, keyCols: Seq[String]): Unit =
+    Catalog.resolve(conn, table) match {
+      case None =>
         val stmt = conn.createStatement()
-        try { stmt.executeUpdate(dialect.createTableSql(table, schema, keyCols)); () }
+        try stmt.executeUpdate(SqlDialect.forUrl(url)
+          .createTableSql(table, schema, keyCols))
         finally stmt.close()
-      } else {
-        // Scope getColumns to the resolved table (same three case folds as
-        // tableExists) — an unscoped (null,null,null,null) scan unions
-        // columns from every same-named table in every schema/catalog
-        // (e.g. a backup schema), which can raise phantom drift or mask a
-        // real added column, and reads the whole catalog's metadata.
-        // Two filters close the remaining holes: rows are re-checked for
-        // EXACT (case-insensitive) TABLE_NAME equality, because the name
-        // argument is a JDBC metadata PATTERN where '_' is a single-char
-        // wildcard ('sync_dest' also matches 'syncXdest'); and when the
-        // driver reports a current schema, rows from other schemas are
-        // excluded (the backup-schema twin the unscoped scan unioned in).
-        val currentSchema =
-          try Option(conn.getSchema) catch { case _: Throwable => None }
-        def columnsOf(n: String, schemaScoped: Boolean): Set[String] = {
-          val rs = conn.getMetaData.getColumns(null, null, n, null)
-          val cols = scala.collection.mutable.Set.empty[String]
-          try {
-            while (rs.next()) {
-              val sameTable = rs.getString("TABLE_NAME").equalsIgnoreCase(table)
-              val sameSchema = !schemaScoped || currentSchema.forall { s =>
-                val ts = rs.getString("TABLE_SCHEM")
-                ts == null || ts.equalsIgnoreCase(s)
-              }
-              if (sameTable && sameSchema)
-                cols += rs.getString("COLUMN_NAME").toLowerCase
-            }
-          } finally rs.close()
-          cols.toSet
-        }
-        val folds = Seq(table, table.toUpperCase, table.toLowerCase).distinct
-        // schema-scoped first; if that yields nothing, fall back to the
-        // name-only match — the table can legitimately live in a
-        // search_path schema other than current_schema (PG "$user",public
-        // with the dest in public), and an empty scoped result would
-        // otherwise silently skip the drift guard entirely
-        val destCols =
-          folds.iterator.map(columnsOf(_, schemaScoped = true))
-            .find(_.nonEmpty)
-            .orElse(folds.iterator.map(columnsOf(_, schemaScoped = false))
-              .find(_.nonEmpty))
-            .getOrElse(Set.empty)
-        if (destCols.isEmpty)
-          // Existing table but no column metadata under any case fold:
-          // the drift guard cannot run, and proceeding would re-expose the
-          // positional-INSERT-askew hazard this check exists to prevent.
+      case Some(t) => Catalog.columns(conn, t) match {
+        case Nil =>
+          // no column metadata: the drift guard cannot run, and
+          // proceeding would re-expose the positional-INSERT-askew hazard
+          // this check exists to prevent
           System.err.println(s"[graft] WARN: JDBC driver returned no column " +
             s"metadata for existing table '$table'; schema-drift check skipped")
-        else graft.core.GraftError.SchemaDrift.between(schema.fieldNames.toSeq,
-          destCols.toSeq.sorted).foreach(throw _)
+        case destCols => graft.core.GraftError.SchemaDrift.between(
+          schema.fieldNames.toSeq, destCols.sorted).foreach(throw _)
       }
-    } finally conn.close()
-  }
+    }
+
+  /** [[ensureTable]] on a connection of its own. */
+  def ensureTable(url: String, props: Properties, table: String,
+                  schema: StructType, keyCols: Seq[String]): Unit =
+    JdbcSource.withConnection(url, props)(ensureTable(_, url, table, schema, keyCols))
 
   /** Write `df` into `table` with upsert semantics; returns the number of
     * rows applied (post-dedup, deletes included). Dialect chosen from the
@@ -156,135 +103,120 @@ object JdbcUpsertSink {
     * the write, whose tasks count the rows they apply.
     *
     * `tombstoneCol` (CDC deletes — the ParquetMergeSink.merge contract on
-    * the JDBC front): the column is replaced by its normalized flag
-    * ([[graft.sync.LastWriterWins.flag]]) before `normalize`, so the
-    * winner of a same-watermark delete/upsert pair is the one the parquet
-    * merge crowns; a winner whose flag reads true issues a batched
-    * `DELETE WHERE pk = ?` beside the upsert batch instead of an upsert.
-    * Payload-free (NULL non-key) delete rows are accepted; deleting an
-    * absent key is a no-op; the column itself never reaches the
-    * destination table (it is transport metadata — callers
-    * create/drift-check the dest WITHOUT it). SyncPipeline freezes the
-    * setting in the destination's state record so tombstone-blind re-runs
-    * refuse (see `sync.DestState.freeze`). */
+    * the JDBC front): one admission aggregate over every batch row first
+    * refuses malformed markers ([[graft.sync.LastWriterWins.requireWellFormed]]),
+    * as the parquet merge's admission pass does. The column is then
+    * replaced by its normalized flag ([[graft.sync.LastWriterWins.flag]])
+    * before `normalize`, so the winner of a same-watermark delete/upsert
+    * pair is the one the parquet merge crowns, and the write's tasks send
+    * each winner whose flag reads true to a batched `DELETE WHERE pk = ?`
+    * in the same transaction as their upserts. The batch is persisted
+    * for the two passes unless the caller has persisted it. Payload-free
+    * (NULL non-key) delete rows are accepted; deleting an absent key is a
+    * no-op; the column itself never reaches the destination table (it is
+    * transport metadata — callers create/drift-check the dest WITHOUT
+    * it). SyncPipeline freezes the setting in the destination's state
+    * record so tombstone-blind re-runs refuse (see `sync.DestState.freeze`). */
   def write(df: DataFrame, url: String, props: Properties, table: String,
             keyCols: Seq[String], orderCol: String,
             tombstoneCol: Option[String] = None): Long = tombstoneCol match {
-    // tombstone-blind: the write's own tasks count what they apply
-    case None =>
-      upsert(normalize(df, keyCols, orderCol), url, props, table, keyCols,
-        orderCol)
+    case None => upsert(normalize(df, keyCols, orderCol), url, props, table,
+      keyCols, orderCol)
     case Some(t) =>
       LastWriterWins.requireTombstone(df, t, keyCols :+ orderCol)
-      val tomb = col(LastWriterWins.Tomb)
-      // the flag gate, the count, the upserts and the delete pass all
-      // read one snapshot of the batch
-      val batch = normalize(df.withColumn(LastWriterWins.Tomb,
-        LastWriterWins.flag(t)).drop(t), keyCols, orderCol)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val mustPersist = df.storageLevel == StorageLevel.NONE
+      if (mustPersist) df.persist(StorageLevel.MEMORY_AND_DISK)
       try {
-        // ONE pass answers rows, malformed winners and delete winners
-        val tally = batch.agg(count(lit(1)),
-          count(when(LastWriterWins.malformed(tomb), lit(1))),
-          count(when(tomb, lit(1)))).first()
-        LastWriterWins.requireWellFormed("batch", t, tally.getLong(1))
-        upsert(batch.filter(!tomb).drop(LastWriterWins.Tomb), url, props,
+        LastWriterWins.requireWellFormed("batch", t, df.agg(count(when(
+          LastWriterWins.malformed(LastWriterWins.flag(t)), lit(1))))
+          .first().getLong(0))
+        upsert(normalize(df.withColumn(LastWriterWins.Tomb,
+          LastWriterWins.flag(t)).drop(t), keyCols, orderCol), url, props,
           table, keyCols, orderCol)
-        // delete winners AFTER the upserts: the sets are key-disjoint
-        // (normalize keeps one winner per key), so ordering is semantics-
-        // free — but deleting last means a crash between the two phases
-        // leaves the stale row VISIBLE rather than resurrected-then-lost,
-        // and the restart-marker replay converges either way
-        if (tally.getLong(2) > 0L)
-          deleteKeys(batch.filter(tomb).select(keyCols.map(col): _*),
-            url, props, table, keyCols)
-        tally.getLong(0)
-      } finally { batch.unpersist(); () }
+      } finally if (mustPersist) df.unpersist()
   }
 
-  /** Upsert the normalized (deduped, key-partitioned) rows by the URL's
-    * dialect; returns the rows the write tasks applied. */
+  /** Apply the normalized (deduped, key-partitioned) rows by the URL's
+    * dialect: a row whose [[graft.sync.LastWriterWins.Tomb]] flag is set
+    * deletes its key, every other row is upserted. Returns the rows the
+    * write tasks applied. */
   private def upsert(normalized: DataFrame, url: String, props: Properties,
-                     table: String, keyCols: Seq[String], orderCol: String): Long = {
-    val columns = normalized.columns.toSeq
-    SqlDialect.forUrl(url).upsertSql(table, columns, keyCols, Some(orderCol)) match {
-      case Some(sql) =>
-        runPerPartition(normalized, url, props) { (conn, rows) =>
-          val stmt = conn.prepareStatement(sql)
-          try {
-            var pending = 0
-            rows.foreach { row =>
-              bindRow(stmt, row, columns.indices)
-              stmt.addBatch()
-              pending += 1
-              if (pending >= MaxBatchSize) { stmt.executeBatch(); pending = 0 }
-            }
-            if (pending > 0) stmt.executeBatch()
-          } finally stmt.close()
-        }
-      case None =>
-        writeGeneric(normalized, url, props, table, columns, keyCols, orderCol)
+                     table: String, keyCols: Seq[String],
+                     orderCol: String): Long = {
+    val names = normalized.columns.toSeq
+    val tomb = names.indexOf(LastWriterWins.Tomb)
+    val columns = names.filterNot(_ == LastWriterWins.Tomb)
+    val colIdx = names.zipWithIndex.toMap
+    val keyIdx = keyCols.map(colIdx)
+    val upsertChunk: Connection => Seq[Row] => Unit = SqlDialect.forUrl(url)
+      .upsertSql(table, columns, keyCols, Some(orderCol)) match {
+        case Some(sql) =>
+          val idx = columns.map(colIdx)
+          conn => rows => { executeBatch(conn, sql, rows, idx); () }
+        case None => writeGeneric(table, columns, colIdx, keyCols, orderCol)
+      }
+    runPerPartition(normalized, url, props) { conn =>
+      val upserts = upsertChunk(conn)
+      chunk => {
+        val (deletes, rows) =
+          if (tomb < 0) (Nil, chunk) else chunk.partition(_.get(tomb) == true)
+        if (rows.nonEmpty) upserts(rows)
+        if (deletes.nonEmpty) deleteKeys(conn, table, keyCols, deletes, keyIdx)
+        chunk.size.toLong
+      }
     }
   }
 
-  /** Dialect-generic upsert: batched guarded UPDATE (`... AND orderCol <=
-    * new`), then batched INSERT of the update-miss rows. A miss whose
-    * INSERT hits a duplicate key means the guard (correctly) blocked a
-    * stale replay — retried per-row and skipped. Cold starts take the
-    * all-insert fast path; steady-state incremental batches are two
-    * executeBatch round-trips per chunk. */
-  private def writeGeneric(normalized: DataFrame, url: String, props: Properties,
-                           table: String, columns: Seq[String],
-                           keyCols: Seq[String], orderCol: String): Long = {
+  /** Dialect-generic upsert of one task's chunks: batched guarded UPDATE
+    * (`... AND orderCol <= new`), then batched INSERT of the update-miss
+    * rows. A miss whose INSERT hits a duplicate key means the guard
+    * (correctly) blocked a stale replay — retried per-row and skipped.
+    * A chunk is at most two executeBatch round trips: the UPDATE, then
+    * the INSERT of its misses (every row, on a cold start). */
+  private def writeGeneric(table: String, columns: Seq[String],
+                           colIdx: Map[String, Int], keyCols: Seq[String],
+                           orderCol: String): Connection => Seq[Row] => Unit = {
     val nonKey = columns.filterNot(keyCols.contains)
     val insertSql = s"INSERT INTO $table (${columns.mkString(", ")}) VALUES " +
       s"(${columns.map(_ => "?").mkString(", ")})"
     val updateSql =
       if (nonKey.isEmpty) null
       else s"UPDATE $table SET ${nonKey.map(c => s"$c = ?").mkString(", ")} " +
-        s"WHERE ${keyCols.map(c => s"$c = ?").mkString(" AND ")} " +
-        s"AND $orderCol <= ?"
-    val colIdx = columns.zipWithIndex.toMap
-    // bind order for updateSql; hoisted — these sit on the per-row hot loop
+        s"WHERE ${keyMatch(keyCols)} AND $orderCol <= ?"
+    // bind orders; hoisted — these sit on the per-row hot loop
     val updIdx = (nonKey ++ keyCols :+ orderCol).map(colIdx)
-
-    runPerPartition(normalized, url, props) { (conn, rows) =>
+    val idx = columns.map(colIdx)
+    val keyIdx = keyCols.map(colIdx)
+    conn => {
       // Some drivers report batched updates as SUCCESS_NO_INFO (-2 — Oracle
       // always; MySQL with rewriteBatchedStatements): treating those as
       // "updated" would silently never INSERT genuinely-new rows. The first
-      // chunk discovers this once per partition; subsequent chunks then go
-      // straight to per-row updates instead of paying a doomed batched pass
-      // PLUS the per-row rerun on every chunk.
+      // chunk discovers this once per task; later chunks then go straight
+      // to per-row updates instead of paying a doomed batched pass PLUS
+      // the per-row rerun on every chunk.
       var batchCountsReliable = true
-      def perRowMisses(upd: PreparedStatement, chunk: Seq[Row]): Seq[Row] =
-        chunk.filter { row =>
+      def perRowMisses(chunk: Seq[Row]): Seq[Row] = {
+        val upd = conn.prepareStatement(updateSql)
+        try chunk.filter { row =>
           bindRow(upd, row, updIdx)
           upd.executeUpdate() == 0
-        }
-      rows.grouped(MaxBatchSize).foreach { chunk =>
+        } finally upd.close()
+      }
+      chunk => {
         val misses =
           if (updateSql == null) chunk
+          else if (!batchCountsReliable) perRowMisses(chunk)
           else {
-            val upd = conn.prepareStatement(updateSql)
-            try {
-              if (!batchCountsReliable) perRowMisses(upd, chunk)
-              else {
-                chunk.foreach { row =>
-                  bindRow(upd, row, updIdx)
-                  upd.addBatch()
-                }
-                val counts = upd.executeBatch()
-                if (counts.contains(java.sql.Statement.SUCCESS_NO_INFO)) {
-                  batchCountsReliable = false
-                  // guarded UPDATE is idempotent — the re-apply is safe
-                  perRowMisses(upd, chunk)
-                } else chunk.iterator.zip(counts.iterator)
-                  .collect { case (r, 0) => r }.toSeq
-              }
-            } finally upd.close()
+            val counts = executeBatch(conn, updateSql, chunk, updIdx)
+            if (counts.contains(java.sql.Statement.SUCCESS_NO_INFO)) {
+              batchCountsReliable = false
+              // guarded UPDATE is idempotent — the re-apply is safe
+              perRowMisses(chunk)
+            } else chunk.iterator.zip(counts.iterator)
+              .collect { case (r, 0) => r }.toSeq
           }
         if (misses.nonEmpty)
-          insertMisses(conn, insertSql, misses, columns, colIdx, table, keyCols)
+          insertMisses(conn, insertSql, misses, idx, table, keyCols, keyIdx)
       }
     }
   }
@@ -302,49 +234,35 @@ object JdbcUpsertSink {
     * rethrow. Anything else (connection loss, syntax) rethrows after one
     * harmless probe. */
   private def insertMisses(conn: Connection, insertSql: String,
-                           misses: Seq[Row], columns: Seq[String],
-                           colIdx: Map[String, Int], table: String,
-                           keyCols: Seq[String]): Unit = {
-    val idx = columns.indices
-    val keyIdx = keyCols.map(colIdx)
-    val ins = conn.prepareStatement(insertSql)
-    val existsSql = s"SELECT 1 FROM $table WHERE " +
-      keyCols.map(c => s"$c = ?").mkString(" AND ")
-    try {
-      try {
-        misses.foreach { row => bindRow(ins, row, idx); ins.addBatch() }
-        ins.executeBatch()
-        ()
-      } catch {
-        case _: java.sql.BatchUpdateException =>
-          ins.clearBatch()
-          val exq = conn.prepareStatement(existsSql)
-          try misses.foreach { row =>
-            try {
-              bindRow(ins, row, idx)
-              ins.executeUpdate()
-              ()
-            } catch {
-              case e: java.sql.SQLException =>
-                // if the probe itself fails (engine aborted the transaction
-                // on statement error, connection loss), surface the ORIGINAL
-                // insert failure — not the probe's — with the probe error
-                // attached; such engines need a native-upsert dialect
-                val dup =
-                  try {
-                    bindRow(exq, row, keyIdx)
-                    val rs = exq.executeQuery()
-                    try rs.next() finally rs.close()
-                  } catch {
-                    case probe: java.sql.SQLException =>
-                      e.addSuppressed(probe); throw e
-                  }
-                if (!dup) throw e
-            }
-          } finally exq.close()
-      }
-    } finally ins.close()
-  }
+                           misses: Seq[Row], idx: Seq[Int], table: String,
+                           keyCols: Seq[String], keyIdx: Seq[Int]): Unit =
+    try { executeBatch(conn, insertSql, misses, idx); () }
+    catch {
+      case _: java.sql.BatchUpdateException =>
+        val ins = conn.prepareStatement(insertSql)
+        val exq = conn.prepareStatement(
+          s"SELECT 1 FROM $table WHERE ${keyMatch(keyCols)}")
+        try misses.foreach { row =>
+          try { bindRow(ins, row, idx); ins.executeUpdate() }
+          catch {
+            case e: java.sql.SQLException =>
+              // if the probe itself fails (engine aborted the transaction
+              // on statement error, connection loss), surface the ORIGINAL
+              // insert failure — not the probe's — with the probe error
+              // attached; such engines need a native-upsert dialect
+              val dup =
+                try {
+                  bindRow(exq, row, keyIdx)
+                  val rs = exq.executeQuery()
+                  try rs.next() finally rs.close()
+                } catch {
+                  case probe: java.sql.SQLException =>
+                    e.addSuppressed(probe); throw e
+                }
+              if (!dup) throw e
+          }
+        } finally { exq.close(); ins.close() }
+    }
 
   private def bindRow(stmt: PreparedStatement, row: Row, srcIdx: Seq[Int]): Unit = {
     var i = 0
@@ -354,22 +272,47 @@ object JdbcUpsertSink {
     }
   }
 
-  /** One connection + one transaction per partition; rollback on failure;
-    * connections actually closed (unlike reference session.py:109). An
-    * empty partition opens no connection. Returns the rows `body`
-    * consumed, summed from each task's own result: Spark keeps one
-    * successful attempt's result per partition, so the sum stays exact
-    * under task retry and speculation (an accumulator would count a
+  /** `sql` bound once per row of `rows` (the row's columns at `idx`) and
+    * sent in one `executeBatch` round trip on `conn`; the update counts. */
+  private def executeBatch(conn: Connection, sql: String, rows: Seq[Row],
+                           idx: Seq[Int]): Array[Int] = {
+    val stmt = conn.prepareStatement(sql)
+    try {
+      rows.foreach { row => bindRow(stmt, row, idx); stmt.addBatch() }
+      stmt.executeBatch()
+    } finally stmt.close()
+  }
+
+  /** The one batched `DELETE WHERE pk = ?` of the keys of `rows` (at
+    * `keyIdx`): per-row update counts, 0 for a key already gone. */
+  private def deleteKeys(conn: Connection, table: String, keyCols: Seq[String],
+                         rows: Seq[Row], keyIdx: Seq[Int]): Array[Int] =
+    executeBatch(conn, s"DELETE FROM $table WHERE ${keyMatch(keyCols)}",
+      rows, keyIdx)
+
+  private def keyMatch(keyCols: Seq[String]): String =
+    keyCols.map(k => s"$k = ?").mkString(" AND ")
+
+  /** The JDBC front's one write loop: one connection + one transaction
+    * per partition; rollback on failure; connections actually closed
+    * (unlike reference session.py:109). An empty partition opens no
+    * connection. `open` is called once per task with its connection and
+    * returns the chunk applier, which gets the task's rows in chunks of
+    * [[MaxBatchSize]] (the `executeBatch` round trip) and returns what
+    * each chunk counts. Returns the sum of the tasks' own results: Spark
+    * keeps one successful attempt's result per partition, so the sum stays
+    * exact under task retry and speculation (an accumulator would count a
     * retried task twice). */
   private def runPerPartition(df: DataFrame, url: String, props: Properties)
-                             (body: (Connection, Iterator[Row]) => Unit): Long = {
+                             (open: Connection => Seq[Row] => Long): Long = {
     val task: Iterator[Row] => Iterator[Long] = { rows =>
       var n = 0L
       if (rows.hasNext) {
         val conn = DriverManager.getConnection(url, props)
         try {
           conn.setAutoCommit(false)
-          body(conn, rows.map { r => n += 1; r })
+          val apply = open(conn)
+          rows.grouped(MaxBatchSize).foreach(chunk => n += apply(chunk))
           conn.commit()
         } catch {
           case t: Throwable => conn.rollback(); throw t
@@ -384,65 +327,30 @@ object JdbcUpsertSink {
     * [[graft.sync.Reconcile]] (orphaned-key removal). Keys are deduped
     * and key-repartitioned first, so each key is deleted by exactly one
     * task and batches can be retried safely (a second DELETE of the same
-    * key is a no-op); one connection + one transaction per partition,
-    * `addBatch`/`executeBatch` in [[MaxBatchSize]] chunks — the S5
-    * discipline.
+    * key is a no-op); the write loop and DELETE batch of [[write]] — the
+    * S5 discipline.
     * Returns rows the database ACTUALLY deleted (summed `executeBatch`
     * update counts), so already-deleted keys report 0, not the submitted
-    * count. Drivers that answer `SUCCESS_NO_INFO` for any batch element
-    * give no per-row truth, so the submitted distinct-key count is the
-    * fallback for that case — and likewise when any task attempt was a
-    * retry or speculation is enabled (the credited attempt may be the
-    * duplicate that matched zero already-deleted rows — a silent
-    * undercount otherwise). */
+    * count. A task never under-counts: a chunk whose driver answers
+    * `SUCCESS_NO_INFO` gives no per-row truth, and a retried attempt or a
+    * speculative duplicate may be the one that matched zero rows another
+    * attempt had already deleted, so those report the keys they
+    * submitted. */
   def deleteByKeys(orphans: DataFrame, url: String, props: Properties,
                    table: String, keyCols: Seq[String]): Long = {
     require(keyCols.nonEmpty, "deleteByKeys needs at least one key column")
-    deleteKeys(orphans.select(keyCols.map(col): _*).distinct()
-      .repartition(keyCols.map(col): _*), url, props, table, keyCols)
-  }
-
-  /** [[deleteByKeys]] over `keyed`: key columns only, each key in one
-    * row of one partition already (a [[normalize]]d batch is), so one
-    * job deletes them and its tasks return the submitted count. */
-  private def deleteKeys(keyed: DataFrame, url: String, props: Properties,
-                         table: String, keyCols: Seq[String]): Long = {
-    val sc = keyed.sparkSession.sparkContext
-    val applied = sc.longAccumulator("reconcile.deleted")
-    val noInfo = sc.longAccumulator("reconcile.deleteNoInfo")
-    // Accumulator-based row attribution is only trustworthy when every
-    // partition ran EXACTLY once: after a task retry (first attempt
-    // committed its DELETEs, then died before crediting) or under
-    // speculative duplicates, the credited attempt may be the one that
-    // matched zero already-deleted rows — an undercount. Detect both and
-    // fall back to the submitted distinct-key count (the conservative
-    // pre-attribution semantics) rather than report a silent floor.
-    val retried = sc.longAccumulator("reconcile.deleteRetriedTasks")
-    val speculative = sc.getConf.getBoolean("spark.speculation",
-      defaultValue = false)
-    val where = keyCols.map(k => s"$k = ?").mkString(" AND ")
-    val sql = s"DELETE FROM $table WHERE $where"
-    val submitted = runPerPartition(keyed, url, props) { (conn, rows) =>
-      val tc = org.apache.spark.TaskContext.get()
-      if (tc != null && tc.attemptNumber() > 0) retried.add(1L)
-      val stmt = conn.prepareStatement(sql)
-      def flush(): Unit = stmt.executeBatch().foreach {
-        case java.sql.Statement.SUCCESS_NO_INFO => noInfo.add(1L)
-        case c if c > 0                         => applied.add(c.toLong)
-        case _                                  => () // 0 = key already gone
+    val speculative = orphans.sparkSession.sparkContext.getConf
+      .getBoolean("spark.speculation", defaultValue = false)
+    runPerPartition(orphans.select(keyCols.map(col): _*).distinct()
+        .repartition(keyCols.map(col): _*), url, props) { conn =>
+      val submitted = speculative ||
+        Option(TaskContext.get()).exists(_.attemptNumber() > 0)
+      chunk => {
+        val counts = deleteKeys(conn, table, keyCols, chunk, keyCols.indices)
+        if (submitted || counts.contains(java.sql.Statement.SUCCESS_NO_INFO))
+          chunk.size.toLong
+        else counts.map(_.max(0).toLong).sum
       }
-      try {
-        var pending = 0
-        rows.foreach { row =>
-          bindRow(stmt, row, keyCols.indices)
-          stmt.addBatch()
-          pending += 1
-          if (pending >= MaxBatchSize) { flush(); pending = 0 }
-        }
-        if (pending > 0) flush()
-      } finally stmt.close()
     }
-    if (noInfo.value > 0L || retried.value > 0L || speculative) submitted
-    else applied.value
   }
 }

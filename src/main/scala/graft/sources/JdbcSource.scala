@@ -12,13 +12,14 @@ import graft.sync.SlicePlanner
   *
   * Responsibilities transposed from the reference:
   *   - preflight connectivity + existence checks with typed errors
-  *     (session.py:170-192 → [[preflight]]);
+  *     (session.py:170-192 → [[preflight]]), through the front's one
+  *     catalog lookup ([[JdbcSource.Catalog]]);
   *   - the watermark bounds and the range count as plain JDBC statements
   *     on the driver — no Spark job, no schema round-trip
   *     ([[watermarkBounds]], [[countRange]]);
-  *   - primary-key discovery via `DatabaseMetaData.getPrimaryKeys` — Spark's
-  *     JDBC schema inference does not surface PKs (session.py:40-43
-  *     reflection → [[primaryKey]]);
+  *   - primary-key discovery via `DatabaseMetaData.getPrimaryKeys` of the
+  *     resolved table — Spark's JDBC schema inference does not surface PKs
+  *     (session.py:40-43 reflection → [[primaryKey]]);
   *   - the range-partitioned extraction read: Spark's
   *     partitionColumn/lowerBound/upperBound/numPartitions emits exactly the
   *     reference's per-slice `BETWEEN` predicates (session.py:127-133), with
@@ -27,8 +28,8 @@ import graft.sync.SlicePlanner
   *     psycopg2 chunk analog (session.py:67-81).
   *
   * Dialect-agnostic: works against any JDBC URL (PostgreSQL in production,
-  * embedded Derby in the in-process e2e tests). Note Derby folds unquoted
-  * identifiers to upper case — pass table names as the catalog stores them.
+  * embedded Derby in the in-process e2e tests). Catalog lookups fold the
+  * table name's case; the SQL statements use the name as given.
   */
 final class JdbcSource(url: String, props: Properties) {
 
@@ -37,37 +38,19 @@ final class JdbcSource(url: String, props: Properties) {
   private def withConnection[A](f: Connection => A): A =
     JdbcSource.withConnection(url, props)(f)
 
-  /** S6 — verify connectivity and that `table` exists. Drivers disagree
-    * on the plain-table type label — Derby/PG say "TABLE", engines that
-    * mirror information_schema (DuckDB) say "BASE TABLE" — so the probe
-    * accepts both; a single-label filter reads a live table as absent.
-    * Matched rows are re-checked for exact (case-insensitive) name
-    * equality: the name argument is a JDBC metadata PATTERN where '_'
-    * matches any character, so preflight("sync_dest") would otherwise
-    * accept a lone "syncXdest" and the real miss would surface later as
-    * a raw SQLException instead of GraftError.MissingTable. Probed under
-    * all three case folds (as-given / upper / lower) because catalogs
-    * fold unquoted identifiers differently AND some drivers (DuckDB)
-    * match the pattern case-sensitively — the JdbcUpsertSink.tableExists
-    * protocol. */
+  /** S6 — verify connectivity and that `table` exists, by the one
+    * catalog lookup ([[JdbcSource.Catalog.resolve]]). */
   def preflight(table: String): Unit = withConnection(preflight(_, table))
 
   private def preflight(conn: Connection, table: String): Unit =
-    // ONE definition of the case-fold/type-label probe (the sink's
-    // tableExists) — a copy here would silently miss any future driver
-    // quirk fix applied to the other
-    if (!graft.sinks.JdbcUpsertSink.tableExists(conn, table))
+    if (JdbcSource.Catalog.resolve(conn, table).isEmpty)
       throw GraftError.MissingTable(table)
 
-  /** S2 — reflected primary-key columns in key-sequence order. */
+  /** S2 — reflected primary-key columns, in key-sequence order, of the
+    * table the catalog lookup resolves `table` to. */
   def primaryKey(table: String): Seq[String] = withConnection { conn =>
-    val rs = conn.getMetaData.getPrimaryKeys(null, null, table)
-    val cols = Vector.newBuilder[(Short, String)]
-    try {
-      while (rs.next())
-        cols += ((rs.getShort("KEY_SEQ"), rs.getString("COLUMN_NAME")))
-    } finally rs.close()
-    val pk = cols.result().sortBy(_._1).map(_._2)
+    val pk = JdbcSource.Catalog.resolve(conn, table)
+      .map(JdbcSource.Catalog.primaryKey(conn, _)).getOrElse(Nil)
     if (pk.isEmpty) throw GraftError.MissingPrimaryKey(table)
     pk
   }
@@ -162,6 +145,59 @@ object JdbcSource {
           throw GraftError.Unreachable(url, e)
       }
     try f(conn) finally conn.close()
+  }
+
+  /** The one catalog lookup of the JDBC front: the source's preflight and
+    * primary key, the sink's create-or-drift check and the destination's
+    * state record all find their table here. */
+  private[graft] object Catalog {
+
+    /** A table as the catalog stores it; `schema` is null in a catalog
+      * without schemas. */
+    final case class Table(schema: String, name: String)
+
+    /** The table `name` names, as the catalog stores it. Catalogs fold
+      * unquoted identifiers differently (Derby upper, PG lower) and some
+      * drivers (DuckDB) match the pattern case-sensitively, so the name is
+      * probed as given, upper- and lower-cased. Both plain-table labels
+      * count: Derby/PG say "TABLE", information_schema-style drivers
+      * (DuckDB) "BASE TABLE". The name argument is a metadata PATTERN in
+      * which '_' matches any character, so a hit must equal `name`
+      * case-insensitively ('sync_dest' never resolves to 'syncXdest').
+      * A same-named table in another schema (a backup twin) loses to the
+      * one in the connection's current schema; when no hit sits there (PG
+      * search_path: "$user",public with the table in public), the first
+      * name-only hit wins. Folds are probed lazily: the common case is one
+      * metadata call. */
+    def resolve(conn: Connection, name: String): Option[Table] = {
+      lazy val current = try Option(conn.getSchema) catch { case _: Throwable => None }
+      val hits = LazyList(name, name.toUpperCase, name.toLowerCase).distinct
+        .flatMap(n => rows(conn.getMetaData.getTables(null, null, n,
+          Array("TABLE", "BASE TABLE")))(rs =>
+          Table(rs.getString("TABLE_SCHEM"), rs.getString("TABLE_NAME"))))
+        .filter(_.name.equalsIgnoreCase(name))
+      hits.find(t => t.schema == null ||
+          current.forall(t.schema.equalsIgnoreCase))
+        .orElse(hits.headOption)
+    }
+
+    /** `t`'s column names, lower-cased. Schema and name are patterns
+      * here too, so only `t`'s own rows count. */
+    def columns(conn: Connection, t: Table): Seq[String] =
+      rows(conn.getMetaData.getColumns(null, t.schema, t.name, null))(rs =>
+        (Table(rs.getString("TABLE_SCHEM"), rs.getString("TABLE_NAME")),
+          rs.getString("COLUMN_NAME").toLowerCase))
+        .collect { case (`t`, c) => c }
+
+    /** `t`'s primary-key columns in key-sequence order. */
+    def primaryKey(conn: Connection, t: Table): Seq[String] =
+      rows(conn.getMetaData.getPrimaryKeys(null, t.schema, t.name))(rs =>
+        (rs.getShort("KEY_SEQ"), rs.getString("COLUMN_NAME")))
+        .sortBy(_._1).map(_._2)
+
+    private def rows[A](rs: ResultSet)(f: ResultSet => A): Vector[A] =
+      try Iterator.continually(rs).takeWhile(_.next()).map(f).toVector
+      finally rs.close()
   }
 
   /** `read` over the one row of an aggregate statement `sql` on `conn`. */

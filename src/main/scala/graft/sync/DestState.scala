@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.core.SidecarIO
-import graft.sinks.JdbcUpsertSink
+import graft.sources.JdbcSource
 
 /** What a sync destination records about itself. The reference keeps no
   * checkpoint — a sync restarts from state in the destination (SURVEY
@@ -276,7 +276,7 @@ object DestState {
     private def wm(rs: ResultSet, i: Int): Option[Long] =
       graft.core.Watermark.toMicros(rs.getObject(i))
 
-    private def exists(t: String) = JdbcUpsertSink.tableExists(conn, t)
+    private def exists(t: String) = JdbcSource.Catalog.resolve(conn, t).isDefined
 
     protected def read(): Option[DestState] =
       if (!exists(Table)) None

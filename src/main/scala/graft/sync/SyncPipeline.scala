@@ -104,8 +104,9 @@ object SyncPipeline {
     *          §4.1).
     *   5. S4  write and commit, each sink by its own protocol. Parquet:
     *          the keyed merge ([[ParquetMergeSink.merge]]), which owns the
-    *          record's open, marker and commit. JDBC: create the table from
-    *          the batch schema or check it for drift (S3), record the
+    *          record's open, marker and commit. JDBC, on the destination's
+    *          one connection: create the table from the batch schema or
+    *          check it for drift (S3), record the
     *          restart marker, upsert — per-partition transactions commit
     *          independently, so a crash can advance dest MAX past
     *          unapplied rows and the next run replays from the marker —
@@ -218,7 +219,7 @@ object SyncPipeline {
       case (Some(c), JdbcTable(url, table, props)) =>
         JdbcSource.withConnection(url, props) { conn =>
           val state = DestState.jdbc(conn, table)
-          val exists = JdbcUpsertSink.tableExists(conn, table)
+          val exists = JdbcSource.Catalog.resolve(conn, table).isDefined
           val opened = state.open(cfg.tombstoneCol, exists && hasRow(conn, table))
           val destMax = if (!exists) None else JdbcSource.firstRow(conn,
             s"SELECT MAX(${cfg.watermarkCol}) FROM $table")(rs =>
@@ -234,7 +235,7 @@ object SyncPipeline {
             // the tombstone column is transport metadata, never
             // destination schema: the table is created (and drift-checked)
             // without it
-            JdbcUpsertSink.ensureTable(url, props, table, StructType(
+            JdbcUpsertSink.ensureTable(conn, url, table, StructType(
               batch.schema.filterNot(f =>
                 cfg.tombstoneCol.exists(f.name.equalsIgnoreCase))),
               cfg.keyCols)

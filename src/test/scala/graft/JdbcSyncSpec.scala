@@ -602,6 +602,26 @@ trait JdbcSyncBehaviors { this: SparkSpec =>
       spark.conf.get("spark.sql.shuffle.partitions").toInt)
   }
 
+  test("S2 primaryKey reads the table the catalog lookup resolves: case fold and schema twin") {
+    skipUnlessAvailable()
+    val url = freshDb("pkresolve")
+    val src = new JdbcSource(url, new java.util.Properties())
+    // created unquoted, asked for in the other case than the catalog's
+    // fold: the exact-name metadata probe alone finds no key there
+    exec(url, "CREATE TABLE pkfold (ID BIGINT NOT NULL PRIMARY KEY, " +
+      "UPDATED BIGINT NOT NULL)")
+    val otherCase = if (ident("pkfold") == "pkfold") "PKFOLD" else "pkfold"
+    assert(src.primaryKey(otherCase).map(_.toUpperCase) == Seq("ID"))
+    // a same-named, differently keyed twin in another schema: only the
+    // current schema's table is the source
+    exec(url, "CREATE TABLE PKTWIN (ID BIGINT NOT NULL PRIMARY KEY, " +
+      "UPDATED BIGINT NOT NULL)")
+    exec(url, s"CREATE SCHEMA ${ident("graftbackup")}")
+    exec(url, s"CREATE TABLE ${ident("graftbackup")}.PKTWIN " +
+      "(ID BIGINT NOT NULL, UPDATED BIGINT NOT NULL, PRIMARY KEY (ID, UPDATED))")
+    assert(src.primaryKey(ident("PKTWIN")).map(_.toUpperCase) == Seq("ID"))
+  }
+
   test("S6 preflight: typed errors for missing table") {
     skipUnlessAvailable()
     val url = freshDb("errors")
@@ -871,6 +891,41 @@ class JdbcSyncSpec extends SparkSpec with JdbcSyncBehaviors {
     assert(readTable(url, "BFRONT") == winners)
   }
 
+  test("a malformed delete marker that loses its key's tie is refused by the parquet and Derby fronts") {
+    val url = freshDb("malformedtie")
+    val dir = tmpDir("jdbc-malformed-tie")
+    import spark.implicits._
+    def source(rows: Seq[(Long, Long, java.lang.Double, String, String)]) = {
+      rows.toDF("ID", "UPDATED", "AMOUNT", "STATUS", "DEL")
+        .write.mode("overwrite").parquet(dir + "/src")
+      SyncEndpoint.ParquetDir(dir + "/src")
+    }
+    def pqDest(): Map[Long, (Long, Double, String)] =
+      spark.read.parquet(dir + "/pq").select("ID", "UPDATED", "AMOUNT", "STATUS")
+        .as[(Long, Long, Double, String)].collect()
+        .map { case (id, u, a, st) => id -> ((u, a, st)) }.toMap
+    val pq = SyncEndpoint.ParquetDir(dir + "/pq")
+    val derby = SyncEndpoint.parse(s"$url#MALTIE")
+    val seed = (1L to 10L).map(i =>
+      (i, i * 10L, java.lang.Double.valueOf(i.toDouble), s"s$i", "false"))
+    Seq(pq, derby).foreach(SyncPipeline.run(spark, cfgT, source(seed), _))
+    val want = seed.map { case (id, u, a, st, _) => id -> ((u, a.doubleValue, st)) }.toMap
+    assert(pqDest() == want && readTable(url, "MALTIE") == want)
+    // key 5's valid row at 200 wins its key over the malformed marker at
+    // 150: the marker never reaches a winner, but it is in the batch
+    val poll = source(seed ++ Seq(
+      (5L, 200L, java.lang.Double.valueOf(5.5), "u5", "false"),
+      (5L, 150L, null.asInstanceOf[java.lang.Double], null.asInstanceOf[String],
+        "maybe")))
+    Seq(pq, derby).foreach { dest =>
+      val e = intercept[graft.core.GraftError.InvalidConfig](
+        SyncPipeline.run(spark, cfgT, poll, dest))
+      assert(e.getMessage.contains("1 row(s)"), s"$dest: ${e.getMessage}")
+    }
+    assert(pqDest() == want, "parquet destination changed")
+    assert(readTable(url, "MALTIE") == want, "Derby destination changed")
+  }
+
   test("S6: a destination database that does not exist fails typed") {
     val dir = tmpDir("jdbc-nodb") + "/src"
     writeTombSrc(dir, Seq((1L, 100L, 1.0, "A", false)))
@@ -913,7 +968,7 @@ class JdbcSyncSpec extends SparkSpec with JdbcSyncBehaviors {
     assert(coldJobs <= 2, s"cold run ran $coldJobs Spark jobs")
   }
 
-  test("tombstoned parquet→Derby Spark-job budget: cold run ≤ 11, delete poll ≤ 12, idle poll ≤ 11") {
+  test("tombstoned parquet→Derby Spark-job budget: cold run ≤ 11, delete poll ≤ 10, idle poll ≤ 11") {
     val url = freshDb("tombcost")
     val dir = tmpDir("jdbc-tomb-cost") + "/src"
     val live = (1L to 2000L).map(i =>
@@ -940,12 +995,12 @@ class JdbcSyncSpec extends SparkSpec with JdbcSyncBehaviors {
     assert(keys == want, s"${keys.size} keys")
     info(s"cold run: $coldJobs jobs; delete poll: $deleteJobs jobs; " +
       s"idle poll: $idleJobs jobs")
-    // one tally pass over the persisted batch (rows, malformed flags,
-    // delete winners), no delete pass when nothing is deleted, and one
-    // job for the delete pass over keys normalize already deduped
+    // one admission pass over the extracted batch (malformed flags),
+    // then the key shuffle and the one write, whose tasks delete and
+    // upsert in one transaction: a poll that deletes runs no extra job
     assert(idleJobs <= 11, s"idle poll ran $idleJobs Spark jobs")
     assert(coldJobs <= 11, s"cold run ran $coldJobs Spark jobs")
-    assert(deleteJobs <= 12, s"delete poll ran $deleteJobs Spark jobs")
+    assert(deleteJobs <= 10, s"delete poll ran $deleteJobs Spark jobs")
   }
 
   // pure option-set check has no dialect; lives in the Derby arm only

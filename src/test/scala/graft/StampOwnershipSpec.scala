@@ -25,7 +25,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * Every keyed writer reads CDC delete markers through
   * `graft.sync.LastWriterWins`: a boolean `try_cast` or the malformed-flag
   * refusal text anywhere else under `graft/sync` or `graft/sinks` is a
-  * second copy of that contract. */
+  * second copy of that contract.
+  *
+  * The JDBC front finds its tables through one catalog lookup,
+  * `JdbcSource.Catalog`, and opens connections in two places,
+  * `JdbcSource.withConnection` and the sink's `runPerPartition`: a
+  * metadata call or a `DriverManager.getConnection` anywhere else under
+  * `graft/` is a second copy. */
 class StampOwnershipSpec extends AnyFunSuite {
 
   private val root = new java.io.File(sys.props("user.dir"), "src/main/scala")
@@ -51,6 +57,18 @@ class StampOwnershipSpec extends AnyFunSuite {
         val t = l.trim
         t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
       }
+
+  /** Indices of the code lines of `rel` from the one containing `marker`
+    * up to the first closing brace at that line's indent. */
+  private def span(rel: String, marker: String): Set[Int] = {
+    val lines = codeLines(new java.io.File(root, rel))
+    val start = lines.indexWhere(_._1.contains(marker))
+    assert(start >= 0, s"$rel has no '$marker'")
+    val indent = lines(start)._1.takeWhile(_ == ' ')
+    val end = lines.indexWhere(_._1 == s"$indent}", start)
+    assert(end > start, s"'$marker' in $rel has no closing brace")
+    lines.slice(start, end + 1).map(_._2).toSet
+  }
 
   test("index stamp names and SidecarIO calls appear only in PersistedIndex") {
     assert(root.isDirectory, s"main sources not found at $root")
@@ -115,14 +133,8 @@ class StampOwnershipSpec extends AnyFunSuite {
     assert(files.exists(_.getPath.endsWith(agg)), s"$agg is missing")
     // the reader's span: its `object` line up to the first closing brace
     // at the object's own indent
-    val aggLines = codeLines(new java.io.File(root, agg))
-    val start = aggLines.indexWhere(_._1.contains("object SidecarLayout {"))
-    assert(start >= 0, "SidecarLayout is missing")
-    val indent = aggLines(start)._1.takeWhile(_ == ' ')
-    val end = aggLines.indexWhere(_._1 == s"$indent}", start)
-    assert(end > start, "SidecarLayout has no closing brace")
-    val inside = aggLines.slice(start, end + 1).map(_._2).toSet
-    assert(aggLines.exists { case (l, i) =>
+    val inside = span(agg, "object SidecarLayout {")
+    assert(codeLines(new java.io.File(root, agg)).exists { case (l, i) =>
       inside(i) && sidecarNames.findFirstIn(l).isDefined }, "SidecarLayout " +
       "no longer names the old sidecars: update this guard")
     val offenders = for {
@@ -131,6 +143,24 @@ class StampOwnershipSpec extends AnyFunSuite {
       (line, i) <- codeLines(f)
       if sidecarNames.findFirstIn(line).isDefined
       if rel != agg || !inside(i)
+    } yield s"$rel:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  test("the JDBC front reads the catalog in one lookup and connects in two places") {
+    val source = "graft/sources/JdbcSource.scala"
+    val sink = "graft/sinks/JdbcUpsertSink.scala"
+    val catalog = span(source, "object Catalog {")
+    val connects = Map(source -> span(source, "def withConnection[A](url"),
+      sink -> span(sink, "def runPerPartition("))
+    val metadata = "\\b(getTables|getColumns|getPrimaryKeys)\\(".r
+    val offenders = for {
+      f <- sources(new java.io.File(root, "graft"))
+      rel = root.toPath.relativize(f.toPath).toString.replace('\\', '/')
+      (line, i) <- codeLines(f)
+      if (metadata.findFirstIn(line).isDefined && !(rel == source && catalog(i))) ||
+        (line.contains("DriverManager.getConnection") &&
+          !connects.get(rel).exists(_(i)))
     } yield s"$rel:${i + 1}: ${line.trim}"
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }
