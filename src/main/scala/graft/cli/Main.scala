@@ -2,12 +2,12 @@ package graft.cli
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{avg, coalesce, col, count, count_if,
-  expr, filter, lit, max, min, size, split, sum, trim, when}
+  expr, filter, lit, min, size, split, sum, trim, when}
 
 import graft.core.{GraftSession, GraftError}
 import graft.sources.JdbcSource
-import graft.sync.{ParquetMergeSink, SyncConfig, SyncEndpoint, SyncPipeline,
-  SyncReport}
+import graft.sync.{Extract, ParquetMergeSink, SyncConfig, SyncEndpoint,
+  SyncPipeline, SyncReport}
 
 /** Thin command layer (SURVEY §3.1/§3.2, reference cli.py): `single` runs
   * one watermark-driven incremental sync, `continuous` polls every
@@ -112,7 +112,8 @@ object Main {
       runDedupSpans),
     Verb("diff", "--source PATH --base PATH --dest PATH [--id-col doc_id] " +
       "[--text-col text]", runDiff, Seq("source", "dest", "base")),
-    Verb("reconcile", "--source (PATH|jdbc:...#table) --dest PATH " +
+    Verb("reconcile", "--source (PATH|jdbc:...#table) " +
+      "--dest (PATH|jdbc:...#table) " +
       "--key K[,K2] [--report PATH] [--apply]", runReconcile,
       jdbc = Set("source", "dest")),
     Verb("bpe-train", "--source PATH --dest PATH --merges N " +
@@ -504,15 +505,10 @@ object Main {
     if (a.keys.isEmpty)
       throw GraftError.InvalidConfig("reconcile requires --key K[,K2]")
     // key-only projection on either kind of endpoint — the orphan pass
-    // never moves wide rows (parquet prunes columns from footers, JDBC
-    // pushes SELECT k FROM t)
-    def readKeys(ep: SyncEndpoint) = ep match {
-      case SyncEndpoint.ParquetDir(dir) =>
-        spark.read.parquet(dir).select(a.keys.map(col): _*)
-      case SyncEndpoint.JdbcTable(url, table, props) =>
-        spark.read.jdbc(url,
-          s"(SELECT ${a.keys.mkString(", ")} FROM $table) graft_rc", props)
-    }
+    // never moves wide rows (parquet prunes columns from footers, a JDBC
+    // table read pushes the projection to the server)
+    def readKeys(ep: SyncEndpoint) =
+      Extract(spark, ep).table.select(a.keys.map(col): _*)
     val srcEp = SyncEndpoint.parse(a.source, a.sourceUser, a.sourcePassword)
     val destEp = SyncEndpoint.parse(a.dest, a.destUser, a.destPassword)
     val orphans = graft.sync.Reconcile.deletedKeys(
@@ -549,8 +545,12 @@ object Main {
     * whole maintenance loop: each run folds exactly the rows that arrived
     * since the last, a re-run of an already-folded cut is a reported
     * no-op, and the rollup always equals the one-shot groupBy (the a7
-    * oracle contract). Source may be parquet or JDBC; the slice predicate
-    * pushes down either way.
+    * oracle contract). Source may be parquet or JDBC: it is read by the
+    * sync's source reader ([[graft.sync.Extract]]): its range read of
+    * [lo, hi], inclusive, and the fold's exact `< hi` make the half-open
+    * slice (a server TIMESTAMP finer than the canonical µs may sit between
+    * hi − 1 and hi); a JDBC slice is range-partitioned like a sync
+    * extract.
     *
     * CONCURRENCY CONTRACT — the default cut requires a QUIESCED source.
     * The default (srcMax+1) is derived in a bounds pass SEPARATE from the
@@ -667,43 +667,30 @@ object Main {
       throw GraftError.InvalidConfig(
         "--kbuckets sizes the keyed partitioned lane's state store; it " +
           "requires both --key and --partitioned")
-    // the source and its watermark bounds (absent on an empty source). A
-    // JDBC table is preflighted (a missing one is GraftError.MissingTable)
-    // and bounded by the sync lifecycle's MIN/MAX statement on the
-    // server: no Spark job. A parquet source's bounds pass is LAZY: a
-    // warm rollup with an explicit --cut needs neither bound, and the
-    // steady-state cron tick must not pay a full min/max scan it never
-    // reads (Option.orElse / getOrElse take their alternative by name, so
-    // `lazy val` defers the job until a bound is actually consumed)
-    val (source, bounds) =
-      SyncEndpoint.parse(a.source, a.sourceUser, a.sourcePassword) match {
-        case SyncEndpoint.ParquetDir(dir) =>
-          val df = spark.read.parquet(dir)
-          (df, () => {
-            val b = df.agg(min(col(a.watermark)).as("lo"),
-              max(col(a.watermark)).as("hi")).first()
-            (graft.core.Watermark.toMicros(b.get(0)),
-              graft.core.Watermark.toMicros(b.get(1)))
-          })
-        case SyncEndpoint.JdbcTable(url, table, props) =>
-          val b = new JdbcSource(url, props).checkedBounds(table, a.watermark)
-          (spark.read.jdbc(url, table, props),
-            () => (b.map(_.loUs), b.map(_.hiUs)))
-      }
+    // the source and its watermark bounds (absent on an empty source),
+    // from the reader: a JDBC table's preflight and MIN/MAX statement run
+    // on the server, always, with no Spark job; a parquet source's bounds
+    // pass is LAZY — a warm rollup with an explicit --cut needs neither
+    // bound, and the steady-state cron tick must not pay a min/max scan
+    // it never reads (Option.orElse / getOrElse take their alternative by
+    // name, so the job waits until a bound is actually consumed)
+    val reader = Extract(spark,
+      SyncEndpoint.parse(a.source, a.sourceUser, a.sourcePassword))
+      .watermarked(a.watermark)
     val stored = graft.sync.AggMaintenance.watermark(spark, a.dest)
-    lazy val (srcLo, srcHi) = bounds()
-    val lo = stored.orElse(srcLo).getOrElse {
+    val lo = stored.orElse(reader.bounds.map(_.loUs)).getOrElse {
       println(s"agg ${a.source} -> ${a.dest}: source empty and no rollup " +
         "yet; nothing to do"); return 0L
     }
     // --cut is the caller's T2-style snapshot cut; the default folds
     // through the source's current max (half-open, hence +1)
-    val hi = a.cut.getOrElse(srcHi.map(_ + 1L).getOrElse(lo))
+    val hi = a.cut.getOrElse(reader.bounds.map(_.hiUs + 1L).getOrElse(lo))
     if (hi <= lo) {
       println(s"agg ${a.source} -> ${a.dest}: up to date " +
         s"(watermark $lo, cut $hi)")
       return 0L
     }
+    val (source, _) = reader.range(lo, hi)
     // default --kbuckets: the stored stamp's kbuckets= on a warm rollup
     // (a rebucket --buckets N keeps the state space — re-deriving
     // 4×buckets would mismatch it and refuse forever after), falling

@@ -1,7 +1,7 @@
 package graft.core
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, IntegerType, LongType, ShortType, TimestampNTZType, TimestampType}
 
 /** Canonical driver-side watermark representation (SURVEY §3.1 T1/T2).
@@ -63,6 +63,14 @@ object Watermark {
                                    // stays a plain pushdown-able compare
     case other => throw new IllegalArgumentException(
       s"watermark column must be integral-numeric or timestamp-typed; got ${other.simpleString}")
+  }
+
+  /** `df`'s rows with lo <= `column` <= hi, both canonical: a plain
+    * comparison on literals of the column's own type ([[litFor]]), so it
+    * pushes down to parquet row groups and JDBC servers alike. */
+  def between(df: DataFrame, column: String, lo: Long, hi: Long): DataFrame = {
+    val dt = df.schema(column).dataType
+    df.filter(col(column) >= litFor(dt, lo) && col(column) <= litFor(dt, hi))
   }
 
   /** True when the type participates in the watermark protocol at all.

@@ -3,6 +3,8 @@ package graft.sources
 import java.sql.{Connection, DriverManager, ResultSet, SQLException}
 import java.util.Properties
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 import graft.core.{DbConfig, GraftError}
@@ -25,7 +27,11 @@ import graft.sync.SlicePlanner
   *     reference's per-slice `BETWEEN` predicates (session.py:127-133), with
   *     SlicePlanner sizing numPartitions like calculate_optimal_slices
   *     (session.py:201-240). `fetchsize` streams rows off each cursor — the
-  *     psycopg2 chunk analog (session.py:67-81).
+  *     psycopg2 chunk analog (session.py:67-81);
+  *   - the whole-table read ([[read]]), whose projection pushes down.
+  *
+  * Every Spark JDBC read of the engine is made here; `graft.sync.Extract`,
+  * the one source reader, chooses between them.
   *
   * Dialect-agnostic: works against any JDBC URL (PostgreSQL in production,
   * embedded Derby in the in-process e2e tests). Catalog lookups fold the
@@ -101,27 +107,27 @@ final class JdbcSource(url: String, props: Properties) {
     * sequential slice loop. */
   def rangeRead(spark: SparkSession, table: String, watermarkCol: String,
                 lo: Long, hi: Long, estimatedRows: Long,
-                targetRowsPerSlice: Long = 10000000L,
+                targetRowsPerSlice: Long = SlicePlanner.TargetRows,
                 fetchSize: Int = 10000,
-                timestampTyped: Boolean = false): DataFrame = {
-    val reader = spark.read.format("jdbc").option("url", url)
-    props.stringPropertyNames().forEach { k =>
-      reader.option(k, props.getProperty(k)); ()
-    }
-    JdbcSource.rangeReadOptions(table, watermarkCol, lo, hi, estimatedRows,
-        targetRowsPerSlice, fetchSize, timestampTyped)
-      .foreach { case (k, v) => reader.option(k, v); () }
-    val df = reader.load()
-    // Residual exact bound on the loaded column's OWN type (the partition
-    // options only shard the range; first/last slices are half-open on the
-    // far side). litFor keeps this a plain pushdown-able comparison for
-    // numeric AND timestamp watermarks alike.
-    val dt = df.schema(watermarkCol).dataType
-    df.filter(org.apache.spark.sql.functions.col(watermarkCol)
-        >= graft.core.Watermark.litFor(dt, lo) &&
-      org.apache.spark.sql.functions.col(watermarkCol)
-        <= graft.core.Watermark.litFor(dt, hi))
-  }
+                timestampTyped: Boolean = false): DataFrame =
+    // the residual exact bound: the partition options only shard the
+    // range, and the first and last slices are open on their far side
+    graft.core.Watermark.between(load(spark, JdbcSource.rangeReadOptions(
+      table, watermarkCol, lo, hi, estimatedRows, targetRowsPerSlice,
+      fetchSize, timestampTyped)), watermarkCol, lo, hi)
+
+  /** The whole of `table` as a lazy frame, not preflighted ([[preflight]]
+    * and [[checkedBounds]] do that): Spark's JDBC reader pushes a
+    * projection and filters on it down to the server. */
+  def read(spark: SparkSession, table: String): DataFrame =
+    load(spark, Map("dbtable" -> table))
+
+  /** The one Spark JDBC read of the front: the connection properties,
+    * then `options`. */
+  private def load(spark: SparkSession, options: Map[String, String])
+      : DataFrame = spark.read.format("jdbc").option("url", url)
+    .options(props.stringPropertyNames().asScala
+      .map(k => k -> props.getProperty(k)).toMap ++ options).load()
 }
 
 object JdbcSource {
@@ -255,7 +261,7 @@ object JdbcSource {
     * `java.sql.Timestamp.valueOf` format Spark's JDBC partitioner parses. */
   def rangeReadOptions(table: String, watermarkCol: String, lo: Long, hi: Long,
                        estimatedRows: Long,
-                       targetRowsPerSlice: Long = 10000000L,
+                       targetRowsPerSlice: Long = SlicePlanner.TargetRows,
                        fetchSize: Int = 10000,
                        timestampTyped: Boolean = false): Map[String, String] = {
     val parts = SlicePlanner.numSlices(estimatedRows, targetRowsPerSlice)

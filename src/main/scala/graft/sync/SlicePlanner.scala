@@ -13,6 +13,9 @@ package graft.sync
   */
 object SlicePlanner {
 
+  /** The reference's slice size: ~10M rows per unit of work. */
+  val TargetRows: Long = 10000000L
+
   /** Successive `n`-sized inclusive-both-ends pairs tiling [start, end]
     * (reference `intervals`, utils.py:29-38): the last pair is clipped to
     * `end`. Requires start <= end and n > 0 — the reference's documented
@@ -34,7 +37,7 @@ object SlicePlanner {
     * session.py:236-240: `(max - start) / est_rows * target`). Clamped to
     * >= 1 so a dense keyspace still advances. */
   def sliceLength(start: Long, end: Long, estimatedRows: Long,
-                  targetRowsPerSlice: Long = 10000000L): Long = {
+                  targetRowsPerSlice: Long = TargetRows): Long = {
     require(end >= start, s"end ($end) must be >= start ($start)")
     if (estimatedRows <= 0) math.max(end - start, 1L)
     else {
@@ -47,7 +50,7 @@ object SlicePlanner {
   /** Partition count for a Spark range-partitioned read of [start, end]:
     * `ceil(estRows / target)`, at least 1 — the JDBC `numPartitions`
     * equivalent of the reference's slice list. */
-  def numSlices(estimatedRows: Long, targetRowsPerSlice: Long = 10000000L): Int = {
+  def numSlices(estimatedRows: Long, targetRowsPerSlice: Long = TargetRows): Int = {
     require(targetRowsPerSlice > 0)
     if (estimatedRows <= 0) 1
     else ((estimatedRows + targetRowsPerSlice - 1) / targetRowsPerSlice)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class SyncConfig(
     keyCols: Seq[String],
     watermarkCol: String,
-    targetRowsPerSlice: Long = 10000000L,
+    targetRowsPerSlice: Long = SlicePlanner.TargetRows,
     partitionByCol: Option[String] = None,
     tombstoneCol: Option[String] = None) {
   require(keyCols.nonEmpty, "sync requires a merge key (reference: reflected primary key)")

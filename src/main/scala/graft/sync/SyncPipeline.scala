@@ -37,13 +37,94 @@ object SyncEndpoint {
     } else ParquetDir(s)
 }
 
-/** What a sync run extracts from: a DataFrame (a parquet source is read
-  * into one, once) or a JDBC table. What it writes to is a
-  * [[SyncEndpoint]]. */
-private[sync] sealed trait Extract
-private[sync] object Extract {
-  final case class Frame(df: DataFrame) extends Extract
-  final case class Jdbc(table: SyncEndpoint.JdbcTable) extends Extract
+/** The one source reader of a sync run, an `agg` tick and a `reconcile`
+  * pass: the only place that chooses how an endpoint is read. It is built
+  * once per run from a [[SyncEndpoint]] or a DataFrame (a parquet source
+  * is read into one, once). [[table]] is the whole source;
+  * [[watermarked]] adds the reference's slice read over one watermark
+  * column (session.py:127-133 and 170-240, SURVEY §4.1). */
+private[graft] sealed trait Extract {
+
+  /** The whole source as one lazy frame: a JDBC table is preflighted (S6:
+    * a missing one is `GraftError.MissingTable`), and a projection or
+    * filter on it pushes down to the server. */
+  def table: DataFrame
+
+  /** The reader's rules over watermark column `wm`, see
+    * [[Extract.Watermarked]]. A frame's column must be numeric or
+    * timestamp-typed; a JDBC table runs its preflight and bounds statement
+    * here, always, on one connection. */
+  def watermarked(wm: String): Extract.Watermarked
+}
+
+private[graft] object Extract {
+
+  def apply(spark: SparkSession, source: SyncEndpoint): Extract =
+    source match {
+      case SyncEndpoint.ParquetDir(dir) => Frame(spark.read.parquet(dir))
+      case t: SyncEndpoint.JdbcTable => Jdbc(spark, t)
+    }
+
+  /** One watermark column's bounds, cut and range read. Watermarks are
+    * one driver-side unit (core.Watermark): canonical epoch-micros for a
+    * time-typed column, the raw long for a numeric one. */
+  sealed trait Watermarked {
+
+    /** The source's MIN and MAX watermark; None for an empty source. A
+      * frame's are read lazily, by one Spark job, only when asked for. */
+    def bounds: Option[JdbcSource.WatermarkBounds]
+
+    /** T2: the cut frozen at run start, `given` or else the source MAX
+      * (pypgsync.py:13); None when there is nothing to read. A JDBC
+      * source always has its bounds, and no bounds means an empty source;
+      * a frame with a given cut never reads its bounds for it. */
+    def cut(given: Option[Long]): Option[Long]
+
+    /** S1: the rows with lo <= watermark <= hi, and their count when it is
+      * known without a pass over them. A frame is a pushed-down range
+      * filter on literals of the column's own type; a JDBC table is an
+      * exact count of the range, then a range-partitioned read sized by
+      * SlicePlanner, with the column kind its bounds found. */
+    def range(lo: Long, hi: Long, targetRowsPerSlice: Long =
+      SlicePlanner.TargetRows): (DataFrame, Option[Long])
+  }
+
+  final case class Frame(table: DataFrame) extends Extract {
+    def watermarked(wm: String): Watermarked = {
+      val dt = table.schema(wm).dataType
+      require(Watermark.supported(dt), s"watermark column '$wm' must be " +
+        s"numeric or timestamp-typed; got ${dt.simpleString}")
+      new Watermarked {
+        lazy val bounds = JdbcSource.WatermarkBounds.of(
+          table.agg(min(col(wm)), max(col(wm))).first())
+        def cut(given: Option[Long]) = given.orElse(bounds.map(_.hiUs))
+        def range(lo: Long, hi: Long, targetRowsPerSlice: Long) =
+          (Watermark.between(table, wm, lo, hi), None)
+      }
+    }
+  }
+
+  final case class Jdbc(spark: SparkSession, t: SyncEndpoint.JdbcTable)
+      extends Extract {
+    private val src = new JdbcSource(t.url, t.props)
+    lazy val table = { src.preflight(t.table); src.read(spark, t.table) }
+
+    def watermarked(wm: String): Watermarked = new Watermarked {
+      val bounds = src.checkedBounds(t.table, wm)
+      def cut(given: Option[Long]) = bounds.map(b => given.getOrElse(b.hiUs))
+      def range(lo: Long, hi: Long, targetRowsPerSlice: Long) = bounds match {
+        case Some(b) =>
+          val n = src.countRange(spark, t.table, wm, lo, hi, b.timestampTyped)
+          (src.rangeRead(spark, t.table, wm, lo, hi, n, targetRowsPerSlice,
+            timestampTyped = b.timestampTyped), Some(n))
+        // empty at run start, so the column's kind is unknown: the range
+        // filters the table read on the type the read loads (the bounds
+        // statement has preflighted the table)
+        case None =>
+          (Watermark.between(src.read(spark, t.table), wm, lo, hi), None)
+      }
+    }
+  }
 }
 
 /** The reference's headline `pypgsync single` (cli.py:42-61 →
@@ -56,10 +137,7 @@ object SyncPipeline {
   def run(spark: SparkSession, cfg: SyncConfig, source: SyncEndpoint,
           dest: SyncEndpoint, cut: Option[Long] = None,
           onProgress: Progress => Unit = _ => ()): SyncReport =
-    run(spark, cfg, source match {
-      case ParquetDir(dir) => Extract.Frame(spark.read.parquet(dir))
-      case t: JdbcTable => Extract.Jdbc(t)
-    }, dest, cut, onProgress)
+    run(spark, cfg, Extract(spark, source), dest, cut, onProgress)
 
   /** T5 continuous mode over endpoints (reference cli.py:80-97): state
     * between polls lives entirely in the destination. */
@@ -97,11 +175,10 @@ object SyncPipeline {
     *          never clears a surviving marker whose batch it would replay
     *          only in part.
     *   4. S1  extract [start, cut], inclusive at both ends (T3: the lower
-    *          bound re-reads watermark ties, session.py:130). A frame is a
-    *          pushed-down range filter, persisted so every later pass reads
-    *          one snapshot; a JDBC table is an exact count of the range,
-    *          then a range-partitioned read (the reference's slices, SURVEY
-    *          §4.1).
+    *          bound re-reads watermark ties, session.py:130), by the
+    *          source reader's range read ([[Extract.Watermarked]]). A batch
+    *          whose size that read does not know (a frame's) is persisted,
+    *          so every later pass reads one snapshot.
     *   5. S4  write and commit, each sink by its own protocol. Parquet:
     *          the keyed merge ([[ParquetMergeSink.merge]]), which owns the
     *          record's open, marker and commit. JDBC, on the destination's
@@ -114,53 +191,18 @@ object SyncPipeline {
     *          destination's applied bound to min(cut, source MAX).
     *   6.     report.
     *
-    * The source bounds are read at most once, and only when something
-    * needs them: no cut was given, the destination has no restart point,
-    * the source is JDBC (its preflight, S6, and the column kind its SQL
-    * literals need), or a tombstoned JDBC destination needs the source
-    * MAX for its applied bound. */
+    * The source bounds are read at most once, by the reader: a JDBC
+    * source's always (its preflight, S6, and the column kind its SQL
+    * literals need), a frame's only when something needs them — no cut
+    * was given, the destination has no restart point, or a tombstoned
+    * JDBC destination needs the source MAX for its applied bound. */
   private[sync] def run(spark: SparkSession, cfg: SyncConfig, extract: Extract,
                         sink: SyncEndpoint, cut: Option[Long],
                         onProgress: Progress => Unit): SyncReport = {
     val t0 = System.nanoTime()
     def report(start: Option[Long], cutV: Long, rows: Long, written: Long) =
       SyncReport(start, cutV, rows, written, (System.nanoTime() - t0) / 1000000)
-    val wm = col(cfg.watermarkCol)
-    // One driver-side unit (core.Watermark): canonical epoch-micros for a
-    // time-typed column, the raw long for a numeric one. A frame's filter
-    // re-materializes bounds as literals of the column's own type, so it
-    // stays a pushed-down plain comparison.
-    extract match {
-      case Extract.Frame(df) =>
-        val dt = df.schema(cfg.watermarkCol).dataType
-        require(Watermark.supported(dt), s"watermark column " +
-          s"'${cfg.watermarkCol}' must be numeric or timestamp-typed; got " +
-          dt.simpleString)
-      case _: Extract.Jdbc => ()
-    }
-
-    lazy val bounds: Option[JdbcSource.WatermarkBounds] = extract match {
-      case Extract.Frame(df) =>
-        JdbcSource.WatermarkBounds.of(df.agg(min(wm), max(wm)).first())
-      case Extract.Jdbc(JdbcTable(url, table, props)) =>
-        new JdbcSource(url, props).checkedBounds(table, cfg.watermarkCol)
-    }
-
-    def extractRange(start: Long, c: Long): (DataFrame, Option[Long]) =
-      extract match {
-        case Extract.Frame(df) =>
-          val dt = df.schema(cfg.watermarkCol).dataType
-          (df.filter(wm >= Watermark.litFor(dt, start) &&
-              wm <= Watermark.litFor(dt, c))
-            .persist(StorageLevel.MEMORY_AND_DISK), None)
-        case Extract.Jdbc(JdbcTable(url, table, props)) =>
-          val src = new JdbcSource(url, props)
-          val tsTyped = bounds.get.timestampTyped
-          val n = src.countRange(spark, table, cfg.watermarkCol, start, c,
-            tsTyped)
-          (src.rangeRead(spark, table, cfg.watermarkCol, start, c, n,
-            cfg.targetRowsPerSlice, timestampTyped = tsTyped), Some(n))
-      }
+    val source = extract.watermarked(cfg.watermarkCol)
 
     // steps 2-6, given the sink's T1 and its write of an extracted batch
     // (the batch, its known row count, the start) → (rows extracted,
@@ -168,24 +210,24 @@ object SyncPipeline {
     def sequence(c: Long, destMax: Option[Long], restart: Option[Long])
                 (write: (DataFrame, Option[Long], Long) => (Long, Long))
         : SyncReport =
-      restart.orElse(bounds.map(_.loUs)) match {
+      restart.orElse(source.bounds.map(_.loUs)) match {
         case None => report(None, c, 0L, 0L) // empty source
         case Some(start) if start > c || destMax.exists(_ > c) =>
           report(Some(start), c, 0L, 0L)
         case Some(start) =>
-          val (batch, known) = extractRange(start, c)
+          val (range, known) = source.range(start, c, cfg.targetRowsPerSlice)
+          // a batch of unknown size is read twice, by its count and by its
+          // write: persisted, both read one snapshot
+          val batch =
+            if (known.isEmpty) range.persist(StorageLevel.MEMORY_AND_DISK)
+            else range
           try {
             val (rows, written) = write(batch, known, start)
             report(Some(start), c, rows, written)
           } finally { batch.unpersist(); () }
       }
 
-    // a JDBC source always reads its bounds; no bounds = an empty source
-    val cutV = extract match {
-      case _: Extract.Jdbc => bounds.map(b => cut.getOrElse(b.hiUs))
-      case _: Extract.Frame => cut.orElse(bounds.map(_.hiUs))
-    }
-    (cutV, sink) match {
+    (source.cut(cut), sink) match {
       case (None, _) => report(None, cut.getOrElse(0L), 0L, 0L)
 
       case (Some(c), ParquetDir(dir)) =>
@@ -200,7 +242,8 @@ object SyncPipeline {
         // read learned fills the record's missing fields
         val destMax = dest.flatMap { d =>
           val m = state.stored.flatMap(_.destMax)
-            .orElse(Watermark.toMicros(d.agg(max(wm)).first().get(0)))
+            .orElse(Watermark.toMicros(
+              d.agg(max(col(cfg.watermarkCol))).first().get(0)))
           state.describe(s => s.copy(destMax = m,
             schema = s.schema.orElse(Some(d.schema))))
           m
@@ -229,7 +272,7 @@ object SyncPipeline {
           // before the extract, capped by the cut, never the cut itself:
           // a row arriving later below a far cut must still be extracted
           // by the next run
-          val appliedHi = cfg.tombstoneCol.flatMap(_ => bounds)
+          val appliedHi = cfg.tombstoneCol.flatMap(_ => source.bounds)
             .map(b => math.min(c, b.hiUs))
           sequence(c, destMax, opened.restart(destMax)) { (batch, known, start) =>
             // the tombstone column is transport metadata, never

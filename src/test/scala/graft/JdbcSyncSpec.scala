@@ -602,6 +602,31 @@ trait JdbcSyncBehaviors { this: SparkSpec =>
       spark.conf.get("spark.sql.shuffle.partitions").toInt)
   }
 
+  test("S1 the source reader: a JDBC range is counted and range-partitioned, an empty table reads an empty range, a missing one refuses typed") {
+    skipUnlessAvailable()
+    val url = freshDb("reader")
+    seedSource(url, (1L to 100L).map(i => (i, i * 10L, i * 1.0, "X")))
+    def reader(table: String) =
+      graft.sync.Extract(spark, SyncEndpoint.parse(s"$url#$table"))
+    val src = reader("SRC").watermarked("UPDATED")
+    assert(src.bounds.map(b => (b.loUs, b.hiUs)).contains((10L, 1000L)))
+    assert(src.cut(None).contains(1000L) && src.cut(Some(500L)).contains(500L))
+    val (df, n) = src.range(200L, 800L, targetRowsPerSlice = 20L)
+    assert(n.contains(61L))
+    assert(df.rdd.getNumPartitions == 4) // ceil(61/20) slices
+    assert(df.count() == 61L)
+    // an empty table has no bounds, so no column kind: its range still
+    // reads, on the type the table read loads
+    exec(url, "CREATE TABLE TEMPTY (ID BIGINT NOT NULL PRIMARY KEY, " +
+      "UPDATED TIMESTAMP NOT NULL)")
+    val empty = reader("TEMPTY").watermarked("UPDATED")
+    assert(empty.bounds.isEmpty && empty.cut(Some(5L)).isEmpty)
+    assert(empty.range(0L, 1000L)._1.count() == 0L)
+    assertThrows[graft.core.GraftError.MissingTable](
+      reader("NOPE").watermarked("UPDATED"))
+    assertThrows[graft.core.GraftError.MissingTable](reader("NOPE").table)
+  }
+
   test("S2 primaryKey reads the table the catalog lookup resolves: case fold and schema twin") {
     skipUnlessAvailable()
     val url = freshDb("pkresolve")
@@ -613,11 +638,13 @@ trait JdbcSyncBehaviors { this: SparkSpec =>
     val otherCase = if (ident("pkfold") == "pkfold") "PKFOLD" else "pkfold"
     assert(src.primaryKey(otherCase).map(_.toUpperCase) == Seq("ID"))
     // a same-named, differently keyed twin in another schema: only the
-    // current schema's table is the source
+    // current schema's table is the source. The twin's schema sorts
+    // before Derby's APP and DuckDB's main, so the catalog lists it first
+    // and only the current-schema preference picks the right table
     exec(url, "CREATE TABLE PKTWIN (ID BIGINT NOT NULL PRIMARY KEY, " +
       "UPDATED BIGINT NOT NULL)")
-    exec(url, s"CREATE SCHEMA ${ident("graftbackup")}")
-    exec(url, s"CREATE TABLE ${ident("graftbackup")}.PKTWIN " +
+    exec(url, s"CREATE SCHEMA ${ident("aaabackup")}")
+    exec(url, s"CREATE TABLE ${ident("aaabackup")}.PKTWIN " +
       "(ID BIGINT NOT NULL, UPDATED BIGINT NOT NULL, PRIMARY KEY (ID, UPDATED))")
     assert(src.primaryKey(ident("PKTWIN")).map(_.toUpperCase) == Seq("ID"))
   }
@@ -689,18 +716,20 @@ trait JdbcSyncBehaviors { this: SparkSpec =>
     // to the connection's current schema. A backup-schema twin with an
     // extra column must NOT poison the comparison — an unscoped metadata
     // scan unions its columns in and raises phantom drift on every poll.
+    // The twin's schema sorts before Derby's APP and DuckDB's main: the
+    // catalog lists the twin first.
     val url = freshDb("scopeok")
     exec(url, "CREATE TABLE SD (ID BIGINT NOT NULL PRIMARY KEY, " +
       "UPDATED BIGINT NOT NULL)")
-    exec(url, s"CREATE SCHEMA ${ident("graftbackup")}")
-    exec(url, s"CREATE TABLE ${ident("graftbackup")}.SD " +
+    exec(url, s"CREATE SCHEMA ${ident("aaabackup")}")
+    exec(url, s"CREATE TABLE ${ident("aaabackup")}.SD " +
       "(ID BIGINT NOT NULL PRIMARY KEY, UPDATED BIGINT NOT NULL, " +
       "EXTRA BIGINT)")
     import org.apache.spark.sql.types._
     val same = StructType(Seq(StructField("id", LongType),
       StructField("updated", LongType)))
     // must pass: the current-schema table matches; the twin's EXTRA column
-    // sits in graftbackup and is out of scope
+    // sits in aaabackup and is out of scope
     graft.sinks.JdbcUpsertSink.ensureTable(url, new java.util.Properties(),
       ident("SD"), same, Seq("id"))
     // and REAL drift on the current-schema table still fires

@@ -31,7 +31,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * `JdbcSource.Catalog`, and opens connections in two places,
   * `JdbcSource.withConnection` and the sink's `runPerPartition`: a
   * metadata call or a `DriverManager.getConnection` anywhere else under
-  * `graft/` is a second copy. */
+  * `graft/` is a second copy.
+  *
+  * Sync, agg and reconcile read their sources through one reader,
+  * `graft.sync.Extract`, whose JDBC reads are `JdbcSource`'s: a
+  * `read.jdbc(` or `format("jdbc")` anywhere else in the main sources is
+  * a second reader. */
 class StampOwnershipSpec extends AnyFunSuite {
 
   private val root = new java.io.File(sys.props("user.dir"), "src/main/scala")
@@ -161,6 +166,20 @@ class StampOwnershipSpec extends AnyFunSuite {
       if (metadata.findFirstIn(line).isDefined && !(rel == source && catalog(i))) ||
         (line.contains("DriverManager.getConnection") &&
           !connects.get(rel).exists(_(i)))
+    } yield s"$rel:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  test("Spark JDBC reads are made only in JdbcSource") {
+    val source = "graft/sources/JdbcSource.scala"
+    val files = sources(root)
+    assert(files.exists(_.getPath.endsWith(source)), s"$source is missing")
+    val offenders = for {
+      f <- files
+      rel = root.toPath.relativize(f.toPath).toString.replace('\\', '/')
+      if rel != source
+      (line, i) <- codeLines(f)
+      if line.contains("read.jdbc(") || line.contains("format(\"jdbc\")")
     } yield s"$rel:${i + 1}: ${line.trim}"
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }

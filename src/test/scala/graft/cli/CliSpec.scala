@@ -990,6 +990,36 @@ class CliSpec extends SparkSpec {
     } finally conn.close()
   }
 
+  test("reconcile over a JDBC source reports, applies into parquet, and refuses a missing source table typed") {
+    import spark.implicits._
+    val work = tmpDir("cli-reconcile-jdbc-src")
+    Seq((1L, "a"), (2L, "b"), (3L, "orphan"), (4L, "orphan"))
+      .toDF("event_id", "v").write.parquet(s"$work/dest")
+    val url = s"jdbc:derby:memory:clircsrc${System.nanoTime()};create=true"
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      val st = conn.createStatement()
+      st.executeUpdate(
+        "CREATE TABLE SRC (EVENT_ID BIGINT PRIMARY KEY, V VARCHAR(10))")
+      Seq(1L, 2L).foreach(i =>
+        st.executeUpdate(s"INSERT INTO SRC VALUES ($i, 'x')"))
+      st.close()
+      def reconcile(table: String, more: String*) =
+        run(Seq("reconcile", "--source", s"$url#$table", "--dest",
+          s"$work/dest", "--key", "event_id") ++ more: _*)
+      // report-only: the orphans are reported, the dest is untouched
+      reconcile("SRC", "--report", s"$work/orphans")
+      assert(spark.read.parquet(s"$work/orphans").as[Long].collect().sorted
+        .toList == List(3L, 4L))
+      assert(spark.read.parquet(s"$work/dest").count() == 4)
+      reconcile("SRC", "--apply")
+      assert(spark.read.parquet(s"$work/dest")
+        .select("event_id").as[Long].collect().sorted.toList == List(1L, 2L))
+      // a GraftError: the CLI exits 2, as sync and agg do
+      assertThrows[GraftError.MissingTable](reconcile("NOPE"))
+    } finally conn.close()
+  }
+
   test("bpe-train writes the merge table; tokenize applies it") {
     import spark.implicits._
     val work = tmpDir("cli-bpe")
@@ -1201,6 +1231,61 @@ class CliSpec extends SparkSpec {
     } finally conn.close()
   }
 
+  test("a JDBC agg tick that folds rows runs a pinned number of Spark jobs") {
+    val url = s"jdbc:derby:memory:cliaggjobs${System.nanoTime()};create=true"
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      val st = conn.createStatement()
+      st.executeUpdate("CREATE TABLE EV (US BIGINT, GRP VARCHAR(8), V DOUBLE)")
+      def insert(rows: (Long, String, Double)*): Unit = rows.foreach {
+        case (us, g, v) =>
+          st.executeUpdate(s"INSERT INTO EV VALUES ($us, '$g', $v)"); ()
+      }
+      val rollup = s"${tmpDir("cli-agg-jdbc-jobs")}/rollup"
+      def tick() = jobsIn(run("agg", "--source", s"$url#EV", "--dest", rollup,
+        "--by", "GRP", "--watermark", "US", "--value-col", "V"))._2
+      insert((10L, "a", 1.5), (20L, "b", 2.0), (30L, "a", -1.0))
+      val cold = tick()
+      insert((40L, "b", 4.25), (50L, "c", 9.0))
+      val warm = tick()
+      info(s"JDBC agg fold ticks: cold $cold, warm $warm Spark jobs")
+      assert(cold == 5 && warm == 6, s"cold $cold, warm $warm")
+    } finally conn.close()
+  }
+
+  test("agg over a TIMESTAMP-watermarked JDBC source folds its half-open slices exactly") {
+    val url = s"jdbc:derby:memory:cliaggts${System.nanoTime()};create=true"
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      val st = conn.createStatement()
+      st.executeUpdate("CREATE TABLE TEV (TS TIMESTAMP, GRP VARCHAR(8), V DOUBLE)")
+      def insert(rows: (String, String, Double)*): Unit = rows.foreach {
+        case (ts, g, v) =>
+          st.executeUpdate(s"INSERT INTO TEV VALUES ('$ts', '$g', $v)"); ()
+      }
+      val rollup = s"${tmpDir("cli-agg-jdbc-ts")}/rollup"
+      def tick() = run("agg", "--source", s"$url#TEV", "--dest", rollup,
+        "--by", "GRP", "--watermark", "TS", "--value-col", "V")
+      // microsecond neighbours on each side of the first tick's cut, and a
+      // sub-µs source MAX just below it: canonical µs truncate it to
+      // .000002, so the cut is .000003 and the row must fold in tick one
+      insert(("2024-01-01 00:00:00.000001", "a", 1.0),
+        ("2024-01-01 00:00:00.000002", "b", 2.0),
+        ("2024-01-01 00:00:00.0000025", "b", 16.0))
+      tick()
+      insert(("2024-01-01 00:00:00.000003", "a", 4.0),
+        ("2024-01-02 00:00:00.5", "c", 8.0))
+      tick()
+      tick() // up to date
+      val got = graft.sync.AggMaintenance.read(spark, rollup)
+        .select(col("GRP"), col("cnt"), col("sum_val").cast("double"))
+        .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2))))
+        .toMap
+      assert(got == Map("a" -> ((2L, 5.0)), "b" -> ((2L, 18.0)),
+        "c" -> ((1L, 8.0))), s"got $got")
+    } finally conn.close()
+  }
+
   test("semantic-dedup runs at most 49 Spark jobs and agg-read --mode plain 1: their counts come from the write job") {
     import spark.implicits._
     val work = tmpDir("cli-observed")
@@ -1240,6 +1325,10 @@ class CliSpec extends SparkSpec {
     Main.parse(Array("reconcile", "--source", t, "--dest", t, "--key", "k"))
     Main.parse(Array("agg", "--source", t, "--dest", "d", "--by", "g",
       "--watermark", "w"))
+    // and the usage names a JDBC table for each of them
+    val jdbcEp = "(PATH|jdbc:...#table)"
+    assert(refusal("nope").contains(s"graft reconcile --source $jdbcEp " +
+      s"--dest $jdbcEp --key"))
   }
 
   test("bounded fractional flags accept each closed bound and refuse each open one and a non-number") {
